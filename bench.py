@@ -62,8 +62,8 @@ def prepare(spark, sf_dir: str) -> dict[str, float]:
     reference's load-gen) or one-time process bring-up — NOT the
     operator work the bench measures. Pulled out of main() so
     tests/test_bench_protocol.py can pin the contract: after prepare(),
-    every memoization cache a `_NO_RETIME` query reads must already
-    hold its sf_dir entry (a _NO_RETIME query never gets a second
+    every store fixture a `_NO_RETIME` query reads must already hold
+    its sf_dir entry (a _NO_RETIME query never gets a second
     chance, so an un-staged fixture build would be locked into its
     recorded timing — the round-9 stream_state_metadata_audit failure
     class).
@@ -118,8 +118,8 @@ def prepare(spark, sf_dir: str) -> dict[str, float]:
 
     topic = stage_bus_topic(spark, sf_dir)
     stage_topic_registry(spark, sf_dir)
-    # Pre-build the two SHARED state-reader checkpoints (memoized in
-    # _STAGE_CACHE): without this, the one-time streaming-aggregation
+    # Pre-build the two SHARED state-reader checkpoints (store fixtures
+    # under "stream.stage"): without this, the one-time streaming-aggregation
     # run that writes each checkpoint lands inside the timing of
     # whichever state-reader query happens to run first (alphabetical),
     # charging a ~multi-second fixture build to a query whose own work
@@ -199,7 +199,7 @@ def main() -> None:
     # Shared persisted-frame cache accounting (dedup/interval/graph/Q11
     # families): hits mean the timing is an order-dependent AMORTIZED
     # figure; a build means the query paid its family's shared cost.
-    from cascade_spark.operators.dedup import CACHE_STATS
+    from cascade_spark.store import CACHE_STATS
 
     shared_frames: dict[str, dict[str, int]] = {}
 
@@ -224,9 +224,6 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     for name in sorted(registry):
-        q = registry[name]
-        if not q.bench:
-            continue
         try:
             timings[name], usage = _time_one(name)
             if usage:

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.operators._util import t, widen
 
@@ -171,9 +172,6 @@ FROM agg0, aggk
 """)
 
 
-_MERGED_CACHE: dict = {}
-
-
 def _words_frame(spark, sf_dir):
     """Frequency-weighted distinct-word table (w, cnt)."""
     d = t(spark, sf_dir, "documents")
@@ -193,8 +191,6 @@ def _merged_words(spark, sf_dir):
     pipeline_tokenizer_fertility both read it, so the 3-iteration merge
     loop runs once per session, not once per consumer."""
     from pyspark import StorageLevel
-
-    from cascade_spark.operators.dedup import _cached_frame
 
     def build():
         cur = _words_frame(spark, sf_dir).select(
@@ -234,7 +230,7 @@ def _merged_words(spark, sf_dir):
             cur = nxt
         return cur
 
-    return _cached_frame(_MERGED_CACHE, spark, sf_dir, build)
+    return store.frame("bpe.merged_words", spark, sf_dir, build)
 
 
 def _ntok(col="s"):
@@ -300,6 +296,25 @@ def _sql_merged_ctes() -> str:
     return ",\n".join(ctes)
 
 
+def _fertility_oracle() -> str:
+    return f"""
+WITH {_sql_merged_ctes()},
+lw AS (
+    SELECT lang, w, CAST(COUNT(*) AS BIGINT) AS cnt_lw
+    FROM (SELECT lang, UNNEST(STRING_SPLIT(text, ' ')) AS w FROM documents)
+    WHERE w <> '' GROUP BY lang, w
+),
+m AS (SELECT w, LEN(s) - LEN(REPLACE(s, '<', '')) AS ntok FROM w{BPE_MERGES})
+SELECT lang,
+       CAST(SUM(cnt_lw) AS BIGINT) AS n_words,
+       CAST(SUM(cnt_lw * ntok) AS BIGINT) AS n_tokens,
+       CAST((10000 * SUM(cnt_lw * ntok)) // SUM(cnt_lw) AS BIGINT) AS fertility_bp
+FROM lw JOIN m ON m.w = lw.w
+GROUP BY lang
+ORDER BY lang
+"""
+
+
 @register(
     "pipeline_tokenizer_fertility",
     "pipeline",
@@ -314,7 +329,7 @@ def _sql_merged_ctes() -> str:
     "100 TB the map is vocab-sized — the join broadcasts or buckets on "
     "the word key; the corpus is read once for the (lang, word) "
     "counts.",
-    oracle=None,  # assembled below — shares the merge CTE chain
+    oracle=_fertility_oracle(),
 )
 def pipeline_tokenizer_fertility(spark, sf_dir):
     from cascade_spark.operators._util import _intdiv, bigint
@@ -344,27 +359,3 @@ def pipeline_tokenizer_fertility(spark, sf_dir):
             "fertility_bp"
         ),
     ).orderBy("lang")
-
-
-def _fertility_oracle() -> str:
-    return f"""
-WITH {_sql_merged_ctes()},
-lw AS (
-    SELECT lang, w, CAST(COUNT(*) AS BIGINT) AS cnt_lw
-    FROM (SELECT lang, UNNEST(STRING_SPLIT(text, ' ')) AS w FROM documents)
-    WHERE w <> '' GROUP BY lang, w
-),
-m AS (SELECT w, LEN(s) - LEN(REPLACE(s, '<', '')) AS ntok FROM w{BPE_MERGES})
-SELECT lang,
-       CAST(SUM(cnt_lw) AS BIGINT) AS n_words,
-       CAST(SUM(cnt_lw * ntok) AS BIGINT) AS n_tokens,
-       CAST((10000 * SUM(cnt_lw * ntok)) // SUM(cnt_lw) AS BIGINT) AS fertility_bp
-FROM lw JOIN m ON m.w = lw.w
-GROUP BY lang
-ORDER BY lang
-"""
-
-
-from cascade_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["pipeline_tokenizer_fertility"].oracle = _fertility_oracle()

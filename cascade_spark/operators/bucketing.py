@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.operators._util import d2, dec, t
 
@@ -26,14 +27,12 @@ def bucketed_tables(spark, sf_dir: str) -> tuple[str, str]:
     """Materialize lineitem/orders bucketed by the join key (idempotent
     per sf_dir within a session)."""
     import re
-    import tempfile
-
     tag = re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.strip("/").replace("root_", ""))[-30:].strip("_")
     li_name, o_name = f"li_bucketed_{tag}", f"o_bucketed_{tag}"
     # external tables in a per-process temp location: the in-memory
     # catalog is session-scoped, so a stable warehouse path would collide
     # with leftovers from previous processes
-    base = tempfile.mkdtemp(prefix="cascade_buckets_")
+    base = store.tempdir("cascade_buckets")
     if not spark.catalog.tableExists(li_name):
         (
             t(spark, sf_dir, "lineitem")

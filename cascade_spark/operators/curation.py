@@ -380,6 +380,41 @@ def pipeline_interleave_sources(spark, sf_dir):
     )
 
 
+def _e2e_oracle() -> str:
+    from cascade_spark.operators.dedup import N_HASHES, _SQL_PAIR_CTES
+
+    return f"""
+WITH {_SQL_PAIR_CTES},
+neardup AS (SELECT DISTINCT d2 AS doc_id FROM sim WHERE matches * 2 >= {N_HASHES}),
+fp AS (
+    SELECT doc_id, text, source, MD5(LOWER(TRIM(text))) AS fingerprint
+    FROM documents
+),
+deduped AS (
+    SELECT doc_id, text, source
+    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn FROM fp)
+    WHERE rn = 1
+),
+quality AS (SELECT * FROM deduped WHERE {_QUALITY_SQL}),
+survivors AS (
+    SELECT * FROM quality WHERE doc_id NOT IN (SELECT doc_id FROM neardup)
+),
+spl AS (
+    SELECT CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
+           source, LEN(STRING_SPLIT(text, ' ')) AS n_tokens
+    FROM (SELECT *, ('0x' || SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
+          FROM survivors)
+)
+SELECT split, source,
+       COUNT(*) AS n_docs,
+       CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
+       {sql_avg_round("SUM(CAST(n_tokens AS DECIMAL(12,4)))", 2)} AS avg_tokens
+FROM spl
+GROUP BY split, source
+ORDER BY split, source
+"""
+
+
 @register(
     "pipeline_pretraining_end_to_end",
     "pipeline",
@@ -394,7 +429,7 @@ def pipeline_interleave_sources(spark, sf_dir):
     "pinned end-to-end, not just per-operator. At 100 TB each stage "
     "keeps its own scale shape (map-only gates, hash dedup, banded "
     "LSH, pure-hash split) — composition adds no new shuffle class.",
-    oracle=None,  # assembled below — needs the dedup module's CTEs
+    oracle=_e2e_oracle(),
 )
 def pipeline_pretraining_end_to_end(spark, sf_dir):
     from pyspark.sql import Window
@@ -437,48 +472,6 @@ def pipeline_pretraining_end_to_end(spark, sf_dir):
         )
         .orderBy("split", "source")
     )
-
-
-def _e2e_oracle() -> str:
-    from cascade_spark.operators.dedup import N_HASHES, _SQL_PAIR_CTES
-
-    return f"""
-WITH {_SQL_PAIR_CTES},
-neardup AS (SELECT DISTINCT d2 AS doc_id FROM sim WHERE matches * 2 >= {N_HASHES}),
-fp AS (
-    SELECT doc_id, text, source, MD5(LOWER(TRIM(text))) AS fingerprint
-    FROM documents
-),
-deduped AS (
-    SELECT doc_id, text, source
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn FROM fp)
-    WHERE rn = 1
-),
-quality AS (SELECT * FROM deduped WHERE {_QUALITY_SQL}),
-survivors AS (
-    SELECT * FROM quality WHERE doc_id NOT IN (SELECT doc_id FROM neardup)
-),
-spl AS (
-    SELECT CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
-           source, LEN(STRING_SPLIT(text, ' ')) AS n_tokens
-    FROM (SELECT *, ('0x' || SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS b
-          FROM survivors)
-)
-SELECT split, source,
-       COUNT(*) AS n_docs,
-       CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-       {sql_avg_round("SUM(CAST(n_tokens AS DECIMAL(12,4)))", 2)} AS avg_tokens
-FROM spl
-GROUP BY split, source
-ORDER BY split, source
-"""
-
-
-# late-bind the oracle (the CTE constants live in dedup.py; importing it
-# at module top would be a cycle through operators/__init__)
-from cascade_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["pipeline_pretraining_end_to_end"].oracle = _e2e_oracle()
 
 
 @register(
@@ -846,6 +839,76 @@ _FUNNEL_STAGES = [
 ]
 
 
+def _funnel_oracle() -> str:
+    from cascade_spark.operators.decontam import BENCH_MOD
+    from cascade_spark.operators.dedup import N_HASHES, _SQL_PAIR_CTES, _SQL_SHINGLES
+
+    return f"""
+WITH {_SQL_PAIR_CTES},
+neardup AS (SELECT DISTINCT d2 AS doc_id FROM sim WHERE matches * 2 >= {N_HASHES}),
+shi AS ({_SQL_SHINGLES}),
+bench AS (
+    SELECT doc_id FROM documents
+    WHERE ('0x' || SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % {BENCH_MOD} = 0
+),
+bn AS (SELECT DISTINCT s FROM shi WHERE doc_id IN (SELECT doc_id FROM bench)),
+cstats AS (
+    SELECT shi.doc_id, COUNT(*) AS n_sh, COUNT(bn.s) AS n_shared
+    FROM shi LEFT JOIN bn ON shi.s = bn.s
+    WHERE shi.doc_id NOT IN (SELECT doc_id FROM bench)
+    GROUP BY shi.doc_id
+),
+contaminated AS (SELECT doc_id FROM cstats WHERE n_shared * 5 >= n_sh),
+base AS (
+    SELECT doc_id,
+           LEN(STRING_SPLIT(text, ' ')) AS n_tokens,
+           LENGTH(REGEXP_REPLACE(text, '[^a-z]', '', 'g')) * 10 >= LENGTH(text) * 7
+             AND LEN(STRING_SPLIT(text, ' ')) >= 10 AS q,
+           doc_id IN (SELECT doc_id FROM bench) AS is_bench,
+           ROW_NUMBER() OVER (PARTITION BY MD5(LOWER(TRIM(text)))
+                              ORDER BY doc_id) AS rn
+    FROM documents
+),
+flags AS (
+    SELECT n_tokens,
+           rn = 1 AS p1,
+           rn = 1 AND q AS p2,
+           rn = 1 AND q AND doc_id NOT IN (SELECT doc_id FROM neardup) AS p3,
+           rn = 1 AND q AND doc_id NOT IN (SELECT doc_id FROM neardup)
+             AND NOT is_bench
+             AND doc_id NOT IN (SELECT doc_id FROM contaminated) AS p4
+    FROM base
+),
+a AS (
+    SELECT CAST(COUNT(*) AS BIGINT) AS n0,
+           CAST(COALESCE(SUM(n_tokens), 0) AS BIGINT) AS t0,
+           CAST(COALESCE(SUM(CASE WHEN p1 THEN 1 END), 0) AS BIGINT) AS n1,
+           CAST(COALESCE(SUM(CASE WHEN p1 THEN n_tokens END), 0) AS BIGINT) AS t1,
+           CAST(COALESCE(SUM(CASE WHEN p2 THEN 1 END), 0) AS BIGINT) AS n2,
+           CAST(COALESCE(SUM(CASE WHEN p2 THEN n_tokens END), 0) AS BIGINT) AS t2,
+           CAST(COALESCE(SUM(CASE WHEN p3 THEN 1 END), 0) AS BIGINT) AS n3,
+           CAST(COALESCE(SUM(CASE WHEN p3 THEN n_tokens END), 0) AS BIGINT) AS t3,
+           CAST(COALESCE(SUM(CASE WHEN p4 THEN 1 END), 0) AS BIGINT) AS n4,
+           CAST(COALESCE(SUM(CASE WHEN p4 THEN n_tokens END), 0) AS BIGINT) AS t4
+    FROM flags
+)
+SELECT CAST(s.i AS BIGINT) AS stage_idx, s.nm AS stage,
+       CASE s.i WHEN 0 THEN a.n0 WHEN 1 THEN a.n1 WHEN 2 THEN a.n2
+                WHEN 3 THEN a.n3 ELSE a.n4 END AS n_docs,
+       CASE s.i WHEN 0 THEN a.t0 WHEN 1 THEN a.t1 WHEN 2 THEN a.t2
+                WHEN 3 THEN a.t3 ELSE a.t4 END AS total_tokens,
+       CAST(COALESCE((10000 * CASE s.i WHEN 0 THEN a.t0 WHEN 1 THEN a.t1
+                                      WHEN 2 THEN a.t2 WHEN 3 THEN a.t3
+                                      ELSE a.t4 END)
+                     // NULLIF(a.t0, 0), 0) AS BIGINT) AS retained_bp,
+       CASE s.i WHEN 0 THEN 0 WHEN 1 THEN a.n0 - a.n1 WHEN 2 THEN a.n1 - a.n2
+                WHEN 3 THEN a.n2 - a.n3 ELSE a.n3 - a.n4 END AS dropped_docs
+FROM (VALUES (0, 'raw'), (1, 'exact_dedup'), (2, 'quality'),
+             (3, 'neardup'), (4, 'decontam')) s(i, nm), a
+ORDER BY stage_idx
+"""
+
+
 @register(
     "pipeline_stage_funnel",
     "pipeline",
@@ -859,7 +922,7 @@ _FUNNEL_STAGES = [
     "size unpivot — so the funnel costs one extra aggregate over the "
     "pipeline it audits, never five corpus scans. Token retention in "
     "exact floor basis points vs raw; dropped_docs is per-stage.",
-    oracle=None,  # assembled below — reuses the dedup/decontam CTE chains
+    oracle=_funnel_oracle(),
 )
 def pipeline_stage_funnel(spark, sf_dir):
     from pyspark.sql import Window
@@ -948,79 +1011,6 @@ def pipeline_stage_funnel(spark, sf_dir):
         )
         .orderBy("stage_idx")
     )
-
-
-def _funnel_oracle() -> str:
-    from cascade_spark.operators.decontam import BENCH_MOD
-    from cascade_spark.operators.dedup import N_HASHES, _SQL_PAIR_CTES, _SQL_SHINGLES
-
-    return f"""
-WITH {_SQL_PAIR_CTES},
-neardup AS (SELECT DISTINCT d2 AS doc_id FROM sim WHERE matches * 2 >= {N_HASHES}),
-shi AS ({_SQL_SHINGLES}),
-bench AS (
-    SELECT doc_id FROM documents
-    WHERE ('0x' || SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % {BENCH_MOD} = 0
-),
-bn AS (SELECT DISTINCT s FROM shi WHERE doc_id IN (SELECT doc_id FROM bench)),
-cstats AS (
-    SELECT shi.doc_id, COUNT(*) AS n_sh, COUNT(bn.s) AS n_shared
-    FROM shi LEFT JOIN bn ON shi.s = bn.s
-    WHERE shi.doc_id NOT IN (SELECT doc_id FROM bench)
-    GROUP BY shi.doc_id
-),
-contaminated AS (SELECT doc_id FROM cstats WHERE n_shared * 5 >= n_sh),
-base AS (
-    SELECT doc_id,
-           LEN(STRING_SPLIT(text, ' ')) AS n_tokens,
-           LENGTH(REGEXP_REPLACE(text, '[^a-z]', '', 'g')) * 10 >= LENGTH(text) * 7
-             AND LEN(STRING_SPLIT(text, ' ')) >= 10 AS q,
-           doc_id IN (SELECT doc_id FROM bench) AS is_bench,
-           ROW_NUMBER() OVER (PARTITION BY MD5(LOWER(TRIM(text)))
-                              ORDER BY doc_id) AS rn
-    FROM documents
-),
-flags AS (
-    SELECT n_tokens,
-           rn = 1 AS p1,
-           rn = 1 AND q AS p2,
-           rn = 1 AND q AND doc_id NOT IN (SELECT doc_id FROM neardup) AS p3,
-           rn = 1 AND q AND doc_id NOT IN (SELECT doc_id FROM neardup)
-             AND NOT is_bench
-             AND doc_id NOT IN (SELECT doc_id FROM contaminated) AS p4
-    FROM base
-),
-a AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n0,
-           CAST(COALESCE(SUM(n_tokens), 0) AS BIGINT) AS t0,
-           CAST(COALESCE(SUM(CASE WHEN p1 THEN 1 END), 0) AS BIGINT) AS n1,
-           CAST(COALESCE(SUM(CASE WHEN p1 THEN n_tokens END), 0) AS BIGINT) AS t1,
-           CAST(COALESCE(SUM(CASE WHEN p2 THEN 1 END), 0) AS BIGINT) AS n2,
-           CAST(COALESCE(SUM(CASE WHEN p2 THEN n_tokens END), 0) AS BIGINT) AS t2,
-           CAST(COALESCE(SUM(CASE WHEN p3 THEN 1 END), 0) AS BIGINT) AS n3,
-           CAST(COALESCE(SUM(CASE WHEN p3 THEN n_tokens END), 0) AS BIGINT) AS t3,
-           CAST(COALESCE(SUM(CASE WHEN p4 THEN 1 END), 0) AS BIGINT) AS n4,
-           CAST(COALESCE(SUM(CASE WHEN p4 THEN n_tokens END), 0) AS BIGINT) AS t4
-    FROM flags
-)
-SELECT CAST(s.i AS BIGINT) AS stage_idx, s.nm AS stage,
-       CASE s.i WHEN 0 THEN a.n0 WHEN 1 THEN a.n1 WHEN 2 THEN a.n2
-                WHEN 3 THEN a.n3 ELSE a.n4 END AS n_docs,
-       CASE s.i WHEN 0 THEN a.t0 WHEN 1 THEN a.t1 WHEN 2 THEN a.t2
-                WHEN 3 THEN a.t3 ELSE a.t4 END AS total_tokens,
-       CAST(COALESCE((10000 * CASE s.i WHEN 0 THEN a.t0 WHEN 1 THEN a.t1
-                                      WHEN 2 THEN a.t2 WHEN 3 THEN a.t3
-                                      ELSE a.t4 END)
-                     // NULLIF(a.t0, 0), 0) AS BIGINT) AS retained_bp,
-       CASE s.i WHEN 0 THEN 0 WHEN 1 THEN a.n0 - a.n1 WHEN 2 THEN a.n1 - a.n2
-                WHEN 3 THEN a.n2 - a.n3 ELSE a.n3 - a.n4 END AS dropped_docs
-FROM (VALUES (0, 'raw'), (1, 'exact_dedup'), (2, 'quality'),
-             (3, 'neardup'), (4, 'decontam')) s(i, nm), a
-ORDER BY stage_idx
-"""
-
-
-_REG["pipeline_stage_funnel"].oracle = _funnel_oracle()
 
 
 @register(

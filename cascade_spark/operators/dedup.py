@@ -21,12 +21,15 @@ Scale design (100 TB corpora):
 
 from __future__ import annotations
 
-import time as _time
-
 from pyspark.sql import DataFrame, functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.operators._util import barrier_eager, t, widen
+
+# The aggregate spine counters, re-exported from the store under their
+# historical import path (perfbench reads them from here).
+CACHE_STATS = store.CACHE_STATS
 
 N_HASHES = 16
 BANDS = 4  # rows per band = N_HASHES // BANDS = 4
@@ -176,15 +179,9 @@ def dedup_ngram_jaccard(spark, sf_dir):
 # decontaminate-adjacent paths). In production this IS a maintained
 # index — computed once per corpus generation and reused by every
 # downstream dedup job — so the engine materializes it once per
-# (session, sf_dir) and persists it (a few long columns per doc:
-# negligible next to the corpus).
-_SIG_CACHE: dict = {}
-_PAIR_CACHE: dict = {}
-_SHINGLE_CACHE: dict = {}
-_RAWSH_CACHE: dict = {}
-_OVERLAP_CACHE: dict = {}
-_SIMSIG_CACHE: dict = {}
-_CCLAB_CACHE: dict = {}
+# (session, sf_dir) through ``store.frame`` and persists it (a few long
+# columns per doc: negligible next to the corpus). The other dedup
+# spines below share the same discipline.
 
 
 def _raw_shingle_index(spark, sf_dir) -> DataFrame:
@@ -201,7 +198,7 @@ def _raw_shingle_index(spark, sf_dir) -> DataFrame:
         d = t(spark, sf_dir, "documents")
         return _shingles(d).select("doc_id", F.xxhash64("s").alias("s"))
 
-    return _cached_frame(_RAWSH_CACHE, spark, sf_dir, build)
+    return store.frame("dedup.raw_shingles", spark, sf_dir, build)
 
 
 def _capped_shingle_index(spark, sf_dir) -> DataFrame:
@@ -224,7 +221,7 @@ def _capped_shingle_index(spark, sf_dir) -> DataFrame:
         )
         return sh.join(common, "s", "left_anti")
 
-    return _cached_frame(_SHINGLE_CACHE, spark, sf_dir, build)
+    return store.frame("dedup.capped_shingles", spark, sf_dir, build)
 
 
 def _shingle_overlap_pairs(spark, sf_dir) -> DataFrame:
@@ -253,81 +250,7 @@ def _shingle_overlap_pairs(spark, sf_dir) -> DataFrame:
         sb = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("nb"))
         return pairs.join(sa, "d1").join(sb, "d2")
 
-    return _cached_frame(_OVERLAP_CACHE, spark, sf_dir, build)
-
-
-# Global hit/build counters across ALL shared persisted-frame caches
-# (dedup signatures/pairs/shingles, interval pairs, pagerank edges, Q11
-# values). bench.py diffs these around each query to emit a
-# machine-readable amortized-timing flag in BENCH_DETAIL.json: a query
-# whose timing rode a cache hit is an order-dependent amortized figure;
-# one that triggered a build paid the shared cost for its whole family.
-CACHE_STATS = {"hits": 0, "builds": 0, "build_sec": 0.0}
-
-
-# Right-sizing target for shared persisted frames: a cached frame is
-# scanned by every downstream family member (the graph family references
-# the edge frame up to ~6 times per query), and each scan schedules one
-# task per cached partition — so a 38k-row edge frame left at the
-# session's 32 shuffle partitions costs 32 tasks of scheduling floor per
-# reference for microseconds of work (the round-11 verdict's weak-set
-# diagnosis). Compact the cache to ceil(rows / _CACHE_ROWS_PER_PART)
-# partitions at persist time: tiny frames collapse to 1–2 partitions,
-# while at 100 TB a billion-row frame keeps thousands of partitions —
-# the knob adapts to MEASURED size, not to the test scale.
-_CACHE_ROWS_PER_PART = 65_536
-
-
-def _cached_frame(cache: dict, spark, sf_dir, build) -> DataFrame:
-    """Keyed materialized-frame cache with eviction: entries from OTHER
-    applications are dropped on every miss (a stopped session's blocks
-    died with it; holding the handle leaks driver memory), so the dict
-    never outgrows the live session's sf_dirs. Note for bench readers:
-    the first dedup query to run pays the shared build; later family
-    members read the cache — per-query timings are order-dependent
-    amortized figures (documented in STATUS.md and flagged per-query in
-    BENCH_DETAIL.json via CACHE_STATS). The frame is compacted to a
-    row-count-proportional partition count (see _CACHE_ROWS_PER_PART
-    above).
-
-    The handle returned is a lineage-TRUNCATED localCheckpoint of the
-    materialized frame, not the persisted plan itself. Measured reason
-    (round 12, guide §7.3): a persisted frame keeps its full logical
-    plan, and these builds nest caches (labels over edges over pairs
-    over sessions), so every downstream reference re-analyzes a plan
-    tree of thousands of nodes — counting the cached 1.5k-row LPA label
-    frame cost 0.63 s of pure driver planning; after truncation 0.06 s,
-    and the modularity intra-join fell 2.2 s -> 0.26 s with identical
-    results. At 100 TB the same truncation is what keeps per-query
-    planning O(query), not O(whole family lineage); on a real cluster a
-    reliable checkpoint (or table materialization) would replace the
-    executor-local one for fault tolerance."""
-    from pyspark import StorageLevel
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = cache.get(key)
-    if cached is not None:
-        CACHE_STATS["hits"] += 1
-        return cached
-    for stale in [k for k in cache if k[0] != key[0]]:
-        df = cache.pop(stale)
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already gone — handle drop is the cleanup
-    CACHE_STATS["builds"] += 1
-    t0 = _time.perf_counter()
-    df = build().persist(StorageLevel.MEMORY_AND_DISK)
-    n = df.count()  # materialize now; first family member paid this anyway
-    parts = df.rdd.getNumPartitions()
-    target = max(1, -(-n // _CACHE_ROWS_PER_PART))
-    ckpt = (df.coalesce(target) if target < parts else df).transform(barrier_eager)
-    df.unpersist()  # checkpoint blocks hold the data now
-    # build wall time accumulates so the bench can report, per first
-    # consumer, how much of its figure was the family's shared build
-    CACHE_STATS["build_sec"] += _time.perf_counter() - t0
-    cache[key] = ckpt
-    return ckpt
+    return store.frame("dedup.overlap_pairs", spark, sf_dir, build)
 
 
 def _signatures(spark, sf_dir) -> DataFrame:
@@ -335,7 +258,7 @@ def _signatures(spark, sf_dir) -> DataFrame:
     md5 per shingle + 16 affine permutations folded into ONE groupBy
     pass (no seed-explosion shuffle). Shingle duplicates are kept: MIN
     is duplicate-insensitive, so the distinct shuffle is skipped.
-    Persisted once per (app, sf_dir) — see _SIG_CACHE note above."""
+    Persisted once per (app, sf_dir) — see the signature-index note above."""
 
     def build() -> DataFrame:
         d = t(spark, sf_dir, "documents")
@@ -353,7 +276,7 @@ def _signatures(spark, sf_dir) -> DataFrame:
         ]
         return base.groupBy("doc_id").agg(*mins)
 
-    return _cached_frame(_SIG_CACHE, spark, sf_dir, build)
+    return store.frame("dedup.signatures", spark, sf_dir, build)
 
 
 _SQL_SIGNATURES = f"""
@@ -438,7 +361,7 @@ def _lsh_pairs(spark, sf_dir) -> DataFrame:
     def build() -> DataFrame:
         return _build_lsh_pairs(spark, sf_dir)
 
-    return _cached_frame(_PAIR_CACHE, spark, sf_dir, build)
+    return store.frame("dedup.lsh_pairs", spark, sf_dir, build)
 
 
 def _build_lsh_pairs(spark, sf_dir) -> DataFrame:
@@ -597,7 +520,7 @@ def _cc_label_frame(spark, sf_dir):
         )
         return _cc_labels_distributed(edges, init)
 
-    return _cached_frame(_CCLAB_CACHE, spark, sf_dir, build)
+    return store.frame("dedup.cc_labels", spark, sf_dir, build)
 
 
 @register(
@@ -748,7 +671,7 @@ def _simhash_sig(spark, sf_dir) -> DataFrame:
         )
         return votes.select("doc_id", simhash.alias("simhash"))
 
-    return _cached_frame(_SIMSIG_CACHE, spark, sf_dir, build)
+    return store.frame("dedup.simhash_signatures", spark, sf_dir, build)
 
 
 
@@ -1468,7 +1391,8 @@ def profile_shingle_df(spark, sf_dir):
     "16x (64 us-bits -> 16 bits per doc) at the cost of estimator "
     "variance. Unbiased estimate: E[bit agreement] = (1+J)/2, so "
     "J_1bit = 2*A/H - 1, floored at 0. The query scores the SHARED "
-    "LSH candidate pairs (amortized: reuses _PAIR_CACHE/_SIG_CACHE) "
+    "LSH candidate pairs (amortized: reuses the shared LSH pair and "
+    "signature spines) "
     "with both the full-signature estimate and the 1-bit estimate in "
     "exact integer basis points (matches*625 and (2A-16)*625), so "
     "the compression error is directly observable per pair. At 100 "

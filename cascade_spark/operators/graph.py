@@ -26,11 +26,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.operators._util import _intdiv, barrier, sql_avg_round, t
 
 _TOTAL = 1_000_000_000  # total rank mass, in nano-rank units
-_EDGE_CACHE: dict = {}
 _DAMP_NUM, _DAMP_DEN = 85, 100  # damping 0.85 as an exact rational
 _ITERS = 3
 
@@ -48,9 +48,6 @@ _ITERS = 3
 MAX_DEGREE = 1024
 
 
-_COEDGE_CACHE: dict = {}
-
-
 def _coactivity_edges(spark, sf_dir):
     """Co-activity edges (>=2 session overlaps) with hub nodes above
     MAX_DEGREE excluded — the degree-capped subgraph every two-hop join
@@ -60,7 +57,6 @@ def _coactivity_edges(spark, sf_dir):
     without the persist each reference re-runs the groupBy + degree +
     hub anti-join chain (measured 2x on graph_link_prediction at
     sf0.1). Edge lists are pair-frame-sized — tiny next to events."""
-    from cascade_spark.operators.dedup import _cached_frame
     from cascade_spark.operators.interval import _overlap_pairs
 
     def build():
@@ -85,10 +81,7 @@ def _coactivity_edges(spark, sf_dir):
             hubs, e0["ub"] == hubs["u"], "left_anti"
         )
 
-    return _cached_frame(_COEDGE_CACHE, spark, sf_dir, build)
-
-
-_DEG_CACHE: dict = {}
+    return store.frame("graph.coactivity_edges", spark, sf_dir, build)
 
 
 def _coactivity_deg(spark, sf_dir):
@@ -102,7 +95,6 @@ def _coactivity_deg(spark, sf_dir):
     consumers (BFS seeds, Katz init, LPA init) read the key column —
     the distinct node set IS the degree frame's key, so deriving nodes
     here removes their per-query distinct shuffle too. |V|-sized."""
-    from cascade_spark.operators.dedup import _cached_frame
 
     def build():
         e = _coactivity_edges(spark, sf_dir)
@@ -113,7 +105,7 @@ def _coactivity_deg(spark, sf_dir):
             .agg(F.count(F.lit(1)).cast("long").alias("d"))
         )
 
-    return _cached_frame(_DEG_CACHE, spark, sf_dir, build)
+    return store.frame("graph.degrees", spark, sf_dir, build)
 
 
 def _coactivity_nodes(spark, sf_dir):
@@ -222,13 +214,11 @@ LIMIT 20
 """,
 )
 def graph_pagerank(spark, sf_dir):
-    from cascade_spark.operators.dedup import _cached_frame
-
     e, nodes = _pagerank_frames(spark, sf_dir)
     # keyed persist-cache (same eviction discipline as the dedup family:
     # repeat invocations reuse the edge frame instead of accumulating
     # persisted copies)
-    e = _cached_frame(_EDGE_CACHE, spark, sf_dir, lambda: e)
+    e = store.frame("graph.pagerank_edges", spark, sf_dir, lambda: e)
     scal = F.broadcast(
         nodes.agg(
             _intdiv(F.lit(_TOTAL), F.count(F.lit(1))).alias("tpn"),
@@ -561,6 +551,35 @@ def graph_kcore(spark, sf_dir):
 NJ_TOP = 25
 
 
+def _nj_oracle() -> str:
+    return f"""
+WITH {_sql_coactivity_edges()},
+adj AS (SELECT ua AS u, ub AS v FROM e UNION ALL SELECT ub, ua FROM e),
+deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY u),
+common AS (
+    SELECT e.ua, e.ub, CAST(COUNT(*) AS BIGINT) AS c
+    FROM e
+    JOIN adj a1 ON a1.u = e.ua
+    JOIN adj a2 ON a2.u = e.ub AND a2.v = a1.v
+    GROUP BY e.ua, e.ub
+),
+j AS (
+    SELECT e.ua, e.ub, da.d AS deg_a, db.d AS deg_b,
+           COALESCE(c.c, 0) AS n_common,
+           da.d + db.d - COALESCE(c.c, 0) AS n_union
+    FROM e
+    JOIN deg da ON da.u = e.ua
+    JOIN deg db ON db.u = e.ub
+    LEFT JOIN common c ON c.ua = e.ua AND c.ub = e.ub
+)
+SELECT ua, ub, deg_a, deg_b, n_common, n_union,
+       CAST((10000 * n_common) // n_union AS BIGINT) AS jaccard_bp
+FROM j
+ORDER BY jaccard_bp DESC, ua, ub
+LIMIT {NJ_TOP}
+"""
+
+
 @register(
     "graph_neighborhood_jaccard",
     "graph",
@@ -572,7 +591,7 @@ NJ_TOP = 25
     "floor basis points. Top-25 by (jaccard, ua, ub) — the tie-proof "
     "presentation bound. Reuses the shared persisted edge frame; adds "
     "one wedge join + one edge-keyed aggregate.",
-    oracle=None,  # assembled below — needs the shared co-activity CTE chain
+    oracle=_nj_oracle(),
 )
 def graph_neighborhood_jaccard(spark, sf_dir):
     e = _coactivity_edges(spark, sf_dir)
@@ -618,40 +637,6 @@ def graph_neighborhood_jaccard(spark, sf_dir):
         .orderBy(F.desc("jaccard_bp"), "ua", "ub")
         .limit(NJ_TOP)
     )
-
-
-def _nj_oracle() -> str:
-    return f"""
-WITH {_sql_coactivity_edges()},
-adj AS (SELECT ua AS u, ub AS v FROM e UNION ALL SELECT ub, ua FROM e),
-deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY u),
-common AS (
-    SELECT e.ua, e.ub, CAST(COUNT(*) AS BIGINT) AS c
-    FROM e
-    JOIN adj a1 ON a1.u = e.ua
-    JOIN adj a2 ON a2.u = e.ub AND a2.v = a1.v
-    GROUP BY e.ua, e.ub
-),
-j AS (
-    SELECT e.ua, e.ub, da.d AS deg_a, db.d AS deg_b,
-           COALESCE(c.c, 0) AS n_common,
-           da.d + db.d - COALESCE(c.c, 0) AS n_union
-    FROM e
-    JOIN deg da ON da.u = e.ua
-    JOIN deg db ON db.u = e.ub
-    LEFT JOIN common c ON c.ua = e.ua AND c.ub = e.ub
-)
-SELECT ua, ub, deg_a, deg_b, n_common, n_union,
-       CAST((10000 * n_common) // n_union AS BIGINT) AS jaccard_bp
-FROM j
-ORDER BY jaccard_bp DESC, ua, ub
-LIMIT {NJ_TOP}
-"""
-
-
-from cascade_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["graph_neighborhood_jaccard"].oracle = _nj_oracle()
 
 
 @register(
@@ -855,8 +840,6 @@ def graph_degree_assortativity(spark, sf_dir):
 
 LPA_ROUNDS = 2
 
-_LPA_CACHE: dict = {}
-
 
 def _lpa_labels(spark, sf_dir):
     """Shared {LPA_ROUNDS}-round deterministic sync-LPA label frame
@@ -865,7 +848,6 @@ def _lpa_labels(spark, sf_dir):
     graph_label_propagation and graph_modularity_score consume the SAME
     loop, so re-running it inline doubled the cost (round-8 verdict
     item #2)."""
-    from cascade_spark.operators.dedup import _cached_frame
 
     def build():
         e = _coactivity_edges(spark, sf_dir)
@@ -896,7 +878,7 @@ def _lpa_labels(spark, sf_dir):
             )
         return labels
 
-    return _cached_frame(_LPA_CACHE, spark, sf_dir, build)
+    return store.frame("graph.lpa_labels", spark, sf_dir, build)
 
 
 @register(

@@ -59,6 +59,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from cascade_spark import store
 from cascade_spark.operators._util import barrier, bigint, t
 from cascade_spark.plans.registry import register
 
@@ -124,15 +125,11 @@ def _csum(cond) -> "F.Column":
     return bigint(F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0)))
 
 
-_XY_DAILY_CACHE: dict = {}
-
-
 def _xy_daily(spark, sf_dir):
     """Shared per-(app, sf_dir) materialized (day, x, y) spine: 15
     rank/correlation builders each re-ran the events scan + day
     aggregate, and most self-join the spine (2+ references per query) —
     without a barrier every reference re-ran the build (guide §2.4)."""
-    from cascade_spark.operators.dedup import _cached_frame
 
     def build():
         ev = t(spark, sf_dir, "events")
@@ -145,10 +142,7 @@ def _xy_daily(spark, sf_dir):
             ).alias("y"),
         )
 
-    return _cached_frame(_XY_DAILY_CACHE, spark, sf_dir, build)
-
-
-_CELLS_CACHE: dict = {}
+    return store.frame("inference.xy_daily", spark, sf_dir, build)
 
 
 def _contingency_cells(spark, sf_dir):
@@ -160,7 +154,6 @@ def _contingency_cells(spark, sf_dir):
     3-9 times in-plan (r/c/n marginals + the cell join), so each
     reference re-executed the scan (guide §2.4). One build per session;
     marginals downstream run over ≤ 35 cached rows."""
-    from cascade_spark.operators.dedup import _cached_frame
 
     def build():
         ev = t(spark, sf_dir, "events")
@@ -169,7 +162,7 @@ def _contingency_cells(spark, sf_dir):
             F.dayofweek(F.date_sub(F.to_date("ts"), 1)).cast("long").alias("dow"),
         ).agg(bigint(F.count(F.lit(1))).alias("o"))
 
-    return _cached_frame(_CELLS_CACHE, spark, sf_dir, build)
+    return store.frame("inference.contingency_cells", spark, sf_dir, build)
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.operators._util import barrier, bigint, t
 
@@ -145,16 +146,12 @@ def join_interval_overlap(spark, sf_dir):
     )
 
 
-_PAIR_CACHE: dict = {}
-
-
 def _overlap_pairs(spark, sf_dir):
     """Distinct overlapping session pairs (user_a < user_b), blocked by
     hour buckets. Persisted per (app, sf_dir): the overlap join and the
     graph queries built on it (triangle counting) share one build."""
-    from cascade_spark.operators.dedup import _cached_frame
 
-    return _cached_frame(_PAIR_CACHE, spark, sf_dir, lambda: _build_pairs(spark, sf_dir))
+    return store.frame("interval.overlap_pairs", spark, sf_dir, lambda: _build_pairs(spark, sf_dir))
 
 
 def _build_pairs(spark, sf_dir):

@@ -42,6 +42,7 @@ def compact_topic(
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from cascade_spark import store  # noqa: E402
 from cascade_spark.plans.registry import register  # noqa: E402
 from cascade_spark.operators._util import d2, dec, t  # noqa: E402
 
@@ -114,13 +115,12 @@ FROM events
 """,
 )
 def maintenance_compact_small_files(spark, sf_dir):
-    import tempfile
-
-    if sf_dir not in _COMPACT_CACHE:
-        path = tempfile.mkdtemp(prefix="cascade_compact_") + "/topic"
+    def build():
+        path = store.tempdir("cascade_compact") + "/topic"
         t(spark, sf_dir, "events").repartition(32).write.parquet(path)
-        _COMPACT_CACHE[sf_dir] = (path, *compact_topic(spark, path, target_files=4))
-    out, before, after = _COMPACT_CACHE[sf_dir]
+        return (path, *compact_topic(spark, path, target_files=4))
+
+    out, before, after = store.fixture("maintenance.compacted_topic", sf_dir, build)
     back = spark.read.parquet(out)
     ok = F.lit(1 if (before > after and after <= 4) else 0).cast("long")
     return back.agg(
@@ -129,9 +129,6 @@ def maintenance_compact_small_files(spark, sf_dir):
         d2(F.sum(dec("value"))).alias("total_value"),
         ok.alias("compaction_ok"),
     )
-
-
-_COMPACT_CACHE: dict = {}
 
 
 # --- z-order (multi-dimensional) clustering ---------------------------------
@@ -265,16 +262,11 @@ def maintenance_analyze_table_stats(spark, sf_dir):
     )
 
 
-_CLUSTER_CACHE: dict = {}
-
-
 def clustered_output(spark, sf_dir: str) -> str:
     """Write lineitem Hive-partitioned by ship month with ONE file per
     partition, rows sorted by l_shipdate within each file (memoized)."""
-    if sf_dir not in _CLUSTER_CACHE:
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="cascade_cluster_") + "/lineitem"
+    def build():
+        out = store.tempdir("cascade_cluster") + "/lineitem"
         li = t(spark, sf_dir, "lineitem").withColumn(
             "ship_month", F.date_format("l_shipdate", "yyyy-MM")
         )
@@ -285,8 +277,9 @@ def clustered_output(spark, sf_dir: str) -> str:
             .partitionBy("ship_month")
             .parquet(out)
         )
-        _CLUSTER_CACHE[sf_dir] = out
-    return _CLUSTER_CACHE[sf_dir]
+        return out
+
+    return store.fixture("maintenance.clustered_lineitem", sf_dir, build)
 
 
 @register(
@@ -435,8 +428,6 @@ ORDER BY event_type
 """,
 )
 def rollup_bitmap_distinct_incremental(spark, sf_dir):
-    import tempfile
-
     ev = t(spark, sf_dir, "events")
     lo_us, hi_us = ev.agg(
         F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
@@ -452,11 +443,11 @@ def rollup_bitmap_distinct_incremental(spark, sf_dir):
         )
 
     # maintained state: history bitmaps persisted as binary parquet
-    store = tempfile.mkdtemp(prefix="cascade_bmroll_") + "/state"
+    state = store.tempdir("cascade_bmroll") + "/state"
     bitmaps(ev.filter(F.unix_micros("ts") < cut_us)).write.mode(
         "overwrite"
-    ).parquet(store)
-    stored = spark.read.parquet(store)
+    ).parquet(state)
+    stored = spark.read.parquet(state)
     history = stored.groupBy("event_type").agg(
         F.sum(F.bitmap_count("bm")).cast("long").alias("n_history")
     )

@@ -31,6 +31,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.operators._util import t
 
@@ -395,23 +396,20 @@ def multimodal_decode_wav(spark, sf_dir):
     return ids.mapInPandas(synth_and_decode, schema=schema).orderBy("doc_id")
 
 
-_BINFILE_CACHE: dict = {}
-
-
 def stage_blob_dir(sf_dir: str) -> str:
     """Write the 32 synthetic .ppm files once per sf_dir (memoized) —
     producer-side fixture prep, called from bench.prepare so the
     staging never lands inside scan_binaryfile_blobs' timing."""
     import os
-    import tempfile
 
-    if sf_dir not in _BINFILE_CACHE:
-        blob_dir = tempfile.mkdtemp(prefix="cascade_blobs_")
+    def build():
+        blob_dir = store.tempdir("cascade_blobs")
         for i in range(32):
             with open(os.path.join(blob_dir, f"img_{i:04d}.ppm"), "wb") as fh:
                 fh.write(synth_ppm(i))
-        _BINFILE_CACHE[sf_dir] = blob_dir
-    return _BINFILE_CACHE[sf_dir]
+        return blob_dir
+
+    return store.fixture("multimodal.blob_dir", sf_dir, build)
 
 
 @register(

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from cascade_spark.operators._util import d2, dec, t
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 
 
@@ -474,12 +475,10 @@ ORDER BY event_type
 )
 def catalog_managed_table_dml(spark, sf_dir):
     import re
-    import tempfile
-
     tag = re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.strip("/"))[-30:].strip("_")
     name = f"events_dml_{tag}"
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    base = tempfile.mkdtemp(prefix="cascade_dml_")
+    base = store.tempdir("cascade_dml")
     (
         t(spark, sf_dir, "events")
         .select("event_id", "event_type", "user_id")

@@ -10,12 +10,12 @@ a sequential scan's numbering.
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import functions as F
 
 from cascade_spark.operators.consume import consume_range
 from cascade_spark.operators.ingest import publish
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.operators._util import t
 
@@ -42,7 +42,7 @@ ORDER BY "offset"
 )
 def ingest_consume_roundtrip(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
-    topic_dir = tempfile.mkdtemp(prefix="cascade_topic_") + "/t"
+    topic_dir = store.tempdir("cascade_topic") + "/t"
     publish(ev, topic_dir, order_cols=["ts", "event_id"], num_partitions=4)
     got = consume_range(spark, topic_dir, 100, 110)
     return got.select(

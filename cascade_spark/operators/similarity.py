@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.operators._util import barrier, barrier_eager, t
 
@@ -293,7 +294,6 @@ Q_SCALE = 200  # |x| < 0.6 in the fixture embeddings → |q| < 120 fits int8
 SD_BANDS, SD_ROWS = 8, 6
 SD_PLANES = SD_BANDS * SD_ROWS
 
-_EMB_PAIR_CACHE: dict = {}
 
 _SQL_BANDED_CTES = f"""
 signs AS (
@@ -383,7 +383,6 @@ def _lsh_candidate_pairs(spark, sf_dir) -> DataFrame:
     join — persisted once per (session, sf_dir) and shared by the
     near-dup, semantic-dedup, and audit queries (in production this IS
     the maintained candidate index of the embedding corpus)."""
-    from cascade_spark.operators.dedup import _cached_frame
 
     def build():
         codes = _banded_codes(spark, t(spark, sf_dir, "embeddings"))
@@ -404,7 +403,7 @@ def _lsh_candidate_pairs(spark, sf_dir) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("n_shared_bands"))
         )
 
-    return _cached_frame(_EMB_PAIR_CACHE, spark, sf_dir, build)
+    return store.frame("similarity.emb_pairs", spark, sf_dir, build)
 
 
 @register(

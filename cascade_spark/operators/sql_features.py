@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.operators._util import t
 
@@ -235,9 +236,6 @@ def agg_collated_group(spark, sf_dir):
     )
 
 
-_CSV_BAD_CACHE: dict = {}
-
-
 @register(
     "scan_csv_permissive_badrecords",
     "sources",
@@ -258,22 +256,23 @@ FROM rows_
 )
 def scan_csv_permissive_badrecords(spark, sf_dir):
     import os
-    import tempfile
 
-    if sf_dir not in _CSV_BAD_CACHE:
-        d = tempfile.mkdtemp(prefix="cascade_badcsv_")
+    def build():
+        d = store.tempdir("cascade_badcsv")
         path = os.path.join(d, "feed.csv")
         with open(path, "w") as fh:
             fh.write("id,val\n")
             for i in range(100):
                 fh.write(f"{i},xx\n" if i % 10 == 0 else f"{i},{i * 3}\n")
-        _CSV_BAD_CACHE[sf_dir] = path
+        return path
+
+    path = store.fixture("sql_features.bad_csv", sf_dir, build)
     df = (
         spark.read.schema("id long, val long, _corrupt string")
         .option("header", "true")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(_CSV_BAD_CACHE[sf_dir])
+        .csv(path)
         # corrupt-record access requires materializing the raw column
         .cache()
     )
@@ -523,9 +522,6 @@ def catalog_global_temp_view(spark, sf_dir):
     )
 
 
-_JSON_BAD_CACHE: dict = {}
-
-
 @register(
     "scan_json_permissive_badrecords",
     "sources",
@@ -545,21 +541,22 @@ FROM rows_
 )
 def scan_json_permissive_badrecords(spark, sf_dir):
     import os
-    import tempfile
 
-    if sf_dir not in _JSON_BAD_CACHE:
-        d = tempfile.mkdtemp(prefix="cascade_badjson_")
+    def build():
+        d = store.tempdir("cascade_badjson")
         path = os.path.join(d, "feed.jsonl")
         with open(path, "w") as fh:
             for i in range(100):
                 line = f'{{"id": {i}, "val": {i * 7}}}'
                 fh.write((line[: len(line) // 2] if i % 10 == 0 else line) + "\n")
-        _JSON_BAD_CACHE[sf_dir] = path
+        return path
+
+    path = store.fixture("sql_features.bad_jsonl", sf_dir, build)
     df = (
         spark.read.schema("id long, val long, _corrupt string")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
-        .json(_JSON_BAD_CACHE[sf_dir])
+        .json(path)
         .cache()
     )
     return df.agg(
@@ -1087,14 +1084,12 @@ ORDER BY id
 """,
 )
 def sql_default_columns(spark, sf_dir):
-    import tempfile
-
     t(spark, sf_dir, "orders").createOrReplaceTempView("cascade_def_orders")
     spark.sql("DROP TABLE IF EXISTS cascade_default_cols")
     # external per-process location — the in-memory catalog is
     # session-scoped, so a stable warehouse path would collide across
     # processes (catalog_managed_table_dml's rationale)
-    loc = tempfile.mkdtemp(prefix="cascade_defcols_")
+    loc = store.tempdir("cascade_defcols")
     spark.sql(
         f"""
 CREATE TABLE cascade_default_cols (

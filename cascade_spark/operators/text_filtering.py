@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.operators._util import barrier, bigint, sql_avg_round, t, widen
 from cascade_spark.operators.text import STOPWORDS, _sql_array
@@ -173,9 +174,6 @@ def text_zipf_topwords(spark, sf_dir):
     ).orderBy("rank")
 
 
-_BIGRAM_SCORE_CACHE: dict = {}
-
-
 def _bigram_doc_scores(spark, sf_dir):
     """(doc_id, nb, s): per-doc bigram occurrence count and total
     corpus-frequency mass — the LM-commonality signal CCNet maintains
@@ -193,7 +191,6 @@ def _bigram_doc_scores(spark, sf_dir):
       the count table c = SUM(k) reuses that aggregate;
     - s = SUM(k * cnt) == the old per-occurrence SUM(cnt), exactly.
     """
-    from cascade_spark.operators.dedup import _cached_frame
 
     def build():
         d = widen(t(spark, sf_dir, "documents"))
@@ -223,7 +220,7 @@ def _bigram_doc_scores(spark, sf_dir):
             )
         )
 
-    return _cached_frame(_BIGRAM_SCORE_CACHE, spark, sf_dir, build)
+    return store.frame("text_filtering.bigram_scores", spark, sf_dir, build)
 
 
 @register(

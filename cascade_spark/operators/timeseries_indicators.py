@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from cascade_spark import store
 from cascade_spark.operators._util import bigint, t
 from cascade_spark.plans.registry import register
 
@@ -61,15 +62,11 @@ cell AS (
 """
 
 
-_GRID_CACHE: dict = {}
-
-
 def _grid(spark, sf_dir):
     """Shared per-(app, sf_dir) materialized grid: ~16 indicator/
     momentum/burst/ordinal queries each rebuilt this spine (3 events
     scans + a window), and most reference it 2-3x per query — without a
     barrier every reference re-ran the whole build (guide §2.4)."""
-    from cascade_spark.operators.dedup import _cached_frame
 
     def build():
         ev = t(spark, sf_dir, "events").select(
@@ -98,7 +95,7 @@ def _grid(spark, sf_dir):
             )
         )
 
-    return _cached_frame(_GRID_CACHE, spark, sf_dir, build)
+    return store.frame("timeseries.grid", spark, sf_dir, build)
 
 
 def _series_arr(grid):

@@ -31,11 +31,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from cascade_spark import store
 from cascade_spark.operators._util import bigint, d2, dec, t
 from cascade_spark.plans.registry import register
-
-# Q11's per-part aggregate, persisted once per (session, sf_dir)
-_Q11_VAL_CACHE: dict = {}
 
 
 def _pseudo_partsupp(spark, sf_dir):
@@ -320,13 +318,11 @@ ORDER BY stock_value DESC, p_partkey
 def tpch_q11_important_stock(spark, sf_dir):
     # One pass over the fact: the grand total is the sum of the per-part
     # aggregate, so persist the (small) per-part frame and derive both
-    # sides from it instead of scanning lineitem twice. Keyed cache with
-    # cross-session eviction (same discipline as the dedup signature
-    # index) so repeated invocations don't accumulate persisted frames.
-    from cascade_spark.operators.dedup import _cached_frame
-
-    val = _cached_frame(
-        _Q11_VAL_CACHE,
+    # sides from it instead of scanning lineitem twice. A shared store
+    # frame (cross-session eviction, like the dedup signature index) so
+    # repeated invocations don't accumulate persisted frames.
+    val = store.frame(
+        "tpch.q11_values",
         spark,
         sf_dir,
         lambda: _pseudo_partsupp(spark, sf_dir)

@@ -18,7 +18,7 @@ Determinism contract (SURVEY.md §2B):
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,8 +32,6 @@ class Query:
     builder: Builder
     oracle: str | None = None
     doc: str = ""
-    # queries excluded from the per-round bench headline set
-    bench: bool = field(default=True)
 
 
 REGISTRY: dict[str, Query] = {}
@@ -44,14 +42,13 @@ def register(
     category: str,
     oracle: str | None = None,
     doc: str = "",
-    bench: bool = True,
 ) -> Callable[[Builder], Builder]:
     """Decorator: register a declared query."""
 
     def deco(fn: Builder) -> Builder:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(name, category, fn, oracle, doc or (fn.__doc__ or ""), bench)
+        REGISTRY[name] = Query(name, category, fn, oracle, doc or (fn.__doc__ or ""))
         return fn
 
     return deco

@@ -73,6 +73,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from cascade_spark import store
+
 BUS_SCHEMA = (
     "partition INT, offset BIGINT, event_id BIGINT, ts_us BIGINT, "
     "user_id BIGINT, event_type STRING, value DOUBLE"
@@ -518,60 +520,54 @@ def register_bus(spark) -> None:
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
 
 
-_TOPIC_CACHE: dict = {}
-
-
 def stage_bus_topic(spark, sf_dir: str, num_partitions: int = 4) -> str:
     """Publish the events fixture through the producer (ring buffer +
     round robin) into a cached topic dir, in event_id order so the
     round-robin assignment is deterministic and oracle-checkable."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from cascade_spark.tables import load
 
-    key = (sf_dir, num_partitions)
-    if key in _TOPIC_CACHE:
-        return _TOPIC_CACHE[key]
-    ev = (
-        load(spark, sf_dir, "events")
-        .select(
-            "event_id",
-            F.unix_micros("ts").alias("ts_us"),
-            "user_id",
-            "event_type",
-            "value",
+    def build():
+        ev = (
+            load(spark, sf_dir, "events")
+            .select(
+                "event_id",
+                F.unix_micros("ts").alias("ts_us"),
+                "user_id",
+                "event_type",
+                "value",
+            )
+            .orderBy("event_id")
         )
-        .orderBy("event_id")
-    )
-    topic_dir = os.path.join(tempfile.mkdtemp(prefix="cascade_bus_"), "events")
-    producer = BusProducer(topic_dir, num_partitions=num_partitions)
-    # FIXTURE-STAGING BOUNDARY: this driver-side toPandas emulates the
-    # reference's SERIAL publisher (one producer appending in event_id
-    # order) and only ever stages the test fixture. At scale, bus topics
-    # are written by the distributed BusStreamWriter sink path — never
-    # through this function. The assert pins the boundary.
-    n_rows = ev.count()
-    assert n_rows <= 2_000_000, (
-        f"stage_bus_topic is fixture staging only ({n_rows} rows); "
-        "use BusStreamWriter for data-sized topic writes"
-    )
-    pdf = ev.toPandas()  # columns: event_id, ts_us, user_id, event_type, value
-    rows = (
-        {
-            "event_id": int(a),
-            "ts_us": int(b),
-            "user_id": int(c),
-            "event_type": d,
-            "value": float(e),
-        }
-        for a, b, c, d, e in pdf.itertuples(index=False, name=None)
-    )
-    producer.publish_all(rows)
-    assert producer.rejected == 0
-    _TOPIC_CACHE[key] = topic_dir
-    return topic_dir
+        topic_dir = os.path.join(store.tempdir("cascade_bus"), "events")
+        producer = BusProducer(topic_dir, num_partitions=num_partitions)
+        # FIXTURE-STAGING BOUNDARY: this driver-side toPandas emulates the
+        # reference's SERIAL publisher (one producer appending in event_id
+        # order) and only ever stages the test fixture. At scale, bus topics
+        # are written by the distributed BusStreamWriter sink path — never
+        # through this function. The assert pins the boundary.
+        n_rows = ev.count()
+        assert n_rows <= 2_000_000, (
+            f"stage_bus_topic is fixture staging only ({n_rows} rows); "
+            "use BusStreamWriter for data-sized topic writes"
+        )
+        pdf = ev.toPandas()  # columns: event_id, ts_us, user_id, event_type, value
+        rows = (
+            {
+                "event_id": int(a),
+                "ts_us": int(b),
+                "user_id": int(c),
+                "event_type": d,
+                "value": float(e),
+            }
+            for a, b, c, d, e in pdf.itertuples(index=False, name=None)
+        )
+        producer.publish_all(rows)
+        assert producer.rejected == 0
+        return topic_dir
+
+    return store.fixture("bus.topic", (sf_dir, num_partitions), build)
 
 
 # ---------------------------------------------------------------------------
@@ -719,8 +715,6 @@ ORDER BY event_id
 """,
 )
 def bus_sink_batch_write(spark, sf_dir):
-    import tempfile
-
     from cascade_spark.tables import load
 
     register_bus(spark)
@@ -729,7 +723,7 @@ def bus_sink_batch_write(spark, sf_dir):
     # side-effect-free w.r.t. re-invocation and therefore retime-eligible
     # in bench.py (a memoized target made the second run a read-only
     # replay, locking host-stall noise into the recorded figure forever)
-    target = os.path.join(tempfile.mkdtemp(prefix="cascade_bus_sink_"), "events")
+    target = os.path.join(store.tempdir("cascade_bus_sink"), "events")
     ev = load(spark, sf_dir, "events").select(
         F.pmod(F.col("event_id"), F.lit(4)).cast("int").alias("partition"),
         "event_id",
@@ -779,8 +773,6 @@ ORDER BY partition
 """,
 )
 def bus_sink_stream_roundtrip(spark, sf_dir):
-    import tempfile
-
     from cascade_spark.streaming.pipeline import stage_stream_input
 
     register_bus(spark)
@@ -788,7 +780,7 @@ def bus_sink_stream_roundtrip(spark, sf_dir):
     # the streaming sink write IS the operator; re-running it keeps the
     # builder retime-eligible and the recorded figure honest
     indir, schema, _, _ = stage_stream_input(spark, sf_dir, n_files=4)
-    tmp = tempfile.mkdtemp(prefix="cascade_bus_ssink_")
+    tmp = store.tempdir("cascade_bus_ssink")
     target = os.path.join(tmp, "events")
     src = (
         # 2 files per trigger → 2 micro-batches: still exercises the
@@ -1055,8 +1047,6 @@ FROM events
 )
 def bus_orphan_segment_audit(spark, sf_dir):
     import shutil
-    import tempfile
-
     from cascade_spark.tables import load
 
     register_bus(spark)
@@ -1064,7 +1054,7 @@ def bus_orphan_segment_audit(spark, sf_dir):
     # staging the audited topic is part of the declared scenario, so
     # every call repeats it — keeps the builder retime-eligible
     target = os.path.join(
-        tempfile.mkdtemp(prefix="cascade_bus_orphan_"), "events"
+        store.tempdir("cascade_bus_orphan"), "events"
     )
     ev = load(spark, sf_dir, "events").select(
         F.pmod(F.col("event_id"), F.lit(4)).cast("int").alias("partition"),

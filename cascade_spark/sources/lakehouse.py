@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cascade_spark import store
+
 
 def read_delta(spark: SparkSession, path: str) -> DataFrame:
     """Delta scan — requires delta-spark on the classpath."""
@@ -52,7 +54,6 @@ def read_jdbc(spark: SparkSession, url: str, table: str, **options) -> DataFrame
     return reader.load()
 
 
-_DERBY_CACHE: dict = {}
 JDBC_PARTITIONS = 4
 
 
@@ -60,12 +61,10 @@ def jdbc_orders_url(spark: SparkSession, sf_dir: str) -> str:
     """Stage a deterministic orders subset (o_orderkey % 7 = 0) into an
     embedded Derby table over Spark's JDBC WRITE path (memoized per
     sf_dir — producer-side table prep, like bucketed_tables)."""
-    if sf_dir not in _DERBY_CACHE:
-        import tempfile
-
+    def build():
         from cascade_spark.tables import load
 
-        db = tempfile.mkdtemp(prefix="cascade_derby_") + "/ordersdb"
+        db = store.tempdir("cascade_derby") + "/ordersdb"
         url = f"jdbc:derby:{db};create=true"
         src = load(spark, sf_dir, "orders").filter("o_orderkey % 7 = 0")
         (
@@ -75,8 +74,9 @@ def jdbc_orders_url(spark: SparkSession, sf_dir: str) -> str:
             .mode("overwrite")
             .save()
         )
-        _DERBY_CACHE[sf_dir] = url
-    return _DERBY_CACHE[sf_dir]
+        return url
+
+    return store.fixture("lakehouse.derby_orders", sf_dir, build)
 
 
 def lakehouse_probe() -> dict[str, bool]:
@@ -120,9 +120,7 @@ if lakehouse_probe()["delta"]:
         oracle="SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
     )
     def scan_delta_roundtrip(spark, sf_dir):
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="delta_rt_")
+        out = store.tempdir("delta_rt")
         src = _load(spark, sf_dir, "region").select("r_regionkey", "r_name")
         src.write.format("delta").mode("overwrite").save(out)
         return spark.read.format("delta").load(out).orderBy("r_regionkey")
@@ -147,9 +145,7 @@ if lakehouse_probe()["avro"]:
         oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
     )
     def scan_avro_roundtrip(spark, sf_dir):
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="avro_rt_")
+        out = store.tempdir("avro_rt")
         src = _load_t(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
@@ -173,9 +169,7 @@ if lakehouse_probe()["iceberg"]:
         oracle="SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
     )
     def scan_iceberg_roundtrip(spark, sf_dir):
-        import tempfile
-
-        wh = tempfile.mkdtemp(prefix="iceberg_wh_")
+        wh = store.tempdir("iceberg_wh")
         spark.conf.set(
             "spark.sql.catalog.cascade_ice",
             "org.apache.iceberg.spark.SparkCatalog",
@@ -202,9 +196,7 @@ if lakehouse_probe()["hudi"]:
         oracle="SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey",
     )
     def scan_hudi_roundtrip(spark, sf_dir):
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="hudi_rt_")
+        out = store.tempdir("hudi_rt")
         src = _load_h(spark, sf_dir, "region").select("r_regionkey", "r_name")
         (
             src.write.format("hudi")

@@ -12,17 +12,13 @@ parquet remains the default columnar format with predicate pushdown.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.operators._util import d2, dec, t
 
 _TS = "yyyy-MM-dd HH:mm:ss"
-
-# staged two-generation layout for scan_schema_evolution, one per sf_dir
-_EVOLVE_CACHE: dict[str, str] = {}
 
 
 @register(
@@ -39,7 +35,7 @@ ORDER BY n_regionkey
 )
 def scan_csv_roundtrip(spark, sf_dir):
     n = t(spark, sf_dir, "nation")
-    out = tempfile.mkdtemp(prefix="cascade_csv_") + "/nation"
+    out = store.tempdir("cascade_csv") + "/nation"
     n.write.mode("overwrite").option("header", True).csv(out)
     back = spark.read.schema(n.schema).option("header", True).csv(out)
     return (
@@ -66,7 +62,7 @@ ORDER BY event_type
 )
 def scan_json_roundtrip(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="cascade_json_") + "/events"
+    out = store.tempdir("cascade_json") + "/events"
     ev.write.mode("overwrite").json(out)
     back = spark.read.schema(ev.schema).json(out)
     return (
@@ -96,7 +92,7 @@ ORDER BY user_id
 )
 def sink_partitioned(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="cascade_part_") + "/by_type"
+    out = store.tempdir("cascade_part") + "/by_type"
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     back = spark.read.parquet(out).filter(F.col("event_type") == "purchase")
     return back.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).orderBy("user_id")
@@ -117,7 +113,7 @@ ORDER BY c_mktsegment
 )
 def scan_orc_roundtrip(spark, sf_dir):
     c = t(spark, sf_dir, "customer")
-    out = tempfile.mkdtemp(prefix="cascade_orc_") + "/customer"
+    out = store.tempdir("cascade_orc") + "/customer"
     c.write.mode("overwrite").option("compression", "zstd").orc(out)
     back = spark.read.orc(out)
     return (
@@ -145,7 +141,7 @@ ORDER BY o_orderstatus
 )
 def sink_overwrite(spark, sf_dir):
     o = t(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="cascade_ovw_") + "/orders"
+    out = store.tempdir("cascade_ovw") + "/orders"
     o.filter(F.col("o_totalprice") <= 10000.0).write.mode("overwrite").parquet(out)
     o.filter(F.col("o_totalprice") > 10000.0).write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
@@ -179,9 +175,8 @@ def scan_schema_evolution(spark, sf_dir):
     # layout is fixture staging, so build it once per sf_dir (repeat
     # invocations in one process were leaking a fixture-sized temp dir
     # each call).
-    out = _EVOLVE_CACHE.get(sf_dir)
-    if out is None:
-        out = tempfile.mkdtemp(prefix="cascade_evolve_")
+    def build():
+        out = store.tempdir("cascade_evolve")
         # generation 1: before `source` existed
         d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text", "lang").write.parquet(
             f"{out}/gen1"
@@ -190,7 +185,9 @@ def scan_schema_evolution(spark, sf_dir):
         d.filter(F.col("doc_id") % 2 == 1).select(
             "doc_id", "text", "lang", "source"
         ).write.parquet(f"{out}/gen2")
-        _EVOLVE_CACHE[sf_dir] = out
+        return out
+
+    out = store.fixture("scans.schema_evolution", sf_dir, build)
     back = spark.read.option("mergeSchema", "true").parquet(f"{out}/gen1", f"{out}/gen2")
     return (
         back.groupBy("lang")
@@ -227,7 +224,7 @@ ORDER BY event_type
 )
 def sink_dynamic_partition_overwrite(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="cascade_dynovw_") + "/by_type"
+    out = store.tempdir("cascade_dynovw") + "/by_type"
     ev.write.partitionBy("event_type").parquet(out)
     replacement = ev.filter(
         (F.col("event_type") == "error") & (F.to_date("ts") < F.lit("2024-01-16"))
@@ -267,7 +264,7 @@ ORDER BY source
 )
 def scan_text_lines(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="cascade_text_") + "/docs_txt"
+    out = store.tempdir("cascade_text") + "/docs_txt"
     (
         docs.select(
             F.concat_ws(
@@ -313,7 +310,7 @@ def scan_ignore_corrupt_files(spark, sf_dir):
     import os
 
     ev = t(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="cascade_corrupt_") + "/mixed"
+    out = store.tempdir("cascade_corrupt") + "/mixed"
     ev.write.parquet(out)
     with open(os.path.join(out, "part-junk.parquet"), "wb") as fh:
         fh.write(b"this is not a parquet file, just truncated garbage bytes")
@@ -361,7 +358,7 @@ def scan_nested_struct_roundtrip(spark, sf_dir):
             (dec("o_totalprice") * 100).cast("long").alias("amount_cents"),
         ).alias("o"),
     )
-    out = tempfile.mkdtemp(prefix="cascade_nested_") + "/orders_nested"
+    out = store.tempdir("cascade_nested") + "/orders_nested"
     nested.write.parquet(out)
     back = spark.read.schema(nested.schema).parquet(out)
     return (
@@ -399,7 +396,7 @@ def scan_recursive_file_lookup(spark, sf_dir):
     import os
 
     c = t(spark, sf_dir, "customer")
-    root = tempfile.mkdtemp(prefix="cascade_rfl_") + "/tree"
+    root = store.tempdir("cascade_rfl") + "/tree"
     # nested, non-Hive layout: region=<mod3>/batch=<mod2>
     for r in range(3):
         for bch in range(2):
@@ -463,7 +460,7 @@ def scan_csv_multiline_quoted(spark, sf_dir):
         F.col("text"), F.lit(" the "), F.concat(F.lit(",\n"), F.lit('"the" '))
     )
     src = d.select("doc_id", text2.alias("text2"))
-    out = tempfile.mkdtemp(prefix="cascade_csvml_") + "/docs"
+    out = store.tempdir("cascade_csvml") + "/docs"
     src.write.mode("overwrite").option("header", True).csv(out)
     back = spark.read.schema(src.schema).option("header", True).option(
         "multiLine", True
@@ -504,7 +501,7 @@ def scan_xml_roundtrip(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
-    out = tempfile.mkdtemp(prefix="cascade_xml_") + "/orders"
+    out = store.tempdir("cascade_xml") + "/orders"
     o.write.mode("overwrite").format("xml").option("rootTag", "orders").option(
         "rowTag", "order"
     ).save(out)
@@ -552,7 +549,7 @@ def sink_rebalanced_write(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_returnflag"
     )
-    out = tempfile.mkdtemp(prefix="cascade_rebal_") + "/li"
+    out = store.tempdir("cascade_rebal") + "/li"
     li.hint("rebalance", "l_returnflag").write.mode("overwrite").partitionBy(
         "l_returnflag"
     ).parquet(out)
@@ -583,14 +580,11 @@ def sink_rebalanced_write(spark, sf_dir):
     )
 
 
-_BLOOM_CACHE: dict = {}
-
-
 def bloom_filter_output(spark, sf_dir: str) -> str:
     """Write lineitem with a parquet bloom filter on l_orderkey (memoized
     per sf_dir; inputs are read-only so the layout is immutable)."""
-    if sf_dir not in _BLOOM_CACHE:
-        out = tempfile.mkdtemp(prefix="cascade_bloom_") + "/lineitem"
+    def build():
+        out = store.tempdir("cascade_bloom") + "/lineitem"
         (
             t(spark, sf_dir, "lineitem")
             .repartition(4, "l_orderkey")
@@ -604,8 +598,9 @@ def bloom_filter_output(spark, sf_dir: str) -> str:
             .option("parquet.enable.dictionary#l_orderkey", "false")
             .parquet(out)
         )
-        _BLOOM_CACHE[sf_dir] = out
-    return _BLOOM_CACHE[sf_dir]
+        return out
+
+    return store.fixture("scans.bloom_lineitem", sf_dir, build)
 
 
 @register(
@@ -688,7 +683,7 @@ ORDER BY ship_month
 """,
 )
 def sink_file_size_targeting(spark, sf_dir):
-    out = tempfile.mkdtemp(prefix="cascade_sizetgt_") + "/lineitem"
+    out = store.tempdir("cascade_sizetgt") + "/lineitem"
     li = t(spark, sf_dir, "lineitem").withColumn(
         "ship_month", F.date_format("l_shipdate", "yyyy-MM")
     )
@@ -752,7 +747,7 @@ ORDER BY v.variant
 """,
 )
 def scan_parquet_codec_matrix(spark, sf_dir):
-    base = tempfile.mkdtemp(prefix="cascade_codec_")
+    base = store.tempdir("cascade_codec")
     src = t(spark, sf_dir, "lineitem").filter("l_orderkey % 5 = 0").select(
         "l_orderkey", "l_linenumber", "l_extendedprice"
     )
@@ -788,18 +783,15 @@ def scan_parquet_codec_matrix(spark, sf_dir):
     return res.orderBy("variant")
 
 
-_GZ_CACHE: dict[str, str] = {}
-
-
 def gzip_csv_output(spark, sf_dir: str) -> str:
     """Stage the events projection as exactly 3 gzip CSV files, one per
     user_id%3 class (three targeted writes — deterministic file
     contents, unlike round-robin repartition). Memoized per sf_dir:
     producer-side table prep, like bucketed_tables."""
-    if sf_dir not in _GZ_CACHE:
+    def build():
         from cascade_spark.tables import load
 
-        out = tempfile.mkdtemp(prefix="cascade_gz_") + "/events_gz"
+        out = store.tempdir("cascade_gz") + "/events_gz"
         ev = load(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type"
         )
@@ -812,8 +804,9 @@ def gzip_csv_output(spark, sf_dir: str) -> str:
                 .option("header", True)
                 .csv(out)
             )
-        _GZ_CACHE[sf_dir] = out
-    return _GZ_CACHE[sf_dir]
+        return out
+
+    return store.fixture("scans.gzip_csv", sf_dir, build)
 
 
 @register(
@@ -886,7 +879,7 @@ ORDER BY n_nationkey
 def scan_parquet_metadata_columns(spark, sf_dir):
     from cascade_spark.tables import load
 
-    out = tempfile.mkdtemp(prefix="cascade_meta_") + "/nation"
+    out = store.tempdir("cascade_meta") + "/nation"
     (
         load(spark, sf_dir, "nation")
         .select("n_nationkey")
@@ -936,7 +929,7 @@ def scan_text_wholetext(spark, sf_dir):
     import os
 
     docs = t(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="cascade_wholetext_")
+    out = store.tempdir("cascade_wholetext")
     # one file per selected doc, first line = source header, then text
     # (embedded newline is exactly what wholetext must preserve)
     sel = docs.filter(F.col("doc_id") % WHOLETEXT_MOD == 0).select(

@@ -14,10 +14,10 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
+from cascade_spark import store
 from cascade_spark.catalog import (
     consume_topic_partitions,
     publish_partitioned,
@@ -27,28 +27,25 @@ from cascade_spark.operators._util import d2, dec
 from cascade_spark.plans.registry import register
 from cascade_spark.tables import load
 
-_REGISTRY_CACHE: dict = {}
-
-
 def stage_topic_registry(spark, sf_dir: str) -> tuple[str, str]:
     """Build (once per sf_dir) a two-topic partitioned registry from the
     events fixture — 'events' (all rows) and 'clicks' (click rows only),
     each hash-assigned to 4 partitions — and register the external table.
     Returns (table_name, root)."""
-    if sf_dir in _REGISTRY_CACHE:
-        return _REGISTRY_CACHE[sf_dir]
-    root = os.path.join(tempfile.mkdtemp(prefix="cascade_topics_"), "registry")
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", F.unix_micros("ts").alias("ts_us"), "user_id", "event_type", "value"
-    )
-    publish_partitioned(ev, root, topic="events", num_partitions=4)
-    publish_partitioned(
-        ev.filter(F.col("event_type") == "click"), root, topic="clicks", num_partitions=4
-    )
-    table = "bus_registry_" + hashlib.md5(root.encode()).hexdigest()[:8]
-    register_persistent_topic(spark, table, root)
-    _REGISTRY_CACHE[sf_dir] = (table, root)
-    return table, root
+    def build():
+        root = os.path.join(store.tempdir("cascade_topics"), "registry")
+        ev = load(spark, sf_dir, "events").select(
+            "event_id", F.unix_micros("ts").alias("ts_us"), "user_id", "event_type", "value"
+        )
+        publish_partitioned(ev, root, topic="events", num_partitions=4)
+        publish_partitioned(
+            ev.filter(F.col("event_type") == "click"), root, topic="clicks", num_partitions=4
+        )
+        table = "bus_registry_" + hashlib.md5(root.encode()).hexdigest()[:8]
+        register_persistent_topic(spark, table, root)
+        return (table, root)
+
+    return store.fixture("topics.registry", sf_dir, build)
 
 
 @register(

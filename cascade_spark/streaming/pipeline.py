@@ -23,21 +23,18 @@ its own).
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.operators._util import avg_round, d2, dec, sql_avg_round
 from cascade_spark.tables import load
 
 _TS = "yyyy-MM-dd HH:mm:ss"
-
-
-_STAGE_CACHE: dict = {}
 
 
 @contextmanager
@@ -74,39 +71,38 @@ def stage_stream_input(
     Staged directories are cached per configuration (inputs are
     read-only), so successive streaming queries skip the re-write.
     """
-    key = (sf_dir, n_files, duplicate, sentinels)
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    ev = load(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="cascade_stream_")
-    indir = os.path.join(tmp, "in")
-    ev.repartitionByRange(n_files, "ts").write.mode("append").parquet(indir)
-    if duplicate:
+
+    def build():
+        ev = load(spark, sf_dir, "events")
+        tmp = store.tempdir("cascade_stream")
+        indir = os.path.join(tmp, "in")
         ev.repartitionByRange(n_files, "ts").write.mode("append").parquet(indir)
-    # Watermark delay that tolerates ANY file replay order: files are only
-    # roughly time-ordered, so an out-of-order batch must never mark real
-    # events late. Delay = full data span + 2h; sentinels sit beyond it so
-    # the final batch's watermark still passes every real session's end.
-    delay_hours = 2
-    if sentinels:
-        lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-        span_hours = int((hi - lo).total_seconds() // 3600) + 1
-        delay_hours = span_hours + 2
-        for i in range(sentinels):
-            offset = delay_hours + 2 * (i + 1)
-            (
-                spark.createDataFrame(
-                    [(-(i + 1), hi, -1, "sentinel", 0.0, "{}")],
-                    schema=ev.schema,
+        if duplicate:
+            ev.repartitionByRange(n_files, "ts").write.mode("append").parquet(indir)
+        # Watermark delay that tolerates ANY file replay order: files are only
+        # roughly time-ordered, so an out-of-order batch must never mark real
+        # events late. Delay = full data span + 2h; sentinels sit beyond it so
+        # the final batch's watermark still passes every real session's end.
+        delay_hours = 2
+        if sentinels:
+            lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
+            span_hours = int((hi - lo).total_seconds() // 3600) + 1
+            delay_hours = span_hours + 2
+            for i in range(sentinels):
+                offset = delay_hours + 2 * (i + 1)
+                (
+                    spark.createDataFrame(
+                        [(-(i + 1), hi, -1, "sentinel", 0.0, "{}")],
+                        schema=ev.schema,
+                    )
+                    .withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {offset} HOURS"))
+                    .coalesce(1)
+                    .write.mode("append")
+                    .parquet(indir)
                 )
-                .withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {offset} HOURS"))
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(indir)
-            )
-    result = (indir, ev.schema, tmp, f"{delay_hours} hours")
-    _STAGE_CACHE[key] = result
-    return result
+        return (indir, ev.schema, tmp, f"{delay_hours} hours")
+
+    return store.fixture("stream.stage", (sf_dir, n_files, duplicate, sentinels), build)
 
 
 def run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
@@ -313,7 +309,7 @@ def stream_ingest_exactly_once(spark, sf_dir):
     # declared operator, so every call must repeat it (a target inside
     # the cached staging dir made re-invocations a no-op replay, which
     # disqualified the query from bench retiming)
-    tmp = tempfile.mkdtemp(prefix="cascade_ingest_once_")
+    tmp = store.tempdir("cascade_ingest_once")
     outdir = os.path.join(tmp, "topic")
     ckpt = os.path.join(tmp, "ckpt")
     for _ in range(2):  # second run: same checkpoint, no new data, no dupes
@@ -421,19 +417,18 @@ def stream_dedup_within_watermark(spark, sf_dir):
 def _stage_split_input(spark: SparkSession, sf_dir: str):
     """Stage events as TWO streaming source directories (even/odd
     event_id) — the multi-source topology fixture. Cached per sf_dir."""
-    key = (sf_dir, "split2")
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    ev = load(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="cascade_stream_split_")
-    dirs = []
-    for name, pred in (("a", F.col("event_id") % 2 == 0), ("b", F.col("event_id") % 2 == 1)):
-        d = os.path.join(tmp, name)
-        ev.filter(pred).repartitionByRange(4, "ts").write.mode("append").parquet(d)
-        dirs.append(d)
-    result = (dirs[0], dirs[1], ev.schema, tmp)
-    _STAGE_CACHE[key] = result
-    return result
+
+    def build():
+        ev = load(spark, sf_dir, "events")
+        tmp = store.tempdir("cascade_stream_split")
+        dirs = []
+        for name, pred in (("a", F.col("event_id") % 2 == 0), ("b", F.col("event_id") % 2 == 1)):
+            d = os.path.join(tmp, name)
+            ev.filter(pred).repartitionByRange(4, "ts").write.mode("append").parquet(d)
+            dirs.append(d)
+        return (dirs[0], dirs[1], ev.schema, tmp)
+
+    return store.fixture("stream.stage", (sf_dir, "split2"), build)
 
 
 @register(
@@ -485,52 +480,51 @@ def stage_late_input(spark, sf_dir):
     order (FileStreamSource orders by modification time), which pins
     the watermark trajectory, which makes the set of dropped-late rows
     an exact, hash-checkable function of the data."""
-    key = (sf_dir, "late_audit")
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    ev = load(spark, sf_dir, "events")
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).collect()[0]
-    cut_us = lo + (hi - lo) // 2
-    tmp = tempfile.mkdtemp(prefix="cascade_late_")
-    indir = os.path.join(tmp, "in")
-    base_t = 1_700_000_000
 
-    def _write(df, t):
-        before = set(os.listdir(indir)) if os.path.isdir(indir) else set()
-        df.coalesce(1).write.mode("append").parquet(indir)
-        for f in set(os.listdir(indir)) - before:
-            os.utime(os.path.join(indir, f), (t, t))
+    def build():
+        ev = load(spark, sf_dir, "events")
+        lo, hi = ev.agg(
+            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
+        ).collect()[0]
+        cut_us = lo + (hi - lo) // 2
+        tmp = store.tempdir("cascade_late")
+        indir = os.path.join(tmp, "in")
+        base_t = 1_700_000_000
 
-    def _marker(ts_us: int):
-        return ev.limit(1).select(
-            F.lit(-1).cast(ev.schema["event_id"].dataType).alias("event_id"),
-            F.timestamp_micros(F.lit(ts_us)).alias("ts"),
-            F.lit(-1).cast(ev.schema["user_id"].dataType).alias("user_id"),
-            F.lit("sentinel").alias("event_type"),
-            F.lit(0.0).cast(ev.schema["value"].dataType).alias("value"),
-            F.lit("{}").alias("props"),
-        )
+        def _write(df, t):
+            before = set(os.listdir(indir)) if os.path.isdir(indir) else set()
+            df.coalesce(1).write.mode("append").parquet(indir)
+            for f in set(os.listdir(indir)) - before:
+                os.utime(os.path.join(indir, f), (t, t))
 
-    # Batch 0: the newer half — establishes max event time, so the NEXT
-    # batch commits watermark = max - delay.
-    _write(ev.filter(F.unix_micros("ts") >= cut_us), base_t)
-    # Batch 1: a pusher marker at max ts (no new max, excluded from the
-    # result by event_type) — Spark's late filter for batch k uses the
-    # watermark as of batch k-1's COMMIT, so one intermediate batch must
-    # pass between the max-setting data and the late data for the drop
-    # to engage (verified empirically; see the query doc).
-    _write(_marker(hi), base_t + 60)
-    # Batch 2: the older half — rows in hour windows ending at or below
-    # the committed watermark are dropped by the state store.
-    _write(ev.filter(F.unix_micros("ts") < cut_us), base_t + 120)
-    # Batch 3: far-future flush marker — pushes the final watermark past
-    # every real window end so append mode emits all surviving state.
-    _write(_marker(hi + (LATE_DELAY_HOURS + 60) * 3_600_000_000), base_t + 180)
-    result = (indir, ev.schema, cut_us, hi)
-    _STAGE_CACHE[key] = result
-    return result
+        def _marker(ts_us: int):
+            return ev.limit(1).select(
+                F.lit(-1).cast(ev.schema["event_id"].dataType).alias("event_id"),
+                F.timestamp_micros(F.lit(ts_us)).alias("ts"),
+                F.lit(-1).cast(ev.schema["user_id"].dataType).alias("user_id"),
+                F.lit("sentinel").alias("event_type"),
+                F.lit(0.0).cast(ev.schema["value"].dataType).alias("value"),
+                F.lit("{}").alias("props"),
+            )
+
+        # Batch 0: the newer half — establishes max event time, so the NEXT
+        # batch commits watermark = max - delay.
+        _write(ev.filter(F.unix_micros("ts") >= cut_us), base_t)
+        # Batch 1: a pusher marker at max ts (no new max, excluded from the
+        # result by event_type) — Spark's late filter for batch k uses the
+        # watermark as of batch k-1's COMMIT, so one intermediate batch must
+        # pass between the max-setting data and the late data for the drop
+        # to engage (verified empirically; see the query doc).
+        _write(_marker(hi), base_t + 60)
+        # Batch 2: the older half — rows in hour windows ending at or below
+        # the committed watermark are dropped by the state store.
+        _write(ev.filter(F.unix_micros("ts") < cut_us), base_t + 120)
+        # Batch 3: far-future flush marker — pushes the final watermark past
+        # every real window end so append mode emits all surviving state.
+        _write(_marker(hi + (LATE_DELAY_HOURS + 60) * 3_600_000_000), base_t + 180)
+        return (indir, ev.schema, cut_us, hi)
+
+    return store.fixture("stream.stage", (sf_dir, "late_audit"), build)
 
 
 @register(
@@ -789,26 +783,24 @@ def stream_scd2_dim_join(spark, sf_dir):
     ).orderBy("c_mktsegment", "version")
 
 
-_DOC_STAGE_CACHE: dict = {}
-
-
 def stage_docs_stream_input(spark, sf_dir, n_files: int = 4):
     """Stage the INCOMING document slice (doc_id % 5 == 0, >= 3 words)
     as a multi-file streaming input directory — the arrival side of the
     streaming near-dup gate. Cached per sf_dir like stage_stream_input."""
-    if sf_dir in _DOC_STAGE_CACHE:
-        return _DOC_STAGE_CACHE[sf_dir]
-    d = (
-        load(spark, sf_dir, "documents")
-        .filter("doc_id % 5 = 0 AND size(split(text, ' ')) >= 3")
-        .select("doc_id", "text")
-    )
-    tmp = tempfile.mkdtemp(prefix="cascade_docs_stream_")
-    indir = os.path.join(tmp, "in")
-    d.repartitionByRange(n_files, "doc_id").write.mode("append").parquet(indir)
-    schema = spark.read.parquet(indir).schema
-    _DOC_STAGE_CACHE[sf_dir] = (indir, schema)
-    return indir, schema
+
+    def build():
+        d = (
+            load(spark, sf_dir, "documents")
+            .filter("doc_id % 5 = 0 AND size(split(text, ' ')) >= 3")
+            .select("doc_id", "text")
+        )
+        tmp = store.tempdir("cascade_docs_stream")
+        indir = os.path.join(tmp, "in")
+        d.repartitionByRange(n_files, "doc_id").write.mode("append").parquet(indir)
+        schema = spark.read.parquet(indir).schema
+        return (indir, schema)
+
+    return store.fixture("stream.docs_stage", sf_dir, build)
 
 
 def _streaming_band_keys(df: DataFrame) -> DataFrame:
@@ -901,7 +893,7 @@ ORDER BY e.doc_id
     "so the gate agrees with the batch pipeline it fronts. At 100 TB "
     "the static band index is the bucketed/broadcast side and each "
     "micro-batch joins map-side — no stream state grows at all.",
-    oracle=None,  # built lazily below; see register_neardup_gate_oracle
+    oracle=_neardup_gate_oracle(),
 )
 def stream_neardup_gate(spark, sf_dir):
     from cascade_spark.operators.dedup import _signatures, BANDS, N_HASHES
@@ -950,9 +942,3 @@ def stream_neardup_gate(spark, sf_dir):
         )
         .orderBy("doc_id")
     )
-
-
-# attach the oracle after registration (it composes dedup's CTE text)
-from cascade_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["stream_neardup_gate"].oracle = _neardup_gate_oracle()

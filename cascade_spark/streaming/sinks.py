@@ -14,6 +14,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.streaming.pipeline import stage_stream_input
 
@@ -30,14 +31,12 @@ FROM events
 """,
 )
 def stream_foreachbatch_sink(spark, sf_dir):
-    import tempfile
-
     indir, schema, _, _ = stage_stream_input(spark, sf_dir, n_files=4)
     # fresh drain dir + checkpoint per invocation: the foreachBatch drain
     # IS the declared operator — re-running it keeps the builder
     # retime-eligible (a target inside the cached staging dir made every
     # re-invocation a read-back of the first run's output)
-    tmp = tempfile.mkdtemp(prefix="cascade_drain_")
+    tmp = store.tempdir("cascade_drain")
     outdir = os.path.join(tmp, "drained")
 
     def drain(batch_df, epoch_id: int) -> None:
@@ -94,10 +93,8 @@ ORDER BY user_id
 """,
 )
 def stream_foreachbatch_upsert(spark, sf_dir):
-    import tempfile
-
     indir, schema, _, _ = stage_stream_input(spark, sf_dir, n_files=4, duplicate=True)
-    base = tempfile.mkdtemp(prefix="cascade_upsert_")
+    base = store.tempdir("cascade_upsert")
     gen = {"n": 0}
     pick = F.max(F.struct("ts", "event_id", "value")).alias("m")
 

@@ -22,13 +22,12 @@ analog is ``bus_index_dump``; this is the Structured-Streaming analog.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 from cascade_spark.streaming.pipeline import (
-    _STAGE_CACHE,
     run_to_memory,
     stage_late_input,
     stage_stream_input,
@@ -45,37 +44,37 @@ def _run_checkpointed_agg(spark, sf_dir, n_state_parts: int = 8) -> str:
     explicit checkpoint) and return the checkpoint path. Memoized per
     (sf_dir, partitions): the checkpoint is immutable once the query
     finishes, so the state-reader queries share one run."""
-    key = (sf_dir, "state_reader_chk", n_state_parts)
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    indir, schema, _tmp, _delay = stage_stream_input(spark, sf_dir, n_files=8)
-    chk = os.path.join(tempfile.mkdtemp(prefix="cascade_state_"), "chk")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
-    agg = src.groupBy(
-        F.date_format(F.date_trunc("hour", "ts"), _TS).alias("window_start"),
-        "event_type",
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(12,4)") * 100)
-        .cast("long")
-        .alias("cents"),
-    )
-    with state_partitions(spark, n_state_parts):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("cascade_state_reader_sink")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+
+    def build():
+        indir, schema, _tmp, _delay = stage_stream_input(spark, sf_dir, n_files=8)
+        chk = os.path.join(store.tempdir("cascade_state"), "chk")
+        src = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(indir)
         )
-        q.awaitTermination()
-    _STAGE_CACHE[key] = chk
-    return chk
+        agg = src.groupBy(
+            F.date_format(F.date_trunc("hour", "ts"), _TS).alias("window_start"),
+            "event_type",
+        ).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").cast("decimal(12,4)") * 100)
+            .cast("long")
+            .alias("cents"),
+        )
+        with state_partitions(spark, n_state_parts):
+            q = (
+                agg.writeStream.outputMode("complete")
+                .format("memory")
+                .queryName("cascade_state_reader_sink")
+                .option("checkpointLocation", chk)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return chk
+
+    return store.fixture("stream.stage", (sf_dir, "state_reader_chk", n_state_parts), build)
 
 
 @register(
@@ -273,32 +272,32 @@ def _run_changelog_agg(spark, sf_dir) -> str:
     """Complete-mode hour×type count over the deterministic late-replay
     staging (4 pinned batches), explicit checkpoint; memoized — the
     checkpoint is immutable once the query finishes."""
-    key = (sf_dir, "state_changelog_chk")
-    if key in _STAGE_CACHE:
-        return _STAGE_CACHE[key]
-    indir, schema, _cut, _hi = stage_late_input(spark, sf_dir)
-    chk = os.path.join(tempfile.mkdtemp(prefix="cascade_chlog_"), "chk")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
-    agg = src.groupBy(
-        F.date_format(F.date_trunc("hour", "ts"), _TS).alias("window_start"),
-        "event_type",
-    ).agg(F.count(F.lit(1)).alias("n"))
-    with state_partitions(spark, 8):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("cascade_chlog_sink")
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
+
+    def build():
+        indir, schema, _cut, _hi = stage_late_input(spark, sf_dir)
+        chk = os.path.join(store.tempdir("cascade_chlog"), "chk")
+        src = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(indir)
         )
-        q.awaitTermination()
-    _STAGE_CACHE[key] = chk
-    return chk
+        agg = src.groupBy(
+            F.date_format(F.date_trunc("hour", "ts"), _TS).alias("window_start"),
+            "event_type",
+        ).agg(F.count(F.lit(1)).alias("n"))
+        with state_partitions(spark, 8):
+            q = (
+                agg.writeStream.outputMode("complete")
+                .format("memory")
+                .queryName("cascade_chlog_sink")
+                .option("checkpointLocation", chk)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return chk
+
+    return store.fixture("stream.stage", (sf_dir, "state_changelog_chk"), build)
 
 
 @register(

@@ -39,12 +39,7 @@ TOP_N = int(os.environ.get("SPARK_GRAFT_SCALE_TOP", "25"))
 
 os.environ.setdefault("CASCADE_DRIVER_MEM", "48g")
 
-
-def _materialize(df) -> None:
-    from pyspark.sql import functions as F
-
-    h = F.xxhash64(*[F.col(c) for c in df.columns]) if df.columns else F.lit(0)
-    df.select(h.alias("_h")).agg(F.count("_h"), F.sum("_h")).collect()
+from bench import _materialize  # noqa: E402
 
 
 def _top_queries() -> list[str]:

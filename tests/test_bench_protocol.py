@@ -8,7 +8,7 @@ not silently return:
   family), and `_NO_RETIME` queries never get a second chance — so
   bench prep MUST stage every memoized fixture a `_NO_RETIME` query
   reads (fixed by bench.prepare; pinned here by running prepare() at
-  the smallest tier and asserting each memoization cache is warm);
+  the smallest tier and asserting each store fixture is staged);
 - round 9: driver CORRECTNESS sample slots were burned on rows-only
   queries producing perpetual `no_oracle` rows (pinned in
   test_driver_contract.py::test_front_is_exactly_the_never_sampled_tail
@@ -30,44 +30,39 @@ def prepared(spark, sf_dir):
 
 
 def test_prepare_stages_every_memoized_fixture(prepared, spark, sf_dir):
-    """After bench.prepare(sf_dir), every memoization cache a timed
-    query reads must already hold its sf_dir entry, so no timed first
-    run can pay a fixture build (round-13: with the whole stream/bus
-    family retime-eligible this protects the FIRST-run figure, which
-    the retime rule discloses)."""
-    from cascade_spark.operators import maintenance, multimodal
-    from cascade_spark.sources import cascade_bus, lakehouse, scans, topics
-    from cascade_spark.streaming import pipeline, state_reader
+    """After bench.prepare(sf_dir), every staged fixture a timed query
+    reads must already be in the store under its sf_dir key, so no timed
+    first run can pay a fixture build (round-13: with the whole
+    stream/bus family retime-eligible this protects the FIRST-run
+    figure, which the retime rule discloses)."""
+    from cascade_spark import store
 
-    def keyed(cache: dict) -> bool:
-        # caches key by sf_dir or (sf_dir, params...) tuples
-        return any(
-            sf_dir in (k if isinstance(k, tuple) else (k,)) for k in cache
-        )
+    def staged(name: str) -> list:
+        # fixtures key by sf_dir or (sf_dir, params...) tuples
+        return [
+            k for k in store.keys(name) if sf_dir in (k if isinstance(k, tuple) else (k,))
+        ]
 
     # streaming fixture inputs: all six stage_stream_input variants plus
     # the split-source and late-replay stagings (keyed tuples)
-    stream_keys = [
-        k for k in pipeline._STAGE_CACHE if isinstance(k, tuple) and sf_dir in k
-    ]
-    assert len(stream_keys) >= 8, stream_keys
-    assert sf_dir in pipeline._DOC_STAGE_CACHE, "near-dup doc stream not staged"
+    assert len(staged("stream.stage")) >= 8, store.keys("stream.stage")
+    assert staged("stream.docs_stage"), "near-dup doc stream not staged"
     # the two shared state-reader checkpoints (the r9 failure site)
     sr_keys = [
         k
-        for k in state_reader._STAGE_CACHE
-        if isinstance(k, tuple) and sf_dir in k and ("state_reader" in str(k) or "state_changelog" in str(k))
+        for k in staged("stream.stage")
+        if "state_reader" in str(k) or "state_changelog" in str(k)
     ]
     assert len(sr_keys) >= 2, "state-reader checkpoints not pre-staged"
-    assert keyed(cascade_bus._TOPIC_CACHE), "bus topic not staged"
-    assert keyed(topics._REGISTRY_CACHE), "topic registry not staged"
-    assert keyed(maintenance._CLUSTER_CACHE), "clustered layout not staged"
-    assert keyed(scans._BLOOM_CACHE), "bloom layout not staged"
-    assert keyed(lakehouse._DERBY_CACHE), "jdbc fixture not staged"
-    assert keyed(multimodal._BINFILE_CACHE), "binaryFile .ppm dir not staged"
+    assert staged("bus.topic"), "bus topic not staged"
+    assert staged("topics.registry"), "topic registry not staged"
+    assert staged("maintenance.clustered_lineitem"), "clustered layout not staged"
+    assert staged("scans.bloom_lineitem"), "bloom layout not staged"
+    assert staged("lakehouse.derby_orders"), "jdbc fixture not staged"
+    assert staged("multimodal.blob_dir"), "binaryFile .ppm dir not staged"
     from cascade_spark.operators.bucketing import bucketed_tables
 
-    # bucketing memoizes via the session catalog, not a module dict
+    # bucketing memoizes via the session catalog, not the store
     li_name, o_name = bucketed_tables(spark, sf_dir)
     assert spark.catalog.tableExists(li_name)
     assert spark.catalog.tableExists(o_name)
@@ -75,48 +70,35 @@ def test_prepare_stages_every_memoized_fixture(prepared, spark, sf_dir):
 
 def test_no_retime_queries_have_no_unstaged_memoized_fixture(prepared, spark, sf_dir):
     """Run every `_NO_RETIME`-class bench query once AFTER prepare() and
-    assert none of the staging caches gained a new sf_dir entry — i.e.
-    no fixture build can land inside a never-retimed query's timing.
-    (Executes the actual builders, so a new memoized fixture added
-    without a prepare() step fails this test the round it lands.)"""
+    assert no store name gained a build — i.e. no fixture build
+    can land inside a never-retimed query's timing. (Executes the actual
+    builders, so a new memoized fixture added without a prepare() step
+    fails this test the round it lands.)"""
     import bench
-    from cascade_spark.operators import maintenance, multimodal
+    from cascade_spark import store
     from cascade_spark.plans.registry import load_all
-    from cascade_spark.sources import cascade_bus, lakehouse, scans, topics
-    from cascade_spark.streaming import pipeline, state_reader
 
-    caches = {
-        "pipeline._STAGE_CACHE": pipeline._STAGE_CACHE,
-        "pipeline._DOC_STAGE_CACHE": pipeline._DOC_STAGE_CACHE,
-        "state_reader._STAGE_CACHE": state_reader._STAGE_CACHE,
-        "cascade_bus._TOPIC_CACHE": cascade_bus._TOPIC_CACHE,
-        "topics._REGISTRY_CACHE": topics._REGISTRY_CACHE,
-        "maintenance._COMPACT_CACHE": maintenance._COMPACT_CACHE,
-        "maintenance._CLUSTER_CACHE": maintenance._CLUSTER_CACHE,
-        "scans._BLOOM_CACHE": scans._BLOOM_CACHE,
-        "lakehouse._DERBY_CACHE": lakehouse._DERBY_CACHE,
-        "multimodal._BINFILE_CACHE": multimodal._BINFILE_CACHE,
-    }
-    # _COMPACT_CACHE is a builder-owned one-shot side effect
-    # (maintenance_compact_*): its query IS the staging, which is
-    # exactly why it is _NO_RETIME — prime it once here so the
+    def builds() -> dict[str, int]:
+        return {name: st["builds"] for name, st in store.stats().items()}
+
+    # maintenance.compacted_topic is a builder-owned one-shot side
+    # effect (maintenance_compact_*): its query IS the staging, which
+    # is exactly why it is _NO_RETIME — prime it once here so the
     # snapshot below sees steady state.
     reg = load_all()
     no_retime = sorted(
         n
-        for n, q in reg.items()
-        if q.bench
-        and n not in bench._RETIME_OK
-        and n.startswith(bench._NO_RETIME_PREFIXES)
+        for n in reg
+        if n not in bench._RETIME_OK and n.startswith(bench._NO_RETIME_PREFIXES)
     )
     assert no_retime, "expected a non-empty _NO_RETIME class"
     for name in no_retime:
         reg[name].builder(spark, sf_dir).count()
-    before = {k: len(v) for k, v in caches.items()}
+    before = builds()
     for name in no_retime:
         reg[name].builder(spark, sf_dir).count()
-    after = {k: len(v) for k, v in caches.items()}
-    grew = {k: (before[k], after[k]) for k in caches if after[k] != before[k]}
+    after = builds()
+    grew = {k: (before.get(k, 0), v) for k, v in after.items() if v != before.get(k, 0)}
     assert not grew, f"memoized fixtures built inside _NO_RETIME queries: {grew}"
 
 
@@ -130,9 +112,8 @@ def test_stream_bus_family_is_retime_eligible():
 
     ineligible = [
         n
-        for n, q in load_all().items()
-        if q.bench
-        and n.startswith(("stream_", "bus_"))
+        for n in load_all()
+        if n.startswith(("stream_", "bus_"))
         and not (n in bench._RETIME_OK or not n.startswith(bench._NO_RETIME_PREFIXES))
     ]
     assert not ineligible, ineligible
@@ -154,12 +135,12 @@ def test_sink_builders_rebuild_per_call(prepared, spark, sf_dir, name, tmp_prefi
     that is what makes their bench retimes measure the operator, not a
     read-back of the first run's output."""
     import glob
-    import tempfile
 
+    from cascade_spark import store
     from cascade_spark.plans.registry import load_all
 
     builder = load_all()[name].builder
-    pattern = f"{tempfile.gettempdir()}/{tmp_prefix}*"
+    pattern = f"{store.root()}/{tmp_prefix}*"
     r1 = [tuple(r) for r in builder(spark, sf_dir).collect()]
     n_dirs_after_first = len(glob.glob(pattern))
     r2 = [tuple(r) for r in builder(spark, sf_dir).collect()]

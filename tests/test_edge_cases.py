@@ -317,36 +317,25 @@ def test_graph_degree_cap_drops_hub_node(spark, tmp_path):
 
 
 def test_cached_frame_evicts_dead_session_entries(spark, sf_dir):
-    """Every shared persisted-frame cache must drop entries keyed by a
-    stopped application on the next miss — holding a dead session's
-    DataFrame handle leaks driver memory and can never serve a hit.
-    Parametrized over ALL the family caches (dedup signatures/pairs/
-    shingles, interval pairs, pagerank edges, Q11 per-part values)."""
-    import pytest
+    """A shared spine must drop entries keyed by a stopped application
+    on the next miss — holding a dead session's DataFrame handle leaks
+    driver memory and can never serve a hit. Every spine (dedup
+    signatures/pairs/shingles, interval pairs, graph edges, Q11
+    per-part values, ...) goes through the one eviction path in
+    store.frame, so that path is checked directly."""
+    from types import SimpleNamespace
 
-    from cascade_spark.operators import bpe, dedup, graph, interval, tpch_full
+    from cascade_spark import store
 
-    caches = {
-        "dedup._SIG_CACHE": dedup._SIG_CACHE,
-        "dedup._PAIR_CACHE": getattr(dedup, "_PAIR_CACHE", None),
-        "dedup._SHINGLE_CACHE": dedup._SHINGLE_CACHE,
-        "interval._PAIR_CACHE": interval._PAIR_CACHE,
-        "graph._EDGE_CACHE": graph._EDGE_CACHE,
-        "graph._COEDGE_CACHE": graph._COEDGE_CACHE,
-        "tpch_full._Q11_VAL_CACHE": tpch_full._Q11_VAL_CACHE,
-        "bpe._MERGED_CACHE": bpe._MERGED_CACHE,
-    }
-    caches = {k: v for k, v in caches.items() if v is not None}
-    assert len(caches) >= 5
+    name = "test.eviction_probe"
+    dead = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-dead-0000"))
+    # a handle cached by a session that has since stopped
+    store.frame(name, dead, "/no/such/dir", lambda: spark.range(1))
+    assert store.keys(name) == [("app-dead-0000", "/no/such/dir")]
     live_app = spark.sparkContext.applicationId
-    for name, cache in caches.items():
-        stale_key = ("app-dead-0000", "/no/such/dir")
-        cache[stale_key] = spark.range(1)  # stands in for a dead handle
-        out = dedup._cached_frame(
-            cache, spark, "/eviction/probe", lambda: spark.range(2)
-        )
-        assert out.count() == 2
-        assert stale_key not in cache, name
-        assert (live_app, "/eviction/probe") in cache, name
-        # cleanup the probe entry so later tests see pristine caches
-        cache.pop((live_app, "/eviction/probe")).unpersist()
+    out = store.frame(name, spark, "/eviction/probe", lambda: spark.range(2))
+    assert out.count() == 2
+    assert store.keys(name) == [(live_app, "/eviction/probe")]
+    # cleanup the probe entry so later tests see a pristine store
+    store.drop(name)
+    out.unpersist()

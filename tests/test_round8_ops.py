@@ -197,14 +197,14 @@ def test_lsh_blocking_plans_equi_join_not_allpairs(spark, sf_dir):
     must plan a HASH equi-join on the (band, code) bucket key — never a
     cartesian/nested-loop pair enumeration. Checked on the end-to-end
     plans of both rewritten queries."""
-    from cascade_spark.operators.similarity import _EMB_PAIR_CACHE
+    from cascade_spark import store
 
-    _EMB_PAIR_CACHE.clear()  # plan the build path, not the cached frame
+    store.drop("similarity.emb_pairs")  # plan the build path, not the cached frame
     for name in ("embedding_neardup_blocked", "similarity_semantic_dedup"):
         df = load_all()[name].builder(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, f"{name}:\n{plan}"
-        _EMB_PAIR_CACHE.clear()
+        store.drop("similarity.emb_pairs")
 
 
 def test_pca_direction_is_unit_scaled_and_stable(spark, sf_dir):
