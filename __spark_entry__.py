@@ -27,168 +27,18 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # Canonical driver-sample ordering (the driver's CORRECTNESS sampling is
 # partial, ~50 of the registry, taken from the front of queries()). This
-# list is the STATIC oldest-debt-first ordering of every hash-checkable
-# query that had not yet been driver-sampled as of round 11; the LIVE
-# front is computed per call by _front(): entries already green in any
-# CORRECTNESS_r*.json are dropped, and hash-checkable queries added after
-# this list was pinned are appended (name-sorted). That makes the front
-# self-rebuilding at each round boundary instead of a hand-recomputed pin
-# (round-11 verdict item 1 / ADVICE round-11 item 2). Rows-only queries
+# list is the oldest-debt-first ordering of every hash-checkable query
+# with no green row in the committed CORRECTNESS_r*.json files (newest:
+# r13). Names that turned green are pruned from it; the green set only
+# grows, so a pruned name can never re-enter the front. The LIVE front
+# is computed per call by _front(): entries green in a newer artifact
+# are dropped, and hash-checkable queries registered after this list
+# was pinned are appended (name-sorted). Rows-only queries
 # (oracle omitted BY DESIGN: approximate or not-SQL-expressible) never
 # enter the front so no sample slot is burned on a perpetual `no_oracle`
 # row. The full registry stays oracle-gated in pytest
 # (tests/test_oracle.py).
 _FRONT_ORDER: list[str] = [
-    "join_broadcast_left_outer",
-    "agg_group_by_all",
-    "fn_date_calendar",
-    "ingest_consume_roundtrip",
-    "consume_last_event",
-    "scd2_apply_changes",
-    "agg_correlation",
-    "pipeline_snapshot_cdc_diff",
-    "events_sessionize_gap",
-    "setop_union",
-    "setop_intersect",
-    "setop_except",
-    "setop_dedup_keep_first",
-    "setop_bag_all_variants",
-    "agg_median_mode",
-    "fn_bitwise",
-    "events_anomaly_zscore",
-    "dedup_keep_best",
-    "events_time_rollup",
-    "events_gapfill_interpolate",
-    "agg_filtered_conditional",
-    "agg_string_concat_ordered",
-    "agg_trend_regression",
-    "events_anomaly_mad",
-    "stats_quantile_bands_exact",
-    "stats_spearman_rho",
-    "stats_welch_ttest",
-    "stats_cramers_v",
-    "stats_kruskal_wallis",
-    "stats_brown_forsythe",
-    "stats_permutation_test",
-    "stats_jackknife_variance",
-    "events_feature_drift_psi",
-    "similarity_cosine_topk",
-    "similarity_ann_lsh",
-    "similarity_quantized_topk",
-    "similarity_knn_join",
-    "sort_topk_global",
-    "sort_global_nulls",
-    "sort_topk_per_group",
-    "subquery_lateral_topn",
-    "window_ignore_nulls",
-    "agg_bool_flags",
-    "fn_url_parse",
-    "fn_variant_json",
-    "agg_collated_group",
-    "scan_csv_permissive_badrecords",
-    "agg_grouping_id",
-    "events_session_window_batch",
-    "fn_xml_extract",
-    "fn_aes_roundtrip",
-    "events_session_window_dynamic_gap",
-    "catalog_global_temp_view",
-    "sql_identifier_clause",
-    "text_gopher_quality_filter",
-    "text_top_word_ratio",
-    "text_zipf_topwords",
-    "text_lm_commonality",
-    "pipeline_ccnet_ppl_buckets",
-    "pipeline_quality_threshold_sweep",
-    "text_rake_keywords",
-    "events_resample_ohlc",
-    "events_new_vs_returning",
-    "events_ewma_dyadic",
-    "events_max_drawdown",
-    "tpch_q11_important_stock",
-    "tpch_q13_customer_distribution",
-    "tpch_q22_global_sales",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q12_priority_class",
-    "embedding_centroid_per_label",
-    "embedding_norm_audit",
-    "similarity_centroid_cosine_matrix",
-    "embedding_pca_power_iteration",
-    "embedding_matryoshka_energy",
-    "window_ranking",
-    "window_lag_lead",
-    "window_frames",
-    "window_time_range_frame",
-    "window_running_distinct",
-    "window_rolling_median",
-    "fn_array_basic",
-    "fn_array_higher_order",
-    "fn_array_explode",
-    "fn_map_struct",
-    "fn_json",
-    "fn_json_to_json",
-    "fn_hash",
-    "fn_regexp_extract_all",
-    "fn_array_set_operations",
-    "fn_posexplode_outer",
-    "fn_array_safe_access",
-    "fn_string",
-    "fn_string_split",
-    "fn_datetime",
-    "fn_timestamp_parse",
-    "fn_math",
-    "fn_conditional",
-    "fn_cast_format",
-    "fn_string_distance",
-    "fn_try_arithmetic",
-    "fn_binary_encoding_roundtrip",
-    "udf_pandas_scalar",
-    "udf_grouped_centroid",
-    "udtf_chunk_documents",
-    "udf_arrow_row",
-    "udf_cogrouped_pandas",
-    "udf_map_in_arrow",
-    "fn_inline_array_structs",
-    "udf_grouped_apply_in_arrow",
-    "udtf_polymorphic_analyze",
-    "udf_pandas_window_agg",
-    "scan_csv_roundtrip",
-    "scan_json_roundtrip",
-    "sink_partitioned",
-    "scan_orc_roundtrip",
-    "sink_overwrite",
-    "scan_schema_evolution",
-    "sink_dynamic_partition_overwrite",
-    "scan_text_lines",
-    "scan_ignore_corrupt_files",
-    "scan_csv_multiline_quoted",
-    "scan_xml_roundtrip",
-    "sink_rebalanced_write",
-    "scan_text_gzip_nonsplittable",
-    "scan_parquet_metadata_columns",
-    "bus_source_roundtrip",
-    "bus_source_batch_scan",
-    "bus_source_offset_seek",
-    "bus_sink_batch_write",
-    "bus_sink_stream_roundtrip",
-    "bus_stream_windowed_agg",
-    "bus_index_dump",
-    "bus_topic_compaction",
-    "bus_consumer_lag",
-    "catalog_partition_pruned_consume",
-    "catalog_multi_topic_counts",
-    "bus_consumer_group_assignment",
-    "stream_tumbling_window",
-    "stream_sliding_window",
-    "stream_session_window",
-    "stream_dedup_watermark",
-    "stream_ingest_exactly_once",
-    "stream_chained_windows",
-    "stream_dedup_within_watermark",
-    "stream_late_data_audit",
-    "stream_update_mode_changelog",
-    "stream_scd2_dim_join",
-    "stream_neardup_gate",
     "stream_stream_join",
     "stream_stream_left_outer",
     "stream_rate_source",

@@ -41,9 +41,6 @@ os.environ.setdefault("CASCADE_DRIVER_MEM", "48g")
 # untouched code). Only builders whose one-shot side effect IS the
 # measurement remain no-retime:
 _NO_RETIME_PREFIXES = ("maintenance_compact", "scan_schema")
-# Queries exempted from a _NO_RETIME prefix (none currently; kept so
-# the eligibility rule and its tests stay stable if a prefix returns).
-_RETIME_OK: set = set()
 
 
 def _materialize(df) -> None:
@@ -248,8 +245,7 @@ def main() -> None:
         (
             n
             for n, v in timings.items()
-            if v > 0
-            and (n in _RETIME_OK or not n.startswith(_NO_RETIME_PREFIXES))
+            if v > 0 and not n.startswith(_NO_RETIME_PREFIXES)
         ),
         key=lambda n: -timings[n],
     )[:12]
@@ -288,7 +284,7 @@ def main() -> None:
         and n not in set(retime)
         and committed.get(n, 0) > 0
         and v > 2.0 * committed[n]
-        and (n in _RETIME_OK or not n.startswith(_NO_RETIME_PREFIXES))
+        and not n.startswith(_NO_RETIME_PREFIXES)
     )
     for name in outliers:
         _retime(name)
@@ -354,7 +350,7 @@ def main() -> None:
         if r > 2.0
         and baseline.get(n, 0) >= 0.5
         and timings.get(n, -1) > 0
-        and (n in _RETIME_OK or not n.startswith(_NO_RETIME_PREFIXES))
+        and not n.startswith(_NO_RETIME_PREFIXES)
     )
     if weak and os.path.isdir(floor_sf) and floor_sf != SF_DIR.rstrip("/"):
         # warm the floor tier's fixtures so the floor figure measures

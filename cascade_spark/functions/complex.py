@@ -18,7 +18,6 @@ from cascade_spark.operators._util import t
 
 @register(
     "fn_array_basic",
-    "functions",
     doc="size / element_at / slice / sequence / array_sort+array_join over "
     "embeddings and tokenized text.",
     oracle="""
@@ -54,7 +53,6 @@ def fn_array_basic(spark, sf_dir):
 
 @register(
     "fn_array_higher_order",
-    "functions",
     doc="Higher-order functions: transform / filter / aggregate / zip_with "
     "— vector math fully JVM-side (the brute-force half of the similarity "
     "surface). Sums rounded to 4 (sequential fold order is identical in "
@@ -95,7 +93,6 @@ def fn_array_higher_order(spark, sf_dir):
 
 @register(
     "fn_array_explode",
-    "functions",
     doc="explode/posexplode: unnest embedding elements with position, "
     "re-aggregate per vector.",
     oracle="""
@@ -128,7 +125,6 @@ def fn_array_explode(spark, sf_dir):
 
 @register(
     "fn_map_struct",
-    "functions",
     doc="map/struct constructors and field access (create_map, map_keys, "
     "struct.getField).",
     oracle="""
@@ -156,7 +152,6 @@ def fn_map_struct(spark, sf_dir):
 
 @register(
     "fn_json",
-    "functions",
     doc="JSON family over events.props: get_json_object / from_json / "
     "json_tuple (DuckDB: json_extract).",
     oracle="""
@@ -183,7 +178,6 @@ def fn_json(spark, sf_dir):
 
 @register(
     "fn_json_to_json",
-    "functions",
     doc="to_json serialization of a struct (compact, key-ordered — both "
     "engines emit {\"a\":1,...} with insertion order).",
     oracle="""
@@ -205,7 +199,6 @@ def fn_json_to_json(spark, sf_dir):
 
 @register(
     "fn_json_schema",
-    "functions",
     oracle=None,  # schema_of_json's type-string format is engine-specific
     doc="schema_of_json: infer the schema of the props JSON column "
     "(Spark type-string output; DuckDB's json_structure format differs, "
@@ -221,7 +214,6 @@ def fn_json_schema(spark, sf_dir):
 
 @register(
     "fn_hash",
-    "functions",
     doc="Hash family shared across engines: md5 / sha2-256 (these also "
     "back the dedup fingerprints).",
     oracle="""
@@ -243,7 +235,6 @@ def fn_hash(spark, sf_dir):
 
 @register(
     "fn_hash_spark_native",
-    "functions",
     oracle=None,  # xxhash64/crc32 have no DuckDB equivalent — rows-only
     doc="Spark-native hashes (xxhash64, crc32) — deterministic, used for "
     "salting/bucketing at scale; stability asserted in tests instead of "
@@ -260,7 +251,6 @@ def fn_hash_spark_native(spark, sf_dir):
 
 @register(
     "fn_map_higher_order",
-    "functions",
     doc="Map higher-order functions: the transform_values / "
     "transform_keys / map_filter / map_zip_with semantics over an "
     "exact-integer measure map per lineitem row, fused (round-13) into "
@@ -417,7 +407,6 @@ def fn_map_higher_order(spark, sf_dir):
 
 @register(
     "fn_aggregate_struct_accumulator",
-    "functions",
     doc="Higher-order aggregate with a STRUCT accumulator: one "
     "F.aggregate pass over each embedding computes (sum, min, max, n) "
     "of the floor(x*200) quantized values simultaneously — the "
@@ -478,7 +467,6 @@ def fn_aggregate_struct_accumulator(spark, sf_dir):
 
 @register(
     "fn_regexp_extract_all",
-    "functions",
     doc="regexp_extract_all over document text: every >=4-letter word is "
     "pulled by one JVM regex pass per row (no explode of the raw split), "
     "then per-doc match count, distinct count, and the lexicographic "
@@ -510,7 +498,6 @@ def fn_regexp_extract_all(spark, sf_dir):
 
 @register(
     "fn_array_set_operations",
-    "functions",
     doc="Array set algebra between consecutive documents' token sets: "
     "array_union / array_intersect / array_except sizes plus the sorted "
     "intersection rendered as a string. The set ops run on the deduped "
@@ -555,7 +542,6 @@ def fn_array_set_operations(spark, sf_dir):
 
 @register(
     "fn_posexplode_outer",
-    "functions",
     doc="posexplode_outer semantics: embeddings with vec_id % 97 == 0 are "
     "nulled out, and the OUTER explode must still emit one (pos=NULL, "
     "qval=NULL) row for them — the padding behavior plain explode drops "
@@ -597,7 +583,6 @@ def fn_posexplode_outer(spark, sf_dir):
 
 @register(
     "fn_array_safe_access",
-    "functions",
     doc="Safe array access family: element_at with a negative index "
     "(from-the-end), try_element_at past the end (NULL, no error), "
     "get() with an out-of-range 0-based index (NULL), and slice() "

@@ -12,12 +12,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cascade_spark.plans.registry import register
-from cascade_spark.operators._util import t
+from cascade_spark.operators._util import bigint, t
 
 
 @register(
     "fn_string",
-    "functions",
     doc="String family: concat/substring/upper/lower/trim/length/lpad/"
     "instr/regexp_extract/regexp_replace (reference: event_name strings, "
     "proto/publish.proto:12).",
@@ -54,7 +53,6 @@ def fn_string(spark, sf_dir):
 
 @register(
     "fn_string_split",
-    "functions",
     doc="split + explode word pivot: word frequency over documents "
     "(split is the SQL-side tokenizer for the text-analysis surface).",
     oracle="""
@@ -80,7 +78,6 @@ def fn_string_split(spark, sf_dir):
 
 @register(
     "fn_datetime",
-    "functions",
     doc="Datetime family: year/month/day/hour, date_trunc, date_add, "
     "datediff, unix_timestamp, date_format (reference R7 timestamp "
     "decode/format, src/broker/main.rs:36-48).",
@@ -119,7 +116,6 @@ def fn_datetime(spark, sf_dir):
 
 @register(
     "fn_timestamp_parse",
-    "functions",
     doc="to_timestamp / strptime roundtrip through a formatted string.",
     oracle="""
 SELECT o_orderkey,
@@ -142,7 +138,6 @@ def fn_timestamp_parse(spark, sf_dir):
 
 @register(
     "fn_math",
-    "functions",
     doc="Math family: round/floor/ceil/abs/sqrt/pow/log/pmod/sign. "
     "Transcendentals rounded to 6 places (libm last-ulp differences).",
     oracle="""
@@ -177,7 +172,6 @@ def fn_math(spark, sf_dir):
 
 @register(
     "fn_conditional",
-    "functions",
     doc="Conditional/null family: coalesce/nullif/greatest/least "
     "(reference R7 null fallbacks, src/broker/main.rs:42-46).",
     oracle="""
@@ -214,7 +208,6 @@ def fn_conditional(spark, sf_dir):
 
 @register(
     "fn_cast_format",
-    "functions",
     doc="Cast / printf-style formatting (reference to_string uses, "
     "src/broker/main.rs:98,106).",
     oracle="""
@@ -246,7 +239,6 @@ def fn_cast_format(spark, sf_dir):
 
 @register(
     "fn_string_distance",
-    "functions",
     doc="Edit-distance functions: levenshtein between every pair of "
     "distinct event_type values (fuzzy-matching primitive; the "
     "blocking-join form lives with the dedup operators). The distinct "
@@ -282,7 +274,6 @@ def fn_string_distance(spark, sf_dir):
 
 @register(
     "fn_try_arithmetic",
-    "functions",
     doc="Error-safe scalar family (try_divide / try_cast): NULL instead "
     "of runtime failure — the semantics a 100 TB batch job needs so one "
     "malformed row can't kill a 6-hour stage. Divide-by-zero nulls and "
@@ -326,7 +317,6 @@ def fn_try_arithmetic(spark, sf_dir):
 
 @register(
     "fn_interval_arithmetic",
-    "functions",
     doc="Calendar-interval arithmetic over order dates: +3 days, "
     "+2 months with end-of-month clamping (add_months semantics — "
     "both engines clamp Jan 31 + 1 month to Feb 28/29), last_day, "
@@ -375,7 +365,6 @@ def fn_interval_arithmetic(spark, sf_dir):
 
 @register(
     "fn_number_format_roundtrip",
-    "functions",
     doc="to_char / to_number locale-format roundtrip: order totals "
     "rendered with grouping separators ('999,999,999.99' — to_char "
     "left-pads unused digit positions with spaces, trimmed here), "
@@ -423,7 +412,6 @@ def fn_number_format_roundtrip(spark, sf_dir):
 
 @register(
     "fn_luhn_check",
-    "functions",
     doc="luhn_check (Spark 3.5+ built-in): mod-10 checksum validation "
     "for card-shaped identifiers — the screening predicate a PII "
     "scrub pipeline runs BEFORE treating a 13-19 digit run as a "
@@ -478,7 +466,6 @@ OVF_SCALE = 4_000_000_000_000_000_000  # ~2^61.8: two of these overflow int64
 
 @register(
     "fn_try_sum_overflow",
-    "functions",
     doc="try_sum / try_avg overflow semantics: ANSI sum aborts the "
     "query on int64 overflow, try_sum returns NULL for exactly the "
     "overflowing group and real sums elsewhere — the per-group "
@@ -539,7 +526,6 @@ def fn_try_sum_overflow(spark, sf_dir):
 
 @register(
     "fn_binary_encoding_roundtrip",
-    "functions",
     doc="Binary encoding function family — base64/unbase64, hex/unhex, "
     "encode/decode(utf-8) — proven as ROUNDTRIPS (decode(encode(x)) == "
     "x is the contract a content-addressed blob store leans on) plus "
@@ -581,3 +567,101 @@ def fn_binary_encoding_roundtrip(spark, sf_dir):
         .alias("hex_roundtrip_ok"),
         F.sha2(F.unbase64(b64), 256).alias("content_hash"),
     ).orderBy("n_nationkey")
+
+
+@register(
+    "fn_time_type",
+    doc="Spark 4 TIME type (spark.sql.timeType.enabled): project each "
+    "event's time-of-day via make_time, truncate to the hour with "
+    "time_trunc, EXTRACT minute, then aggregate events per truncated "
+    "hour — mirrored against DuckDB's native TIME (make_time / "
+    "whole-second components on both sides; the hour spine is 24 rows "
+    "so the aggregate is map-side combinable at any scale).",
+    oracle="""
+WITH tt AS (
+    SELECT make_time(CAST(EXTRACT(hour FROM ts) AS INT),
+                     CAST(EXTRACT(minute FROM ts) AS INT), 0.0) AS tod
+    FROM events
+)
+SELECT make_time(CAST(EXTRACT(hour FROM tod) AS INT), 0, 0.0) AS hour_start,
+       CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(MIN(EXTRACT(minute FROM tod)) AS BIGINT) AS first_minute,
+       CAST(MAX(EXTRACT(minute FROM tod)) AS BIGINT) AS last_minute
+FROM tt GROUP BY 1 ORDER BY hour_start
+""",
+)
+def fn_time_type(spark, sf_dir):
+    # spark.sql.timeType.enabled is a declared session default
+    # (tables.ensure_session_confs), set by the t() load below — no
+    # per-query conf mutation here.
+    ev = t(spark, sf_dir, "events")
+    tod = ev.select(
+        F.expr(
+            "make_time(CAST(extract(hour FROM ts) AS INT),"
+            " CAST(extract(minute FROM ts) AS INT), 0)"
+        ).alias("tod")
+    )
+    return (
+        tod.select(
+            F.expr("time_trunc('HOUR', tod)").alias("hour_start"),
+            F.expr("CAST(extract(minute FROM tod) AS BIGINT)").alias("m"),
+        )
+        .groupBy("hour_start")
+        .agg(
+            bigint(F.count(F.lit(1))).alias("n"),
+            bigint(F.min("m")).alias("first_minute"),
+            bigint(F.max("m")).alias("last_minute"),
+        )
+        .orderBy("hour_start")
+    )
+
+
+@register(
+    "fn_scalar_additions_41",
+    doc="Spark 4.1 scalar additions over the orders calendar: "
+    "monthname/dayname (abbreviated English names, mirrored against "
+    "DuckDB strftime '%b'/'%a'), zeroifnull on the otherwise-NULL "
+    "high-value sum (mirrors COALESCE(...,0)), nullifzero on the "
+    "zero-count guard (mirrors NULLIF). Grouped by order month-name x "
+    "day-name — a bounded 12x7 spine, one combinable pass.",
+    oracle="""
+SELECT strftime(o_orderdate, '%b') AS mon,
+       strftime(o_orderdate, '%a') AS dow,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(COALESCE(SUM(CASE WHEN CAST(o_totalprice AS DECIMAL(12,2))
+                                   > 500000 THEN 1 END), 0) AS BIGINT)
+           AS n_high_value,
+       CAST(NULLIF(COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END), 0)
+            AS BIGINT) AS n_pending_or_null
+FROM orders
+GROUP BY 1, 2 ORDER BY mon, dow
+""",
+)
+def fn_scalar_additions_41(spark, sf_dir):
+    o = t(spark, sf_dir, "orders")
+    return (
+        o.groupBy(
+            F.monthname("o_orderdate").alias("mon"),
+            F.dayname("o_orderdate").alias("dow"),
+        )
+        .agg(
+            bigint(F.count(F.lit(1))).alias("n_orders"),
+            bigint(
+                F.zeroifnull(
+                    F.sum(
+                        F.when(
+                            F.col("o_totalprice").cast("decimal(12,2)")
+                            > 500000,
+                            F.lit(1),
+                        )
+                    )
+                )
+            ).alias("n_high_value"),
+            bigint(
+                F.nullifzero(
+                    F.count(F.when(F.col("o_orderstatus") == "P", F.lit(1)))
+                )
+            ).alias("n_pending_or_null"),
+        )
+        .orderBy("mon", "dow")
+    )

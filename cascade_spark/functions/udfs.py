@@ -31,7 +31,6 @@ def _net_price(ext: pd.Series, disc: pd.Series) -> pd.Series:
 
 @register(
     "udf_pandas_scalar",
-    "udf",
     doc="Scalar pandas UDF (Arrow-vectorized): net price per lineitem — "
     "element-wise float64 arithmetic matches the SQL expression exactly, "
     "so even the UDF path is hash-checked.",
@@ -58,7 +57,6 @@ def udf_pandas_scalar(spark, sf_dir):
 
 @register(
     "udf_grouped_centroid",
-    "udf",
     doc="Grouped applyInPandas: per-label embedding centroid-sum via "
     "numpy. Sums rounded to 2 (numpy pairwise vs sequential SQL "
     "accumulation differ in last ulps).",
@@ -95,7 +93,6 @@ def udf_grouped_centroid(spark, sf_dir):
 
 @register(
     "udf_python_row",
-    "udf",
     oracle=None,  # deliberately rows-only: the slow path, API completeness
     doc="Row-at-a-time Python UDF — the documented slow path (per-row "
     "serde); kept off hot paths, present for surface completeness.",
@@ -115,7 +112,6 @@ def udf_python_row(spark, sf_dir):
 
 @register(
     "udtf_chunk_documents",
-    "udf",
     doc="Python UDTF (table function): expand each document into 10-word "
     "chunks with per-chunk word counts — the document-splitting shape of "
     "a training-data pipeline. Deterministic → fully hash-checked "
@@ -153,7 +149,6 @@ def udtf_chunk_documents(spark, sf_dir):
 
 @register(
     "text_tfidf_mllib",
-    "udf",
     oracle=None,  # MLlib HashingTF/IDF — deterministic but not SQL-expressible
     doc="MLlib text pipeline: RegexTokenizer → HashingTF → IDF over "
     "documents (north-star text analysis, MLlib flavor). Deterministic "
@@ -196,7 +191,6 @@ def text_tfidf_mllib(spark, sf_dir):
 
 @register(
     "udf_arrow_row",
-    "udf",
     doc="Arrow-optimized Python UDF (Spark 3.5+/4 useArrow=True): the "
     "same row signature as udf_python_row but with Arrow-batched "
     "transfer instead of per-row pickling — the drop-in upgrade tier "
@@ -234,7 +228,6 @@ def udf_arrow_row(spark, sf_dir):
 
 @register(
     "udf_cogrouped_pandas",
-    "udfs",
     doc="Cogrouped applyInPandas (the two-sided grouped-pandas API): "
     "clicks and purchases cogrouped per user, merged in one pandas "
     "function computing counts and the first-click→first-purchase gap "
@@ -326,7 +319,6 @@ def udf_cogrouped_pandas(spark, sf_dir):
 
 @register(
     "udf_map_in_arrow",
-    "udfs",
     doc="mapInArrow — the Arrow-native per-partition map: each "
     "RecordBatch is pre-aggregated with pyarrow's group_by (exact "
     "int64 cents, quantized JVM-side by the decimal cast BEFORE Python "
@@ -377,7 +369,6 @@ def udf_map_in_arrow(spark, sf_dir):
 
 @register(
     "fn_inline_array_structs",
-    "functions",
     doc="Array-of-structs roundtrip: lineitems per order collected into "
     "a linenumber-sorted array of (linenumber, cents) structs, then "
     "inline-exploded back with posexplode — position must equal "
@@ -428,7 +419,6 @@ def fn_inline_array_structs(spark, sf_dir):
 
 @register(
     "udf_grouped_apply_in_arrow",
-    "udfs",
     doc="Grouped applyInArrow (Spark 4) — the Arrow-native sibling of "
     "applyInPandas: each group arrives as a pyarrow.Table, aggregated "
     "with pyarrow.compute on exact int64 cents (quantized JVM-side), "
@@ -484,7 +474,6 @@ def _cents_sum(cents: pd.Series) -> int:
 
 @register(
     "udf_pandas_grouped_agg",
-    "udf",
     doc="Grouped-aggregate pandas UDF (Series -> scalar), the custom-"
     "UDAF tier: one exact int64-cents reducer used BOTH as a groupBy "
     "aggregate and as a whole-partition window function (pandas UDAFs "
@@ -557,7 +546,6 @@ def udf_pandas_grouped_agg(spark, sf_dir):
 
 @register(
     "udtf_table_arg_per_user",
-    "udf",
     doc="Polymorphic Python UDTF over a TABLE argument (Spark 4): "
     "per_user_summary(TABLE(events) PARTITION BY user_id ORDER BY "
     "(ts, event_id)) — the engine shuffles rows to the UDTF by the "
@@ -622,7 +610,6 @@ def udtf_table_arg_per_user(spark, sf_dir):
 
 @register(
     "udf_pandas_scalar_iter",
-    "udf",
     doc="SCALAR_ITER pandas UDF — the Iterator[pd.Series] form whose "
     "point is amortizing expensive per-worker initialization (model "
     "load, compiled regex, codec table) across every Arrow batch "
@@ -658,7 +645,6 @@ def udf_pandas_scalar_iter(spark, sf_dir):
 
 @register(
     "udtf_polymorphic_analyze",
-    "udf",
     doc="Polymorphic Python UDTF (Spark 4 analyze()): the output schema "
     "is COMPUTED at plan time from a literal argument — top_words(text, "
     "k) emits k columns w1..wk (the per-row top-k tokens by count, ties "
@@ -727,7 +713,6 @@ def _pdw_cents_sum(v: pd.Series) -> int:
 
 @register(
     "udf_pandas_window_agg",
-    "functions",
     doc="GROUPED_AGG pandas UDF evaluated OVER a bounded window frame — "
     "the fourth pandas-UDF execution shape (scalar / grouped-map / "
     "grouped-agg / windowed-agg): each frame's cents Series crosses to "
@@ -789,7 +774,6 @@ def udf_pandas_window_agg(spark, sf_dir):
 
 @register(
     "udtf_arrow_ngram_expand",
-    "udf",
     doc="Arrow-optimized Python UDTF (useArrow=True — the 4th UDTF "
     "execution shape next to the pickled UDTF, the table-argument "
     "UDTF and the polymorphic analyze() UDTF): expand each document "

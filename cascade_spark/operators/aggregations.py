@@ -12,12 +12,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cascade_spark.plans.registry import register
-from cascade_spark.operators._util import avg_round, d2, dec, sql_avg_round, t
+from cascade_spark.operators._util import avg_round, bigint, d2, dec, sql_avg_round, t
 
 
 @register(
     "agg_grouped_q1",
-    "aggregations",
     doc="TPC-H Q1-style grouped aggregation: 2 keys, sum/avg/count over "
     "decimal-accumulated measures. Flagship query (reference analog: the "
     "only aggregate cascade has is event count = index_length/8, "
@@ -62,7 +61,6 @@ def agg_grouped_q1(spark, sf_dir):
 
 @register(
     "agg_global",
-    "aggregations",
     doc="Global (no-key) aggregate — analog of the reference's event count "
     "(src/broker/main.rs:125,136: count = index_length/8).",
     oracle="""
@@ -87,7 +85,6 @@ def agg_global(spark, sf_dir):
 
 @register(
     "agg_count_distinct",
-    "aggregations",
     doc="Exact COUNT DISTINCT per group (expands to two-phase hash "
     "aggregate; at 100 TB prefer approx_count_distinct unless exactness "
     "is required).",
@@ -114,7 +111,6 @@ def agg_count_distinct(spark, sf_dir):
 
 @register(
     "agg_approx_count_distinct",
-    "aggregations",
     oracle=None,  # approximate — rows-only check per SURVEY §2B rule 5
     doc="HyperLogLog++ approximate distinct — the 100 TB default for "
     "cardinality estimation (fixed-size sketch state, no distinct "
@@ -131,7 +127,6 @@ def agg_approx_count_distinct(spark, sf_dir):
 
 @register(
     "agg_rollup",
-    "aggregations",
     doc="ROLLUP hierarchy totals (grouping-sets family).",
     oracle="""
 SELECT l_returnflag, l_linestatus,
@@ -156,7 +151,6 @@ def agg_rollup(spark, sf_dir):
 
 @register(
     "agg_cube",
-    "aggregations",
     doc="CUBE over two dimensions.",
     oracle="""
 SELECT o_orderstatus, o_orderpriority,
@@ -184,7 +178,6 @@ def agg_cube(spark, sf_dir):
 
 @register(
     "agg_having",
-    "aggregations",
     doc="HAVING — post-aggregation filter (planned as Filter over Aggregate; "
     "no extra shuffle).",
     oracle="""
@@ -207,7 +200,6 @@ def agg_having(spark, sf_dir):
 
 @register(
     "agg_stats",
-    "aggregations",
     doc="stddev_samp / var_samp / exact percentile. Floats rounded to 2 "
     "(stat functions are the one place accumulation order can still "
     "wiggle the last ulp; magnitudes here keep ROUND(2) stable).",
@@ -236,7 +228,6 @@ def agg_stats(spark, sf_dir):
 
 @register(
     "agg_collect",
-    "aggregations",
     doc="first/last/collect_list made deterministic: min/max + sorted "
     "string_agg (SURVEY §2B: wrap collect_list in a sort).",
     oracle="""
@@ -264,7 +255,6 @@ def agg_collect(spark, sf_dir):
 
 @register(
     "agg_pivot",
-    "aggregations",
     doc="Pivot event values by type into columns (explicit pivot values — "
     "required at scale so Spark skips the extra distinct-values job).",
     oracle="""
@@ -295,7 +285,6 @@ DECL = "decimal(22,4)"
 
 @register(
     "agg_unpivot",
-    "aggregations",
     doc="Unpivot (stack): wide per-part measure columns back to long "
     "(measure, value) rows — the inverse of pivot, via stack()/UNION ALL.",
     oracle="""
@@ -324,7 +313,6 @@ def agg_unpivot(spark, sf_dir):
 
 @register(
     "agg_pivot_dynamic",
-    "aggregations",
     doc="Dynamic pivot: pivot(event_type) WITHOUT an explicit value "
     "list — Spark runs the distinct-values subquery at plan time and "
     "sorts the inferred columns, the ad-hoc-reporting surface. The "
@@ -357,7 +345,6 @@ def agg_pivot_dynamic(spark, sf_dir):
 
 @register(
     "agg_listagg_within_group",
-    "aggregations",
     doc="listagg(...) WITHIN GROUP (ORDER BY ...) (Spark 4 / ANSI "
     "ordered string aggregation) — per region, the alphabetized "
     "nation roster plus its DISTINCT-initial variant. The WITHIN "
@@ -393,4 +380,95 @@ FROM cascade_listagg_v
 GROUP BY r_name
 ORDER BY r_name
 """
+    )
+
+
+@register(
+    "agg_multi_distinct_filtered",
+    doc="Several COUNT(DISTINCT) measures in ONE aggregate per event "
+    "type: distinct users, distinct WEEKEND users via the "
+    "NULL-excluding CASE idiom (portable across engines that restrict "
+    "FILTER on DISTINCT), distinct active days, and the composite "
+    "(user, day) distinct — the multi-Expand plan shape Spark compiles "
+    "several distincts into (still one shuffle).",
+    oracle="""
+SELECT event_type,
+       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS u_distinct,
+       CAST(COUNT(DISTINCT CASE WHEN ISODOW(CAST(ts AS DATE)) >= 6
+                                THEN user_id END) AS BIGINT)
+           AS u_weekend_distinct,
+       CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS d_distinct,
+       CAST(COUNT(DISTINCT (user_id, CAST(ts AS DATE))) AS BIGINT)
+           AS user_day_distinct
+FROM events
+WHERE user_id IS NOT NULL
+GROUP BY event_type
+ORDER BY event_type
+""",
+)
+def agg_multi_distinct_filtered(spark, sf_dir):
+    ev = t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
+    day = F.to_date("ts")
+    weekend = F.dayofweek(F.date_sub(day, 1)).cast("long") >= 6
+    return (
+        ev.groupBy("event_type")
+        .agg(
+            bigint(F.count_distinct("user_id")).alias("u_distinct"),
+            bigint(
+                F.count_distinct(F.when(weekend, F.col("user_id")))
+            ).alias("u_weekend_distinct"),
+            bigint(F.count_distinct(day)).alias("d_distinct"),
+            bigint(F.count_distinct(F.col("user_id"), day)).alias(
+                "user_day_distinct"
+            ),
+        )
+        .orderBy("event_type")
+    )
+
+
+@register(
+    "agg_arg_extrema",
+    doc="Deterministic argmax/argmin per order priority: the order key "
+    "carrying the highest and lowest total price, with COMPOSITE "
+    "(price, key) orderings as the declared tie rule (max side breaks "
+    "ties to the larger key, min side to the smaller) — the ties-safe "
+    "form of max_by/min_by; oracle mirrors via ordered FIRST. Prices "
+    "compared as exact decimals.",
+    oracle="""
+SELECT o_orderpriority,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(FIRST(o_orderkey ORDER BY CAST(o_totalprice AS DECIMAL(12,4))
+                  DESC, o_orderkey DESC) AS BIGINT) AS top_orderkey,
+       CAST(ROUND(MAX(CAST(o_totalprice AS DECIMAL(12,4))), 2) AS DOUBLE)
+           AS top_price,
+       CAST(FIRST(o_orderkey ORDER BY CAST(o_totalprice AS DECIMAL(12,4)),
+                  o_orderkey) AS BIGINT) AS bottom_orderkey,
+       CAST(ROUND(MIN(CAST(o_totalprice AS DECIMAL(12,4))), 2) AS DOUBLE)
+           AS bottom_price
+FROM orders
+GROUP BY o_orderpriority
+ORDER BY o_orderpriority
+""",
+)
+def agg_arg_extrema(spark, sf_dir):
+    o = t(spark, sf_dir, "orders")
+    p = dec("o_totalprice")
+    return (
+        o.groupBy("o_orderpriority")
+        .agg(
+            bigint(F.count(F.lit(1))).alias("n_orders"),
+            bigint(
+                F.max_by(
+                    "o_orderkey", F.struct(p.alias("p"), F.col("o_orderkey"))
+                )
+            ).alias("top_orderkey"),
+            d2(F.max(p)).alias("top_price"),
+            bigint(
+                F.min_by(
+                    "o_orderkey", F.struct(p.alias("p"), F.col("o_orderkey"))
+                )
+            ).alias("bottom_orderkey"),
+            d2(F.min(p)).alias("bottom_price"),
+        )
+        .orderBy("o_orderpriority")
     )

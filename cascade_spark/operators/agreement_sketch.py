@@ -40,7 +40,6 @@ KMVJ_H_MAX = 4_294_967_296  # 2^32 — md5 prefix hash space
 
 @register(
     "stats_fleiss_kappa",
-    "analytics",
     doc="Fleiss' kappa across three deterministic binary raters "
     f"(n_chars >= {FK_CHARS_CUT}; whitespace words >= {FK_WORDS_CUT}; "
     f"vowel share >= {FK_VOWEL_BP} bp): with o_i = positive ratings "
@@ -136,7 +135,6 @@ def stats_fleiss_kappa(spark, sf_dir):
 
 @register(
     "agg_kmv_jaccard",
-    "analytics",
     doc=f"KMV set-overlap estimate (k={KMVJ_K}): the union bottom-k of "
     "the click and view user populations' md5 hashes (bottom-k sketches "
     "are mergeable, so the union sketch is the bottom-k of the union), "

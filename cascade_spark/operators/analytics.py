@@ -12,12 +12,11 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from cascade_spark.plans.registry import register
-from cascade_spark.operators._util import d2, dec, t
+from cascade_spark.operators._util import bigint, d2, dec, t
 
 
 @register(
     "events_funnel",
-    "analytics",
     doc="Funnel conversion signup→view→purchase per user: ordered event "
     "sequence with min-timestamp stages; counts users reaching each "
     "stage in order. One shuffle on user_id.",
@@ -64,7 +63,6 @@ def events_funnel(spark, sf_dir):
 
 @register(
     "events_retention_cohorts",
-    "analytics",
     doc="Weekly retention: cohort = user's first-activity week; count "
     "users active k weeks later. Two aggregates + one join on user_id.",
     oracle="""
@@ -104,7 +102,6 @@ def events_retention_cohorts(spark, sf_dir):
 
 @register(
     "events_trending_topk",
-    "analytics",
     doc="Trending: top-2 event types per day by volume with day-over-day "
     "delta (window rank over daily aggregates — aggregate first, window "
     "over the small aggregate, never over raw events).",
@@ -143,7 +140,6 @@ def events_trending_topk(spark, sf_dir):
 
 @register(
     "tpch_q3_shipping_priority",
-    "analytics",
     doc="TPC-H Q3 shape: segment-filtered customer ⨝ orders ⨝ lineitem, "
     "revenue top-10 (broadcast dim, one fact shuffle).",
     oracle="""
@@ -185,7 +181,6 @@ def tpch_q3_shipping_priority(spark, sf_dir):
 
 @register(
     "tpch_q5_local_supplier",
-    "analytics",
     doc="TPC-H Q5 shape: revenue from orders where customer and supplier "
     "share the nation, region-filtered — 6-table join; nation/region "
     "(fixed 25/5 rows) broadcast explicitly, SF-scaling customer/"
@@ -234,7 +229,6 @@ def tpch_q5_local_supplier(spark, sf_dir):
 
 @register(
     "events_rolling_active_users",
-    "analytics",
     doc="Rolling 7-day distinct active users per day: calendar spine "
     "range-joined to events (exact windowed distinct — the metric HLL "
     "sketch-merge approximates at 100 TB; the exact form is the oracle "
@@ -266,7 +260,6 @@ def events_rolling_active_users(spark, sf_dir):
 
 @register(
     "subquery_scalar_and_in",
-    "analytics",
     doc="Subquery shapes: scalar subquery (global avg) in a predicate + "
     "IN subquery (planned as broadcast/semi joins by Catalyst).",
     oracle="""
@@ -293,7 +286,6 @@ def subquery_scalar_and_in(spark, sf_dir):
 
 @register(
     "subquery_correlated_exists",
-    "analytics",
     doc="Correlated EXISTS subquery: suppliers whose nation has customers "
     "with negative balances (decorrelated to a semi join by Catalyst).",
     oracle="""
@@ -320,7 +312,6 @@ def subquery_correlated_exists(spark, sf_dir):
 
 @register(
     "subquery_recursive_cte",
-    "analytics",
     doc="WITH RECURSIVE (ANSI recursive CTE, new SQL surface in Spark "
     "4.x): every customer walks a synthetic 10-ary management chain "
     "(parent = custkey/10) to the root; per-depth population + exact "
@@ -368,7 +359,6 @@ def subquery_recursive_cte(spark, sf_dir):
 
 @register(
     "analytics_frequent_itemsets",
-    "analytics",
     doc="Association mining (MLlib FP-Growth) with exact verification: "
     "baskets are each user's distinct event types; FP-Growth mines "
     "frequent itemsets, restricted here to sizes 1-2 and post-filtered "
@@ -427,7 +417,6 @@ def analytics_frequent_itemsets(spark, sf_dir):
 
 @register(
     "subquery_relational_division",
-    "subqueries",
     doc='Relational division ("FOR ALL"): users who performed EVERY '
     "event type present in the corpus — the universal-quantifier "
     "query class (double NOT EXISTS in textbook SQL). Expressed as "
@@ -449,8 +438,6 @@ ORDER BY u.user_id
 """,
 )
 def subquery_relational_division(spark, sf_dir):
-    from cascade_spark.operators._util import bigint
-
     ev = t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     per_user = ev.groupBy("user_id").agg(
         bigint(F.countDistinct("event_type")).alias("n_types"),
@@ -469,7 +456,6 @@ def subquery_relational_division(spark, sf_dir):
 
 @register(
     "subquery_not_in_null_trap",
-    "subqueries",
     doc="NOT IN vs NOT EXISTS under NULLs — the three-valued-logic "
     "trap, demonstrated as data: the probe set is customer keys with "
     "every 50th NULLed out. ANSI NOT IN returns UNKNOWN (drops the "
@@ -513,4 +499,76 @@ SELECT CAST((SELECT COUNT(*) FROM cascade_nin_orders
        CAST((SELECT COUNT(*) FROM probe WHERE k IS NULL) AS BIGINT)
            AS n_probe_nulls
 """
+    )
+
+
+# ---------------------------------------------------------------------------
+# DAU/MAU stickiness
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "analytics_dau_mau_stickiness",
+    doc="Per-month engagement stickiness: sum of daily distinct users "
+    "over monthly distinct users in exact truncated bp (the DAU/MAU "
+    "product-health headline, summed-DAU form so the ratio is one "
+    "integer division). Two combinable distinct aggregates joined on "
+    "the month spine; null user_ids excluded (declared).",
+    oracle="""
+WITH ev AS (
+    SELECT STRFTIME(ts, '%Y-%m') AS month, CAST(ts AS DATE) AS day, user_id
+    FROM events WHERE user_id IS NOT NULL
+),
+dau AS (
+    SELECT month, day, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS dau
+    FROM ev GROUP BY 1, 2
+),
+m AS (
+    SELECT month, CAST(COUNT(*) AS BIGINT) AS days,
+           CAST(SUM(dau) AS BIGINT) AS dau_sum
+    FROM dau GROUP BY 1
+),
+mau AS (
+    SELECT month, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS mau
+    FROM ev GROUP BY 1
+)
+SELECT m.month, m.days, m.dau_sum, mau.mau,
+       CAST((10000 * m.dau_sum) // (m.days * mau.mau) AS BIGINT)
+           AS stickiness_bp
+FROM m JOIN mau ON mau.month = m.month
+ORDER BY m.month
+""",
+)
+def analytics_dau_mau_stickiness(spark, sf_dir):
+    ev = (
+        t(spark, sf_dir, "events")
+        .filter(F.col("user_id").isNotNull())
+        .select(
+            F.date_format("ts", "yyyy-MM").alias("month"),
+            F.to_date("ts").alias("day"),
+            "user_id",
+        )
+    )
+    dau = ev.groupBy("month", "day").agg(
+        bigint(F.count_distinct("user_id")).alias("dau")
+    )
+    m = dau.groupBy("month").agg(
+        bigint(F.count(F.lit(1))).alias("days"),
+        bigint(F.sum("dau")).alias("dau_sum"),
+    )
+    mau = ev.groupBy("month").agg(
+        bigint(F.count_distinct("user_id")).alias("mau")
+    )
+    return (
+        m.join(mau, "month")
+        .select(
+            "month",
+            "days",
+            "dau_sum",
+            "mau",
+            F.expr(
+                "CAST((10000 * dau_sum) DIV (days * mau) AS BIGINT)"
+            ).alias("stickiness_bp"),
+        )
+        .orderBy("month")
     )

@@ -19,7 +19,6 @@ from cascade_spark.plans.registry import register
 
 @register(
     "events_activity_streaks",
-    "analytics",
     doc="Gaps-and-islands: longest consecutive-day activity streak per "
     "user. Classic rewrite — distinct active days, row_number per "
     "user, group by (day - row_number) which is constant exactly "
@@ -68,7 +67,6 @@ def events_activity_streaks(spark, sf_dir):
 
 @register(
     "analytics_yoy_growth",
-    "analytics",
     doc="Year-over-year growth per order priority: revenue per "
     "(priority, year) in exact cents, LAG over the year axis, growth "
     "in basis points as FLOOR of an exact-integer double quotient "
@@ -112,7 +110,6 @@ def analytics_yoy_growth(spark, sf_dir):
 
 @register(
     "pipeline_curriculum_order",
-    "analytics",
     doc="Curriculum schedule: documents ordered easy→hard by length "
     "band, deterministically shuffled (md5 of doc_id) WITHIN each band "
     "— the standard curriculum-learning data order. The global ordinal "
@@ -162,7 +159,6 @@ def pipeline_curriculum_order(spark, sf_dir):
 
 @register(
     "pipeline_token_budget_mixture",
-    "analytics",
     doc="Token-budget mixture planning: given integer mixture weights "
     "per source and a 10M-token budget, compute each source's "
     "available whitespace tokens, its allocated share, and the implied "
@@ -219,7 +215,6 @@ def pipeline_token_budget_mixture(spark, sf_dir):
 
 @register(
     "events_funnel_strict_sequence",
-    "analytics",
     doc="Strict sequential funnel: each stage must occur AFTER the "
     "user's previous stage (t_view = first view after first signup, "
     "t_purchase = first purchase after that view) — the semantics the "
@@ -277,7 +272,6 @@ def events_funnel_strict_sequence(spark, sf_dir):
 
 @register(
     "pipeline_url_canonical_dedup",
-    "analytics",
     doc="Canonical-URL dedup — the web-corpus curation step before "
     "fetch/content dedup: each doc yields two deterministic noisy "
     "variants of its URL (upper-cased host + utm_ tracking param; "
@@ -347,7 +341,6 @@ def pipeline_url_canonical_dedup(spark, sf_dir):
 
 @register(
     "events_trigram_paths",
-    "analytics",
     doc="Behavioral path mining: the most common consecutive 3-step "
     "event-type sequences per user journey (LEAD twice over the "
     "(ts, event_id) total order), counted corpus-wide — the n-gram LM "
@@ -392,7 +385,6 @@ def events_trigram_paths(spark, sf_dir):
 
 @register(
     "agg_deciles_disc",
-    "aggregations",
     doc="Discrete decile table per event type: percentile_disc picks "
     "ACTUAL data values (no interpolation, so the doubles pass through "
     "both engines verbatim — exactness for free, unlike _cont). One "
@@ -435,7 +427,6 @@ def agg_deciles_disc(spark, sf_dir):
 
 @register(
     "analytics_rfm_segmentation",
-    "analytics",
     doc="RFM customer segmentation: recency (days since last order), "
     "frequency (order count), monetary (revenue cents) per customer, "
     "each scored into quintiles by ntile over a deterministic total "
@@ -525,7 +516,6 @@ def analytics_rfm_segmentation(spark, sf_dir):
 
 @register(
     "analytics_abc_pareto",
-    "analytics",
     doc="ABC / Pareto analysis: parts ranked by revenue, classified by "
     "cumulative revenue share (A ≤ 80%, B ≤ 95%, C rest) in exact "
     "integer arithmetic — cum_cents * 100 vs threshold * total_cents, "
@@ -587,7 +577,6 @@ def analytics_abc_pareto(spark, sf_dir):
 
 @register(
     "events_inter_arrival_stats",
-    "analytics",
     doc="Inter-arrival time statistics per event type — the queueing "
     "signal behind throughput dashboards and rate-source calibration: "
     "LAG over the (ts, event_id) total order, gaps in exact "
@@ -638,7 +627,6 @@ def events_inter_arrival_stats(spark, sf_dir):
 
 @register(
     "events_survival_curve",
-    "analytics",
     doc="Retention survival curve: for each day-offset k, the share of "
     "users still active k or more days after their first activity "
     "(survival = lifespan >= k). Per-user lifespan is one aggregate; "
@@ -690,7 +678,6 @@ def events_survival_curve(spark, sf_dir):
 
 @register(
     "agg_rollup_share_of_parent",
-    "aggregations",
     doc="Share-of-parent over a hierarchy: one rollup pass produces "
     "(year, priority) leaves and year subtotals; a self-join keyed on "
     "the parent level turns them into percent-of-parent in exact "
@@ -741,7 +728,6 @@ def agg_rollup_share_of_parent(spark, sf_dir):
 
 @register(
     "analytics_association_lift",
-    "analytics",
     doc="Association metrics layer: for ordered event-type pairs "
     "co-occurring in user baskets, support / confidence / lift as "
     "EXACT floor basis points (lift_bp = n*cooc*10000 // (na*nb)) — "
@@ -817,7 +803,6 @@ def analytics_association_lift(spark, sf_dir):
 
 @register(
     "stats_winsorized_mean",
-    "aggregations",
     doc="Winsorized mean per event type: clamp values at the exact "
     "discrete p05/p95 cut points (percentile_disc — actual data "
     "values, no interpolation), then an exact floor-mean over the "
@@ -875,7 +860,6 @@ def stats_winsorized_mean(spark, sf_dir):
 
 @register(
     "events_attribution_touch",
-    "analytics",
     doc="Marketing attribution: every purchase is matched to the clicks "
     "of the same user in a strict 72h lookback window; first-touch and "
     "last-touch click timestamps, click count, and attribution flag per "
@@ -976,7 +960,6 @@ def _isqrt(n: F.Column) -> F.Column:
 
 @register(
     "pipeline_mixture_temperature",
-    "pipeline",
     doc="Temperature-scaled (alpha=0.5) source mixture: per-source doc "
     "counts -> sampling weight isqrt(n) -> share in floor bp and a "
     f"{TEMP_BUDGET}-doc epoch allocation, plus the boost vs "
@@ -1028,7 +1011,6 @@ def pipeline_mixture_temperature(spark, sf_dir):
 
 @register(
     "events_funnel_conversion_window",
-    "analytics",
     doc="Time-bounded funnel conversion: users whose FIRST purchase "
     "lands within 1 hour of their FIRST signup, grouped by signup day "
     "— the product-analytics conversion-window metric (the plain "
@@ -1113,7 +1095,6 @@ LTV_MAX_OFFSET = 7
 
 @register(
     "events_cohort_ltv",
-    "analytics",
     doc="Cohort LTV curve: users grouped by first-seen day, cumulative "
     f"purchase value at day offsets 0..{LTV_MAX_OFFSET} since joining "
     "— the revenue twin of the retention matrix. Per-user firsts are "
@@ -1195,7 +1176,6 @@ def events_cohort_ltv(spark, sf_dir):
 
 @register(
     "events_user_feature_vector",
-    "analytics",
     doc="Per-user ML feature assembly: one combinable groupBy builds the "
     "event-type count vector (click/view/purchase/signup/error), "
     "distinct active days, and total spend in exact cents, then packs "
@@ -1254,7 +1234,6 @@ def events_user_feature_vector(spark, sf_dir):
 
 @register(
     "events_conversion_latency",
-    "analytics",
     doc="Signup-to-purchase conversion latency distribution: per "
     "converting user the exact whole-second gap between first signup "
     "and first subsequent purchase, rolled up to n_converted, median "
@@ -1344,7 +1323,6 @@ def events_conversion_latency(spark, sf_dir):
 
 @register(
     "events_diff_in_differences",
-    "analytics",
     doc="Difference-in-differences estimator over the events fact: "
     "treatment = odd user_id, post-period = day >= min(day)+15 (the "
     "span midpoint), outcome = event value cents. The 2x2 cell "

@@ -68,7 +68,6 @@ def asof_join(
 
 @register(
     "join_asof",
-    "joins",
     doc="As-of join: each event picks up the customer's most recent order "
     "price at-or-before the event time (DuckDB oracle: native ASOF LEFT "
     "JOIN). Union+window composition — one shuffle on the entity key.",
@@ -104,7 +103,6 @@ def join_asof(spark, sf_dir):
 
 @register(
     "join_asof_forward",
-    "joins",
     doc="Forward as-of join (merge_asof direction='forward'): each event "
     "picks the customer's NEXT order price at-or-after the event time — "
     "the lookahead enrichment used for label construction (what did the "
@@ -168,7 +166,6 @@ ASOF_TOL_DAYS = 30
 
 @register(
     "join_asof_tolerance",
-    "joins",
     doc="Tolerance-bounded as-of join (merge_asof tolerance=30d): the "
     "backward match is kept only while it is fresh — the matched order "
     "date and its age ride along, and the price is NULLed once the "
@@ -220,7 +217,6 @@ def join_asof_tolerance(spark, sf_dir):
 
 @register(
     "join_asof_nearest",
-    "joins",
     doc="Nearest as-of join (merge_asof direction='nearest', completing "
     "the backward/forward/tolerance/nearest matrix): each event takes "
     "the order whose date is CLOSEST in time, ties broken toward the "

@@ -109,7 +109,6 @@ def _pascal_expr(m_expr: str, top_expr: str) -> str:
 
 @register(
     "stats_fisher_exact",
-    "analytics",
     doc="Fisher's exact test on the day-level 2x2 table (weekend day x "
     "clicks-beat-views day, n = n_days so the exact regime holds): "
     "two-sided p = sum of hypergeometric weights w(k) = "
@@ -238,7 +237,6 @@ def _fisher_from_cells(cells):
 
 @register(
     "stats_yule_q",
-    "analytics",
     doc="Yule's Q association for the weekend-exposure x purchase 2x2: "
     "Q = (ad - bc)/(ad + bc) in truncated bp — one exact integer "
     "rational via DECIMAL(38,0)/HUGEINT with Spark DIV / DuckDB // "
@@ -273,7 +271,6 @@ def stats_yule_q(spark, sf_dir):
 
 @register(
     "stats_phi_coefficient",
-    "analytics",
     doc="Phi (Matthews) coefficient of the weekend x purchase 2x2 as a "
     "6-dp double: (ad - bc)/sqrt((a+b)(c+d)(a+c)(b+d)) — the SAME "
     "small-integer-derived IEEE expression tree on both engines "
@@ -315,7 +312,6 @@ def stats_phi_coefficient(spark, sf_dir):
 
 @register(
     "stats_cohens_h",
-    "analytics",
     doc="Cohen's h arcsine effect size between the weekend and weekday "
     "purchase rates: h = 2*asin(sqrt(p1)) - 2*asin(sqrt(p2)) with "
     "p1 = a/(a+b), p2 = c/(c+d) — one mirrored IEEE expression rounded "
@@ -395,7 +391,6 @@ def _pair_counts(spark, sf_dir):
 
 @register(
     "stats_goodman_kruskal_gamma",
-    "analytics",
     doc="Goodman-Kruskal gamma between click and view daily volumes: "
     "(nc - nd)/(nc + nd) over all C(n_days,2) day pairs, ignoring "
     "ties entirely — the tie-free sibling of stats_kendall_tau_b on "
@@ -423,7 +418,6 @@ def stats_goodman_kruskal_gamma(spark, sf_dir):
 
 @register(
     "stats_somers_d",
-    "analytics",
     doc="Somers' D_yx (view volume as the dependent series): "
     "(nc - nd)/(nc + nd + ties_y) over the kendall day-pair spine — "
     "penalizes pairs tied on y but not on x, the asymmetric ordinal "
@@ -454,7 +448,6 @@ def stats_somers_d(spark, sf_dir):
 
 @register(
     "stats_stuart_tau_c",
-    "analytics",
     doc="Stuart's tau-c between click and view daily volumes: "
     "2*m*(nc - nd) / (n^2 * (m - 1)) with m = min(|distinct x|, "
     "|distinct y|) — the table-shape-corrected kendall variant for "
@@ -507,7 +500,6 @@ def stats_stuart_tau_c(spark, sf_dir):
 
 @register(
     "stats_tschuprow_t",
-    "analytics",
     doc="Tschuprow's T for the (event_type x ISO weekday) contingency "
     "table: T = sqrt(chi2 / (n * sqrt((R-1)(C-1)))) — the "
     "square-table-unbiased sibling of stats_cramers_v, built from the "

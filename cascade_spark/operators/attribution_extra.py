@@ -91,7 +91,6 @@ def _touch_join(spark, sf_dir):
 
 @register(
     "events_attribution_time_decay",
-    "analytics",
     doc=f"Time-decay multi-touch attribution: click/view touches within "
     f"{ATTR_WINDOW_DAYS} days before each purchase earn weight "
     "2^(-days_gap) in exact dyadic micro units (1e6 >> gap), then each "
@@ -164,7 +163,6 @@ def events_attribution_time_decay(spark, sf_dir):
 
 @register(
     "events_attribution_position_u",
-    "analytics",
     doc="U-shaped (40/20/40) position attribution over the same 7-day "
     "touch window: per purchase, touches order by (timestamp, "
     "channel); first and last earn 400000 micro each, middles split "

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from cascade_spark import store
 from cascade_spark.plans.registry import register
-from cascade_spark.operators._util import t, widen
+from cascade_spark.operators._util import bigint, t, widen
 
 BPE_MERGES = 3
 
@@ -78,7 +78,6 @@ def _bpe_oracle() -> str:
 
 @register(
     "text_bpe_train",
-    "text",
     doc=f"BPE tokenizer training: {BPE_MERGES} merge iterations over the "
     "frequency-weighted distinct-word table. Each round = one map-side-"
     "combinable pair count + a 1-row argmax collect + a codegen'd "
@@ -240,7 +239,6 @@ def _ntok(col="s"):
 
 @register(
     "text_bpe_encode",
-    "text",
     doc="BPE ENCODE — the apply half of the tokenizer pipeline: the "
     f"{BPE_MERGES} merges learned by text_bpe_train are applied to the "
     "frequency-weighted word table and the corpus token count is "
@@ -253,7 +251,7 @@ def _ntok(col="s"):
     oracle=_sql_encode_oracle(),
 )
 def text_bpe_encode(spark, sf_dir):
-    from cascade_spark.operators._util import _intdiv, bigint
+    from cascade_spark.operators._util import _intdiv
 
     words = _words_frame(spark, sf_dir)
     before = words.select(
@@ -317,7 +315,6 @@ ORDER BY lang
 
 @register(
     "pipeline_tokenizer_fertility",
-    "pipeline",
     doc="Tokenizer fertility by language — BPE tokens per whitespace "
     f"word after the {BPE_MERGES} learned merges, the metric that "
     "tells you which languages a tokenizer punishes (high fertility = "
@@ -332,7 +329,7 @@ ORDER BY lang
     oracle=_fertility_oracle(),
 )
 def pipeline_tokenizer_fertility(spark, sf_dir):
-    from cascade_spark.operators._util import _intdiv, bigint
+    from cascade_spark.operators._util import _intdiv
 
     d = t(spark, sf_dir, "documents")
     lw = (
@@ -359,3 +356,53 @@ def pipeline_tokenizer_fertility(spark, sf_dir):
             "fertility_bp"
         ),
     ).orderBy("lang")
+
+
+@register(
+    "pipeline_tokenizer_compare",
+    doc="Tokenizer A/B at the mixture level: whitespace vs BPE-ish "
+    "regex ([a-z0-9]+ runs plus single non-space symbols — the "
+    "text_token_count pair) aggregated per source, with the fertility "
+    "ratio re/ws in exact floor bp — the swap-decision readout before "
+    "retokenizing a source at corpus scale. One map-only scoring pass, "
+    "one combinable groupBy.",
+    oracle="""
+SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(LEN(STRING_SPLIT(TRIM(text), ' '))) AS BIGINT) AS ws_tokens,
+       CAST(SUM(LEN(REGEXP_EXTRACT_ALL(text, '[a-z0-9]+|[^a-z0-9\\s]')))
+            AS BIGINT) AS re_tokens,
+       CAST((SUM(LEN(REGEXP_EXTRACT_ALL(text, '[a-z0-9]+|[^a-z0-9\\s]')))
+             * 10000)
+            // SUM(LEN(STRING_SPLIT(TRIM(text), ' '))) AS BIGINT)
+           AS fertility_bp
+FROM documents
+GROUP BY source
+ORDER BY source
+""",
+)
+def pipeline_tokenizer_compare(spark, sf_dir):
+    d = t(spark, sf_dir, "documents")
+    ws = F.size(F.split(F.trim(F.col("text")), " ", -1))
+    re_tok = F.size(
+        F.regexp_extract_all(F.col("text"), F.lit(r"[a-z0-9]+|[^a-z0-9\s]"), 0)
+    )
+    per_doc = d.select("source", ws.cast("long").alias("ws"), re_tok.cast("long").alias("re"))
+    return (
+        per_doc.groupBy("source")
+        .agg(
+            bigint(F.count(F.lit(1))).alias("n_docs"),
+            bigint(F.sum("ws")).alias("ws_tokens"),
+            bigint(F.sum("re")).alias("re_tokens"),
+        )
+        .select(
+            "source",
+            "n_docs",
+            "ws_tokens",
+            "re_tokens",
+            F.expr("CAST((re_tokens * 10000) DIV ws_tokens AS BIGINT)").alias(
+                "fertility_bp"
+            ),
+        )
+        .orderBy("source")
+    )

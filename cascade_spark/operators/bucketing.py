@@ -56,7 +56,6 @@ def bucketed_tables(spark, sf_dir: str) -> tuple[str, str]:
 
 @register(
     "join_bucketed_colocated",
-    "joins",
     doc="Co-located fact-fact join: both sides bucketed+sorted by the "
     "join key, so the sort-merge join runs with zero exchanges "
     "(plan-asserted). The bucketed layout is what a 100 TB deployment "
@@ -107,7 +106,6 @@ def salted_join(
 
 @register(
     "join_salted_skew",
-    "joins",
     doc="Skew-salted fact-dim join as a declared operator: the events "
     "fact (hot user keys — see profile_key_skew) joins the customer "
     "dimension through salted_join (8-way salt: fact rows take a "

@@ -59,7 +59,6 @@ def _cost(mult: int, v: str) -> str:
 
 @register(
     "events_kleinberg_burst",
-    "timeseries",
     doc="Two-state Kleinberg burst automaton per event type: base state "
     "emits at the type's mean daily rate, burst state at twice it, "
     f"entering the burst state costs GAMMA = {BURST_GAMMA} micro. "

@@ -36,7 +36,6 @@ E8 = 100_000_000
 
 @register(
     "analytics_supplier_hhi",
-    "analytics",
     doc="Herfindahl-Hirschman index of supplier revenue concentration "
     "per nation: per-supplier revenue sum(extendedprice*(1-discount)) "
     "is exact at scale 8 and FLOORS to whole currency units (shares "
@@ -118,7 +117,6 @@ def analytics_supplier_hhi(spark, sf_dir):
 
 @register(
     "analytics_repeat_purchase_rate",
-    "analytics",
     doc="Repeat-purchase retention per market segment: for each "
     "customer, the gap in days between the FIRST and SECOND order "
     "(ties broken by orderkey — declared), rolled up to the share of "

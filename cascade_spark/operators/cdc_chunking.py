@@ -40,7 +40,6 @@ CDC_MOD = 8  # expected words per chunk: boundary when md5(word) % 8 == 0
 
 @register(
     "dedup_cdc_chunks",
-    "dedup",
     doc=f"Content-defined chunking dedup: word-boundary cut where "
     f"md5(word) %% {CDC_MOD} == 0 (expected {CDC_MOD}-word chunks, "
     "insertion-robust unlike fixed windows), chunk hash over the "

@@ -25,7 +25,6 @@ _QUALITY_SQL = """
 
 @register(
     "pipeline_corpus_curation",
-    "analytics",
     doc="Composed pipeline: exact-dedup keep-first (md5 fingerprint + "
     "row_number) → quality gate (alpha ratio ≥ 0.7, ≥ 10 words) → "
     "marker-lexicon language ID → per-(pred_lang, source) stats. "
@@ -104,7 +103,6 @@ def pipeline_corpus_curation(spark, sf_dir):
 
 @register(
     "pipeline_train_split",
-    "analytics",
     doc="Deterministic train/val/test split: md5(doc_id) % 100 → "
     "80/10/10 buckets — a pure row function (reproducible across "
     "engines, partitionings, reruns; no seeded RNG), reported as "
@@ -149,7 +147,6 @@ def pipeline_train_split(spark, sf_dir):
 
 @register(
     "pipeline_pack_context_windows",
-    "analytics",
     doc="Context-window packing: documents in doc_id order fill "
     "4096-token packs by running token total (cumulative-sum window → "
     "floor-divide bucket id) — the sequence-packing step before "
@@ -202,7 +199,6 @@ def pipeline_pack_context_windows(spark, sf_dir):
 
 @register(
     "pipeline_domain_rebalance",
-    "analytics",
     doc="Domain-mixture rebalancing: downsample each source toward a "
     "uniform target share with a deterministic md5-bucket keep rule. "
     "The keep test cross-multiplies to exact integers (bucket·k·n_src "
@@ -266,7 +262,6 @@ def pipeline_domain_rebalance(spark, sf_dir):
 
 @register(
     "pipeline_stratified_sample",
-    "analytics",
     doc="Deterministic fixed-size stratified sample: exactly k=25 docs "
     "per source stratum, chosen by md5(doc_id) rank — a reproducible "
     "'random' reservoir per stratum with no seeded RNG (identical "
@@ -302,7 +297,6 @@ def pipeline_stratified_sample(spark, sf_dir):
 
 @register(
     "pipeline_weighted_sample",
-    "analytics",
     doc="Quality-weighted deterministic sampling: each doc keeps with "
     "probability proportional to a quality weight (here length-derived, "
     "capped at 1), decided by comparing an md5-uniform of the doc_id "
@@ -347,7 +341,6 @@ def pipeline_weighted_sample(spark, sf_dir):
 
 @register(
     "pipeline_interleave_sources",
-    "pipeline",
     doc="Deterministic source interleaving — the training-ORDER side of "
     "domain mixing (pipeline_domain_rebalance fixes proportions; this "
     "fixes the schedule): each source's docs take a per-source ordinal "
@@ -417,7 +410,6 @@ ORDER BY split, source
 
 @register(
     "pipeline_pretraining_end_to_end",
-    "pipeline",
     doc="The full pre-training corpus pipeline as ONE declared query: "
     "quality gate (alpha ratio, min words) -> exact-dedup keep-first "
     "(md5 fingerprint) -> MinHash near-dup drop (any doc appearing as "
@@ -476,7 +468,6 @@ def pipeline_pretraining_end_to_end(spark, sf_dir):
 
 @register(
     "pipeline_length_grouped_batching",
-    "analytics",
     doc="Length-grouped batching audit — the padding-efficiency trick "
     "behind every LLM training/serving batcher: documents bucketed by "
     "token-length band, padding waste per bucket = max_len*count - "
@@ -552,7 +543,6 @@ MANIFEST_SHARDS = 8
 
 @register(
     "pipeline_dataset_manifest",
-    "pipeline",
     doc="Dataset integrity manifest: docs hash (md5) into "
     f"{MANIFEST_SHARDS} output shards; per shard the manifest records "
     "row count, total bytes, and an ORDER-INDEPENDENT content checksum "
@@ -606,7 +596,6 @@ SHARD_CHARS = 20_000  # target shard size (chars as the byte proxy)
 
 @register(
     "pipeline_shard_assignment",
-    "analytics",
     doc="Deterministic size-balanced release sharding — the step that "
     "turns a curated corpus into uniform output shards for a dataset "
     "release: docs take a reproducible md5 shuffle order, an EXCLUSIVE "
@@ -660,7 +649,6 @@ EPOCH_HEAD = 15  # rows shown per epoch (the reproducibility probe)
 
 @register(
     "pipeline_epoch_shuffle",
-    "analytics",
     doc="Deterministic per-epoch training order: each epoch e reorders "
     "the corpus by md5(doc_id:e), so every epoch sees a different but "
     "exactly reproducible shuffle (the data-loader contract for "
@@ -719,7 +707,6 @@ def pipeline_epoch_shuffle(spark, sf_dir):
 
 @register(
     "pipeline_dataset_card",
-    "analytics",
     doc="Dataset release card — the one-frame summary a corpus ships "
     "with: volume (docs/chars/whitespace tokens), provenance breadth "
     "(sources, languages), hygiene (exact-duplicate docs, benchmark-"
@@ -911,7 +898,6 @@ ORDER BY stage_idx
 
 @register(
     "pipeline_stage_funnel",
-    "pipeline",
     doc="Corpus-curation funnel dashboard: docs and tokens surviving each "
     "sequential stage — raw -> exact-dedup keep-first -> quality gate "
     "(alpha ratio >= 0.7, >= 10 words) -> MinHash near-dup drop (shared "
@@ -1015,7 +1001,6 @@ def pipeline_stage_funnel(spark, sf_dir):
 
 @register(
     "pipeline_dataset_diff",
-    "pipeline",
     doc="Release-to-release dataset diff — the audit run before "
     "shipping corpus v2: which documents were added, removed, changed, "
     "or untouched, per source. The two 'releases' are deterministic "
@@ -1089,7 +1074,6 @@ N_EPOCHS = 3
 
 @register(
     "pipeline_epoch_shuffle_audit",
-    "pipeline",
     doc="Deterministic epoch reshuffle — every training epoch orders "
     "the corpus by md5(epoch || ':' || doc_id), so the permutation "
     "is reproducible from (seed=epoch, doc_id) alone: any worker can "
@@ -1210,7 +1194,6 @@ N_SHARDS = 8
 
 @register(
     "pipeline_shard_rendezvous",
-    "pipeline",
     doc="Rendezvous (highest-random-weight) shard assignment: every "
     f"doc scores all {N_SHARDS} shards with md5(doc_id:shard) and "
     "lands on the argmax (max_by / arg_max in both engines; md5 "
@@ -1298,7 +1281,6 @@ def pipeline_shard_rendezvous(spark, sf_dir):
 
 @register(
     "pipeline_preference_pairs",
-    "pipeline",
     doc="DPO/RLHF preference-pair construction: within each (lang, "
     "source) prompt group, the highest-scoring doc becomes CHOSEN and "
     "the lowest REJECTED (score = exact integer length-penalized "
@@ -1381,7 +1363,6 @@ MASK_MOD = 5  # ~20% of word positions masked
 
 @register(
     "pipeline_span_corruption",
-    "pipeline",
     doc="T5-style span-corruption prep: word position i of doc d is "
     f"masked iff md5(d:i) %% {MASK_MOD} == 0 (the deterministic-hash "
     "convention replacing RNG — reproducible across epochs and "
@@ -1463,7 +1444,6 @@ BFD_SHARDS = 8
 
 @register(
     "pipeline_bestfit_packing",
-    "analytics",
     doc="Best-fit-decreasing context packing (the bin-packing upgrade "
     "over pipeline_pack_context_windows' sequential cumsum split — the "
     "'fewer truncations' recipe: docs are never split, each is placed "
@@ -1554,7 +1534,6 @@ ALLOC_BUDGET = 1000
 
 @register(
     "pipeline_largest_remainder_alloc",
-    "pipeline",
     doc=f"Largest-remainder (Hamilton) apportionment of a "
     f"{ALLOC_BUDGET}-doc sampling budget across languages in exact "
     "integer arithmetic: floor quota (B*n_i) DIV N per language, then "
@@ -1635,7 +1614,6 @@ def pipeline_largest_remainder_alloc(spark, sf_dir):
 
 @register(
     "pipeline_rejection_sampling",
-    "pipeline",
     doc="Quality-proportional rejection sampling without floats: each "
     "doc's acceptance probability is its clean-char share in bp "
     "(10000 - bad_bp from the text_garbage_score screen, floored at "
@@ -1715,7 +1693,6 @@ CHUNK_STRIDE = 4
 
 @register(
     "pipeline_chunk_overlap_windows",
-    "pipeline",
     doc=f"RAG-style sliding-window chunking (size {CHUNK_SIZE}, stride "
     f"{CHUNK_STRIDE}, 50% overlap) done entirely with JVM array HOFs: "
     "per doc, chunk k = words[k*stride, k*stride+size) until the "
@@ -1821,7 +1798,6 @@ KFOLD_K = 5
 
 @register(
     "pipeline_group_kfold",
-    "pipeline",
     doc=f"Group-aware {KFOLD_K}-fold cross-validation assignment: every "
     "EVENT inherits its user's fold (md5(user_id) % k), so no user's "
     "data straddles folds — the leakage-safe split a user-level model "
@@ -1909,7 +1885,6 @@ s{r} AS (SELECT doc_id, c FROM g{r} ORDER BY c DESC, doc_id LIMIT 1)"""
 
 @register(
     "pipeline_greedy_coverage",
-    "pipeline",
     doc=f"Greedy max-coverage data selection ({COVER_ROUNDS} rounds) — "
     "the facility-location heuristic behind coverage-driven corpus "
     "subset selection: each round picks the document covering the most "

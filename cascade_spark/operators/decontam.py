@@ -41,7 +41,6 @@ def _bench_flag():
 
 @register(
     "pipeline_decontaminate",
-    "analytics",
     doc="Benchmark decontamination: word-3-gram shingles of a "
     "deterministic ~5% 'benchmark' slice form a broadcast index; every "
     "other doc is scored map-only against it (one shingle pass, one "
@@ -108,7 +107,6 @@ def pipeline_decontaminate(spark, sf_dir):
 
 @register(
     "pipeline_contamination_split_report",
-    "analytics",
     doc="Contamination-by-split release gate: the decontamination scorer "
     "(broadcast benchmark n-gram index, map-only scoring) crossed with "
     "the deterministic train/val/test assignment — the per-split "

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from cascade_spark import store
 from cascade_spark.plans.registry import register
-from cascade_spark.operators._util import barrier_eager, t, widen
+from cascade_spark.operators._util import barrier_eager, bigint, t, widen
 
 # The aggregate spine counters, re-exported from the store under their
 # historical import path (perfbench reads them from here).
@@ -100,7 +100,6 @@ _SQL_SHINGLES = """
 
 @register(
     "dedup_exact",
-    "dedup",
     doc="Exact dedup: md5 content fingerprint over normalized text, "
     "hash-groupBy (map-side combinable — the cheapest pass over 100 TB).",
     oracle="""
@@ -132,7 +131,6 @@ def dedup_exact(spark, sf_dir):
 
 @register(
     "dedup_ngram_jaccard",
-    "dedup",
     doc="n-gram Jaccard near-dup pairs via shingle inverted-index "
     "self-join; DF-capped shingles bound the candidate set; the "
     "threshold test (|∩|·5 ≥ |∪|, i.e. J ≥ 0.2) is exact integer "
@@ -327,7 +325,6 @@ sim AS (
 
 @register(
     "dedup_minhash_lsh",
-    "dedup",
     doc="MinHash+LSH near-dup: 16 md5-derived min-hashes, 4 bands × 4 "
     "rows; candidate pairs share a band hash; estimated Jaccard = "
     "signature agreement / 16, kept at ≥ 0.5. Deterministic → fully "
@@ -525,7 +522,6 @@ def _cc_label_frame(spark, sf_dir):
 
 @register(
     "dedup_connected_components",
-    "dedup",
     doc="Near-dup cluster assignment: LSH pairs become an undirected "
     "graph; each node converges to the minimum doc_id of its component. "
     "The contracted graph is solved locally (union-find) when the edge "
@@ -568,7 +564,6 @@ def dedup_connected_components(spark, sf_dir):
 
 @register(
     "dedup_cluster_canonical",
-    "dedup",
     doc="Canonical-document selection per near-dup cluster — the KEEP "
     "side of cluster dedup (the step after dedup_connected_components "
     "that actually decides which row survives): within each component "
@@ -678,7 +673,6 @@ def _simhash_sig(spark, sf_dir) -> DataFrame:
 
 @register(
     "dedup_simhash",
-    "dedup",
     doc="48-bit SimHash fingerprints (md5-derived word hashes, "
     "frequency-weighted bit votes) + near-dup pairs via 4×12-bit band "
     "candidates and Hamming ≤ 6 verification (bit_count(xor)). Band "
@@ -768,7 +762,6 @@ def dedup_simhash(spark, sf_dir):
 
 @register(
     "profile_simhash_buckets",
-    "dedup",
     doc="SimHash band-bucket audit — per band: bucket count, max bucket "
     "size, and docs that the SIMHASH_BUCKET_CAP admission drops. This is "
     "the observable 'what was dropped' companion to dedup_simhash (a "
@@ -827,7 +820,6 @@ def profile_simhash_buckets(spark, sf_dir):
 
 @register(
     "dedup_minhash_error_audit",
-    "dedup",
     doc="Sketch-error audit for the MinHash family: every LSH-surfaced "
     "near-dup pair gets its TRUE shingle Jaccard (intersection over "
     "union, exact integers) next to the 16-hash estimate, with the "
@@ -918,7 +910,6 @@ CONTAIN_BP = 6000  # containment threshold: |∩| ≥ 0.6·min(|A|,|B|)
 
 @register(
     "dedup_containment_ngram",
-    "dedup",
     doc="Containment near-dup pairs (RefinedWeb-style subset detection): "
     "containment |∩| / min(|A|,|B|) finds a small doc embedded in a big "
     "one — exactly the pairs symmetric Jaccard under-scores (a 10:1 "
@@ -982,7 +973,6 @@ def dedup_containment_ngram(spark, sf_dir):
 
 @register(
     "dedup_corpus_report",
-    "dedup",
     doc="Corpus dedup dashboard — every flavor's headline number in ONE "
     "frame: total docs, exact-dup docs (md5 fingerprints), MinHash-LSH "
     "near-dup pairs (est J >= 0.5), shingle-Jaccard pairs (J >= 0.2), "
@@ -1034,7 +1024,6 @@ ORDER BY metric
 """,
 )
 def dedup_corpus_report(spark, sf_dir):
-    from cascade_spark.operators._util import bigint
 
     d = t(spark, sf_dir, "documents")
     fp = d.select(
@@ -1124,7 +1113,6 @@ def _sql_band_config(bands: int, rows: int) -> str:
 
 @register(
     "dedup_minhash_band_tuning",
-    "dedup",
     doc="LSH S-curve tuning table: the SAME persisted 16-hash signature "
     "index banded three ways (2x8 / 4x4 / 8x2), reporting candidate "
     "volume, kept pairs (est J >= 0.5 — banding-independent), and "
@@ -1237,7 +1225,6 @@ def dedup_minhash_band_tuning(spark, sf_dir):
 
 @register(
     "dedup_lsh_recall_audit",
-    "dedup",
     doc="LSH recall audit — the honest complement of "
     "dedup_minhash_error_audit: ground-truth near-dup pairs (true "
     "Jaccard >= 0.5 over the DF-capped shingle index, exact integer "
@@ -1312,7 +1299,6 @@ def dedup_lsh_recall_audit(spark, sf_dir):
 
 @register(
     "profile_shingle_df",
-    "dedup",
     doc="Document-frequency audit of the shingle index — the "
     f"observability query for the SHINGLE_DF_FRAC={SHINGLE_DF_FRAC} "
     "admission cap (every declared cap here ships an audit: simhash "
@@ -1385,7 +1371,6 @@ def profile_shingle_df(spark, sf_dir):
 
 @register(
     "dedup_minhash_1bit",
-    "dedup",
     doc="b-bit MinHash (b=1, Li & Konig 2010): each of the 16 minhash "
     "values keeps only its lowest bit, shrinking the stored signature "
     "16x (64 us-bits -> 16 bits per doc) at the cost of estimator "
@@ -1454,4 +1439,171 @@ def dedup_minhash_1bit(spark, sf_dir):
             .alias("est_1bit_bp"),
         )
         .orderBy("d1", "d2")
+    )
+
+
+PPM = 1_000_000
+
+
+@register(
+    "dedup_cross_source_matrix",
+    doc="Cross-source contamination matrix from the shared MinHash+LSH "
+    "near-dup pair frame (16 hashes, 4x4 bands, agreement >= 1/2 — "
+    "dedup_minhash_lsh's exact candidates): pairs roll up to the "
+    "unordered (source_a <= source_b) cell with the duplication rate "
+    "in exact pairs-per-million of the cell's pair space (n_a*n_b "
+    "cross, n(n-1)/2 within) — the read-before-you-weight diagnostic "
+    "for mixture construction. Pair frame is persisted and shared; "
+    "this adds two broadcast source-projection joins and one groupBy.",
+    oracle=f"""
+WITH {_SQL_PAIR_CTES},
+pairs AS (SELECT d1, d2 FROM sim WHERE matches * 2 >= {N_HASHES}),
+src AS (SELECT doc_id, source FROM documents),
+cnt AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n FROM src GROUP BY 1),
+cells AS (
+    SELECT LEAST(sa.source, sb.source) AS source_a,
+           GREATEST(sa.source, sb.source) AS source_b,
+           CAST(COUNT(*) AS BIGINT) AS n_dup_pairs
+    FROM pairs p
+    JOIN src sa ON sa.doc_id = p.d1
+    JOIN src sb ON sb.doc_id = p.d2
+    GROUP BY 1, 2
+)
+SELECT c.source_a, c.source_b, c.n_dup_pairs,
+       CAST(CASE WHEN c.source_a = c.source_b
+                 THEN CASE WHEN na.n <= 1 THEN 0
+                      ELSE (c.n_dup_pairs * {PPM} * 2) // (na.n * (na.n - 1))
+                      END
+                 ELSE (c.n_dup_pairs * {PPM}) // (na.n * nb.n)
+            END AS BIGINT) AS dup_rate_ppm
+FROM cells c
+JOIN cnt na ON na.source = c.source_a
+JOIN cnt nb ON nb.source = c.source_b
+ORDER BY c.source_a, c.source_b
+""",
+)
+def dedup_cross_source_matrix(spark, sf_dir):
+    pairs = _lsh_pairs(spark, sf_dir).select("d1", "d2")
+    src = t(spark, sf_dir, "documents").select("doc_id", "source")
+    cnt = src.groupBy("source").agg(bigint(F.count(F.lit(1))).alias("n"))
+    sa = src.select(F.col("doc_id").alias("d1"), F.col("source").alias("s1"))
+    sb = src.select(F.col("doc_id").alias("d2"), F.col("source").alias("s2"))
+    cells = (
+        pairs.join(F.broadcast(sa), "d1")
+        .join(F.broadcast(sb), "d2")
+        .groupBy(
+            F.least("s1", "s2").alias("source_a"),
+            F.greatest("s1", "s2").alias("source_b"),
+        )
+        .agg(bigint(F.count(F.lit(1))).alias("n_dup_pairs"))
+    )
+    na = cnt.select(F.col("source").alias("source_a"), F.col("n").alias("na"))
+    nb = cnt.select(F.col("source").alias("source_b"), F.col("n").alias("nb"))
+    return (
+        cells.join(F.broadcast(na), "source_a")
+        .join(F.broadcast(nb), "source_b")
+        .select(
+            "source_a",
+            "source_b",
+            "n_dup_pairs",
+            F.expr(
+                f"CAST(CASE WHEN source_a = source_b"
+                f" THEN CASE WHEN na <= 1 THEN 0"
+                f"      ELSE (n_dup_pairs * {PPM} * 2) DIV (na * (na - 1)) END"
+                f" ELSE (n_dup_pairs * {PPM}) DIV (na * nb)"
+                f" END AS BIGINT)"
+            ).alias("dup_rate_ppm"),
+        )
+        .orderBy("source_a", "source_b")
+    )
+
+
+W_MICRO = 1_000_000
+
+
+@register(
+    "dedup_soft_weighting",
+    doc="Soft dedup: instead of DROPPING near-duplicates, every doc in "
+    "an LSH near-dup cluster is down-weighted to 1e6 DIV cluster_size "
+    "micro (singletons keep 1e6) — the 'count each duplicated passage "
+    "once in expectation' policy some corpora prefer over hard "
+    "removal. Per source: clustered-doc count, raw vs effective "
+    "whitespace-token mass, and the retention share in truncated bp. "
+    "Reuses the shared persisted LSH pair frame + CC labels; the "
+    "oracle walks the same recursive-CTE transitive closure.",
+    oracle=f"""
+WITH RECURSIVE {_SQL_PAIR_CTES},
+pairs AS (SELECT d1, d2 FROM sim WHERE matches * 2 >= {N_HASHES}),
+edges AS (SELECT d1 AS a, d2 AS b FROM pairs
+          UNION ALL SELECT d2 AS a, d1 AS b FROM pairs),
+reach(src, dst) AS (
+    SELECT a, b FROM edges
+    UNION
+    SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
+),
+comp AS (
+    SELECT src AS node, LEAST(src, MIN(dst)) AS comp
+    FROM reach GROUP BY src
+),
+csize AS (SELECT comp, CAST(COUNT(*) AS BIGINT) AS sz FROM comp GROUP BY 1),
+dw AS (
+    SELECT d.source,
+           CAST(LEN(STRING_SPLIT(d.text, ' ')) AS BIGINT) AS tok,
+           CASE WHEN c.node IS NULL THEN CAST({W_MICRO} AS BIGINT)
+                ELSE {W_MICRO} // s.sz END AS w,
+           CASE WHEN c.node IS NULL THEN 0 ELSE 1 END AS clustered
+    FROM documents d
+    LEFT JOIN comp c ON c.node = d.doc_id
+    LEFT JOIN csize s ON s.comp = c.comp
+)
+SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(clustered) AS BIGINT) AS n_clustered,
+       CAST(SUM(tok) AS BIGINT) AS raw_tokens,
+       CAST(SUM(tok * w) // {W_MICRO} AS BIGINT) AS eff_tokens,
+       CAST(CASE WHEN SUM(tok) = 0 THEN 0
+                 ELSE SUM(tok * w) // (SUM(tok) * 100) END AS BIGINT)
+           AS retention_bp
+FROM dw
+GROUP BY source
+ORDER BY source
+""",
+)
+def dedup_soft_weighting(spark, sf_dir):
+
+    labels = _cc_label_frame(spark, sf_dir)
+    csize = labels.groupBy("comp").agg(
+        F.count(F.lit(1)).cast("long").alias("sz")
+    )
+    lbl = labels.join(csize, "comp").select(
+        F.col("node").alias("doc_id"), "sz"
+    )
+    docs = t(spark, sf_dir, "documents").select(
+        "doc_id",
+        "source",
+        F.size(F.split(F.col("text"), " ", -1)).cast("long").alias("tok"),
+    )
+    dw = docs.join(F.broadcast(lbl), "doc_id", "left").select(
+        "source",
+        "tok",
+        F.when(F.col("sz").isNull(), F.lit(W_MICRO).cast("long"))
+        .otherwise(F.expr(f"{W_MICRO} DIV sz"))
+        .alias("w"),
+        F.when(F.col("sz").isNull(), 0).otherwise(1).alias("clustered"),
+    )
+    return (
+        dw.groupBy("source")
+        .agg(
+            bigint(F.count(F.lit(1))).alias("n_docs"),
+            bigint(F.sum("clustered")).alias("n_clustered"),
+            bigint(F.sum("tok")).alias("raw_tokens"),
+            F.expr(f"CAST(SUM(tok * w) DIV {W_MICRO} AS BIGINT)").alias(
+                "eff_tokens"
+            ),
+            F.expr(
+                "CAST(CASE WHEN SUM(tok) = 0 THEN 0"
+                " ELSE SUM(tok * w) DIV (SUM(tok) * 100) END AS BIGINT)"
+            ).alias("retention_bp"),
+        )
+        .orderBy("source")
     )

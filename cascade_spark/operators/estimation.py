@@ -57,7 +57,6 @@ BP = 10_000
 
 @register(
     "stats_capture_recapture",
-    "analytics",
     doc="Chapman-corrected Lincoln–Petersen population estimate: users "
     "seen in the first half of the date span are the marked sample, "
     "users in the second half the recapture; N-hat = "
@@ -130,7 +129,6 @@ GT_MAX_R = 10
 
 @register(
     "stats_good_turing",
-    "text",
     doc="Good–Turing frequency-of-frequencies over corpus word-TRIGRAM "
     f"counts: for r = 1..{GT_MAX_R}, the number of trigram types seen "
     "exactly r times (n_r), the Turing-smoothed count r* = "
@@ -219,7 +217,6 @@ def _grid(spark, sf_dir):
 
 @register(
     "stats_anova_oneway",
-    "analytics",
     doc="One-way ANOVA F over the zero-filled (event_type x day) grid "
     "(equal group size D = n_days, k groups, N = k*D). With integer "
     "cell values the F statistic is one exact rational: F = "
@@ -281,7 +278,6 @@ EFFECT_B = "view"
 
 @register(
     "stats_effect_sizes",
-    "analytics",
     doc=f"Effect sizes between '{EFFECT_A}' and '{EFFECT_B}' daily "
     "volumes on the zero-filled day grid: Cohen's d (pooled-SD "
     "standardized mean difference), Hedges' g (small-sample corrected, "
@@ -389,7 +385,6 @@ def stats_effect_sizes(spark, sf_dir):
 
 @register(
     "stats_runs_test",
-    "analytics",
     doc="Wald–Wolfowitz runs test for randomness of each event type's "
     "daily-volume sequence: days are marked above/below the doubled "
     "median (2v > med2; ties count below — doubled medians stay exact "
@@ -505,7 +500,6 @@ def stats_runs_test(spark, sf_dir):
 
 @register(
     "stats_mcnemar",
-    "analytics",
     doc="McNemar's paired test comparing two language-ID classifiers on "
     "the SAME documents: A = the marker-word argmax (text_lang_id's "
     "rule, same deterministic tie order) vs B = the corpus-majority "
@@ -633,7 +627,6 @@ BURST_TOP = 15
 
 @register(
     "text_burstiness",
-    "text",
     doc="Word burstiness (Church & Gale 1995): the variance-to-mean "
     "ratio of each word's per-document count over ALL documents "
     "(absent = 0, handled without materializing zeros: with D docs, "
@@ -695,7 +688,6 @@ def text_burstiness(spark, sf_dir):
 
 @register(
     "stats_cochran_q",
-    "analytics",
     doc="Cochran's Q — the k-classifier extension of stats_mcnemar on "
     "the same eval set: three lang-ID rules (A = marker argmax, B = "
     "corpus-majority prior, C = 'en' iff any English marker else "

@@ -43,7 +43,6 @@ Z_SUM_E4 = 28016  # z_{0.025} + z_{0.20} = 1.9600 + 0.8416, scaled 1e4
 
 @register(
     "events_kaplan_meier",
-    "analytics",
     doc="Kaplan–Meier survival over user lifespans with right-censoring "
     "at the observation end (last activity on the final day = censored "
     "alive): per death time t — at-risk count, deaths, censored, and "
@@ -157,7 +156,6 @@ def events_kaplan_meier(spark, sf_dir):
 
 @register(
     "events_cuped_variance_reduction",
-    "analytics",
     doc="CUPED readout: per-user activity counts in the pre (first "
     "half of the date span) and post (second half) windows, "
     "theta = cov/var(pre) and the variance-reduction fraction rho^2 "
@@ -264,7 +262,6 @@ def events_cuped_variance_reduction(spark, sf_dir):
 
 @register(
     "stats_sample_size_two_proportions",
-    "analytics",
     doc="Pre-experiment power calculation (two-sided alpha 0.05, power "
     "0.80): observed weekday vs weekend purchase rates in floor bp are "
     "the planning inputs, n per arm = ceil(28016^2 * (p1*q1 + p2*q2) "
@@ -347,7 +344,6 @@ def stats_sample_size_two_proportions(spark, sf_dir):
 
 @register(
     "stats_wilson_interval",
-    "analytics",
     doc="Wilson 95% score interval for each event type's share of the "
     "log — the CI that stays sane at extreme rates, which the naive "
     "Wald interval does not: center and half-width built from exact "

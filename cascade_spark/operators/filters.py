@@ -15,7 +15,6 @@ from cascade_spark.operators._util import t
 
 @register(
     "filter_point_lookup",
-    "filters",
     doc="Equality point lookup — the reference's consume-by-offset "
     "(src/broker/main.rs:124-164; consumer asks for event 4, "
     "src/consumer/main.rs:22).",
@@ -31,7 +30,6 @@ def filter_point_lookup(spark, sf_dir):
 
 @register(
     "filter_range",
-    "filters",
     doc="Range predicate (reference index-range read analog, "
     "src/broker/main.rs:148-156).",
     oracle="""
@@ -52,7 +50,6 @@ def filter_range(spark, sf_dir):
 
 @register(
     "filter_compound",
-    "filters",
     doc="Compound predicates: AND/OR/NOT, IN, IS NULL.",
     oracle="""
 SELECT o_orderkey, o_orderstatus, o_totalprice
@@ -80,7 +77,6 @@ def filter_compound(spark, sf_dir):
 
 @register(
     "filter_like_regex",
-    "filters",
     doc="LIKE and regex predicates (dialect-common subset so the DuckDB "
     "oracle agrees — SURVEY §2B risk note).",
     oracle="""
@@ -101,7 +97,6 @@ def filter_like_regex(spark, sf_dir):
 
 @register(
     "filter_case_when",
-    "filters",
     doc="CASE WHEN projection (reference analog: ack-status branching, "
     "src/producer/main.rs:68-82).",
     oracle="""
@@ -128,7 +123,6 @@ def filter_case_when(spark, sf_dir):
 
 @register(
     "projection_rename_drop",
-    "filters",
     doc="Column projection / aliasing / computed columns (consume returns "
     "a projected record, proto/consume.proto:17-20).",
     oracle="""

@@ -35,7 +35,6 @@ MICRO = 1_000_000
 
 @register(
     "stats_chi2_goodness_of_fit",
-    "analytics",
     doc="Chi-square goodness-of-fit of the ISO-weekday event counts "
     "against the uniform calendar: chi2 = sum((O - N/7)^2 / (N/7)) "
     "cleared to sum((7*O - N)^2) DIV (7*N) — one exact integer in "
@@ -115,7 +114,6 @@ def stats_chi2_goodness_of_fit(spark, sf_dir):
 
 @register(
     "multimodal_image_entropy",
-    "multimodal",
     doc="Byte-histogram Shannon entropy per image on the real P6 "
     "decode: H = sum((c/n) * ln(n/c)) in micro-nats with each term "
     "FLOORED before the integer sum (c * floor(1e6 * ln(n/c)), one "
@@ -210,7 +208,6 @@ def multimodal_image_entropy(spark, sf_dir):
 
 @register(
     "events_seasonal_index_dow",
-    "timeseries",
     doc="Classical weekday seasonal indices: each ISO weekday's mean "
     "daily volume relative to the overall mean in exact bp — index = "
     "(dow_sum * n_days * 10000) DIV (dow_days * total) clears both "

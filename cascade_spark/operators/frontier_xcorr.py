@@ -35,7 +35,6 @@ from cascade_spark.plans.registry import register
 
 @register(
     "analytics_pareto_frontier",
-    "analytics",
     doc="2-D skyline over parts (maximize size, minimize retail price): "
     "a (size, min-price) point is non-dominated iff its price is "
     "STRICTLY below the cumulative min price of all larger sizes — the "
@@ -111,7 +110,6 @@ XCORR_MAX_LAG = 3
 
 @register(
     "events_cross_correlation",
-    "timeseries",
     doc=f"Cross-correlation between the click (x) and view (y) daily "
     f"series at lags -{XCORR_MAX_LAG}..+{XCORR_MAX_LAG} (positive lag "
     "= x leads y): per lag the exact integer scaled covariance "

@@ -22,7 +22,6 @@ from cascade_spark.plans.registry import register
 
 @register(
     "join_fuzzy_editdistance",
-    "joins",
     doc="Blocked fuzzy join, exact recall: 9-hex-char entity ids "
     "(md5-derived — mixed digits so half-blocks distribute; zero-padded "
     "sequential ids would degenerate every prefix block) matched by "

@@ -159,7 +159,6 @@ def _pagerank_frames(spark, sf_dir):
 
 @register(
     "graph_pagerank",
-    "analytics",
     doc="Weighted PageRank (3 power iterations, damping 0.85) over the "
     "user<->event_type bipartite interaction graph derived from events. "
     "Exact integer arithmetic: rank mass is 1e9 nano-units, every "
@@ -248,7 +247,6 @@ def graph_pagerank(spark, sf_dir):
 
 @register(
     "graph_triangle_count",
-    "analytics",
     doc="Triangle counting + global clustering coefficient over the "
     "co-activity graph: edges are user pairs whose sessions overlapped "
     ">= 2 times (from the shared persisted overlap-pair frame — one "
@@ -323,7 +321,6 @@ LP_TOP = 20
 
 @register(
     "graph_link_prediction",
-    "analytics",
     doc="Common-neighbor link prediction over the co-activity graph "
     "(same persisted edge frame as graph_triangle_count): for every "
     "non-adjacent user pair sharing >= 1 neighbor, the common-neighbor "
@@ -391,7 +388,6 @@ def graph_link_prediction(spark, sf_dir):
 
 @register(
     "profile_graph_degree",
-    "profiling",
     doc="Blocking-health audit for the graph two-hop joins (the same "
     "observability pattern as profile_simhash_buckets / "
     "profile_overlap_buckets): the co-activity graph's degree "
@@ -455,7 +451,6 @@ KCORE_ROUNDS = 3
 
 @register(
     "graph_kcore",
-    "analytics",
     doc=f"Truncated k-core peel (k={KCORE_K}, {KCORE_ROUNDS} fixed "
     "rounds) over the degree-capped co-activity graph — the iterative "
     "densest-substructure primitive (community cores, spam-ring "
@@ -582,7 +577,6 @@ LIMIT {NJ_TOP}
 
 @register(
     "graph_neighborhood_jaccard",
-    "graph",
     doc="Per-edge neighborhood Jaccard over the degree-capped co-activity "
     f"graph: |N(u) ∩ N(v)| via the wedge join (bounded by MAX_DEGREE="
     "1024 like every two-hop stage here), |N(u) ∪ N(v)| = d(u)+d(v)-"
@@ -641,7 +635,6 @@ def graph_neighborhood_jaccard(spark, sf_dir):
 
 @register(
     "graph_degree_histogram",
-    "graph",
     doc="Log2-bucketed degree distribution of the capped co-activity "
     "graph — the observability query behind MAX_DEGREE (every "
     "declared cap ships an audit): per power-of-two degree bucket, "
@@ -688,7 +681,6 @@ BFS_N_SEEDS = 3
 
 @register(
     "graph_bfs_hops",
-    "analytics",
     doc=f"Multi-source bounded BFS over the degree-capped co-activity "
     f"graph: from the {BFS_N_SEEDS} smallest node ids, min hop distance "
     f"within {BFS_MAX_HOPS} hops, reported as a per-hop reach histogram "
@@ -765,7 +757,6 @@ def graph_bfs_hops(spark, sf_dir):
 
 @register(
     "graph_degree_assortativity",
-    "analytics",
     doc="Degree assortativity of the capped co-activity graph — do "
     "well-connected users co-occur with other hubs (r>0, social-style) "
     "or with leaves (r<0, hub-and-spoke)? Pearson over the directed "
@@ -883,7 +874,6 @@ def _lpa_labels(spark, sf_dir):
 
 @register(
     "graph_label_propagation",
-    "graph",
     doc="Community detection via synchronous label propagation "
     f"(Raghavan et al. 2007), {LPA_ROUNDS} fixed rounds over the "
     "degree-capped co-activity graph: every node starts as its own "

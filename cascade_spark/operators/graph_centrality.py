@@ -68,7 +68,6 @@ x{k} AS (
 
 @register(
     "graph_katz_centrality",
-    "analytics",
     doc=f"Katz centrality (attenuation beta = 1/4, {KATZ_ROUNDS} fixed "
     "rounds) over the degree-capped co-activity graph: x_0 = S, "
     "x_k = S + (sum of neighbor x_(k-1)) DIV 4 in exact micro-mass "
@@ -130,7 +129,6 @@ AA_S = 1_000_000
 
 @register(
     "graph_adamic_adar",
-    "analytics",
     doc="Adamic-Adar link prediction over the degree-capped co-activity "
     "graph: for non-adjacent pairs with shared neighbors, AA = sum over "
     "common neighbors z of 1/ln(deg z) — each term FLOORED to micro "
@@ -209,7 +207,6 @@ LM_S = 1_000_000
 
 @register(
     "graph_landmark_centrality",
-    "analytics",
     doc=f"Closeness and harmonic centrality of the {LM_N_SEEDS} "
     f"smallest-id landmark nodes within {LM_MAX_HOPS} hops (the "
     "landmark approximation that makes centrality tractable at scale): "

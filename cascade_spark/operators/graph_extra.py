@@ -46,7 +46,6 @@ _MC_ITERS = 4
 
 @register(
     "graph_local_clustering",
-    "analytics",
     doc="Local clustering coefficient summary over the co-activity "
     "graph: per-node triangle memberships from the ordered-edge "
     "triangle join (each (a<b<c) triangle credits all three corners), "
@@ -173,7 +172,6 @@ p{i} AS (
 
 @register(
     "events_markov_stationary",
-    "analytics",
     doc="Stationary distribution of the event-type Markov chain: "
     "transition counts from the per-user consumption-order lag (the "
     "events_transition_matrix chain), then 4 power-iteration rounds "
@@ -248,7 +246,6 @@ def events_markov_stationary(spark, sf_dir):
 
 @register(
     "graph_modularity_score",
-    "analytics",
     doc="Newman modularity Q of the LPA communities (the quality metric "
     "graph_label_propagation's histogram lacks): read the SHARED "
     "persisted 2-round sync-LPA label frame (_lpa_labels — built once "
@@ -357,7 +354,6 @@ RICH_CLUB_KS = [2, 4, 8]
 
 @register(
     "graph_rich_club",
-    "analytics",
     doc=f"Rich-club coefficient phi(k) at k in {RICH_CLUB_KS}: among "
     "nodes with degree > k, the share of realizable edges actually "
     "present — do the hubs of the co-activity graph preferentially "

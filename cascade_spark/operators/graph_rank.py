@@ -43,7 +43,6 @@ inc AS (SELECT DISTINCT user_id, event_type FROM events
 
 @register(
     "graph_bipartite_projection",
-    "graph",
     doc="One-mode projection of the (user x event_type) bipartite "
     "incidence onto event types: per type pair, users engaging with "
     "both, Jaccard (both/(na+nb-both)) and overlap (both/min(na,nb)) "
@@ -143,7 +142,6 @@ a{i} AS (
 
 @register(
     "graph_hits_bipartite",
-    "graph",
     doc=f"HITS on the (user x event_type) incidence, {HITS_ROUNDS} "
     "fixed rounds in exact nano-mass integers: authorities start "
     f"uniform ({HITS_SCALE} DIV k), each round hubs = incidence-sum of "

@@ -10,7 +10,6 @@ from cascade_spark.operators._util import t
 
 @register(
     "agg_grouping_sets",
-    "aggregations",
     doc="Explicit GROUPING SETS (beyond rollup/cube): three chosen "
     "aggregation levels in one pass.",
     oracle="""
@@ -38,7 +37,6 @@ def agg_grouping_sets(spark, sf_dir):
 
 @register(
     "agg_percentile_approx",
-    "aggregations",
     oracle=None,  # sketch-based — tolerance-checked in tests, rows-only here
     doc="approx_percentile (KLL-style sketch) — the 100 TB path for "
     "quantiles (fixed-size sketch state vs exact percentile's full sort). "

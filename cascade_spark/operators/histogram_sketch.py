@@ -22,7 +22,6 @@ V_LO, V_HI = 0.0, 600.0
 
 @register(
     "agg_histogram_width_bucket",
-    "aggregations",
     doc="Equi-width histogram of event values via width_bucket "
     "(20 buckets over [0, 600)): single hash-agg on the bucket id — "
     "the one-pass distributed histogram.",
@@ -63,7 +62,6 @@ def agg_histogram_width_bucket(spark, sf_dir):
 
 @register(
     "agg_hll_sketch_merge",
-    "aggregations",
     oracle=None,  # DataSketches HLL has no DuckDB equivalent — rows-only
     doc="Mergeable distinct-count sketches: one HLL sketch of user_id "
     "per day, unioned into a monthly estimate — the rollup never "
@@ -90,7 +88,6 @@ def agg_hll_sketch_merge(spark, sf_dir):
 
 @register(
     "join_range_bucketed",
-    "joins",
     doc="Range join via bucket-key derivation: events matched to per-day "
     "business-hour windows (09:00-17:00). The range condition is "
     "rewritten as an equi-join on the derived day key + residual time "
@@ -135,7 +132,6 @@ def join_range_bucketed(spark, sf_dir):
 
 @register(
     "agg_approx_top_k",
-    "aggregations",
     doc="approx_top_k (Spark 4 built-in heavy-hitters sketch) on event "
     "types: one mergeable sketch per partition, combined on the "
     "driver-side final agg — the engine-native answer to 'top "
@@ -181,7 +177,6 @@ EQD_BUCKETS = 8
 
 @register(
     "agg_histogram_equi_depth",
-    "aggregations",
     doc="Equi-depth (quantile) histogram of lineitem price cents, "
     f"{EQD_BUCKETS} buckets — the histogram optimizers keep for "
     "selectivity estimation (equal row mass per bucket; "
@@ -280,7 +275,6 @@ def agg_histogram_equi_depth(spark, sf_dir):
 
 @register(
     "agg_percentile_approx_exact_regime",
-    "aggregations",
     doc="approx_percentile driven into its EXACT regime: with accuracy "
     "(1e6) >= group cardinality the GK sketch's rank error is < 1 "
     "row, so the returned values are exact discrete quantiles — "

@@ -27,7 +27,6 @@ _INCOMING = "src0"
 
 @register(
     "dedup_incremental",
-    "dedup",
     doc="Incremental dedup: incoming slice (source='src0') flagged "
     "against the corpus — exact via content-fingerprint semi-join, near "
     "via MinHash band semi-join. Never corpus×corpus.",

@@ -172,7 +172,6 @@ def _contingency_cells(spark, sf_dir):
 
 @register(
     "stats_kendall_tau_b",
-    "analytics",
     doc="Kendall tau-b rank correlation between click and view daily "
     "volumes: concordant/discordant/tie counts exact over all "
     "C(n_days,2) day pairs (a 30x30 self-join on the aggregated day "
@@ -249,7 +248,6 @@ def stats_kendall_tau_b(spark, sf_dir):
 
 @register(
     "stats_hodges_lehmann",
-    "analytics",
     doc="Hodges–Lehmann shift estimate between click and view daily "
     "volumes: the median of all n1*n2 pairwise differences x_i - y_j, "
     "DOUBLED so the even-count midpoint average stays an exact integer. "
@@ -323,7 +321,6 @@ def stats_hodges_lehmann(spark, sf_dir):
 
 @register(
     "stats_mood_median",
-    "analytics",
     doc="Mood's median test across the five event types' daily volumes "
     "(zero-filled grid): pooled grand median located exactly on the "
     "doubled order-statistic spine, per-type counts strictly above it, "
@@ -464,7 +461,6 @@ def stats_mood_median(spark, sf_dir):
 
 @register(
     "stats_friedman",
-    "analytics",
     doc="Friedman repeated-measures rank test: each day is a block, the "
     "five event types are treatments, doubled tie-correct midranks "
     "within each block (2r = 2*rank + eq - 1 from rank() + an equal-"
@@ -574,7 +570,6 @@ def stats_friedman(spark, sf_dir):
 
 @register(
     "stats_sign_test",
-    "analytics",
     doc="Paired sign test (click vs view daily volumes): pos/neg/tie "
     "counts, then the EXACT two-sided binomial p-value — the tail sum "
     "sum_{i<=min(pos,neg)} C(n,i) via the integer Pascal recurrence "
@@ -650,7 +645,6 @@ KAPPA_WORDS_CUT = 50
 
 @register(
     "stats_cohens_kappa",
-    "analytics",
     doc="Cohen's kappa between two heuristic document-quality raters "
     "(rater A: n_chars >= 300; rater B: whitespace words >= 50) — the "
     "agreement-beyond-chance audit run when two cheap filters are "
@@ -724,7 +718,6 @@ def stats_cohens_kappa(spark, sf_dir):
 
 @register(
     "stats_durbin_watson",
-    "analytics",
     doc="Durbin–Watson first-order autocorrelation statistic on each "
     "event type's daily-volume residuals: the mean is cleared by "
     "integer scaling (d_t = n*x_t - S so the 1/n cancels), "
@@ -826,7 +819,6 @@ def stats_durbin_watson(spark, sf_dir):
 
 @register(
     "stats_odds_ratio",
-    "analytics",
     doc="2x2 case-control readout: weekend exposure (ISO dow >= 6) vs "
     "purchase outcome. Odds ratio with the Haldane–Anscombe +1/2 "
     "correction kept exact by doubling ((2a+1)(2d+1) / (2b+1)(2c+1)) "
@@ -911,7 +903,6 @@ BH_ALPHA_BP = 500  # alpha = 0.05 in basis points
 
 @register(
     "stats_bh_fdr",
-    "analytics",
     doc="Multiple-testing correction done exactly: paired sign tests "
     "between EVERY pair of event types' daily volumes (the "
     "stats_sign_test Pascal-recurrence binomial, one HOF per pair "
@@ -1085,7 +1076,6 @@ MH_TERM_SCALE = 1_000_000
 
 @register(
     "stats_mantel_haenszel",
-    "analytics",
     doc="Mantel–Haenszel day-stratified odds ratio of the purchase "
     "outcome across the md5 A/B user arms (stats_ab_srm_check's "
     "split): per-day 2x2 cells in one combinable pass, per-stratum "
@@ -1188,7 +1178,6 @@ LB_MAX_LAG = 7
 
 @register(
     "stats_ljung_box",
-    "analytics",
     doc="Ljung–Box portmanteau whiteness test over the gap-free daily "
     "total-volume series (lags 1..7): the series is mean-centered by "
     "integer scaling (d_t = n*x_t - S, the stats_durbin_watson trick), "
@@ -1305,7 +1294,6 @@ def stats_ljung_box(spark, sf_dir):
 
 @register(
     "stats_icc_oneway",
-    "analytics",
     doc="Intraclass correlation ICC(1) over the equal-n (event_type x "
     "day) grid — how much daily-volume variance is BETWEEN types vs "
     "within (the reliability readout on the same spine the ANOVA "
@@ -1403,7 +1391,6 @@ def stats_icc_oneway(spark, sf_dir):
 
 @register(
     "stats_cvm_two_sample",
-    "analytics",
     doc="Cramér–von Mises two-sample test between click and view daily "
     "volumes — the quadratic-EDF companion to stats_ks_two_sample (KS "
     "sees the max gap; CvM integrates ALL of it): Anderson's rank form "
@@ -1532,7 +1519,6 @@ def stats_cvm_two_sample(spark, sf_dir):
 
 @register(
     "stats_mcc_matthews",
-    "analytics",
     doc="Matthews correlation coefficient of the binary en-vs-rest "
     "marker classifier (predicted: any English marker word present; "
     "actual: lang = 'en') — the confusion-matrix summary that stays "
@@ -1624,7 +1610,6 @@ def stats_mcc_matthews(spark, sf_dir):
 
 @register(
     "stats_cochran_armitage",
-    "analytics",
     doc="Cochran–Armitage trend test: is the daily purchase RATE "
     "drifting over the month? Days are ordered categories (scores "
     "t = 0..n-1), outcome = purchase vs other; the squared trend "
@@ -1718,7 +1703,6 @@ def stats_cochran_armitage(spark, sf_dir):
 
 @register(
     "stats_g_test",
-    "analytics",
     doc="G-test (likelihood-ratio) independence screen over the "
     "(event_type x ISO weekday) table — the information-theoretic "
     "twin of stats_chisq_independence (G = 2*sum O*ln(O*N/(R*C)) is "
@@ -1775,7 +1759,6 @@ def stats_g_test(spark, sf_dir):
 
 @register(
     "stats_poisson_dispersion",
-    "analytics",
     doc="Poisson over/under-dispersion screen per event type: the "
     "dispersion statistic D = sum (x - xbar)^2 / xbar over the "
     "zero-filled daily-volume series, cleared to the exact rational "
@@ -1835,3 +1818,106 @@ def stats_poisson_dispersion(spark, sf_dir):
         disp.cast("long").alias("dispersion_bp"),
         ((F.col("n") - 1) * 10000).cast("long").alias("poisson_expectation_bp"),
     ).orderBy("event_type")
+
+
+# ---------------------------------------------------------------------------
+# Normalized mutual information
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "stats_normalized_mutual_info",
+    doc="Normalized mutual information between event_type and ISO "
+    "weekday over the same contingency cells as stats_g_test: per-cell "
+    "contributions o*ln(o*N/(r*c)) and marginal entropies r*ln(N/r) "
+    "each as ONE mirrored IEEE ln expression rounded to integer micro "
+    "(the rounded-ln precedent), so every reported sum is an exact "
+    "integer; NMI uses the arithmetic-mean normalization 2*MI/(Hr+Hc) "
+    "— pure integer division, no sqrt. Zero cells contribute 0; a "
+    "degenerate table reports 0.",
+    oracle="""
+WITH cells AS (
+    SELECT event_type, ISODOW(CAST(ts AS DATE)) AS dow,
+           CAST(COUNT(*) AS BIGINT) AS o
+    FROM events GROUP BY 1, 2
+),
+r AS (SELECT event_type, CAST(SUM(o) AS BIGINT) AS r FROM cells GROUP BY 1),
+c AS (SELECT dow, CAST(SUM(o) AS BIGINT) AS c FROM cells GROUP BY 1),
+n AS (SELECT CAST(COALESCE(SUM(o), 0) AS BIGINT) AS n FROM cells),
+mi AS (
+    SELECT CAST(COALESCE(SUM(CAST(ROUND(1000000.0 * cells.o
+               * LN(CAST(cells.o AS DOUBLE) * n.n
+                    / (CAST(r.r AS DOUBLE) * c.c))) AS BIGINT)), 0)
+           AS BIGINT) AS mi
+    FROM cells, n
+    JOIN r ON r.event_type = cells.event_type
+    JOIN c ON c.dow = cells.dow
+),
+hr AS (
+    SELECT CAST(COALESCE(SUM(CAST(ROUND(1000000.0 * r.r
+               * LN(CAST(n.n AS DOUBLE) / r.r)) AS BIGINT)), 0) AS BIGINT) AS hr
+    FROM r, n
+),
+hc AS (
+    SELECT CAST(COALESCE(SUM(CAST(ROUND(1000000.0 * c.c
+               * LN(CAST(n.n AS DOUBLE) / c.c)) AS BIGINT)), 0) AS BIGINT) AS hc
+    FROM c, n
+)
+SELECT n.n, mi.mi AS mi_micro_n, hr.hr AS h_row_micro_n,
+       hc.hc AS h_col_micro_n,
+       CAST(CASE WHEN hr.hr + hc.hc = 0 THEN 0
+            ELSE (2000 * mi.mi) // (hr.hr + hc.hc) END AS BIGINT) AS nmi_milli
+FROM n, mi, hr, hc
+""",
+)
+def stats_normalized_mutual_info(spark, sf_dir):
+    cells = _contingency_cells(spark, sf_dir)
+    r = cells.groupBy("event_type").agg(bigint(F.sum("o")).alias("r"))
+    c = cells.groupBy("dow").agg(bigint(F.sum("o")).alias("c"))
+    n = cells.agg(bigint(F.coalesce(F.sum("o"), F.lit(0))).alias("n"))
+    cell_term = F.round(
+        F.lit(1000000.0)
+        * F.col("o")
+        * F.log(
+            F.col("o").cast("double")
+            * F.col("n")
+            / (F.col("r").cast("double") * F.col("c"))
+        )
+    ).cast("long")
+    mi = (
+        cells.join(F.broadcast(r), "event_type")
+        .join(F.broadcast(c), "dow")
+        .crossJoin(F.broadcast(n))
+        .agg(bigint(F.coalesce(F.sum(cell_term), F.lit(0))).alias("mi"))
+    )
+    hr_term = F.round(
+        F.lit(1000000.0)
+        * F.col("r")
+        * F.log(F.col("n").cast("double") / F.col("r"))
+    ).cast("long")
+    hr = r.crossJoin(F.broadcast(n)).agg(
+        bigint(F.coalesce(F.sum(hr_term), F.lit(0))).alias("hr")
+    )
+    hc_term = F.round(
+        F.lit(1000000.0)
+        * F.col("c")
+        * F.log(F.col("n").cast("double") / F.col("c"))
+    ).cast("long")
+    hc = c.crossJoin(F.broadcast(n)).agg(
+        bigint(F.coalesce(F.sum(hc_term), F.lit(0))).alias("hc")
+    )
+    out = (
+        n.crossJoin(F.broadcast(mi))
+        .crossJoin(F.broadcast(hr))
+        .crossJoin(F.broadcast(hc))
+    )
+    return out.select(
+        "n",
+        F.col("mi").alias("mi_micro_n"),
+        F.col("hr").alias("h_row_micro_n"),
+        F.col("hc").alias("h_col_micro_n"),
+        F.expr(
+            "CAST(CASE WHEN hr + hc = 0 THEN 0"
+            " ELSE (2000 * mi) DIV (hr + hc) END AS BIGINT)"
+        ).alias("nmi_milli"),
+    )

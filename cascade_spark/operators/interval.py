@@ -117,7 +117,6 @@ opairs AS MATERIALIZED (
 
 @register(
     "join_interval_overlap",
-    "joins",
     doc=f"Interval-overlap self-join: gap-based sessions ({_GAP_MIN}-min "
     "gap) from different users that overlap in time, counted per user "
     "pair (top-100 by overlap count). Blocked by hour buckets: each "
@@ -215,7 +214,6 @@ def _build_pairs(spark, sf_dir):
 
 @register(
     "profile_overlap_buckets",
-    "profiling",
     doc="Blocking-health audit for the interval-overlap join (the same "
     "observability pattern as profile_simhash_buckets): per-hour-bucket "
     "active-session counts summarized as a distribution — bucket count, "

@@ -18,7 +18,6 @@ from cascade_spark.operators._util import d2, dec, t
 
 @register(
     "join_inner",
-    "joins",
     doc="Inner equi-join lineitem⨝orders (fact-fact sort-merge join; AQE "
     "may switch to broadcast at small SF).",
     oracle="""
@@ -46,7 +45,6 @@ def join_inner(spark, sf_dir):
 
 @register(
     "join_left_outer",
-    "joins",
     doc="Left outer join keeping customers with zero orders.",
     oracle="""
 SELECT c.c_custkey, c.c_name,
@@ -74,7 +72,6 @@ def join_left_outer(spark, sf_dir):
 
 @register(
     "join_right_outer",
-    "joins",
     doc="Right outer join keeping parts never shipped.",
     oracle="""
 SELECT p.p_partkey, COUNT(l.l_orderkey) AS n_lines
@@ -95,7 +92,6 @@ def join_right_outer(spark, sf_dir):
 
 @register(
     "join_full_outer",
-    "joins",
     doc="Full outer join of event actors vs the customer dimension.",
     oracle="""
 SELECT COALESCE(e.user_id, c.c_custkey) AS uid,
@@ -122,7 +118,6 @@ def join_full_outer(spark, sf_dir):
 
 @register(
     "join_left_semi",
-    "joins",
     doc="Left semi join (EXISTS): customers who have placed orders. "
     "Semi joins never widen rows — at scale this is the cheap existence "
     "filter (only the key column of the right side shuffles).",
@@ -143,7 +138,6 @@ def join_left_semi(spark, sf_dir):
 
 @register(
     "join_left_anti",
-    "joins",
     doc="Left anti join (NOT EXISTS): event actors that are not customers.",
     oracle="""
 SELECT DISTINCT user_id FROM events e
@@ -163,7 +157,6 @@ def join_left_anti(spark, sf_dir):
 
 @register(
     "join_cross",
-    "joins",
     doc="Cross join over the two fixed-size catalogs (125 rows at any SF "
     "— cross joins are only ever sane between broadcast-size inputs).",
     oracle="""
@@ -179,7 +172,6 @@ def join_cross(spark, sf_dir):
 
 @register(
     "join_theta",
-    "joins",
     doc="Theta join: equi component (nation) + inequality (acctbal). "
     "Planned as a join on the equi key with the inequality as residual — "
     "the scalable shape for band/theta joins.",
@@ -203,7 +195,6 @@ def join_theta(spark, sf_dir):
 
 @register(
     "join_star",
-    "joins",
     doc="Multi-way star join lineitem⨝orders⨝customer⨝nation⨝region. "
     "Fixed-size nation/region (25/5 rows) carry explicit broadcast "
     "hints; the SF-scaling customer join is left to AQE (broadcast at "
@@ -242,7 +233,6 @@ def join_star(spark, sf_dir):
 
 @register(
     "join_runtime_filtered_fact",
-    "joins",
     doc="Selective dim filter on a fact join — the shape where Spark's "
     "runtime bloom filter (InjectRuntimeFilter) pays off at 100 TB: the "
     "filtered customer side builds a bloom filter that prunes orders "
@@ -276,7 +266,6 @@ def join_runtime_filtered_fact(spark, sf_dir):
 
 @register(
     "join_null_safe",
-    "joins",
     doc="Null-safe equality join (<=> / IS NOT DISTINCT FROM): NULL "
     "matches NULL, unlike plain '=' which drops NULL keys from an inner "
     "join. Keys are nation ids with one value NULLed out on both sides "

@@ -37,7 +37,6 @@ MICRO = 1_000_000
 
 @register(
     "text_bigram_perplexity",
-    "text",
     doc="Held-out bigram-LM log-perplexity with add-one smoothing: "
     "train = even doc_ids, eval = odd; p(w2|w1) = (c+1)/(ctx+V) with "
     "V = train unigram vocab; each DISTINCT eval bigram contributes "
@@ -177,7 +176,6 @@ def text_bigram_perplexity(spark, sf_dir):
 
 @register(
     "pipeline_mixture_kl_uniform",
-    "pipeline",
     doc="Mixture drift as one number: KL(realized whitespace-token "
     "shares || the uniform plan) = sum p_i * ln(p_i * k) over the k "
     "sources — each term cleared to t_i * floor(1e6 * ln(t_i * k / T)) "

@@ -51,7 +51,6 @@ _CUTOFF = "2024-01-25"  # fixture events span 2024-01-01 .. 2024-01-30
 
 @register(
     "rollup_incremental_refresh",
-    "analytics",
     doc="Incremental continuous-aggregate refresh (hypertable-style "
     "materialized rollup): the maintained daily rollup (events before "
     f"{_CUTOFF}) is merged with the new slice's partial aggregate by "
@@ -98,7 +97,6 @@ def rollup_incremental_refresh(spark, sf_dir):
 
 @register(
     "maintenance_compact_small_files",
-    "sources",
     doc="Small-file compaction as a declared operator: a fragmented "
     "topic (32 shards of the events table) is rewritten to 4 files via "
     "compact_topic, then read back — the aggregate must equal the "
@@ -154,7 +152,6 @@ def _zvalue_expr(a: str, b: str, idiv: str) -> str:
 
 @register(
     "maintenance_zorder_cluster",
-    "sources",
     doc="Z-order clustering audit: orders keyed by (custkey mod 256, "
     "orderdate-epoch-day mod 256), bit-interleaved into a 16-bit "
     "z-value; rows clustered into 256 z-range buckets (the file "
@@ -210,7 +207,6 @@ def maintenance_zorder_cluster(spark, sf_dir):
 
 @register(
     "maintenance_analyze_table_stats",
-    "maintenance",
     doc="Catalog statistics for the cost-based optimizer: saveAsTable + "
     "ANALYZE TABLE ... COMPUTE STATISTICS FOR COLUMNS, then the stats "
     "read back from the catalog as a relation. Only the EXACT stats "
@@ -284,7 +280,6 @@ def clustered_output(spark, sf_dir: str) -> str:
 
 @register(
     "maintenance_minmax_pruning_audit",
-    "maintenance",
     doc="Data-skipping layout + pruning audit: lineitem is rewritten "
     "Hive-partitioned by ship month (repartition on the partition "
     "column => one file per month, sortWithinPartitions => tight "
@@ -333,7 +328,6 @@ def maintenance_minmax_pruning_audit(spark, sf_dir):
 
 @register(
     "join_dynamic_partition_pruning",
-    "joins",
     doc="Dynamic partition pruning: the month-clustered lineitem "
     "layout (clustered_output — Hive-partitioned on ship_month) "
     "joined on its PARTITION column to a filtered month dimension "
@@ -391,7 +385,6 @@ def join_dynamic_partition_pruning(spark, sf_dir):
 
 @register(
     "rollup_bitmap_distinct_incremental",
-    "maintenance",
     doc="Incremental EXACT distinct-count refresh via stored bitmaps — "
     "the companion rollup_incremental_refresh cannot cover: "
     "COUNT(DISTINCT) is not algebraically mergeable from counts, but "

@@ -48,7 +48,6 @@ dd AS (SELECT CAST(COUNT(*) AS BIGINT) AS d FROM days)
 
 @register(
     "stats_levene_mean",
-    "analytics",
     doc="Levene's test (mean-centered) for variance equality across the "
     "event types' zero-filled daily volumes: deviations cleared to "
     "exact integers by n-scaling (z = |D*v - S_j|; the common D factor "
@@ -150,7 +149,6 @@ def stats_levene_mean(spark, sf_dir):
 
 @register(
     "agg_pythagorean_means",
-    "aggregation",
     doc="The AM >= GM >= HM panel per event type over POSITIVE daily "
     "volumes: arithmetic mean exact in micro (S*1e6 DIV n), geometric "
     "mean from the floored-term ln sum (one mirrored ln per day, "

@@ -71,7 +71,6 @@ def _scored(spark, sf_dir):
 
 @register(
     "stats_roc_auc_exact",
-    "analytics",
     doc="Exact ROC AUC of the n_chars score against the long-document "
     "label via the Mann-Whitney identity: AUC = (#{pos > neg} + "
     "ties/2) / (n1*n0), recovered from cumulative counts over the "
@@ -148,7 +147,6 @@ ECE_BINS = 10
 
 @register(
     "stats_calibration_ece",
-    "analytics",
     doc=f"Reliability table over {ECE_BINS} equal-width score bins: per "
     "bin the doc count, positive count, observed rate and mean "
     "predicted score in truncated bp, with the bin's calibration gap "
@@ -233,7 +231,6 @@ def stats_calibration_ece(spark, sf_dir):
 
 @register(
     "stats_brier_score",
-    "analytics",
     doc="Brier score (the quadratic proper scoring rule) of the bp "
     "score against the long-document label, exactly: sum((score_bp - "
     "y*10^4)^2) DIV (n*100) reported in micro units, with the "
@@ -294,7 +291,6 @@ GAIN_BANDS = 5
 
 @register(
     "stats_gains_table",
-    "analytics",
     doc=f"Cumulative-gains table over {GAIN_BANDS} descending "
     "equal-width score bands: per band the doc/positive counts, the "
     "cumulative capture share of all positives, and the cumulative "

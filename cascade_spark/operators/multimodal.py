@@ -56,7 +56,6 @@ def decode_image_stub(blob: bytes) -> tuple[int, int, int, str]:
 
 @register(
     "multimodal_decode",
-    "multimodal",
     doc="Binary column → mapInPandas decode (stubbed, deterministic) → "
     "typed metadata. Oracle replicates the md5-derived fake in SQL, so "
     "the Arrow plumbing (schema, batching, UDF signature) is fully "
@@ -96,7 +95,6 @@ def multimodal_decode(spark, sf_dir):
 
 @register(
     "multimodal_metadata",
-    "multimodal",
     doc="Metadata-only pass over binary payloads — byte length + sha256 "
     "content address, pure JVM built-ins (the cheap scan that never "
     "touches a decoder; with blobs in their own parquet column this "
@@ -123,7 +121,6 @@ def multimodal_metadata(spark, sf_dir):
 
 @register(
     "multimodal_frame_sample",
-    "multimodal",
     doc="Frame sampling plan: decode metadata → explode a deterministic "
     "frame index per payload (every 4th frame) — the shape of a video "
     "frame-extraction pipeline with the decode stubbed.",
@@ -157,7 +154,6 @@ def multimodal_frame_sample(spark, sf_dir):
 
 @register(
     "multimodal_binary_dedup",
-    "multimodal",
     doc="Content-addressed dedup over the binary payload column, "
     "per source: blob count vs distinct sha256 fingerprints + byte "
     "totals — the storage-dedup audit a media lakehouse runs before "
@@ -236,7 +232,6 @@ def decode_ppm(blob: bytes) -> tuple[int, int, int, int, int]:
 
 @register(
     "multimodal_decode_ppm",
-    "multimodal",
     doc="REAL image decode end-to-end: binary P6 (PPM) blobs — "
     "synthesized per doc with doc_id-derived dimensions and pixel "
     "bytes — parsed by an actual bytes/numpy decoder inside "
@@ -349,7 +344,6 @@ def decode_wav(blob: bytes) -> tuple[int, int, int, int]:
 
 @register(
     "multimodal_decode_wav",
-    "multimodal",
     doc="REAL audio decode end-to-end: canonical mono PCM16 WAV blobs "
     "(RIFF chunk walk, little-endian int16 frombuffer — the decoder "
     "sees only the bytes) synthesized per doc with doc_id-derived rate "
@@ -414,7 +408,6 @@ def stage_blob_dir(sf_dir: str) -> str:
 
 @register(
     "scan_binaryfile_blobs",
-    "sources",
     doc="Media ingestion through Spark's binaryFile source — the real "
     "on-disk path for multimodal corpora: a directory of .ppm image "
     "files is read as (path, length, content) rows, pruned to the "
@@ -471,7 +464,6 @@ AUDIO_FRAME = 32  # samples per analysis frame
 
 @register(
     "multimodal_audio_frame_energy",
-    "multimodal",
     doc="Frame-level audio feature extraction through the REAL WAV "
     f"decoder: each blob's samples are windowed into {AUDIO_FRAME}-"
     "sample frames inside the same map-only mapInPandas stage "
@@ -540,7 +532,6 @@ RESIZE_STRIDE = 2  # nearest-neighbor downsample factor
 
 @register(
     "multimodal_image_resize",
-    "multimodal",
     doc="REAL image transform: P6 blobs decoded by the real PPM parser, "
     f"then nearest-neighbor stride-{RESIZE_STRIDE} downsampled via a "
     "numpy strided view inside the same map-only mapInPandas stage — "
@@ -657,7 +648,6 @@ def decode_video(blob: bytes):
 
 @register(
     "multimodal_video_decode",
-    "multimodal",
     doc="REAL video-container decode: PVID blobs (multi-frame containers "
     "of P6 frames) are walked frame-by-frame by the real parser inside "
     f"one map-only mapInPandas stage; every {VIDEO_SAMPLE_EVERY}nd "
@@ -717,7 +707,6 @@ def multimodal_video_decode(spark, sf_dir):
 
 @register(
     "multimodal_phash_dedup",
-    "multimodal",
     doc="Perceptual-hash (dHash) near-dup detection over REAL decoded "
     "pixels: each P6 blob is parsed by the actual byte decoder, "
     "grayscale = 3-channel integer sum (no division — exact), the "
@@ -823,7 +812,6 @@ SCENE_CUT_DELTA = 600  # |pixel_sum(f) - pixel_sum(f-1)| above this = cut
 
 @register(
     "multimodal_video_scene_cut",
-    "multimodal",
     doc="Scene-cut detection over REAL decoded video frames: every PVID "
     "frame's exact pixel sum comes from the actual container parser "
     "(map-only mapInPandas), consecutive-frame deltas are compared "
@@ -901,7 +889,6 @@ def multimodal_video_scene_cut(spark, sf_dir):
 
 @register(
     "multimodal_image_channel_stats",
-    "multimodal",
     doc="Per-channel image statistics from REAL P6 decode: each doc's "
     "synthesized PPM is parsed bytes-only (same decoder path as "
     "multimodal_decode_ppm), pixels reshaped (n,3), and per-channel "
@@ -972,7 +959,6 @@ SILENCE_ABS = 16384  # |sample| below this is "silence" (25% full scale)
 
 @register(
     "multimodal_wav_silence_trim",
-    "multimodal",
     doc="Leading/trailing silence trim over REAL PCM16 WAV decode: each "
     "doc's synthesized RIFF blob is chunk-parsed bytes-only (same "
     f"parser as multimodal_decode_wav), loud = |sample| >= {16384}, "
@@ -1054,7 +1040,6 @@ def multimodal_wav_silence_trim(spark, sf_dir):
 
 @register(
     "multimodal_image_equalize",
-    "multimodal",
     doc="REAL histogram equalization on the P6 decoder's pixels: "
     "per image, numpy bincount -> cumulative distribution -> the "
     "classic integer remap eq(v) = (cdf(v) - cdf_min) * 255 // "
@@ -1142,7 +1127,6 @@ WAV_DECIM = 4
 
 @register(
     "multimodal_wav_downsample",
-    "multimodal",
     doc="REAL audio downsample audit: the RIFF/PCM16 parser's samples "
     f"decimated by {WAV_DECIM} (keep every {WAV_DECIM}th sample — "
     "naive decimation, declared as such; an anti-aliasing FIR is the "
@@ -1221,7 +1205,6 @@ TILE = 2  # tile edge in pixels
 
 @register(
     "multimodal_image_crop_tile",
-    "multimodal",
     doc=f"Vision-training tiling on the REAL P6 decode path: each "
     f"synthesized PPM is decoded (bytes-only parser), reshaped to "
     f"(h, w, 3) and cut into {TILE}x{TILE} tiles — the patchification "
@@ -1299,7 +1282,6 @@ def multimodal_image_crop_tile(spark, sf_dir):
 
 @register(
     "multimodal_wav_zero_crossings",
-    "multimodal",
     doc="Zero-crossing rate on the REAL RIFF/PCM16 decode path — the "
     "classic O(n) voiced/unvoiced + noisiness feature (high ZCR = "
     "noise/fricatives, low = tones/voiced speech): sign changes "

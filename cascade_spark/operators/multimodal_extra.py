@@ -53,7 +53,6 @@ def rotate90_cw_weighted(doc_id: int) -> tuple[int, int, int, int, int, int]:
 
 @register(
     "multimodal_image_rotate",
-    "multimodal",
     doc="Rotate-90-CW + horizontal mirror on the real PPM decode path, "
     "each proven by a position-weighted checksum of the transformed "
     "row-major buffer (plain sums are rotation-invariant; the weighted "
@@ -151,7 +150,6 @@ _SQL_MULAW_SEG = (
 
 @register(
     "multimodal_wav_mulaw",
-    "multimodal",
     doc="REAL audio codec work: G.711 mu-law companding of the PCM16 "
     "WAV decode — clip/bias/segment/mantissa as exact integer bit "
     "arithmetic (vectorized numpy on the decode path; the oracle "
@@ -232,7 +230,6 @@ def multimodal_wav_mulaw(spark, sf_dir):
 
 @register(
     "multimodal_image_grayscale",
-    "multimodal",
     doc="Integer-luma grayscale conversion on the real PPM decode path "
     "(the BT.601-style fixed-point kernel y = (77R + 150G + 29B) >> 8 "
     "— pure integer, no float luma): per doc, grayscale checksum and "

@@ -66,7 +66,6 @@ _SQL_BAYER_ROWS = ", ".join(
 
 @register(
     "multimodal_image_dither_bayer",
-    "multimodal",
     doc="4x4 Bayer ordered dithering on the real P6 decode: integer "
     "luma plane, per-pixel threshold t(x, y) = 16*bayer[y%4][x%4] + 8, "
     "bit = luma > t — the classic halftone, purely positional (no "
@@ -135,7 +134,6 @@ def multimodal_image_dither_bayer(spark, sf_dir):
 
 @register(
     "multimodal_image_boxblur",
-    "multimodal",
     doc="3x3 box smoothing on the real P6 decode: each interior pixel "
     "becomes the floor-DIV-9 mean of its 9-tap neighborhood on the "
     "integer luma plane (numpy shifted-slice pass per image) — the "
@@ -228,7 +226,6 @@ CLIP_T = 32000
 
 @register(
     "multimodal_wav_clipping_audit",
-    "multimodal",
     doc=f"Clipping audit on the real PCM16 WAV decode: samples at the "
     f"rails (|s| >= {CLIP_T}), clipped share in truncated bp, and the "
     "LONGEST consecutive clipped run per file (numpy boundary-diff on "
@@ -318,7 +315,6 @@ TARGET_PEAK = 30_000
 
 @register(
     "multimodal_wav_peak_normalize",
-    "multimodal",
     doc=f"Peak normalization on the real PCM16 WAV decode: out = "
     f"sign(s) * ((|s| * {TARGET_PEAK}) DIV peak) with peak = max|s| — "
     "the magnitude-domain form keeps every division on non-negative "

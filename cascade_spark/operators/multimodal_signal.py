@@ -59,7 +59,6 @@ def _luma_plane(blob: bytes):
 
 @register(
     "multimodal_image_sobel",
-    "multimodal",
     doc="Sobel edge energy on the real P6 decode: integer luma plane, "
     "3x3 gx/gy stencils over interior pixels (numpy slicing — one "
     "vectorized pass per image), per-doc exact gradient energy "
@@ -157,7 +156,6 @@ def multimodal_image_sobel(spark, sf_dir):
 
 @register(
     "multimodal_image_otsu",
-    "multimodal",
     doc="Otsu binarization threshold over the raw P6 byte histogram "
     "(the OCR/document-image preprocessing step): for each candidate "
     "t, class masses n0/s0 vs n1/s1 from the 256-bin histogram, "
@@ -263,7 +261,6 @@ def multimodal_image_otsu(spark, sf_dir):
 
 @register(
     "multimodal_wav_fade",
-    "multimodal",
     doc=f"Linear fade-in over the first {FADE_K} samples of the real "
     "PCM16 WAV decode, applied in the UNSIGNED domain (u = s + 32768, "
     f"faded = u*i DIV {FADE_K}) so every quantity is non-negative and "
@@ -361,7 +358,6 @@ def _video_frames(blob: bytes):
 
 @register(
     "multimodal_video_motion_energy",
-    "multimodal",
     doc="Adjacent-frame motion energy on the real PVID container walk: "
     "per consecutive frame pair, the exact integer squared-diff energy "
     "sum((p_f - p_(f-1))^2); per doc the total, the max pair energy, "

@@ -55,19 +55,42 @@ from cascade_spark.plans.registry import register
 
 BP = 10_000
 
+# Merged click (x) / view (y) daily-volume value support: one row per
+# distinct value with each series' day count (0 where a value occurs in
+# one series only). n_days-bounded by construction; the EDF and
+# dominance statistics below all cumulate over it.
+_SUP_SQL = """xv AS (SELECT x AS v, CAST(COUNT(*) AS BIGINT) AS cx FROM daily GROUP BY 1),
+yv AS (SELECT y AS v, CAST(COUNT(*) AS BIGINT) AS cy FROM daily GROUP BY 1),
+sup AS (
+    SELECT COALESCE(xv.v, yv.v) AS v,
+           COALESCE(cx, 0) AS cx, COALESCE(cy, 0) AS cy
+    FROM xv FULL JOIN yv ON xv.v = yv.v
+)"""
+
+
+def _merged_support(daily):
+    """sup(v, cx, cy) over an ``_xy_daily`` frame — the Spark side of
+    ``_SUP_SQL``."""
+    xv = daily.groupBy(F.col("x").alias("v")).agg(
+        bigint(F.count(F.lit(1))).alias("cx")
+    )
+    yv = daily.groupBy(F.col("y").alias("v")).agg(
+        bigint(F.count(F.lit(1))).alias("cy")
+    )
+    return xv.join(yv, "v", "full").select(
+        "v",
+        F.coalesce("cx", F.lit(0)).alias("cx"),
+        F.coalesce("cy", F.lit(0)).alias("cy"),
+    )
+
+
 # Shared merged-support pair-count spine: distinct daily-volume values
 # of the click (x) and view (y) series with cross-pair counts recovered
 # from cumulative frequencies — gt = #{(i,j): x_i > y_j} etc. without
 # ever materializing the O(n^2) pair space.
 _PAIR_SQL = f"""
 {_XY_SQL},
-xv AS (SELECT x AS v, CAST(COUNT(*) AS BIGINT) AS cx FROM daily GROUP BY 1),
-yv AS (SELECT y AS v, CAST(COUNT(*) AS BIGINT) AS cy FROM daily GROUP BY 1),
-sup AS (
-    SELECT COALESCE(xv.v, yv.v) AS v,
-           COALESCE(cx, 0) AS cx, COALESCE(cy, 0) AS cy
-    FROM xv FULL JOIN yv ON xv.v = yv.v
-),
+{_SUP_SQL},
 cum AS (
     SELECT cx, cy,
            COALESCE(SUM(cy) OVER (ORDER BY v
@@ -91,18 +114,7 @@ def _pair_counts(spark, sf_dir):
     the click-vs-view daily volumes via merged-support cumulatives.
     The two global windows run over the distinct daily-volume value
     spine (n_days-bounded by construction)."""
-    daily = _xy_daily(spark, sf_dir)
-    xv = daily.groupBy(F.col("x").alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("cx")
-    )
-    yv = daily.groupBy(F.col("y").alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("cy")
-    )
-    sup = xv.join(yv, "v", "full").select(
-        "v",
-        F.coalesce("cx", F.lit(0)).alias("cx"),
-        F.coalesce("cy", F.lit(0)).alias("cy"),
-    )
+    sup = _merged_support(_xy_daily(spark, sf_dir))
     w_lt = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
     w_gt = Window.orderBy("v").rowsBetween(1, Window.unboundedFollowing)
     cum = sup.select(
@@ -121,7 +133,6 @@ def _pair_counts(spark, sf_dir):
 
 @register(
     "stats_cliffs_delta",
-    "analytics",
     doc="Cliff's delta between the click and view daily-volume samples: "
     "delta = (#{x>y} - #{x<y}) / (n*n) over all cross pairs, recovered "
     "from merged-support cumulative frequencies (O(|support|), never a "
@@ -153,7 +164,6 @@ def stats_cliffs_delta(spark, sf_dir):
 
 @register(
     "stats_vargha_delaney_a",
-    "analytics",
     doc="Vargha-Delaney A measure on the click-vs-view daily-volume "
     "samples: A = P(X>Y) + P(X=Y)/2 = (2*gt + ties) / (2*n*n), the "
     "[0,1] stochastic-superiority rescale of Cliff's delta reported by "
@@ -183,7 +193,6 @@ def stats_vargha_delaney_a(spark, sf_dir):
 
 @register(
     "stats_rank_biserial",
-    "analytics",
     doc="Matched-pairs rank-biserial correlation between the paired "
     "click/view daily volumes (the Wilcoxon signed-rank effect size): "
     "zero differences drop, |d| ranks are tie-averaged and kept exact "
@@ -266,7 +275,6 @@ def stats_rank_biserial(spark, sf_dir):
 
 @register(
     "stats_cronbach_alpha",
-    "analytics",
     doc="Cronbach's alpha over k = 3 daily-volume items (click / view / "
     "purchase): alpha = k/(k-1) * (1 - sum(V_i)/V_total) with every "
     "population variance scaled by n^2 (V = n*Q - S^2, the 1/n never "
@@ -370,7 +378,6 @@ def stats_cronbach_alpha(spark, sf_dir):
 
 @register(
     "stats_page_trend",
-    "analytics",
     doc="Page's L trend test over (complete ISO week x ISO weekday) "
     "blocks of total daily volume — the ordered-alternative refinement "
     "of stats_friedman (is volume monotonically drifting across the "
@@ -453,7 +460,6 @@ def stats_page_trend(spark, sf_dir):
 
 @register(
     "stats_grubbs_outlier",
-    "analytics",
     doc="Grubbs' maximum-studentized-deviate outlier screen per event "
     "type over the zero-filled daily-volume grid: the day maximizing "
     "|n*x - S| (earliest day on ties), with G^2 = dev^2*(n-1) / "
@@ -537,7 +543,6 @@ def stats_grubbs_outlier(spark, sf_dir):
 
 @register(
     "stats_kuiper_two_sample",
-    "analytics",
     doc="Kuiper two-sample statistic V = D+ + D- between the click and "
     "view daily-volume ECDFs (equal n by the zero-filled-day design): "
     "cumulative counts over the merged value support, both one-sided "
@@ -547,13 +552,7 @@ def stats_grubbs_outlier(spark, sf_dir):
     "window over it (n_days-bounded).",
     oracle=f"""
 WITH {_XY_SQL},
-xv AS (SELECT x AS v, CAST(COUNT(*) AS BIGINT) AS cx FROM daily GROUP BY 1),
-yv AS (SELECT y AS v, CAST(COUNT(*) AS BIGINT) AS cy FROM daily GROUP BY 1),
-sup AS (
-    SELECT COALESCE(xv.v, yv.v) AS v,
-           COALESCE(cx, 0) AS cx, COALESCE(cy, 0) AS cy
-    FROM xv FULL JOIN yv ON xv.v = yv.v
-),
+{_SUP_SQL},
 cum AS (
     SELECT SUM(cx) OVER w AS cum_x, SUM(cy) OVER w AS cum_y
     FROM sup
@@ -576,17 +575,7 @@ FROM d, n
 )
 def stats_kuiper_two_sample(spark, sf_dir):
     daily = _xy_daily(spark, sf_dir)
-    xv = daily.groupBy(F.col("x").alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("cx")
-    )
-    yv = daily.groupBy(F.col("y").alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("cy")
-    )
-    sup = xv.join(yv, "v", "full").select(
-        "v",
-        F.coalesce("cx", F.lit(0)).alias("cx"),
-        F.coalesce("cy", F.lit(0)).alias("cy"),
-    )
+    sup = _merged_support(daily)
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     cum = sup.select(
         F.sum("cx").over(w).alias("cum_x"),
@@ -627,7 +616,6 @@ WK_WORDS_CUTS = (40, 70)
 
 @register(
     "stats_weighted_kappa",
-    "analytics",
     doc="Linearly weighted Cohen's kappa between two 3-category "
     f"document-quality raters (rater A: n_chars terciles at "
     f"{WK_CHARS_CUTS}; rater B: whitespace-word terciles at "
@@ -708,4 +696,231 @@ def stats_weighted_kappa(spark, sf_dir):
                 f" ELSE ((d_e - n * d_o) * {BP}) DIV d_e END AS BIGINT)"
             ).alias("weighted_kappa_bp"),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Ansari–Bradley rank dispersion
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "stats_ansari_bradley",
+    doc="Ansari–Bradley two-sample dispersion test of the click (x) vs "
+    "view (y) daily volumes: doubled Ansari scores s2 = min(dr, "
+    "2(N+1) - dr) on doubled midranks dr = 2*below + m + 1 over the "
+    "merged value support (O(|support|), ties exact by construction). "
+    "ab2_x/ab2_y are the doubled per-group score sums; mean scores "
+    "and the x/y dispersion ratio in truncated milli (small ratio = x "
+    "more spread than y). Zero-denominator guards report 0.",
+    oracle=f"""
+WITH daily AS (
+    SELECT CAST(ts AS DATE) AS day,
+           CAST(COUNT(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS x,
+           CAST(COUNT(*) FILTER (WHERE event_type = 'view') AS BIGINT) AS y
+    FROM events GROUP BY 1
+),
+{_SUP_SQL},
+tot AS (
+    SELECT CAST(COALESCE(SUM(cx), 0) AS BIGINT) AS nx,
+           CAST(COALESCE(SUM(cy), 0) AS BIGINT) AS ny
+    FROM sup
+),
+cumb AS (
+    SELECT v, cx, cy,
+           COALESCE(SUM(cx + cy) OVER (ORDER BY v
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below
+    FROM sup
+),
+sc AS (
+    SELECT cx, cy,
+           LEAST(2 * below + (cx + cy) + 1,
+                 2 * (tot.nx + tot.ny + 1)
+                 - (2 * below + (cx + cy) + 1)) AS s2
+    FROM cumb, tot
+),
+ab AS (
+    SELECT CAST(COALESCE(SUM(cx * s2), 0) AS BIGINT) AS ab2x,
+           CAST(COALESCE(SUM(cy * s2), 0) AS BIGINT) AS ab2y
+    FROM sc
+)
+SELECT tot.nx, tot.ny, ab.ab2x, ab.ab2y,
+       CAST(CASE WHEN tot.nx = 0 THEN 0
+            ELSE (1000 * ab.ab2x) // (2 * tot.nx) END AS BIGINT)
+           AS mean_x_milli,
+       CAST(CASE WHEN tot.ny = 0 THEN 0
+            ELSE (1000 * ab.ab2y) // (2 * tot.ny) END AS BIGINT)
+           AS mean_y_milli,
+       CAST(CASE WHEN ab.ab2y = 0 OR tot.nx = 0 THEN 0
+            ELSE (1000 * ab.ab2x * tot.ny) // (ab.ab2y * tot.nx)
+            END AS BIGINT) AS dispersion_ratio_milli
+FROM ab, tot
+""",
+)
+def stats_ansari_bradley(spark, sf_dir):
+    sup = _merged_support(_xy_daily(spark, sf_dir))
+    tot = sup.agg(
+        bigint(F.coalesce(F.sum("cx"), F.lit(0))).alias("nx"),
+        bigint(F.coalesce(F.sum("cy"), F.lit(0))).alias("ny"),
+    )
+    # merged click/view daily-volume value spine (n_days-bounded)
+    w_below = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
+    cumb = sup.select(
+        "v",
+        "cx",
+        "cy",
+        F.coalesce(F.sum(F.col("cx") + F.col("cy")).over(w_below), F.lit(0)).alias(
+            "below"
+        ),
+    )
+    sc = cumb.crossJoin(F.broadcast(tot)).select(
+        "cx",
+        "cy",
+        F.least(
+            2 * F.col("below") + (F.col("cx") + F.col("cy")) + 1,
+            2 * (F.col("nx") + F.col("ny") + 1)
+            - (2 * F.col("below") + (F.col("cx") + F.col("cy")) + 1),
+        ).alias("s2"),
+    )
+    ab = sc.agg(
+        bigint(F.coalesce(F.sum(F.col("cx") * F.col("s2")), F.lit(0))).alias(
+            "ab2x"
+        ),
+        bigint(F.coalesce(F.sum(F.col("cy") * F.col("s2")), F.lit(0))).alias(
+            "ab2y"
+        ),
+    )
+    j = ab.crossJoin(F.broadcast(tot))
+    return j.select(
+        "nx",
+        "ny",
+        "ab2x",
+        "ab2y",
+        F.expr(
+            "CAST(CASE WHEN nx = 0 THEN 0"
+            " ELSE (1000 * ab2x) DIV (2 * nx) END AS BIGINT)"
+        ).alias("mean_x_milli"),
+        F.expr(
+            "CAST(CASE WHEN ny = 0 THEN 0"
+            " ELSE (1000 * ab2y) DIV (2 * ny) END AS BIGINT)"
+        ).alias("mean_y_milli"),
+        F.expr(
+            "CAST(CASE WHEN ab2y = 0 OR nx = 0 THEN 0"
+            " ELSE (1000 * ab2x * ny) DIV (ab2y * nx) END AS BIGINT)"
+        ).alias("dispersion_ratio_milli"),
+    )
+
+
+@register(
+    "stats_anderson_darling_2s",
+    doc="Anderson–Darling two-sample test of the click (x) vs view (y) "
+    "daily volumes — the tail-weighted EDF distance (weight "
+    "1/(B(N−B)) blows up at the extremes, where KS is blind): "
+    "Scholz–Stephens version-1 over the merged value support, per-term "
+    "floored micro contributions (declared; both engines truncate the "
+    "identical integer expression), last support row excluded (B = N "
+    "term is 0 by definition). a2_micro sums both samples' terms; "
+    "under H0, A² ≈ 1 (a2_micro ≈ 1e6). n_terms = contributing "
+    "support rows. Zero-size guards report 0.",
+    oracle=f"""
+WITH daily AS (
+    SELECT CAST(ts AS DATE) AS day,
+           CAST(COUNT(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS x,
+           CAST(COUNT(*) FILTER (WHERE event_type = 'view') AS BIGINT) AS y
+    FROM events GROUP BY 1
+),
+{_SUP_SQL},
+tot AS (
+    SELECT CAST(COALESCE(SUM(cx), 0) AS BIGINT) AS m,
+           CAST(COALESCE(SUM(cy), 0) AS BIGINT) AS n
+    FROM sup
+),
+cum AS (
+    SELECT v, cx + cy AS l,
+           SUM(cx) OVER (ORDER BY v
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mx,
+           SUM(cy) OVER (ORDER BY v
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS my,
+           SUM(cx + cy) OVER (ORDER BY v
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS b
+    FROM sup
+),
+terms AS (
+    SELECT l, mx, my, b, tot.m, tot.n, tot.m + tot.n AS nn
+    FROM cum, tot
+    WHERE b < tot.m + tot.n AND tot.m > 0 AND tot.n > 0
+),
+ad AS (
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_terms,
+           CAST(COALESCE(SUM(
+               CAST((CAST(l AS HUGEINT)
+                     * CAST(nn * mx - m * b AS HUGEINT)
+                     * CAST(nn * mx - m * b AS HUGEINT) * 1000000)
+                   // (CAST(m AS HUGEINT) * nn * b * (nn - b)) AS BIGINT)
+             + CAST((CAST(l AS HUGEINT)
+                     * CAST(nn * my - n * b AS HUGEINT)
+                     * CAST(nn * my - n * b AS HUGEINT) * 1000000)
+                   // (CAST(n AS HUGEINT) * nn * b * (nn - b)) AS BIGINT)
+           ), 0) AS BIGINT) AS a2_micro
+    FROM terms
+)
+SELECT tot.m AS nx, tot.n AS ny, ad.n_terms, ad.a2_micro
+FROM tot, ad
+""",
+)
+def stats_anderson_darling_2s(spark, sf_dir):
+    sup = _merged_support(_xy_daily(spark, sf_dir))
+    tot = sup.agg(
+        bigint(F.coalesce(F.sum("cx"), F.lit(0))).alias("m"),
+        bigint(F.coalesce(F.sum("cy"), F.lit(0))).alias("n"),
+    )
+    # merged click/view daily-volume value spine (n_days-bounded)
+    w_cum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
+    cum = sup.select(
+        "v",
+        (F.col("cx") + F.col("cy")).alias("l"),
+        F.sum("cx").over(w_cum).alias("mx"),
+        F.sum("cy").over(w_cum).alias("my"),
+        F.sum(F.col("cx") + F.col("cy")).over(w_cum).alias("b"),
+    )
+    terms = (
+        cum.crossJoin(F.broadcast(tot))
+        .withColumn("nn", F.col("m") + F.col("n"))
+        .filter(
+            (F.col("b") < F.col("nn")) & (F.col("m") > 0) & (F.col("n") > 0)
+        )
+    )
+    ad = terms.agg(
+        bigint(F.count(F.lit(1))).alias("n_terms"),
+        bigint(
+            F.coalesce(
+                F.sum(
+                    # squared-deviation numerator in DECIMAL(38,0)
+                    # (oracle: HUGEINT) — l*(nn*mx-m*b)^2*1e6 is bounded
+                    # by ~nn^5/16*1e6, which exceeds int64 past a ~650-day
+                    # spine; the stats_tschuprow_t precedent
+                    F.expr(
+                        "CAST((CAST(l AS DECIMAL(38,0))"
+                        " * CAST(nn * mx - m * b AS DECIMAL(38,0))"
+                        " * CAST(nn * mx - m * b AS DECIMAL(38,0))"
+                        " * 1000000)"
+                        " DIV (CAST(m AS DECIMAL(38,0)) * nn * b * (nn - b))"
+                        " AS BIGINT)"
+                        " + CAST((CAST(l AS DECIMAL(38,0))"
+                        " * CAST(nn * my - n * b AS DECIMAL(38,0))"
+                        " * CAST(nn * my - n * b AS DECIMAL(38,0))"
+                        " * 1000000)"
+                        " DIV (CAST(n AS DECIMAL(38,0)) * nn * b * (nn - b))"
+                        " AS BIGINT)"
+                    )
+                ),
+                F.lit(0),
+            )
+        ).alias("a2_micro"),
+    )
+    return tot.crossJoin(F.broadcast(ad)).select(
+        F.col("m").alias("nx"),
+        F.col("n").alias("ny"),
+        "n_terms",
+        "a2_micro",
     )

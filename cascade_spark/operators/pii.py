@@ -32,7 +32,6 @@ TERM_RE = r"\bcustomer\b"
 
 @register(
     "pipeline_pii_scrub",
-    "analytics",
     doc="PII scrub: JVM-side regex detection (emails, phones, a "
     "sensitive-term denylist) + chained redaction, aggregated per "
     "source with an exact integer checksum of every redacted text "
@@ -99,7 +98,6 @@ def pipeline_pii_scrub(spark, sf_dir):
 
 @register(
     "pii_k_anonymity_audit",
-    "pii",
     doc="k-anonymity audit over quasi-identifiers: cohort = (event_type, "
     "hour-of-day, user decile) — any cohort with fewer than k=10 rows "
     "re-identifies its members and must be suppressed or generalized "
@@ -135,7 +133,6 @@ def pii_k_anonymity_audit(spark, sf_dir):
 
 @register(
     "pii_l_diversity_audit",
-    "pii",
     doc="l-diversity audit — the attack k-anonymity misses: a cohort "
     "can be large (k-anonymous) yet homogeneous in its SENSITIVE "
     "attribute, so membership alone leaks the secret. Cohort = the "
@@ -187,7 +184,6 @@ def pii_l_diversity_audit(spark, sf_dir):
 
 @register(
     "pii_format_preserving_mask",
-    "pii",
     doc="Format-preserving masking: card-shaped identifiers (the "
     "fn_luhn_check candidates) have each digit replaced by an "
     "md5-derived digit keyed on (secret salt, position, original "
@@ -276,7 +272,6 @@ T_CLOSE_BP = 2_000  # declared closeness threshold (t = 0.2)
 
 @register(
     "pii_t_closeness_audit",
-    "pii",
     doc="t-closeness audit — the attack l-diversity misses: a cohort "
     "can be diverse yet its sensitive-attribute DISTRIBUTION can still "
     "differ sharply from the table's, leaking the secret "

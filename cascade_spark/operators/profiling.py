@@ -22,7 +22,6 @@ from cascade_spark.operators._util import d2, dec, sql_avg_round, t
 
 @register(
     "profile_events",
-    "analytics",
     doc="One-pass column profile: counts, nulls, distincts, min/max per "
     "column — all fused into a single aggregate over one scan.",
     oracle="""
@@ -57,7 +56,6 @@ def profile_events(spark, sf_dir):
 
 @register(
     "sample_deterministic",
-    "analytics",
     doc="Content-hash Bernoulli sample (~10%) + per-lang stratified "
     "counts: md5(doc_id) % 100 < 10 — reproducible across engines, "
     "partitionings, and reruns (unlike seeded per-partition RNG).",
@@ -91,7 +89,6 @@ def sample_deterministic(spark, sf_dir):
 
 @register(
     "events_transition_matrix",
-    "analytics",
     doc="Markov transition counts between consecutive event types per "
     "user (lag window over the per-user shuffle) with transition "
     "probability per source state.",
@@ -136,7 +133,6 @@ def events_transition_matrix(spark, sf_dir):
 
 @register(
     "profile_key_skew",
-    "profiling",
     doc="Join/agg-key skew diagnostic: heavy-hitter share of events per "
     "user_id — the pre-flight check that decides whether a key needs "
     "salting (operators/bucketing.salted_join) before a 100 TB shuffle. "
@@ -177,7 +173,6 @@ def profile_key_skew(spark, sf_dir):
 
 @register(
     "profile_observed_metrics",
-    "profiling",
     doc="Inline job telemetry via the Observation API: data-quality "
     "counters (rows, null props, distinct-day span, value sum) ride "
     "the SAME pass as the job's real work — df.observe attaches "
@@ -216,7 +211,6 @@ def profile_observed_metrics(spark, sf_dir):
 
 @register(
     "profile_expectations_report",
-    "analytics",
     doc="Declarative data-quality expectations in ONE pass (the "
     "Deequ/Great-Expectations shape): each rule is a FILTER-counted "
     "aggregate — completeness (value not null), range (value within "

@@ -41,7 +41,6 @@ _PK = [
 
 @register(
     "profile_freshness_lag",
-    "profiling",
     doc="Freshness monitor per event type: newest record vs the "
     "table-global high-water mark, lag in exact whole hours "
     "(epoch-microsecond difference DIV 3600e6 — no timezone "
@@ -92,7 +91,6 @@ def profile_freshness_lag(spark, sf_dir):
 
 @register(
     "profile_pk_uniqueness_audit",
-    "profiling",
     doc="Primary-key uniqueness across all nine fixture tables in one "
     "result frame: per table the row count, distinct key count, and "
     "duplicate-key count (rows - distinct) — the referential "

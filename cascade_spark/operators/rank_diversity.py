@@ -61,7 +61,6 @@ sel{i} AS (SELECT vec_id FROM sel{i - 1} UNION ALL SELECT vec_id FROM s{i})"""
 
 @register(
     "similarity_mmr_diversify",
-    "similarity",
     doc=f"MMR diversification (lambda = 1/2): top-{MMR_POOL} relevance "
     "pool by exact quantized cosine to query item 0 (distributed "
     f"TakeOrdered), then {MMR_PICKS} greedy rounds picking "

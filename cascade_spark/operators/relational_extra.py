@@ -19,7 +19,6 @@ from cascade_spark.plans.registry import register
 
 @register(
     "join_hint_strategies",
-    "joins",
     doc="Explicit physical join-strategy hints: orders⋈customer forced "
     "to a ShuffledHashJoin (hint('shuffle_hash') — skips the sort when "
     "the build side fits per-partition memory) and the result⋈nation "
@@ -62,7 +61,6 @@ def join_hint_strategies(spark, sf_dir):
 
 @register(
     "sql_parameterized",
-    "subqueries",
     doc="Parameterized SQL (Spark 3.4+): named ':param' placeholders "
     "bound via spark.sql(query, args=...) plus DataFrame template "
     "substitution ('{orders}' → a Python DataFrame object). The "
@@ -101,7 +99,6 @@ def sql_parameterized(spark, sf_dir):
 
 @register(
     "setop_union_by_name",
-    "setops",
     doc="Schema-aligned union: customers and suppliers project different "
     "column orders and the supplier side lacks the segment column; "
     "unionByName(allowMissingColumns=True) aligns by NAME (position-"
@@ -154,7 +151,6 @@ def setop_union_by_name(spark, sf_dir):
 
 @register(
     "agg_bitwise",
-    "aggregations",
     doc="Bitwise aggregates (bit_and / bit_or / bit_xor over user_id "
     "bits per event type) + bit_count popcount of the OR — the "
     "bitmap-rollup shape behind feature-flag audits and bitmap-index "
@@ -186,7 +182,6 @@ def agg_bitwise(spark, sf_dir):
 
 @register(
     "stats_crosstab",
-    "aggregations",
     doc="Contingency table: df.stat.crosstab(status, priority) — the "
     "pairwise frequency matrix (one shuffle on the row key, priorities "
     "pivoted to columns). Oracle = conditional FILTER counts per "
@@ -212,7 +207,6 @@ def stats_crosstab(spark, sf_dir):
 
 @register(
     "stats_correlation",
-    "aggregations",
     doc="Pearson correlation + sample covariance of (quantity, price) "
     "per return flag, computed from EXACT integer moment sums (values "
     "quantized to scale-4 units; sums in decimal(38,0)/HUGEINT) so the "
@@ -278,7 +272,6 @@ def stats_correlation(spark, sf_dir):
 
 @register(
     "maintenance_file_metadata_audit",
-    "maintenance",
     doc="Hidden _metadata columns on file sources: per input file, its "
     "name, row count and max _metadata.row_index (must equal rows-1 — "
     "pinning the within-file ordinal semantics); _metadata.file_size "
@@ -330,7 +323,6 @@ def maintenance_file_metadata_audit(spark, sf_dir):
 
 @register(
     "stats_skew_kurtosis",
-    "aggregations",
     doc="Skewness + excess kurtosis of l_quantity per return flag from "
     "EXACT integer raw-moment sums (quantities are integral 1..50, so "
     "S1..S4 fit bigint exactly); the central-moment formula then runs "
@@ -419,7 +411,6 @@ def stats_skew_kurtosis(spark, sf_dir):
 
 @register(
     "agg_bitmap_distinct",
-    "aggregations",
     doc="Exact distinct counting via the bitmap family (Spark 3.5+): "
     "user ids bucketed with bitmap_bucket_number, positions packed by "
     "bitmap_construct_agg, counted with bitmap_count, then the bucket "
@@ -454,7 +445,6 @@ def agg_bitmap_distinct(spark, sf_dir):
 
 @register(
     "catalog_managed_table_dml",
-    "sources",
     doc="Catalog-table DML: CREATE (saveAsTable) + INSERT INTO ... "
     "SELECT + query-by-name through the session catalog — the DDL/DML "
     "surface a SQL-first user drives instead of DataFrame writes. The "
@@ -499,7 +489,6 @@ def catalog_managed_table_dml(spark, sf_dir):
 
 @register(
     "window_range_numeric_frame",
-    "windows",
     doc="Value-based RANGE frame over a numeric axis: for every "
     "customer, how many same-nation peers sit within ±$100 of their "
     "balance (inclusive bounds, exact integer cents so the frame edges "
@@ -543,7 +532,6 @@ def window_range_numeric_frame(spark, sf_dir):
 
 @register(
     "join_broadcast_left_outer",
-    "joins",
     doc="Broadcast LEFT OUTER join: the dimension (nations of one "
     "region) broadcasts as the build side — for outer joins Spark can "
     "only broadcast the NON-preserved side, and the plan test pins "
@@ -592,7 +580,6 @@ def join_broadcast_left_outer(spark, sf_dir):
 
 @register(
     "agg_group_by_all",
-    "aggregations",
     doc="GROUP BY ALL / ORDER BY ALL (Spark 3.4+/DuckDB shared SQL "
     "sugar): every non-aggregate select item becomes a grouping key — "
     "the drift-proof form for wide rollups where listing keys twice "
@@ -624,7 +611,6 @@ def agg_group_by_all(spark, sf_dir):
 
 @register(
     "fn_date_calendar",
-    "functions",
     doc="Calendar functions over order dates: quarter, ISO week, "
     "Monday-based weekday, month-end (last_day) and next-Monday "
     "(next_day — DuckDB lacks it, so the oracle derives it from isodow "

@@ -55,7 +55,6 @@ _SD_N2 = _SD_NUM * _SD_NUM
 
 @register(
     "similarity_retrieval_metrics",
-    "similarity",
     doc="Per-query precision@10 and true-NN reciprocal rank of the "
     "banded sign-LSH retrieval vs the exact cosine ranking over the "
     "deterministic vec_id % 50 query subset. Truth is brute-force by "
@@ -226,7 +225,6 @@ SWEEP_THRESHOLDS = [3, 4, 5, 6, 7]  # cosine cuts t/10
 
 @register(
     "similarity_dedup_threshold_sweep",
-    "similarity",
     doc="Dedup-threshold what-if over the LSH candidate index: ONE "
     "exact integer-cosine scoring pass over the persisted candidate "
     "pairs (cos >= t/10 iff qd>0 and 100*qd^2 >= t^2*na*nb — int64, "
@@ -329,7 +327,6 @@ def similarity_dedup_threshold_sweep(spark, sf_dir):
 
 @register(
     "dedup_overmerge_audit",
-    "dedup",
     doc="Chain-collapse (overmerge) audit of the semantic-dedup "
     "clusters: greedy connected-component dedup merges A-B-C even when "
     "A and C are NOT direct near-duplicates — this reports how much of "

@@ -24,7 +24,6 @@ _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 @register(
     "ingest_consume_roundtrip",
-    "ingest",
     doc="Publish events (round-robin, offset-assigned) then range-consume "
     "offsets [100, 110) — reference publish/consume paths end-to-end "
     "(src/producer/main.rs:196, src/broker/main.rs:132-164).",
@@ -58,7 +57,6 @@ def ingest_consume_roundtrip(spark, sf_dir):
 
 @register(
     "consume_last_event",
-    "ingest",
     doc="Last-event resolution (reference R3: the n == count-1 branch, "
     "src/broker/main.rs:136-144). Offsets are row_number over (ts, "
     "event_id) minus 1, so the last event is the max-(ts, event_id) row "

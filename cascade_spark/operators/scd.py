@@ -22,7 +22,6 @@ from cascade_spark.operators._util import dec, t
 
 @register(
     "scd2_apply_changes",
-    "analytics",
     doc="SCD2 upsert: changed keys (custkey%3=0, +100 balance) close "
     "their v1 row and open a v2 row; unchanged keys keep one open v1 "
     "row. Anti-join + union + literal versioning — one broadcast-size "
@@ -90,7 +89,6 @@ def scd2_apply_changes(spark, sf_dir):
 
 @register(
     "agg_correlation",
-    "analytics",
     doc="Pearson correlation / sample covariance per group (co-moment "
     "aggregates; rounded — co-moment merge order wiggles last ulps).",
     oracle="""
@@ -116,7 +114,6 @@ def agg_correlation(spark, sf_dir):
 
 @register(
     "pipeline_snapshot_cdc_diff",
-    "analytics",
     doc="Snapshot CDC extraction: given yesterday's and today's keyed "
     "snapshots, derive the row-level changelog (insert / update / "
     "delete) with a single full-outer join on the key — the diff "

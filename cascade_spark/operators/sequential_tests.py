@@ -55,7 +55,6 @@ SPRT_BOUND = math.floor(1e6 * math.log(19.0))  # ln((1-b)/a) = 2944438
 
 @register(
     "stats_sprt_sequential",
-    "analytics",
     doc="Wald's sequential probability ratio test on the daily "
     "clicks-beat-views Bernoulli stream (ties count as 0 — declared): "
     f"LLR_t += {SPRT_L_POS} on success / {SPRT_L_NEG} on failure "
@@ -151,7 +150,6 @@ TOST_ZCRIT = 1.644854  # one-sided 5% critical value, shared literal
 
 @register(
     "stats_tost_equivalence",
-    "analytics",
     doc=f"TOST equivalence test (margin {TOST_DELTA}) on the weekend vs "
     "weekday purchase rates: z_lower = (p1 - p0 + d)/se and z_upper = "
     "(p1 - p0 - d)/se with the pooled-by-group IEEE se — the SAME "
@@ -232,7 +230,6 @@ def stats_tost_equivalence(spark, sf_dir):
 
 @register(
     "stats_beta_binomial_posterior",
-    "analytics",
     doc="Beta-binomial posterior of the weekend purchase rate from a "
     "Beta(1,1) prior: a = 1 + x, b = 1 + n - x, posterior mean "
     "a/(a+b) and mode (a-1)/(a+b-2) in exact truncated bp, posterior "
@@ -292,7 +289,6 @@ def stats_beta_binomial_posterior(spark, sf_dir):
 
 @register(
     "experiment_hash_bucketing",
-    "analytics",
     doc="Deterministic experiment assignment: users hash to 2 arms via "
     "the '0x'||substr(md5(user_id),1,8) integer idiom (dedup.py's "
     "portable md5 contract) mod 2; per arm distinct users, events, "
@@ -371,4 +367,101 @@ def experiment_hash_bucketing(spark, sf_dir):
             "srm_chi2_micro",
         )
         .orderBy("arm")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Hash-bucket uniformity audit
+# ---------------------------------------------------------------------------
+
+
+HASH_BUCKETS = 16
+
+
+@register(
+    "stats_hash_uniformity_ks",
+    doc=f"Uniformity audit of the md5 {HASH_BUCKETS}-bucket user "
+    "assignment (the '0x'||substr(md5(id),1,8) portable-hash idiom "
+    "behind experiment_hash_bucketing): exact KS distance vs the "
+    f"uniform CDF scaled by {HASH_BUCKETS}*U (ks_d_16u = max |16*cum - "
+    "(b+1)*U|, pure integers) and the chi-square vs equal allocation "
+    "in truncated micro ((sum (16*o - U)^2 * 1e6) DIV (16*U), dof 15). "
+    f"The {HASH_BUCKETS}-row bucket spine is fixed by construction.",
+    oracle=f"""
+WITH u AS (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL),
+b AS (
+    SELECT ('0x' || SUBSTR(MD5(CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
+               % {HASH_BUCKETS} AS bkt
+    FROM u
+),
+oc AS (SELECT bkt, CAST(COUNT(*) AS BIGINT) AS o FROM b GROUP BY 1),
+spine AS (SELECT UNNEST(GENERATE_SERIES(0, {HASH_BUCKETS - 1})) AS bkt),
+grid AS (
+    SELECT s.bkt, COALESCE(oc.o, 0) AS o
+    FROM spine s LEFT JOIN oc ON oc.bkt = s.bkt
+),
+tot AS (SELECT CAST(COALESCE(SUM(o), 0) AS BIGINT) AS nu FROM grid),
+cum AS (
+    SELECT bkt, o,
+           SUM(o) OVER (ORDER BY bkt
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
+    FROM grid
+)
+SELECT tot.nu AS n_users,
+       CAST({HASH_BUCKETS} AS BIGINT) AS n_buckets,
+       CAST(COALESCE(MAX(ABS({HASH_BUCKETS} * cum.c - (cum.bkt + 1) * tot.nu)),
+                     0) AS BIGINT) AS ks_d_16u,
+       CAST(CASE WHEN tot.nu = 0 THEN 0
+            ELSE (SUM(({HASH_BUCKETS} * cum.o - tot.nu)
+                      * ({HASH_BUCKETS} * cum.o - tot.nu)) * 1000000)
+                 // ({HASH_BUCKETS} * tot.nu) END AS BIGINT) AS chi2_micro
+FROM cum, tot
+GROUP BY tot.nu
+""",
+)
+def stats_hash_uniformity_ks(spark, sf_dir):
+    ev = t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
+    users = ev.select("user_id").distinct()
+    bkt = (
+        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
+        .cast("long")
+        % HASH_BUCKETS
+    )
+    oc = users.select(bkt.alias("bkt")).groupBy("bkt").agg(
+        bigint(F.count(F.lit(1))).alias("o")
+    )
+    spine = spark.range(HASH_BUCKETS).select(F.col("id").alias("bkt"))
+    grid = spine.join(oc, "bkt", "left").select(
+        "bkt", F.coalesce("o", F.lit(0)).alias("o")
+    )
+    tot = grid.agg(bigint(F.coalesce(F.sum("o"), F.lit(0))).alias("nu"))
+    # fixed 16-row bucket spine
+    w_cum = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, 0)
+    cum = grid.select("bkt", "o", F.sum("o").over(w_cum).alias("c"))
+    j = cum.crossJoin(F.broadcast(tot))
+    return j.groupBy("nu").agg(
+        bigint(
+            F.coalesce(
+                F.max(
+                    F.abs(
+                        HASH_BUCKETS * F.col("c") - (F.col("bkt") + 1) * F.col("nu")
+                    )
+                ),
+                F.lit(0),
+            )
+        ).alias("ks_d_16u"),
+        # the squared-deviation sum accumulates in DECIMAL(38,0) to
+        # mirror DuckDB's automatic HUGEINT SUM widening — int64 would
+        # hold under a uniform hash but not under a pathological skew
+        F.expr(
+            f"CAST(CASE WHEN nu = 0 THEN 0"
+            f" ELSE (SUM(CAST(({HASH_BUCKETS} * o - nu) AS DECIMAL(38,0))"
+            f"           * ({HASH_BUCKETS} * o - nu))"
+            f"       * 1000000) DIV ({HASH_BUCKETS} * nu) END AS BIGINT)"
+        ).alias("chi2_micro"),
+    ).select(
+        F.col("nu").alias("n_users"),
+        F.lit(HASH_BUCKETS).cast("long").alias("n_buckets"),
+        "ks_d_16u",
+        "chi2_micro",
     )

@@ -23,7 +23,6 @@ GAP_MIN = 30
 
 @register(
     "events_sessionize_gap",
-    "analytics",
     doc=f"Gap-based sessionization ({GAP_MIN}-minute inactivity gap): "
     "lag + cumulative-flag-sum windows per user, then per-session "
     "aggregate — event count, start, duration, peak value.",
@@ -91,7 +90,6 @@ def events_sessionize_gap(spark, sf_dir):
 
 @register(
     "events_peak_concurrency",
-    "analytics",
     doc=f"Peak concurrent sessions via the sweep line: {GAP_MIN}-min gap "
     "sessions become (+1 at start, -1 just after end — closed "
     "intervals via a 1-microsecond exclusive edge) delta points, "
@@ -198,7 +196,6 @@ def events_peak_concurrency(spark, sf_dir):
 
 @register(
     "events_bounce_rate_by_entry",
-    "analytics",
     doc=f"Bounce analysis by session entry type ({GAP_MIN}-minute gap "
     "sessions, the events_sessionize_gap construction): per entry "
     "event type (first event of the session in (ts, event_id) order) — "

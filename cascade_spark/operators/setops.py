@@ -17,7 +17,6 @@ def _actors(spark, sf_dir):
 
 @register(
     "setop_union",
-    "setops",
     doc="UNION ALL + UNION (distinct) counts over event actors vs customer "
     "keys.",
     oracle="""
@@ -37,7 +36,6 @@ def setop_union(spark, sf_dir):
 
 @register(
     "setop_intersect",
-    "setops",
     doc="INTERSECT: actors that are also customers.",
     oracle="""
 SELECT user_id AS uid FROM events
@@ -53,7 +51,6 @@ def setop_intersect(spark, sf_dir):
 
 @register(
     "setop_except",
-    "setops",
     doc="EXCEPT (distinct): customer keys with no events.",
     oracle="""
 SELECT c_custkey AS uid FROM customer
@@ -69,7 +66,6 @@ def setop_except(spark, sf_dir):
 
 @register(
     "setop_dedup_keep_first",
-    "setops",
     doc="Deterministic dropDuplicates: keep the lowest doc_id per "
     "(lang, source) — dropDuplicates itself keeps an arbitrary row, so "
     "the deterministic form is the row_number composition (SURVEY §2B "
@@ -98,7 +94,6 @@ def setop_dedup_keep_first(spark, sf_dir):
 
 @register(
     "setop_bag_all_variants",
-    "setops",
     doc="Multiset (bag) semantics: EXCEPT ALL keeps duplicate "
     "multiplicity differences, INTERSECT ALL keeps min multiplicity — "
     "distinct from the plain EXCEPT/INTERSECT queries above. Spark "

@@ -57,7 +57,6 @@ _SQL_DOT = """
 
 @register(
     "similarity_cosine_topk",
-    "similarity",
     doc="Brute-force cosine top-10 neighbors of vec_id 0 — the exact "
     "baseline every ANN variant is measured against.",
     oracle=f"""
@@ -119,7 +118,6 @@ _SQL_SIGNS = """
 
 @register(
     "similarity_ann_lsh",
-    "similarity",
     doc="ANN via sign-random-projection LSH: 6 md5-derived hyperplanes "
     "→ 6-bit bucket code; exact cosine scored only inside the query's "
     "bucket. Deterministic planes make even the ANN path oracle-checkable.",
@@ -197,7 +195,6 @@ def similarity_ann_lsh(spark, sf_dir):
 
 @register(
     "similarity_pandas_cosine",
-    "similarity",
     oracle=None,  # numpy BLAS accumulation order differs — rows-only +
     # recall asserted against the exact baseline in tests
     doc="Arrow-vectorized cosine scoring via mapInPandas + numpy — the "
@@ -234,7 +231,6 @@ def similarity_pandas_cosine(spark, sf_dir):
 
 @register(
     "similarity_ivf_kmeans",
-    "similarity",
     oracle=None,  # k-means training is not SQL-expressible — rows-only +
     # recall asserted vs the exact baseline in tests
     doc="IVF-style ANN: MLlib KMeans (fixed seed) as the coarse "
@@ -408,7 +404,6 @@ def _lsh_candidate_pairs(spark, sf_dir) -> DataFrame:
 
 @register(
     "embedding_neardup_blocked",
-    "similarity",
     doc="Embedding-cosine near-dup pairs, blocked on banded sign-LSH "
     "buckets (8 bands × 6 md5-derived hyperplanes on the quantized "
     "vectors): candidates = pairs sharing ≥1 (band, code) bucket — a "
@@ -476,7 +471,6 @@ def embedding_neardup_blocked(spark, sf_dir):
 
 @register(
     "profile_lsh_bucket_pairs",
-    "similarity",
     doc="Observability for the banded sign-LSH blocking (every declared "
     "cap ships an audit): per band — bucket count, largest bucket, and "
     "the candidate-pair mass Σ n·(n-1)/2 that band contributes before "
@@ -515,7 +509,6 @@ def profile_lsh_bucket_pairs(spark, sf_dir):
 
 @register(
     "embedding_lsh_recall_audit",
-    "similarity",
     doc="Recall calibration for the banded sign-LSH blocking — the "
     "dedup_lsh_recall_audit twin on the embedding side: ground-truth "
     "similar pairs from the EXACT quantized integer cosine (cos >= "
@@ -653,7 +646,6 @@ def embedding_lsh_recall_audit(spark, sf_dir):
 
 @register(
     "similarity_quantized_topk",
-    "similarity",
     doc="int8-quantized dot-product top-10 (scalar quantization, the "
     "memory-bound scale path: 4× smaller vectors, integer SIMD math). "
     "q = floor(x * 200) is exact and identical in both engines "
@@ -701,7 +693,6 @@ KNN_K = 3
 
 @register(
     "similarity_knn_join",
-    "similarity",
     doc="Batch kNN join: top-3 cosine neighbors for EACH of a 5-vector "
     "query batch (vec_id 0-4) in one pass — the retrieval/seed-dedup "
     "shape. The query batch broadcasts (it is always the small side); "
@@ -758,7 +749,6 @@ HN_ANCHORS = 8  # vec_id 0..7 act as the anchor mini-batch
 
 @register(
     "similarity_hard_negative_mining",
-    "similarity",
     doc="Contrastive-training hard-negative mining: for each anchor in "
     f"an {HN_ANCHORS}-vector mini-batch, the single most-similar vector "
     "with a DIFFERENT label (the hardest negative). Similarity is the "
@@ -843,7 +833,6 @@ SEMDEDUP_T_NUM, SEMDEDUP_T_DEN = 2, 5  # cosine threshold 0.4 as a rational
 
 @register(
     "similarity_semantic_dedup",
-    "similarity",
     doc="SemDeDup-style semantic dedup: banded sign-LSH candidate pairs "
     "(shared _lsh_candidate_pairs index — a bucket-key equi-join, never "
     "all-pairs; the round-7 version label-blocked at O(n²/|labels|)) "
@@ -964,7 +953,6 @@ def similarity_semantic_dedup(spark, sf_dir):
 
 @register(
     "similarity_mips_norm_bound",
-    "similarity",
     doc="Maximum-inner-product search with a Cauchy-Schwarz norm-bound "
     "pruning audit: dot(q,x) <= sqrt(|q|^2 * |x|^2), and both squared "
     "norms are EXACT integers over the int8-quantized components, so "
@@ -1083,7 +1071,6 @@ RANGE_T_BP = 2500  # cosine radius: keep neighbors with cos >= 0.25
 
 @register(
     "similarity_range_query",
-    "similarity",
     doc="Radius (range) search — the dual of top-k: ALL vectors within "
     "a declared cosine radius of the query vector, not a fixed count. "
     f"Semantics are integer-exact: keep x iff qdot(x)*10000 >= "
@@ -1193,7 +1180,6 @@ _PROBE_MASKS = (0, 1, 2, 4, 8, 16, 32)  # Hamming <= 1 over the 6-bit code
 
 @register(
     "similarity_lsh_multiprobe",
-    "similarity",
     doc="Multi-probe LSH (Lv et al. 2007): instead of more hash "
     "tables, probe the query bucket AND its 6 Hamming-distance-1 "
     "neighbors (code XOR in {0,1,2,4,8,16,32}) — near-misses where "
@@ -1325,7 +1311,6 @@ RRF_PRECUT = 150
 
 @register(
     "similarity_reciprocal_rank_fusion",
-    "similarity",
     doc="Hybrid retrieval via reciprocal-rank fusion (Cormack et al. "
     "2009): the corpus is ranked twice against query item 0 — "
     "semantically (integer-exact quantized cosine over embeddings, "

@@ -58,7 +58,6 @@ def _sql_h(expr: str, salt: str) -> str:
 
 @register(
     "pipeline_decontaminate_bloom",
-    "analytics",
     doc="Bloom-filter benchmark decontamination: the benchmark 3-gram "
     "index is compressed into a fixed 2^16-slot bit-position set "
     f"({BLOOM_K} md5-derived hashes per shingle); the corpus is scored "
@@ -149,7 +148,6 @@ def pipeline_decontaminate_bloom(spark, sf_dir):
 
 @register(
     "profile_cms_heavy_hitters",
-    "profiling",
     doc=f"Count-min-sketch heavy hitters: every token occurrence updates "
     f"{CMS_D} md5-derived counters in a {CMS_D}x{CMS_W} sketch (one "
     "map-side-combinable groupBy — at most D*W partials leave any "
@@ -235,7 +233,6 @@ KMV_H_MAX = 1 << 32  # md5-derived 32-bit hash space
 
 @register(
     "agg_kmv_distinct_sketch",
-    "analytics",
     doc=f"KMV (k-minimum-values) distinct-count sketch, k={KMV_K}: keep "
     "the k smallest md5-derived 32-bit hashes of user_id — a bottom-k "
     "sketch is MERGEABLE (union = bottom-k of the unions) and doubles "
@@ -299,4 +296,89 @@ def agg_kmv_distinct_sketch(spark, sf_dir):
         )
         .cast("long")
         .alias("kmv_estimate"),
+    )
+
+
+THETA_LG_K = 14  # exact while per-sketch distinct ≤ 2^14 nominal entries
+
+
+@register(
+    "agg_theta_sketch_distinct",
+    doc="Theta-sketch distinct users per event_type plus the 'ALL' row "
+    "from theta_union_agg over the five per-type sketches — the "
+    "re-aggregatable rollup shape (union the SKETCHES, never recount "
+    f"the rows). lgNomEntries = {THETA_LG_K} declared: estimates are "
+    "EXACT while each sketch holds ≤ 2^14 distinct keys (fixture: "
+    "1,500 users), so the result hash-checks against COUNT(DISTINCT); "
+    "past the cap the sketch enters sampling mode and the contract "
+    "becomes tolerance-only (the agg_percentile_approx_exact_regime "
+    "precedent). One map-side-combinable pass; sketch state is fixed "
+    "size per group at any corpus scale.",
+    oracle="""
+SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
+FROM events GROUP BY event_type
+UNION ALL
+SELECT 'ALL' AS event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
+FROM events
+ORDER BY event_type
+""",
+)
+def agg_theta_sketch_distinct(spark, sf_dir):
+    ev = t(spark, sf_dir, "events")
+    per = ev.groupBy("event_type").agg(
+        F.theta_sketch_agg("user_id", THETA_LG_K).alias("sk")
+    )
+    typed = per.select(
+        "event_type", F.theta_sketch_estimate("sk").cast("long").alias("n_users")
+    )
+    union = per.agg(
+        F.theta_sketch_estimate(F.theta_union_agg("sk", THETA_LG_K))
+        .cast("long")
+        .alias("n_users")
+    ).select(F.lit("ALL").alias("event_type"), "n_users")
+    return typed.unionByName(union).orderBy("event_type")
+
+
+@register(
+    "agg_theta_sketch_setops",
+    doc="Theta-sketch SET ALGEBRA on the click vs purchase user sets: "
+    "|click|, |purchase|, |click ∩ purchase| (theta_intersection), "
+    "|click \\ purchase| (theta_difference) — the audience-overlap "
+    "query HLL cannot answer (HLL unions only). Exact regime per "
+    f"lgNomEntries = {THETA_LG_K} (see agg_theta_sketch_distinct), so "
+    "every estimate hash-checks against the relational set operators. "
+    "Two conditional sketch aggregates in ONE pass over events, then "
+    "scalar sketch ops on the 1-row frame — no re-scan per set op.",
+    oracle="""
+WITH c AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'click'),
+p AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
+SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM c) AS n_click,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM p) AS n_purchase,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM c WHERE user_id IN
+            (SELECT user_id FROM p)) AS n_both,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM c WHERE user_id NOT IN
+            (SELECT user_id FROM p)) AS n_click_only
+""",
+)
+def agg_theta_sketch_setops(spark, sf_dir):
+    ev = t(spark, sf_dir, "events")
+    sk = ev.agg(
+        F.theta_sketch_agg(
+            F.when(F.col("event_type") == "click", F.col("user_id")),
+            THETA_LG_K,
+        ).alias("sc"),
+        F.theta_sketch_agg(
+            F.when(F.col("event_type") == "purchase", F.col("user_id")),
+            THETA_LG_K,
+        ).alias("sp"),
+    )
+    return sk.select(
+        F.theta_sketch_estimate("sc").cast("long").alias("n_click"),
+        F.theta_sketch_estimate("sp").cast("long").alias("n_purchase"),
+        F.theta_sketch_estimate(F.theta_intersection("sc", "sp"))
+        .cast("long")
+        .alias("n_both"),
+        F.theta_sketch_estimate(F.theta_difference("sc", "sp"))
+        .cast("long")
+        .alias("n_click_only"),
     )

@@ -13,12 +13,11 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cascade_spark.plans.registry import register
-from cascade_spark.operators._util import t
+from cascade_spark.operators._util import bigint, t
 
 
 @register(
     "sort_topk_global",
-    "sorts",
     doc="Global top-20 by price (TakeOrderedAndProject — no full sort). "
     "Tie-broken by orderkey for determinism.",
     oracle="""
@@ -39,7 +38,6 @@ def sort_topk_global(spark, sf_dir):
 
 @register(
     "sort_global_nulls",
-    "sorts",
     doc="Global multi-key sort with explicit null ordering (nulls appear "
     "via a left join).",
     oracle="""
@@ -61,7 +59,6 @@ def sort_global_nulls(spark, sf_dir):
 
 @register(
     "sort_topk_per_group",
-    "sorts",
     doc="Top-3 orders per customer (row_number window + filter).",
     oracle="""
 SELECT o_custkey, o_orderkey, o_totalprice, rn
@@ -83,4 +80,51 @@ def sort_topk_per_group(spark, sf_dir):
         .filter(F.col("rn") <= 3)
         .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
         .orderBy("o_custkey", "rn")
+    )
+
+
+@register(
+    "sort_collated_order",
+    doc="Collation-aware distinct counting under UTF8_LCASE "
+    "(lowercase-then-binary comparison, Spark 4 collations): over a "
+    "mixed-case name corpus (nation names union their lowercased "
+    "forms), count per-trailing-character distinct names case-insensitively "
+    "(COLLATE UTF8_LCASE) vs binary — the two columns DIVERGE on "
+    "every group, so the collation semantics are hash-visible in the "
+    "values, not just in row order. For ASCII data UTF8_LCASE equals "
+    "DuckDB's COUNT(DISTINCT lower(x)) exactly. One combinable pass "
+    "over a 25x2-row frame; at scale this is the dictionary-side "
+    "normalization pass of a case-insensitive join.",
+    oracle="""
+WITH names AS (
+    SELECT n_name AS nm FROM nation
+    UNION ALL
+    SELECT lower(n_name) FROM nation
+)
+SELECT lower(substr(nm, length(nm), 1)) AS last_char,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(COUNT(DISTINCT lower(nm)) AS BIGINT) AS n_distinct_ci,
+       CAST(COUNT(DISTINCT nm) AS BIGINT) AS n_distinct_binary,
+       MIN(lower(nm)) AS min_name_ci
+FROM names GROUP BY 1 ORDER BY last_char
+""",
+)
+def sort_collated_order(spark, sf_dir):
+    n = t(spark, sf_dir, "nation")
+    names = n.select(F.col("n_name").alias("nm")).unionAll(
+        n.select(F.lower("n_name").alias("nm"))
+    )
+    return (
+        names.groupBy(
+            F.lower(F.expr("substr(nm, length(nm), 1)")).alias("last_char")
+        )
+        .agg(
+            bigint(F.count(F.lit(1))).alias("n_rows"),
+            bigint(
+                F.count_distinct(F.expr("nm COLLATE UTF8_LCASE"))
+            ).alias("n_distinct_ci"),
+            bigint(F.count_distinct("nm")).alias("n_distinct_binary"),
+            F.min(F.lower("nm")).alias("min_name_ci"),
+        )
+        .orderBy("last_char")
     )

@@ -16,7 +16,6 @@ from cascade_spark.operators._util import t
 
 @register(
     "subquery_lateral_topn",
-    "subqueries",
     doc="LATERAL correlated subquery (Spark SQL LATERAL, 3.4+): per "
     "nation, the top-2 customers by balance via a correlated ORDER BY "
     "... LIMIT subquery — the SQL-standard form of per-group top-k. "
@@ -53,7 +52,6 @@ def subquery_lateral_topn(spark, sf_dir):
 
 @register(
     "window_ignore_nulls",
-    "windows",
     doc="IGNORE NULLS window variants: values gapped to NULL on error "
     "events are carried forward with LAST_VALUE ... IGNORE NULLS and "
     "probed with NTH_VALUE ... IGNORE NULLS — the direct SQL form of "
@@ -99,7 +97,6 @@ def window_ignore_nulls(spark, sf_dir):
 
 @register(
     "agg_bool_flags",
-    "aggregations",
     doc="Boolean aggregates (bool_and / bool_or / count_if) per event "
     "type — data-quality flags in one combinable pass.",
     oracle="""
@@ -129,7 +126,6 @@ def agg_bool_flags(spark, sf_dir):
 
 @register(
     "fn_url_parse",
-    "functions",
     doc="URL functions: documents get synthetic canonical URLs, then "
     "parse_url extracts host / path / query and a named query "
     "parameter — the log-pipeline normalization step, all JVM "
@@ -167,7 +163,6 @@ def fn_url_parse(spark, sf_dir):
 
 @register(
     "fn_variant_json",
-    "functions",
     doc="VARIANT semi-structured type (Spark 4): events.props parsed "
     "with parse_json into a variant column, fields extracted with "
     "variant_get at a declared type, schema introspected with "
@@ -199,7 +194,6 @@ def fn_variant_json(spark, sf_dir):
 
 @register(
     "agg_collated_group",
-    "aggregations",
     doc="Collation-aware grouping (Spark 4 collations): a mixed-case "
     "language column grouped under UTF8_LCASE compares "
     "case-insensitively in the groupBy itself — no lower() projection "
@@ -238,7 +232,6 @@ def agg_collated_group(spark, sf_dir):
 
 @register(
     "scan_csv_permissive_badrecords",
-    "sources",
     doc="Malformed-record handling on ingest: a CSV where every 10th "
     "row has a non-numeric value is read under PERMISSIVE mode with a "
     "corrupt-record column — bad rows surface as NULL fields + the raw "
@@ -285,7 +278,6 @@ def scan_csv_permissive_badrecords(spark, sf_dir):
 
 @register(
     "agg_grouping_id",
-    "aggregations",
     doc="GROUPING()/GROUPING_ID() flags on a rollup: subtotal rows are "
     "distinguished from genuine NULL group keys by the grouping "
     "bitmask, not by key nullness — the only correct way to consume "
@@ -318,7 +310,6 @@ def agg_grouping_id(spark, sf_dir):
 
 @register(
     "events_session_window_batch",
-    "analytics",
     doc="Built-in session_window in BATCH mode (the same operator the "
     "streaming query uses, no gaps-and-islands windows needed): "
     "per-user 30-minute-gap sessions as one groupBy over the dynamic "
@@ -366,7 +357,6 @@ def events_session_window_batch(spark, sf_dir):
 
 @register(
     "fn_xml_extract",
-    "functions",
     doc="XML functions: documents rendered as XML records, fields "
     "pulled back out with xpath_string / xpath_long — legacy-feed "
     "parsing as JVM built-ins. The oracle reconstructs the expected "
@@ -401,7 +391,6 @@ def fn_xml_extract(spark, sf_dir):
 
 @register(
     "fn_aes_roundtrip",
-    "functions",
     doc="Column-level encryption (aes_encrypt/aes_decrypt): document "
     "text encrypted and decrypted in one projection — the "
     "field-protection step PII pipelines apply before data leaves a "
@@ -433,7 +422,6 @@ def fn_aes_roundtrip(spark, sf_dir):
 
 @register(
     "events_session_window_dynamic_gap",
-    "analytics",
     doc="session_window with a DYNAMIC per-row gap (Spark 3.2+): "
     "purchase/signup events hold sessions open for 60 minutes, "
     "everything else 15 — the per-event-importance sessionization "
@@ -492,7 +480,6 @@ def events_session_window_dynamic_gap(spark, sf_dir):
 
 @register(
     "catalog_global_temp_view",
-    "sources",
     doc="Global temp views: registered in the global_temp database and "
     "visible from a DIFFERENT session (spark.newSession shares the "
     "catalog of globals, unlike createOrReplaceTempView's "
@@ -524,7 +511,6 @@ def catalog_global_temp_view(spark, sf_dir):
 
 @register(
     "scan_json_permissive_badrecords",
-    "sources",
     doc="Malformed-JSON handling on ingest (the JSONL twin of the CSV "
     "permissive scan): every 10th line of a JSONL feed is truncated "
     "mid-object; PERMISSIVE mode surfaces those lines in the corrupt-"
@@ -568,7 +554,6 @@ def scan_json_permissive_badrecords(spark, sf_dir):
 
 @register(
     "sql_udf_create_function",
-    "functions",
     doc="SQL scalar UDF (Spark 4 CREATE FUNCTION ... RETURN expr): a "
     "price-band classifier declared ONCE in the catalog and reused by "
     "name. Unlike Python UDFs, SQL UDFs inline into the plan at "
@@ -611,7 +596,6 @@ GROUP BY 1 ORDER BY band
 
 @register(
     "sql_scripting_batch",
-    "functions",
     doc="SQL scripting (Spark 4 BEGIN...END): procedural control flow "
     "— DECLARE'd variables and a WHILE loop driving real queries — "
     "without leaving SQL; each iteration counts orders above a rising "
@@ -647,7 +631,6 @@ END
 
 @register(
     "pandas_api_rolling_sum",
-    "functions",
     doc="Pandas API on Spark (pyspark.pandas): the day-count series "
     "wrapped as a distributed pandas DataFrame, 7-day rolling sum via "
     "the pandas idiom (.rolling(7).sum()) — the migration surface for "
@@ -687,7 +670,6 @@ def pandas_api_rolling_sum(spark, sf_dir):
 
 @register(
     "agg_transpose_summary",
-    "aggregations",
     doc="DataFrame.transpose (Spark 4): the per-event-type metrics "
     "summary flipped so metrics are rows and types are columns — the "
     "report-orientation step after aggregation. Transpose happens on "
@@ -733,7 +715,6 @@ def agg_transpose_summary(spark, sf_dir):
 
 @register(
     "fn_str_to_map_kv",
-    "functions",
     doc="str_to_map parsing of delimited key:value tag strings — the "
     "non-JSON config/tag format (k1:v1,k2:v2) every log pipeline "
     "eventually meets — with typed element_at extraction; round-trip "
@@ -767,7 +748,6 @@ def fn_str_to_map_kv(spark, sf_dir):
 
 @register(
     "sql_pipe_syntax",
-    "functions",
     doc="SQL pipe syntax (Spark 4 / GoogleSQL '|>' operators): the "
     "linear FROM -> WHERE -> EXTEND -> AGGREGATE -> ORDER BY form of a "
     "revenue rollup — each |> stage consumes the previous table, so "
@@ -805,7 +785,6 @@ FROM lineitem_pipe_v
 
 @register(
     "sql_identifier_clause",
-    "sql",
     doc="Parameterized IDENTIFIER() clause (Spark 4 SQL): the table name "
     "arrives as a named parameter and binds through IDENTIFIER(:tbl) — "
     "the injection-safe form of dynamic table dispatch (string-"
@@ -838,7 +817,6 @@ def sql_identifier_clause(spark, sf_dir):
 
 @register(
     "sql_execute_immediate",
-    "sql",
     doc="EXECUTE IMMEDIATE (Spark 4 dynamic SQL): the query text is a "
     "runtime string and its parameters bind through USING — the "
     "engine-side prepared-statement form of dynamic SQL (vs. string "
@@ -875,7 +853,6 @@ def sql_execute_immediate(spark, sf_dir):
 
 @register(
     "sql_table_valued_udf",
-    "sql",
     doc="SQL table-valued UDF (Spark 4 CREATE FUNCTION ... RETURNS "
     "TABLE): a per-segment top-spender relation declared once and "
     "invoked per outer row via LATERAL correlation — the SQL-native "
@@ -928,7 +905,6 @@ ORDER BY s.c_mktsegment, f.rk
 
 @register(
     "sql_session_variables",
-    "sql",
     doc="SQL session variables (Spark 4 DECLARE / SET VAR): thresholds "
     "declared once at session scope and referenced by NAME inside a "
     "distributed query — parameterization without string templating "
@@ -973,7 +949,6 @@ ORDER BY o_orderpriority
 
 @register(
     "sql_pipe_lateral_having",
-    "sql",
     doc="SQL pipe syntax, part 2 — the post-aggregation stages the "
     "basic sql_pipe_syntax rollup doesn't exercise: a pipe WHERE "
     "placed AFTER |> AGGREGATE (the pipe spelling of HAVING, "
@@ -1011,7 +986,6 @@ FROM cascade_pipe_orders
 
 @register(
     "window_named_window_clause",
-    "sql",
     doc="Named WINDOW clause: window specifications (customer "
     "partition, date+key order; plus its framed twin) declared once "
     "in a WINDOW clause and shared by four "
@@ -1058,7 +1032,6 @@ ORDER BY o_custkey, rn
 
 @register(
     "sql_default_columns",
-    "sql",
     doc="Column DEFAULT values (Spark 3.4+ DDL): a managed table "
     "declares defaults for status and score; rows arrive through "
     "three insert shapes — explicit DEFAULT keyword, a partial "
@@ -1112,4 +1085,114 @@ WHERE o_orderkey % 501 = 0
     )
     return spark.sql(
         "SELECT id, status, score FROM cascade_default_cols ORDER BY id"
+    )
+
+
+# ---------------------------------------------------------------------------
+# GROUP BY / ORDER BY ordinals
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "sql_group_by_ordinal",
+    doc="GROUP BY and ORDER BY by ordinal position "
+    "(spark.sql.groupByOrdinal / orderByOrdinal, both default-on) with "
+    "a HAVING over the aggregate — the positional-reference SQL "
+    "surface row. Money summed as exact per-row cents (the decimal "
+    "cents contract).",
+    oracle="""
+SELECT o_orderpriority, o_orderstatus,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,4)) * 100 AS BIGINT))
+            AS BIGINT) AS total_cents
+FROM orders
+GROUP BY 1, 2
+HAVING COUNT(*) >= 5
+ORDER BY 1, 2
+""",
+)
+def sql_group_by_ordinal(spark, sf_dir):
+    t(spark, sf_dir, "orders").createOrReplaceTempView("r10_orders")
+    return spark.sql(
+        """
+        SELECT o_orderpriority, o_orderstatus,
+               CAST(COUNT(*) AS BIGINT) AS n_orders,
+               CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,4)) * 100
+                             AS BIGINT)) AS BIGINT) AS total_cents
+        FROM r10_orders
+        GROUP BY 1, 2
+        HAVING COUNT(*) >= 5
+        ORDER BY 1, 2
+        """
+    )
+
+
+@register(
+    "sql_values_inline_table",
+    doc="VALUES as an inline FROM table: a literal region->tier lookup "
+    "joined to region+nation with a COALESCE default for unlisted "
+    "regions — the embedded-config-table surface (Spark and DuckDB "
+    "share the VALUES ... AS t(cols) syntax). Literal tables are "
+    "broadcast by construction at any scale.",
+    oracle="""
+SELECT n.n_name, r.r_name, COALESCE(p.tier, 9) AS tier
+FROM nation n
+JOIN region r ON r.r_regionkey = n.n_regionkey
+LEFT JOIN (VALUES ('ASIA', 1), ('EUROPE', 1), ('AMERICA', 2))
+     AS p(r_name, tier) ON p.r_name = r.r_name
+ORDER BY n.n_name
+""",
+)
+def sql_values_inline_table(spark, sf_dir):
+    t(spark, sf_dir, "nation").createOrReplaceTempView("cascade_vals_nation")
+    t(spark, sf_dir, "region").createOrReplaceTempView("cascade_vals_region")
+    return spark.sql(
+        """
+        SELECT n.n_name, r.r_name, COALESCE(p.tier, 9) AS tier
+        FROM cascade_vals_nation n
+        JOIN cascade_vals_region r ON r.r_regionkey = n.n_regionkey
+        LEFT JOIN (VALUES ('ASIA', 1), ('EUROPE', 1), ('AMERICA', 2))
+             AS p(r_name, tier) ON p.r_name = r.r_name
+        ORDER BY n.n_name
+        """
+    )
+
+
+@register(
+    "sql_lateral_view_outer",
+    doc="LATERAL VIEW OUTER explode in SQL (the HiveQL clause next to "
+    "the DataFrame fn_posexplode_outer): each doc explodes into its "
+    "z-prefixed words, and docs with NO such word survive as one "
+    "NULL-word row — the outer semantics made observable by counting "
+    "them per source. Oracle mirrors with LEFT JOIN UNNEST.",
+    oracle="""
+WITH zw AS (
+    SELECT doc_id,
+           UNNEST(LIST_FILTER(STRING_SPLIT(text, ' '), w -> w LIKE 'z%')) AS w
+    FROM documents
+)
+SELECT d.source,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(COUNT(*) FILTER (WHERE zw.w IS NULL) AS BIGINT) AS n_docs_no_match,
+       CAST(COUNT(zw.w) AS BIGINT) AS n_z_words
+FROM documents d LEFT JOIN zw ON zw.doc_id = d.doc_id
+GROUP BY d.source
+ORDER BY d.source
+""",
+)
+def sql_lateral_view_outer(spark, sf_dir):
+    t(spark, sf_dir, "documents").createOrReplaceTempView("cascade_lvo_docs")
+    return spark.sql(
+        """
+        SELECT d.source,
+               CAST(COUNT(*) AS BIGINT) AS n_rows,
+               CAST(COUNT(CASE WHEN w IS NULL THEN 1 END) AS BIGINT)
+                   AS n_docs_no_match,
+               CAST(COUNT(w) AS BIGINT) AS n_z_words
+        FROM cascade_lvo_docs d
+        LATERAL VIEW OUTER explode(
+            filter(split(text, ' '), w -> w LIKE 'z%')) z AS w
+        GROUP BY d.source
+        ORDER BY d.source
+        """
     )

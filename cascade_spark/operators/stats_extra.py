@@ -9,7 +9,9 @@ trick — accumulate (n, Σx, Σx²) per group in exact decimals (map-side
 combinable), broadcast the tiny moment table back onto the stream, score
 per row with no second shuffle. The time rollup aggregates once per
 (day, hour) leaf and lets ROLLUP add the day and grand totals from the
-leaf partials.
+leaf partials. Seasonal Mann–Kendall pairs days only within one
+ISO-weekday stratum: n_days²/7 pairs, bounded by the time span, never
+by the row count.
 """
 
 from __future__ import annotations
@@ -23,7 +25,6 @@ from cascade_spark.operators.analytics_extra import _isqrt, _sql_isqrt
 
 @register(
     "agg_median_mode",
-    "aggregations",
     doc="Exact grouped median (percentile 0.5, linear interpolation — "
     "identical in both engines) and a *deterministic* mode: argmax of "
     "value counts with min-value tie-break, built from two aggregates "
@@ -70,7 +71,6 @@ def agg_median_mode(spark, sf_dir):
 
 @register(
     "fn_bitwise",
-    "functions",
     doc="Bitwise function family: AND/OR/XOR/NOT, shifts, popcount — "
     "deterministically sampled (one key in ~1000) so the checked result "
     "stays small while the expressions run over the full scan.",
@@ -105,7 +105,6 @@ def fn_bitwise(spark, sf_dir):
 
 @register(
     "events_anomaly_zscore",
-    "analytics",
     doc="Z-score outlier detection per event_type: one aggregate pass "
     "collects exact decimal moments (n, Σx, Σx²), the tiny moment table "
     "broadcasts back onto the stream, rows score inline (|z| > 3). "
@@ -154,7 +153,6 @@ def events_anomaly_zscore(spark, sf_dir):
 
 @register(
     "dedup_keep_best",
-    "dedup",
     doc="Canonical-representative dedup: group documents by normalized "
     "content fingerprint, keep the longest (then lowest-id) member — "
     "the curation step after exact dedup finds its clusters. One window "
@@ -200,7 +198,6 @@ def dedup_keep_best(spark, sf_dir):
 
 @register(
     "events_time_rollup",
-    "analytics",
     doc="Time-hierarchy rollup (hypertable-style continuous aggregate): "
     "day → hour leaves with ROLLUP supplying day and grand totals from "
     "the leaf partials; one shuffle, totals come free.",
@@ -231,7 +228,6 @@ def events_time_rollup(spark, sf_dir):
 
 @register(
     "events_gapfill_interpolate",
-    "analytics",
     doc="Time-series gap filling: a generated date spine (sequence/"
     "generate_series) per event type left-joins the daily aggregate; "
     "missing days get count 0 and a forward-filled average via the "
@@ -315,7 +311,6 @@ def events_gapfill_interpolate(spark, sf_dir):
 
 @register(
     "agg_filtered_conditional",
-    "aggregations",
     doc="FILTER-clause / conditional aggregation family in ONE grouped "
     "pass: count_if, filtered decimal sums, and a filtered distinct "
     "count per market segment — the idiom that replaces N separate "
@@ -354,7 +349,6 @@ def agg_filtered_conditional(spark, sf_dir):
 
 @register(
     "agg_string_concat_ordered",
-    "aggregations",
     doc="Deterministic string aggregation (listagg/string_agg): nation "
     "names per region, sorted inside the aggregate so the concatenation "
     "is order-independent of partitioning (collect_list alone is NOT "
@@ -382,7 +376,6 @@ def agg_string_concat_ordered(spark, sf_dir):
 
 @register(
     "agg_trend_regression",
-    "aggregations",
     doc="Linear-regression aggregates (regr_slope / regr_intercept / "
     "regr_r2): per event type, daily counts regressed on the day index "
     "— distributed trend estimation over the pre-aggregated day table "
@@ -427,7 +420,6 @@ def agg_trend_regression(spark, sf_dir):
 
 @register(
     "events_anomaly_mad",
-    "analytics",
     doc="Robust outlier detection via median absolute deviation — the "
     "breakdown-resistant complement to events_anomaly_zscore (a few "
     "extreme values cannot drag the threshold the way they drag a "
@@ -484,7 +476,6 @@ def events_anomaly_mad(spark, sf_dir):
 
 @register(
     "stats_weighted_median",
-    "aggregations",
     doc="Weighted median (discrete): per return flag, the smallest "
     "price whose cumulative quantity weight reaches half the total — "
     "an actual data value, interpolation-free, so exact in both "
@@ -549,7 +540,6 @@ BENFORD_BP = {1: 3010, 2: 1760, 3: 1249, 4: 969, 5: 791, 6: 669, 7: 579, 8: 511,
 
 @register(
     "stats_benford_audit",
-    "analytics",
     doc="Benford first-significant-digit audit over order totals — the "
     "classic financial-data anomaly screen: per digit, observed count "
     "and share (floor bp) against the Benford expectation, with the "
@@ -612,7 +602,6 @@ def stats_benford_audit(spark, sf_dir):
 
 @register(
     "stats_chisq_independence",
-    "analytics",
     doc="Chi-square independence screen over the (event_type x ISO "
     "weekday) contingency table: observed counts, marginals, and the "
     "scaled residual d = o*n - r*c in EXACT int64, plus each cell's "
@@ -683,7 +672,6 @@ SRM_FLAG_SCALED = 108_300  # chi-sq 1 dof at p=0.001 is 10.83 -> x 10^4
 
 @register(
     "stats_ab_srm_check",
-    "analytics",
     doc="A/B sample-ratio-mismatch (SRM) check — the experiment-health "
     "gate run before reading any metric: users hash (md5) into two "
     "arms that SHOULD split 50/50; the observed imbalance is scored "
@@ -737,7 +725,6 @@ def stats_ab_srm_check(spark, sf_dir):
 
 @register(
     "stats_gini_concentration",
-    "analytics",
     doc="Gini coefficient of customer revenue concentration — the "
     "single-number complement to the ABC/Pareto classes: G = "
     "(2*SUM(i*x_i) - (n+1)*SUM(x)) / (n*SUM(x)) over revenues sorted "
@@ -802,7 +789,6 @@ def stats_gini_concentration(spark, sf_dir):
 
 @register(
     "stats_ks_two_sample",
-    "analytics",
     doc="Two-sample Kolmogorov-Smirnov drift test between the click and "
     "purchase value distributions — the distribution-level data-quality "
     "gate (is today's feed shaped like yesterday's?). D = max |ECDF "
@@ -919,7 +905,6 @@ def stats_ks_two_sample(spark, sf_dir):
 
 @register(
     "stats_mannwhitney_u",
-    "analytics",
     doc="Mann-Whitney U rank test between the click and purchase value "
     "samples — the nonparametric location-shift twin of the KS shape "
     "test. Tie-correct midranks come EXACTLY from per-distinct-value "
@@ -996,7 +981,6 @@ BOOT_B = 16  # bootstrap replicates
 
 @register(
     "stats_bootstrap_mean_ci",
-    "analytics",
     doc=f"Deterministic bootstrap CI for the daily-revenue mean: "
     f"{BOOT_B} resamples drawn by md5(replicate:i) mod n (the "
     "reproducible-hash convention replacing seeded RNG everywhere in "
@@ -1104,7 +1088,6 @@ def stats_bootstrap_mean_ci(spark, sf_dir):
 
 @register(
     "stats_quantile_bands_exact",
-    "analytics",
     doc="Exact discrete quantile bands (p10/p50/p90) of the purchase "
     "value per event type, computed on the distinct-cents spine: "
     "per-(type, cents) counts, a cumulative count window partitioned "
@@ -1175,7 +1158,6 @@ def stats_quantile_bands_exact(spark, sf_dir):
 
 @register(
     "stats_spearman_rho",
-    "analytics",
     doc="Spearman rank correlation between per-user click activity and "
     "purchase spend — the monotone-association screen (does engagement "
     "track revenue?) kept EXACT: tie-corrected midranks come from "
@@ -1277,7 +1259,6 @@ def stats_spearman_rho(spark, sf_dir):
 
 @register(
     "stats_welch_ttest",
-    "analytics",
     doc="Welch's unequal-variance t-test between every pair of event "
     "types (10 pairs over 5 types): per-type sufficient statistics "
     "(n, sum-cents, sum-cents-squared) are EXACT int64 from one "
@@ -1380,7 +1361,6 @@ def stats_welch_ttest(spark, sf_dir):
 
 @register(
     "stats_cramers_v",
-    "analytics",
     doc="Cramer's V association strength for the (event_type x ISO "
     "weekday) contingency table — the normalized companion of "
     "stats_chisq_independence (chi-square grows with n; V in [0,1] is "
@@ -1457,7 +1437,6 @@ def stats_cramers_v(spark, sf_dir):
 
 @register(
     "stats_mann_kendall_trend",
-    "stats",
     doc="Mann-Kendall trend test per event type over the daily-count "
     "spine: S = sum of sign(n_j - n_i) over all day pairs i<j, the "
     "tie-corrected tau-b denominator sqrt(n0*(n0-T)) (days are "
@@ -1560,7 +1539,6 @@ def stats_mann_kendall_trend(spark, sf_dir):
 
 @register(
     "stats_mwu_pairwise_matrix",
-    "stats",
     doc="Mann-Whitney U between EVERY pair of event types (the all-pairs "
     "matrix; stats_mannwhitney_u is the single-pair click-vs-purchase "
     "sibling), exactly: per-pair pooled midranks come from the "
@@ -1672,7 +1650,6 @@ def stats_mwu_pairwise_matrix(spark, sf_dir):
 
 @register(
     "stats_theil_sen_trend",
-    "stats",
     doc="Theil-Sen robust trend per event type: the MEDIAN of all "
     "pairwise daily-count slopes — outlier days move the estimate "
     "far less than least-squares (agg_trend_regression is the L2 "
@@ -1764,7 +1741,6 @@ def stats_theil_sen_trend(spark, sf_dir):
 
 @register(
     "stats_kruskal_wallis",
-    "analytics",
     doc="Kruskal-Wallis k-group rank test — the k-sample extension of "
     "stats_mannwhitney_u: are the five event types' DAILY VOLUMES drawn "
     "from one distribution? The sample is the full (type x day) grid "
@@ -1877,7 +1853,6 @@ def stats_kruskal_wallis(spark, sf_dir):
 
 @register(
     "stats_brown_forsythe",
-    "analytics",
     doc="Brown-Forsythe variance-equality test across the five event "
     "types' DAILY volumes (the robust Levene variant: deviations from "
     "the group MEDIAN, not mean — one hot day can't fake homogeneity). "
@@ -2013,7 +1988,6 @@ PERM_B = 16  # randomization replicates
 
 @register(
     "stats_permutation_test",
-    "analytics",
     doc=f"Randomization test for the weekend-vs-weekday daily revenue "
     f"gap: {PERM_B} md5-derived relabelings of the day spine (the "
     "deterministic-hash stand-in for RNG shuffles, same convention as "
@@ -2164,7 +2138,6 @@ def stats_permutation_test(spark, sf_dir):
 
 @register(
     "stats_jackknife_variance",
-    "analytics",
     doc="Leave-one-out (jackknife) variance of the daily-revenue mean — "
     "the deterministic resampling estimator (no RNG at all, unlike the "
     "bootstrap/permutation twins): with S = Σx and replicate means "
@@ -2232,7 +2205,6 @@ PSI_BUCKETS = 10
 
 @register(
     "events_feature_drift_psi",
-    "analytics",
     doc=f"Population Stability Index drift monitor: the value-cents "
     f"distribution of the period's FIRST half (reference) vs SECOND "
     f"half (current), over {PSI_BUCKETS} equal-width cent buckets "
@@ -2335,4 +2307,339 @@ def events_feature_drift_psi(spark, sf_dir):
             F.round((p - q) * F.log(p / q), 6).alias("psi_contrib"),
         )
         .orderBy("bucket")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Jonckheere–Terpstra ordered-alternative trend
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "stats_jonckheere_terpstra",
+    doc="Jonckheere–Terpstra ordered-alternative test across the seven "
+    "ISO-weekday groups (dose order = weekday 1..7) of daily event "
+    "volume: JT2 = doubled statistic 2*sum_{i<j} U_ij with ties "
+    "counted half (U2 = 2*#less + #ties), recovered from a (group x "
+    "merged-support) cumulative-count grid — O(7 * |support|), never "
+    "the O(n^2) pair join. e2 = doubled H0 expectation (N^2 - sum "
+    "n_g^2)/2 exact (the numerator is even); variance is the FULL "
+    "tie-corrected Hollander-Wolfe form (daily volumes are heavily "
+    "tied): 72*N(N-1)(N-2)*Var = A*N(N-1)(N-2) + 2*B_g*B_t + "
+    "9*(N-2)*C_g*C_t with A = N(N-1)(2N+5) - sum n_g(n_g-1)(2n_g+5) "
+    "- sum t_v(t_v-1)(2t_v+5), B = sum s(s-1)(s-2), C = sum s(s-1) "
+    "over group sizes (g) and pooled tie-group sizes (t); accumulated "
+    "in DECIMAL(38,0)/HUGEINT, reported as var72 = floor(72*Var) "
+    "(exact division by N(N-1)(N-2) pre-floor); z mirrored as ONE "
+    "IEEE expression on the UNFLOORED variance, rounded to 6 dp, 0.0 "
+    "on a degenerate split (N <= 2 or var_num <= 0). With no ties the "
+    "form reduces exactly to the classical N^2(2N+3) - sum "
+    "n_g^2(2n_g+3) (identity: n(n-1)(2n+5) = n^2(2n+3) - 5n and "
+    "sum n_g = N).",
+    oracle="""
+WITH daily AS (
+    SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS v
+    FROM events GROUP BY 1
+),
+obs AS (SELECT CAST(ISODOW(day) AS BIGINT) AS g, v FROM daily),
+sup AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS n FROM obs GROUP BY 1, 2),
+vals AS (SELECT DISTINCT v FROM obs),
+grps AS (SELECT DISTINCT g FROM obs),
+grid AS (
+    SELECT gr.g, vals.v, COALESCE(s.n, 0) AS n
+    FROM grps gr CROSS JOIN vals
+    LEFT JOIN sup s ON s.g = gr.g AND s.v = vals.v
+),
+cum AS (
+    SELECT g, v, n,
+           COALESCE(SUM(n) OVER (PARTITION BY g ORDER BY v
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS clt
+    FROM grid
+),
+jt AS (
+    SELECT CAST(COALESCE(SUM(a.n * (2 * b.clt + b.n)), 0) AS BIGINT) AS jt2
+    FROM sup a JOIN cum b ON b.v = a.v AND b.g < a.g
+),
+sizes AS (SELECT g, CAST(SUM(n) AS BIGINT) AS ng FROM sup GROUP BY 1),
+ties AS (SELECT v, CAST(SUM(n) AS BIGINT) AS tv FROM sup GROUP BY 1),
+tot AS (
+    SELECT CAST(COALESCE(SUM(ng), 0) AS BIGINT) AS nn,
+           CAST(COALESCE(SUM(ng * ng), 0) AS BIGINT) AS sq,
+           CAST(COALESCE(SUM(ng * (ng - 1) * (2 * ng + 5)), 0) AS BIGINT) AS ga,
+           CAST(COALESCE(SUM(ng * (ng - 1) * (ng - 2)), 0) AS BIGINT) AS gb,
+           CAST(COALESCE(SUM(ng * (ng - 1)), 0) AS BIGINT) AS gc
+    FROM sizes
+),
+ttot AS (
+    SELECT CAST(COALESCE(SUM(tv * (tv - 1) * (2 * tv + 5)), 0) AS BIGINT) AS ta,
+           CAST(COALESCE(SUM(tv * (tv - 1) * (tv - 2)), 0) AS BIGINT) AS tb,
+           CAST(COALESCE(SUM(tv * (tv - 1)), 0) AS BIGINT) AS tc
+    FROM ties
+),
+vv AS (
+    SELECT nn, sq,
+           CASE WHEN nn <= 2 THEN CAST(0 AS HUGEINT)
+                ELSE (CAST(nn AS HUGEINT) * (nn - 1) * (2 * nn + 5) - ga - ta)
+                     * (CAST(nn AS HUGEINT) * (nn - 1) * (nn - 2))
+                   + 2 * CAST(gb AS HUGEINT) * tb
+                   + 9 * (CAST(nn AS HUGEINT) - 2) * gc * tc
+           END AS var_num,
+           CASE WHEN nn <= 2 THEN CAST(1 AS HUGEINT)
+                ELSE CAST(nn AS HUGEINT) * (nn - 1) * (nn - 2)
+           END AS dd
+    FROM tot, ttot
+)
+SELECT vv.nn AS n_days, jt.jt2,
+       CAST((vv.nn * vv.nn - vv.sq) // 2 AS BIGINT) AS e2,
+       CAST(CASE WHEN vv.nn <= 2 OR vv.var_num <= 0 THEN 0
+                 ELSE vv.var_num // vv.dd END AS BIGINT) AS var72,
+       CASE WHEN vv.nn <= 2 OR vv.var_num <= 0 THEN 0.0
+            ELSE ROUND(CAST(jt.jt2 - (vv.nn * vv.nn - vv.sq) // 2
+                            AS DOUBLE) * 0.5
+                 / SQRT(CAST(vv.var_num AS DOUBLE)
+                        / (72.0 * CAST(vv.dd AS DOUBLE))), 6)
+       END AS z_jt
+FROM jt, vv
+""",
+)
+def stats_jonckheere_terpstra(spark, sf_dir):
+    ev = t(spark, sf_dir, "events")
+    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
+        bigint(F.count(F.lit(1))).alias("v")
+    )
+    obs = daily.select(
+        F.dayofweek(F.date_sub(F.col("day"), 1)).cast("long").alias("g"), "v"
+    )
+    sup = obs.groupBy("g", "v").agg(bigint(F.count(F.lit(1))).alias("n"))
+    vals = obs.select("v").distinct()
+    grps = obs.select("g").distinct()
+    grid = (
+        grps.crossJoin(F.broadcast(vals))
+        .join(sup, ["g", "v"], "left")
+        .select("g", "v", F.coalesce("n", F.lit(0)).alias("n"))
+    )
+    w_lt = (
+        Window.partitionBy("g")
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    cum = grid.select(
+        "g", "v", "n", F.coalesce(F.sum("n").over(w_lt), F.lit(0)).alias("clt")
+    )
+    jt = (
+        sup.alias("a")
+        .join(
+            cum.alias("b"),
+            (F.col("b.v") == F.col("a.v")) & (F.col("b.g") < F.col("a.g")),
+        )
+        .agg(
+            bigint(
+                F.coalesce(
+                    F.sum(
+                        F.col("a.n") * (2 * F.col("b.clt") + F.col("b.n"))
+                    ),
+                    F.lit(0),
+                )
+            ).alias("jt2")
+        )
+    )
+    sizes = sup.groupBy("g").agg(bigint(F.sum("n")).alias("ng"))
+    tot = sizes.agg(
+        bigint(F.coalesce(F.sum("ng"), F.lit(0))).alias("nn"),
+        bigint(F.coalesce(F.sum(F.col("ng") * F.col("ng")), F.lit(0))).alias(
+            "sq"
+        ),
+        bigint(
+            F.coalesce(
+                F.sum(F.col("ng") * (F.col("ng") - 1) * (2 * F.col("ng") + 5)),
+                F.lit(0),
+            )
+        ).alias("ga"),
+        bigint(
+            F.coalesce(
+                F.sum(F.col("ng") * (F.col("ng") - 1) * (F.col("ng") - 2)),
+                F.lit(0),
+            )
+        ).alias("gb"),
+        bigint(
+            F.coalesce(F.sum(F.col("ng") * (F.col("ng") - 1)), F.lit(0))
+        ).alias("gc"),
+    )
+    # pooled tie-group sizes: daily volumes are heavily tied, so the
+    # tie-correction terms are material, not decorative
+    ties = sup.groupBy("v").agg(bigint(F.sum("n")).alias("tv"))
+    ttot = ties.agg(
+        bigint(
+            F.coalesce(
+                F.sum(F.col("tv") * (F.col("tv") - 1) * (2 * F.col("tv") + 5)),
+                F.lit(0),
+            )
+        ).alias("ta"),
+        bigint(
+            F.coalesce(
+                F.sum(F.col("tv") * (F.col("tv") - 1) * (F.col("tv") - 2)),
+                F.lit(0),
+            )
+        ).alias("tb"),
+        bigint(
+            F.coalesce(F.sum(F.col("tv") * (F.col("tv") - 1)), F.lit(0))
+        ).alias("tc"),
+    )
+    j = jt.crossJoin(F.broadcast(tot)).crossJoin(F.broadcast(ttot))
+    e2 = F.expr("CAST((nn * nn - sq) DIV 2 AS BIGINT)")
+    # 72*N(N-1)(N-2)*Var in DECIMAL(38,0) (oracle: HUGEINT) — exceeds
+    # int64 past a ~1000-day spine
+    var_num = F.expr(
+        "CASE WHEN nn <= 2 THEN CAST(0 AS DECIMAL(38,0))"
+        " ELSE (CAST(nn AS DECIMAL(38,0)) * (nn - 1) * (2 * nn + 5)"
+        "       - ga - ta)"
+        "      * (CAST(nn AS DECIMAL(38,0)) * (nn - 1) * (nn - 2))"
+        "    + 2 * CAST(gb AS DECIMAL(38,0)) * tb"
+        "    + 9 * (CAST(nn AS DECIMAL(38,0)) - 2) * gc * tc END"
+    )
+    dd = F.expr(
+        "CASE WHEN nn <= 2 THEN CAST(1 AS DECIMAL(38,0))"
+        " ELSE CAST(nn AS DECIMAL(38,0)) * (nn - 1) * (nn - 2) END"
+    )
+    # materialize var_num/dd once as columns so var72 and z reuse them
+    # instead of re-inlining the 10-line CASE SQL
+    vv = j.select("*", var_num.alias("var_num"), dd.alias("dd"))
+    degenerate = (F.col("nn") <= 2) | (F.col("var_num") <= 0)
+    var72 = (
+        F.when(degenerate, F.lit(0))
+        .otherwise(F.expr("var_num DIV dd"))
+        .cast("long")
+    )
+    z = F.round(
+        (F.col("jt2") - e2).cast("double")
+        * 0.5
+        / F.sqrt(
+            F.col("var_num").cast("double")
+            / (F.lit(72.0) * F.col("dd").cast("double"))
+        ),
+        6,
+    )
+    return vv.select(
+        F.col("nn").alias("n_days"),
+        "jt2",
+        e2.alias("e2"),
+        var72.alias("var72"),
+        F.when(degenerate, F.lit(0.0)).otherwise(z).alias("z_jt"),
+    )
+
+
+@register(
+    "stats_seasonal_mann_kendall",
+    doc="Seasonal (Hirsch–Slack) Mann–Kendall on the global daily "
+    "volume with ISO-weekday strata: S_total = sum over strata of "
+    "sign-sums over same-stratum day pairs (pairs on the per-stratum "
+    "day spine — time-span-bounded); var18 = sum of per-stratum "
+    "tie-corrected 18*Var = n(n-1)(2n+5) - sum g(g-1)(2g+5); z with "
+    "the +/-1 continuity correction as ONE mirrored IEEE expression "
+    "rounded to 6 dp (0.0 when var18 = 0 or S = 0 for the z's "
+    "correction branch at S = 0 by definition).",
+    oracle="""
+WITH daily AS (
+    SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS v
+    FROM events GROUP BY 1
+),
+obs AS (SELECT CAST(ISODOW(day) AS BIGINT) AS g, day, v FROM daily),
+s AS (
+    SELECT CAST(COALESCE(SUM(CASE WHEN b.v > a.v THEN 1
+                                  WHEN b.v < a.v THEN -1 ELSE 0 END), 0)
+                AS BIGINT) AS s_total
+    FROM obs a JOIN obs b ON a.g = b.g AND a.day < b.day
+),
+strata AS (
+    SELECT g, CAST(SUM(cnt) AS BIGINT) AS n,
+           CAST(SUM(cnt * (cnt - 1) * (2 * cnt + 5)) AS BIGINT) AS tie_term
+    FROM (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS cnt
+          FROM obs GROUP BY 1, 2)
+    GROUP BY g
+),
+vr AS (
+    SELECT CAST(COALESCE(SUM(n), 0) AS BIGINT) AS n_days,
+           CAST(COALESCE(SUM(n * (n - 1) * (2 * n + 5) - tie_term), 0)
+                AS BIGINT) AS var18
+    FROM strata
+)
+SELECT vr.n_days, s.s_total, vr.var18,
+       CASE WHEN vr.var18 = 0 OR s.s_total = 0 THEN 0.0
+            ELSE ROUND((CAST(s.s_total AS DOUBLE)
+                        - SIGN(CAST(s.s_total AS DOUBLE)))
+                 / SQRT(CAST(vr.var18 AS DOUBLE) / 18.0), 6)
+       END AS z_smk
+FROM s, vr
+""",
+)
+def stats_seasonal_mann_kendall(spark, sf_dir):
+    ev = t(spark, sf_dir, "events")
+    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
+        bigint(F.count(F.lit(1))).alias("v")
+    )
+    obs = daily.select(
+        F.dayofweek(F.date_sub(F.col("day"), 1)).cast("long").alias("g"),
+        "day",
+        "v",
+    )
+    a = obs.select(
+        F.col("g").alias("ga"), F.col("day").alias("da"), F.col("v").alias("va")
+    )
+    b = obs.select(
+        F.col("g").alias("gb"), F.col("day").alias("db"), F.col("v").alias("vb")
+    )
+    s = (
+        a.join(F.broadcast(b), (F.col("ga") == F.col("gb")) & (F.col("da") < F.col("db")))
+        .agg(
+            bigint(
+                F.coalesce(
+                    F.sum(
+                        F.when(F.col("vb") > F.col("va"), 1)
+                        .when(F.col("vb") < F.col("va"), -1)
+                        .otherwise(0)
+                    ),
+                    F.lit(0),
+                )
+            ).alias("s_total")
+        )
+    )
+    strata = (
+        obs.groupBy("g", "v")
+        .agg(bigint(F.count(F.lit(1))).alias("cnt"))
+        .groupBy("g")
+        .agg(
+            bigint(F.sum("cnt")).alias("n"),
+            bigint(
+                F.sum(F.col("cnt") * (F.col("cnt") - 1) * (2 * F.col("cnt") + 5))
+            ).alias("tie_term"),
+        )
+    )
+    vr = strata.agg(
+        bigint(F.coalesce(F.sum("n"), F.lit(0))).alias("n_days"),
+        bigint(
+            F.coalesce(
+                F.sum(
+                    F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5)
+                    - F.col("tie_term")
+                ),
+                F.lit(0),
+            )
+        ).alias("var18"),
+    )
+    j = s.crossJoin(F.broadcast(vr))
+    z = F.round(
+        (
+            F.col("s_total").cast("double")
+            - F.signum(F.col("s_total").cast("double"))
+        )
+        / F.sqrt(F.col("var18").cast("double") / 18.0),
+        6,
+    )
+    return j.select(
+        "n_days",
+        "s_total",
+        "var18",
+        F.when((F.col("var18") == 0) | (F.col("s_total") == 0), F.lit(0.0))
+        .otherwise(z)
+        .alias("z_smk"),
     )

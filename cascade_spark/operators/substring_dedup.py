@@ -75,7 +75,6 @@ def _sql_word_ngrams(n: int, distinct: bool) -> str:
 
 @register(
     "dedup_dupspan_ngrams",
-    "dedup",
     doc="Duplicated-span detection (exact-substring dedup approximated "
     "by word 8-gram fingerprints): per doc, how many of its distinct "
     "spans appear in at least one other document. Catches partial-copy "
@@ -123,7 +122,6 @@ def dedup_dupspan_ngrams(spark, sf_dir):
 
 @register(
     "text_repetition_top2gram",
-    "text",
     doc="Gopher-style within-doc repetition: per doc, the count of its "
     "most frequent word 2-gram vs total 2-grams; repetitive if the top "
     "2-gram covers more than 20% of the document. Two chained "
@@ -163,7 +161,6 @@ PASSAGE_N = 8  # words per non-overlapping passage
 
 @register(
     "pipeline_passage_dedup",
-    "pipeline",
     doc="Cross-document repeated-passage REMOVAL (the transform, where "
     "dedup_dupspan_ngrams is the audit): each document is chunked into "
     f"non-overlapping {PASSAGE_N}-word passages, passages whose hash "

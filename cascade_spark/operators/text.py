@@ -36,7 +36,6 @@ def _sql_hits(lang: str) -> str:
 
 @register(
     "text_token_count",
-    "text",
     doc="Token counting: whitespace tokens vs regex word/punct tokens "
     "(the BPE-ish pre-tokenizer split) + chars-per-token ratio.",
     oracle="""
@@ -63,7 +62,6 @@ def text_token_count(spark, sf_dir):
 
 @register(
     "text_quality",
-    "text",
     doc="Quality scoring: length, alpha/space/punct ratios, stopword "
     "ratio, distinct-word ratio — the standard corpus-filter features "
     "(ratios are exact int/int double divisions, identical both engines).",
@@ -114,7 +112,6 @@ def text_quality(spark, sf_dir):
 
 @register(
     "text_lang_id",
-    "text",
     doc="Language ID: per-language marker-word hit counts, argmax with "
     "deterministic tie order (en > de > fr > es > unknown), compared "
     "against the labeled lang column.",
@@ -185,7 +182,6 @@ def text_lang_id(spark, sf_dir):
 
 @register(
     "text_fingerprint",
-    "text",
     doc="Document fingerprinting: normalization (lowercase, strip "
     "non-alphanumerics, collapse whitespace) + md5 content address + "
     "a first-8-words locality-sketch prefix hash.",
@@ -213,7 +209,6 @@ def text_fingerprint(spark, sf_dir):
 
 @register(
     "text_seqlen_histogram",
-    "text",
     doc="Sequence-length distribution for packing/batching planning: "
     "docs bucketed by whitespace token count (bucket width 16), with "
     "doc/token totals per bucket and a running cumulative doc count. "
@@ -265,7 +260,6 @@ def text_seqlen_histogram(spark, sf_dir):
 
 @register(
     "text_bigram_lm_topk",
-    "text",
     doc="n-gram LM statistics: for each head word, the top-3 following "
     "words by corpus bigram count (ties broken lexically) plus the "
     "head's total continuation mass — the count table behind bigram "
@@ -322,7 +316,6 @@ def text_bigram_lm_topk(spark, sf_dir):
 
 @register(
     "text_type_token_ratio",
-    "text",
     doc="Lexical diversity (type-token ratio) per document — a standard "
     "quality signal (low TTR = boilerplate/repetition). Integer counts, "
     "ratio rounded at the final projection; map-only + one doc_id agg.",
@@ -371,7 +364,6 @@ OOV_VOCAB_K = 1000
 
 @register(
     "text_oov_rate",
-    "text",
     doc="Out-of-vocabulary rate per language against the corpus top-1k "
     "word vocabulary — the 'how much of this slice does a fixed "
     "tokenizer vocabulary cover' audit. Scale: vocab is a top-k "
@@ -437,7 +429,6 @@ def text_oov_rate(spark, sf_dir):
 
 @register(
     "text_vocab_coverage_curve",
-    "text",
     doc="Vocabulary coverage curve: what share of all corpus tokens the "
     "top-k vocabulary covers, at k in (1, 3, 10, 100) — the tokenizer-"
     "sizing question (how big a vocab before the tail stops paying). "
@@ -527,7 +518,6 @@ def text_vocab_coverage_curve(spark, sf_dir):
 
 @register(
     "text_tfidf_exact_topk",
-    "text",
     doc="Exact-arithmetic TF-IDF top-3 terms per document — the hash-"
     "checkable twin of text_tfidf_mllib (which is rows-only because "
     "MLlib hashes features): idf is kept as the rational N/df and the "
@@ -593,7 +583,6 @@ def text_tfidf_exact_topk(spark, sf_dir):
 
 @register(
     "text_char_ngram_profile",
-    "text",
     doc="Per-language character-bigram profile — the TRAINING side of "
     "the n-gram lang-ID family (text_lang_id is the scoring side): "
     "top-5 bigrams per language by corpus frequency, with floor-bp "
@@ -665,7 +654,6 @@ FH_BUCKETS = 256
 
 @register(
     "text_feature_hashing",
-    "text",
     doc="Feature hashing (the 'hashing trick'): every token maps to "
     f"bucket = md5-derived-int % {FH_BUCKETS}, giving a FIXED-width "
     "feature space with no vocabulary build, no dictionary shuffle, "
@@ -717,7 +705,6 @@ def text_feature_hashing(spark, sf_dir):
 
 @register(
     "text_source_similarity_hashed",
-    "text",
     doc="Source-level similarity matrix from hashed features: each "
     f"source's documents fold into a {FH_BUCKETS}-dim hashed "
     "bag-of-words vector (text_feature_hashing's fixed-width space — "
@@ -819,7 +806,6 @@ def text_source_similarity_hashed(spark, sf_dir):
 
 @register(
     "text_langid_prf_audit",
-    "text",
     doc="Model-eval-as-data for the marker-word language classifier "
     "(text_lang_id is the confusion matrix; this is the per-class "
     "scorecard a pipeline gates on): per language — TP / FP / FN and "
@@ -943,7 +929,6 @@ def text_langid_prf_audit(spark, sf_dir):
 
 @register(
     "text_bigram_novelty",
-    "text",
     doc="Memorization/novelty audit: per doc, the share of its bigram "
     "OCCURRENCES that exist ONLY in this doc (corpus count == within-"
     "doc count — nothing elsewhere repeats them). High novelty = "
@@ -1017,7 +1002,6 @@ PMI_TOPK = 15
 
 @register(
     "text_pmi_collocations",
-    "text",
     doc=f"PMI collocations: top-{PMI_TOPK} word pairs by pointwise "
     "mutual information of document co-occurrence (both words in the "
     "same doc) — the classic collocation/phrase-mining score. Counts "

@@ -62,7 +62,6 @@ def _freq(spark, sf_dir):
 
 @register(
     "text_yule_k",
-    "text",
     doc="Yule's characteristic K per source: K = 10^4*(sum f^2 - N)/N^2 "
     "over the word-frequency spine — the classic length-robust "
     "repetitiveness constant (higher = fewer types dominate). Frequency "
@@ -109,7 +108,6 @@ def text_yule_k(spark, sf_dir):
 
 @register(
     "text_simpson_diversity",
-    "text",
     doc="Simpson repeat rate per source: P(two random tokens are the "
     "same type, without replacement) = sum f(f-1) / (N(N-1)) in exact "
     "truncated bp off the same word-frequency spine — the unigram "
@@ -154,7 +152,6 @@ def text_simpson_diversity(spark, sf_dir):
 
 @register(
     "text_hapax_spectrum",
-    "text",
     doc="Low-frequency vocabulary spectrum per source: hapax (f=1), dis "
     "(f=2) and f>=3 type counts with the hapax share of the vocabulary "
     "in truncated bp — the Good-Turing mass driver (V1/N estimates the "
@@ -198,7 +195,6 @@ def text_hapax_spectrum(spark, sf_dir):
 
 @register(
     "text_heaps_fit",
-    "text",
     doc="Heaps' law exponent from a deterministic two-point fit: vocab "
     "and token counts of the even-doc_id half (point 1) vs the full "
     "corpus (point 2), beta = ln(V2/V1)/ln(N2/N1) as ONE mirrored IEEE "

@@ -24,7 +24,6 @@ MIN_DISTINCT = 0.35
 
 @register(
     "text_gopher_quality_filter",
-    "text",
     doc="Gopher-style rule filter: word-count bounds, mean-word-length "
     "bounds, stopword presence, distinct-word ratio — per-doc pass/fail "
     "with per-rule flags (map-only; no shuffle).",
@@ -89,7 +88,6 @@ def text_gopher_quality_filter(spark, sf_dir):
 
 @register(
     "text_top_word_ratio",
-    "text",
     doc="Repetition detection: each doc's most frequent word and its "
     "frequency ratio (high ratio = degenerate/boilerplate text). "
     "Explode → per-(doc,word) count → argmax with lexicographic "
@@ -138,7 +136,6 @@ def text_top_word_ratio(spark, sf_dir):
 
 @register(
     "text_zipf_topwords",
-    "text",
     doc="Corpus vocabulary profile: top-20 words by total frequency "
     "with dense rank (count desc, word asc tie-break). The vocabulary "
     "aggregate is tiny relative to the scan; top-k goes through "
@@ -225,7 +222,6 @@ def _bigram_doc_scores(spark, sf_dir):
 
 @register(
     "text_lm_commonality",
-    "text",
     doc="CCNet-style LM quality proxy without floats: the corpus bigram "
     "count table scores each document by the mean corpus frequency of "
     "its bigrams (a doc of common constructions scores high; rare/"
@@ -284,7 +280,6 @@ QC_WRANGE = 1024  # weights span [-512, 511]
 
 @register(
     "pipeline_quality_classifier",
-    "pipeline",
     doc="Hashed linear quality-classifier inference: each token hashes "
     f"(md5) into one of {QC_SLOTS} feature slots; the slot's integer "
     "weight is a fixed multiplicative-hash function (stand-in for a "
@@ -336,7 +331,6 @@ PREFIX_WORDS = 5
 
 @register(
     "text_prefix_boilerplate",
-    "text",
     doc=f"Boilerplate-prefix detection: docs sharing their first "
     f"{PREFIX_WORDS} words are flagged as template/boilerplate "
     "candidates (the web-corpus 'same nav header' smell that exact "
@@ -381,7 +375,6 @@ def text_prefix_boilerplate(spark, sf_dir):
 
 @register(
     "pipeline_ccnet_ppl_buckets",
-    "pipeline",
     doc="CCNet's head/middle/tail corpus split on the bigram-LM "
     "commonality score (text_lm_commonality's signal, floored to "
     "integer bp so the global order is exact): docs ranked by (score "
@@ -470,7 +463,6 @@ QSWEEP_THRESHOLDS = [-200, -100, 0, 100, 200]
 
 @register(
     "pipeline_quality_threshold_sweep",
-    "pipeline",
     doc="Filter-calibration sweep over the hashed linear quality "
     f"classifier: for each candidate threshold in {QSWEEP_THRESHOLDS}, "
     "how many docs and how much token mass survive score > T — the "
@@ -542,7 +534,6 @@ RAKE_BP = 10_000
 
 @register(
     "text_rake_keywords",
-    "text",
     doc="RAKE keyword extraction (Rose et al. 2010) over the corpus: "
     "candidate phrases are maximal stopword-free word runs (run ids "
     "from a per-doc running stopword count — one window, no UDF), "
@@ -660,7 +651,6 @@ _CONS_RUN = "[bcdfghjklmnpqrstvwxz]{5,}"
 
 @register(
     "text_garbage_score",
-    "analytics",
     doc="OCR/encoding-garbage screen per source — the cheap 'is this "
     "text even prose' gate run before any quality model: per doc, the "
     "share of suspicious characters (anything outside [a-z0-9 .,] on "
@@ -718,7 +708,6 @@ def text_garbage_score(spark, sf_dir):
 
 @register(
     "text_zlib_compression_ratio",
-    "text",
     oracle=None,  # real zlib bytes are not SQL-expressible — rows-only
     doc="Compression-ratio quality signal per source: each document "
     "deflates through REAL zlib (level 6, the ubiquitous corpus-"

@@ -38,7 +38,6 @@ JSD_TOP_WORDS = 256
 
 @register(
     "text_unigram_entropy",
-    "text",
     doc="Per-source unigram Shannon entropy in micro-nats: "
     "H_micro = (sum_w FLOOR(c_w * ln(N_s/c_w) * 10^6)) DIV N_s — each "
     "term one mirrored IEEE ln of integer-derived doubles floored to "
@@ -103,7 +102,6 @@ def text_unigram_entropy(spark, sf_dir):
 
 @register(
     "text_js_divergence_sources",
-    "text",
     doc=f"Jensen-Shannon divergence of each source's unigram "
     "distribution vs the whole corpus, on the BOUNDED top-"
     f"{JSD_TOP_WORDS}-words + OTHER spine (count DESC, word tiebreak), "

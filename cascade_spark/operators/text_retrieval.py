@@ -88,7 +88,6 @@ def _postings(spark, sf_dir):
 
 @register(
     "text_bm25_topk",
-    "text",
     doc="Okapi BM25 top-10 for the deterministic 3-term query (the "
     "highest-total-frequency terms with df <= N/2, lexicographic "
     "ties — keeps idf positive): per matched (doc, term) the score is "
@@ -170,7 +169,6 @@ def text_bm25_topk(spark, sf_dir):
 
 @register(
     "text_inverted_index_query",
-    "text",
     doc="Conjunctive boolean retrieval: the 3 most ubiquitous terms "
     "(highest df, lexicographic ties) intersect their posting lists — "
     "docs matching ALL three via HAVING COUNT = 3 over the broadcast "
@@ -233,7 +231,6 @@ POS_CAP = 65_536  # declared: < 2^16 kgrams per doc (fixture max ~200)
 
 @register(
     "text_winnowing_fingerprint",
-    "dedup",
     doc=f"MOSS winnowing fingerprints per source: {WIN_K}-word kgrams "
     "hash via the '0x'||md5 idiom, every window of "
     f"{WIN_W} consecutive kgram hashes selects its minimum with the "

@@ -19,12 +19,12 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from cascade_spark.plans.registry import register
-from cascade_spark.operators._util import d2, dec, t
+from cascade_spark.operators._util import bigint, d2, dec, t
+from cascade_spark.operators.inference_extra import _csum
 
 
 @register(
     "events_resample_ohlc",
-    "analytics",
     doc="OHLC downsample: per (day, event_type) bar with open/close "
     "resolved by the (ts, event_id) total order, high/low/volume/total "
     "as plain aggregates. One bucket-key shuffle serves both orderings "
@@ -86,7 +86,6 @@ def events_resample_ohlc(spark, sf_dir):
 
 @register(
     "events_new_vs_returning",
-    "analytics",
     doc="New-vs-returning daily actives + cumulative unique users. The "
     "naive form is COUNT(DISTINCT user) over an expanding window — "
     "quadratic state at scale. The scalable rewrite computes each "
@@ -148,7 +147,6 @@ def events_new_vs_returning(spark, sf_dir):
 
 @register(
     "events_ewma_dyadic",
-    "timeseries",
     doc="Bit-exact EWMA smoothing (alpha = 1/2): daily average purchase "
     "value per event type smoothed by y_t = (x_t + y_(t-1))/2, "
     "computed non-recursively as a cumulative window sum of "
@@ -223,7 +221,6 @@ ACF_MAX_LAG = 7
 
 @register(
     "events_autocorrelation",
-    "analytics",
     doc="Daily-volume autocorrelation profile (lags 1..7): counts on a "
     "gap-free day spine (sequence-explode, zero-filled) so lags are true "
     "calendar shifts, then one aggregate computes the lag-0 energy and "
@@ -324,7 +321,6 @@ def events_autocorrelation(spark, sf_dir):
 
 @register(
     "events_changepoint_cusum",
-    "analytics",
     doc="CUSUM change-point detection on daily volumes: cumulative "
     "deviation from the global mean, kept exact by scaling through the "
     "day count (n*S_t = n*cumsum_t - t*total — integers only, no "
@@ -409,7 +405,6 @@ SN_LAG = 7  # weekly seasonality
 
 @register(
     "events_forecast_seasonal_naive",
-    "analytics",
     doc="Seasonal-naive forecast backtest: predict each day's per-type "
     f"event count with the count {SN_LAG} days earlier on a gap-free "
     "zero-filled day spine, then score MAE / max error per event type "
@@ -493,7 +488,6 @@ SEASONAL_DEV_FLAG_BP = 2500  # flag days deviating >= 25% from their dow norm
 
 @register(
     "events_seasonal_adjusted_anomaly",
-    "analytics",
     doc="Day-of-week seasonally adjusted anomaly screen: each day's "
     "count is compared to ITS weekday's mean on the gap-free spine — "
     "the deseasonalized complement to the raw z-score detector (a busy "
@@ -576,7 +570,6 @@ BURN_THRESHOLD_BP = 2200  # alert when both windows exceed 22% error rate
 
 @register(
     "events_slo_burn_rate",
-    "analytics",
     doc="Multi-window SLO burn-rate alerting (the SRE workbook "
     "pattern): per hour, the error rate over the short (1h) and long "
     f"(trailing {BURN_LONG_H}h) windows in exact floor bp, alerting "
@@ -648,7 +641,6 @@ def events_slo_burn_rate(spark, sf_dir):
 
 @register(
     "events_max_drawdown",
-    "events",
     doc="Per-user maximum drawdown of the cumulative event value — the "
     "peak-to-trough analytic (finance's risk metric, equally useful "
     "for any cumulative KPI): running balance in exact integer cents, "
@@ -733,4 +725,108 @@ def events_max_drawdown(spark, sf_dir):
         )
         .orderBy(F.col("drawdown_cents").desc(), "user_id")
         .limit(25)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Page–Hinkley drift detection
+# ---------------------------------------------------------------------------
+
+
+PH_LAMBDA_MICRO = 20_000_000  # Page-Hinkley alarm threshold: 20 events
+
+
+@register(
+    "events_page_hinkley",
+    doc="Page–Hinkley drift detector per event type over the "
+    "daily-volume series: running mean in truncated micro "
+    "((S_t * 1e6) DIV t), deviations accumulated to U_t, PH_t = U_t - "
+    "min_{i<=t} U_i, alarm when PH exceeds the declared lambda "
+    f"({PH_LAMBDA_MICRO // 1_000_000} events). Reports per type the "
+    "max PH, alarm-day count and first alarm day. Delta margin 0 "
+    "(declared). All windows partition by event_type over the day "
+    "grid.",
+    oracle=f"""
+WITH daily AS (
+    SELECT event_type, CAST(ts AS DATE) AS day,
+           CAST(COUNT(*) AS BIGINT) AS v
+    FROM events GROUP BY 1, 2
+),
+seq AS (
+    SELECT event_type, day, v,
+           SUM(v) OVER (PARTITION BY event_type ORDER BY day
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s,
+           CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day)
+                AS BIGINT) AS tt
+    FROM daily
+),
+dev AS (
+    SELECT event_type, day,
+           CAST(v * 1000000 - (s * 1000000) // tt AS BIGINT) AS d
+    FROM seq
+),
+cum AS (
+    SELECT event_type, day,
+           SUM(d) OVER (PARTITION BY event_type ORDER BY day
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS u
+    FROM dev
+),
+ph AS (
+    SELECT event_type, day,
+           u - MIN(u) OVER (PARTITION BY event_type ORDER BY day
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ph
+    FROM cum
+)
+SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
+       CAST(MAX(ph) AS BIGINT) AS max_ph_micro,
+       CAST(COUNT(*) FILTER (WHERE ph > {PH_LAMBDA_MICRO}) AS BIGINT)
+           AS n_alarm_days,
+       STRFTIME(MIN(day) FILTER (WHERE ph > {PH_LAMBDA_MICRO}), '%Y-%m-%d')
+           AS first_alarm_day
+FROM ph GROUP BY 1 ORDER BY 1
+""",
+)
+def events_page_hinkley(spark, sf_dir):
+    ev = t(spark, sf_dir, "events")
+    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
+        bigint(F.count(F.lit(1))).alias("v")
+    )
+    w_cum = (
+        Window.partitionBy("event_type")
+        .orderBy("day")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    w_rn = Window.partitionBy("event_type").orderBy("day")
+    seq = daily.select(
+        "event_type",
+        "day",
+        "v",
+        F.sum("v").over(w_cum).alias("s"),
+        F.row_number().over(w_rn).cast("long").alias("tt"),
+    )
+    dev = seq.select(
+        "event_type",
+        "day",
+        F.expr("CAST(v * 1000000 - (s * 1000000) DIV tt AS BIGINT)").alias("d"),
+    )
+    cum = dev.select(
+        "event_type", "day", F.sum("d").over(w_cum).alias("u")
+    )
+    ph = cum.select(
+        "event_type",
+        "day",
+        (F.col("u") - F.min("u").over(w_cum)).alias("ph"),
+    )
+    alarm = F.col("ph") > PH_LAMBDA_MICRO
+    return (
+        ph.groupBy("event_type")
+        .agg(
+            bigint(F.count(F.lit(1))).alias("n_days"),
+            bigint(F.max("ph")).alias("max_ph_micro"),
+            _csum(alarm).alias("n_alarm_days"),
+            F.date_format(
+                F.min(F.when(alarm, F.col("day"))), "yyyy-MM-dd"
+            ).alias("first_alarm_day"),
+        )
+        .orderBy("event_type")
     )

@@ -33,7 +33,6 @@ HOLT_SCALE = 1_000_000  # level/trend in micro-volume units
 
 @register(
     "events_holt_linear_forecast",
-    "timeseries",
     doc="Holt linear trend (alpha = beta = 1/2) per event type over the "
     "zero-filled daily-volume series in exact micro-scaled integers: "
     "the level/trend recurrence uses only +, -, DIV 2 so Spark's "
@@ -115,7 +114,6 @@ def events_holt_linear_forecast(spark, sf_dir):
 
 @register(
     "events_seasonality_strength",
-    "timeseries",
     doc="Day-of-week seasonality strength per event type: the one-way "
     "variance decomposition SS_between / SS_total over the zero-filled "
     "daily-volume series grouped by ISO weekday, kept ONE exact "
@@ -224,7 +222,6 @@ def events_seasonality_strength(spark, sf_dir):
 
 @register(
     "events_intervention_its",
-    "timeseries",
     doc="Interrupted time series at the mid-span intervention point: "
     "two EXACT integer OLS fits over the pre/post daily total-volume "
     "segments (slope = (n*Sty - St*Sy)/(n*Stt - St^2) as one rational "

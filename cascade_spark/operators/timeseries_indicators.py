@@ -108,7 +108,6 @@ def _series_arr(grid):
 
 @register(
     "events_rsi_wilder",
-    "timeseries",
     doc=f"RSI-{RSI_PERIOD} with Wilder smoothing per event type: deltas "
     "of the zero-filled daily volumes split into gain/loss, smoothed by "
     f"a_t = (({RSI_PERIOD - 1})*a_(t-1) + x_t*S) DIV {RSI_PERIOD} in "
@@ -182,7 +181,6 @@ BOLL_WINDOW = 7
 
 @register(
     "events_bollinger_breach",
-    "timeseries",
     doc=f"Bollinger band monitor: {BOLL_WINDOW}-day trailing mean +- 2 "
     "sigma on each type's zero-filled daily volumes, breach decided by "
     "EXACT integer cross-multiplication — upper iff n*x - S > 0 AND "
@@ -275,7 +273,6 @@ def events_bollinger_breach(spark, sf_dir):
 
 @register(
     "events_hurst_rs",
-    "timeseries",
     doc="Rescaled-range (R/S) long-range-dependence audit per event "
     "type: cumulative deviations kept INTEGRAL by n-scaling "
     "(D_t = n*prefix_t - t*S, so the 1/n mean never divides), "
@@ -367,7 +364,6 @@ def events_hurst_rs(spark, sf_dir):
 
 @register(
     "events_croston_demand",
-    "timeseries",
     doc="Croston's intermittent-demand forecast per event type (alpha = "
     "1/2 dyadic) over the zero-filled daily volumes: on each nonzero "
     "day, size EWMA z' = (z + v*S) DIV 2 and inter-arrival EWMA "
@@ -453,7 +449,6 @@ HW_PERIOD = 7
 
 @register(
     "events_holt_winters",
-    "timeseries",
     doc="Additive Holt-Winters (alpha = beta = gamma = 1/2, season "
     f"m = {HW_PERIOD}) per event type over the zero-filled daily "
     "volumes, ALL state in micro-scaled integers with floor-by-2 "

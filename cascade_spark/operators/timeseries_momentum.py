@@ -63,7 +63,6 @@ S = 1_000_000  # micro-units for smoothed state
 
 @register(
     "events_macd",
-    "timeseries",
     doc="MACD(12, 26, 9) per event type over the zero-filled daily "
     "volumes: EMA-12 and EMA-26 with rational alphas 2/13 and 2/27 "
     "(e' = ((q-2)*e + 2*x*S) DIV q), MACD = e12 - e26, and the 9-day "
@@ -139,7 +138,6 @@ STOCH_N = 14
 
 @register(
     "events_stochastic_oscillator",
-    "timeseries",
     doc=f"Stochastic oscillator %K({STOCH_N}) / %D(3) per event type on "
     "the zero-filled daily volumes: K = (v - min_w)/(max_w - min_w) in "
     "truncated bp over the trailing full window (flat window declared "
@@ -261,7 +259,6 @@ AROON_P = 25
 
 @register(
     "events_aroon",
-    "timeseries",
     doc=f"Aroon up/down at the final day per event type: over the last "
     f"P = min(n, {AROON_P}) days, the MOST RECENT argmax/argmin day "
     "(max tt attaining the window max/min — exact two-phase "
@@ -353,7 +350,6 @@ DON_N = 20
 
 @register(
     "events_donchian_breakout",
-    "timeseries",
     doc=f"Donchian {DON_N}-day prior-channel breakout monitor per event "
     "type: a day breaks out UP when its volume exceeds the max of the "
     f"PRIOR {DON_N} days (strictly prior window, so the signal is "
@@ -428,7 +424,6 @@ def events_donchian_breakout(spark, sf_dir):
 
 @register(
     "events_pettitt_changepoint",
-    "timeseries",
     doc="Pettitt's nonparametric changepoint test per event type on the "
     "zero-filled daily volumes: U_t = sum_{i<=t, j>t} sgn(v_i - v_j) "
     "recovered in O(n) from the exact midrank identity U_t = "
@@ -540,7 +535,6 @@ def events_pettitt_changepoint(spark, sf_dir):
 
 @register(
     "events_theil_u",
-    "timeseries",
     doc="Theil's U2 forecast-accuracy audit (squared form, exact) of "
     "the seasonal-naive m=7 forecast per event type: SSE(v_t vs "
     "v_{t-7}) against the random-walk benchmark SSE(v_t vs v_{t-1}) "
@@ -618,7 +612,6 @@ def events_theil_u(spark, sf_dir):
 
 @register(
     "events_ulcer_index",
-    "timeseries",
     doc="Ulcer index (squared, exact) per event type: drawdown from the "
     "running peak in truncated bp (dd = ((peak - v)*10000) DIV peak; 0 "
     "while the peak is still 0 on zero-filled lead-ins), UI^2 = "
@@ -689,7 +682,6 @@ def events_ulcer_index(spark, sf_dir):
 
 @register(
     "events_kama_efficiency",
-    "timeseries",
     doc="Kaufman's efficiency ratio per event type over the zero-filled "
     "daily volumes: ER = |v_last - v_first| / sum|day-over-day change| "
     "in truncated bp (1.0 = pure trend, ~0 = chop), plus the signed "
@@ -757,7 +749,6 @@ _SLOPE_DEN = SLOPE_N * sum(i * i for i in range(SLOPE_N)) - sum(
 
 @register(
     "events_rolling_slope",
-    "timeseries",
     doc=f"Rolling {SLOPE_N}-day OLS slope monitor per event type: the "
     "within-window position-weighted sum recovers from two cumulants "
     "(sum(tt*v) and sum(v) over the trailing window, wsum = A - "

@@ -56,7 +56,6 @@ _SQL_PSEUDO_PARTSUPP = """
 
 @register(
     "tpch_q2_min_cost_supplier",
-    "analytics",
     doc="TPC-H Q2 shape: for each small STANDARD part, the supplier(s) "
     "with the minimum pseudo-supply-cost (exact decimal, so the min-"
     "equality join is bit-safe). Window-min over the aggregated "
@@ -108,7 +107,6 @@ def tpch_q2_min_cost_supplier(spark, sf_dir):
 
 @register(
     "tpch_q7_volume_shipping",
-    "analytics",
     doc="TPC-H Q7 shape: shipping volume between two nations by year — "
     "the fact joins orders on its key (one shuffle pair); the 2-row "
     "nation sides carry explicit broadcast hints, while the SF-scaling "
@@ -167,7 +165,6 @@ def tpch_q7_volume_shipping(spark, sf_dir):
 
 @register(
     "tpch_q8_market_share",
-    "analytics",
     doc="TPC-H Q8 shape: NATION_3's share of PROMO-part revenue in "
     "region REGION_0's market per year. Numerator and denominator stay "
     "exact decimals; the share divides them only in the final "
@@ -246,7 +243,6 @@ def tpch_q8_market_share(spark, sf_dir):
 
 @register(
     "tpch_q9_product_profit",
-    "analytics",
     doc="TPC-H Q9 shape: profit per supplier-nation per year over "
     "STANDARD parts, with cost proxied as qty × retailprice / 10 "
     "(no partsupp in the fixtures). Per-row profit is one exact decimal "
@@ -299,7 +295,6 @@ def tpch_q9_product_profit(spark, sf_dir):
 
 @register(
     "tpch_q11_important_stock",
-    "analytics",
     doc="TPC-H Q11 shape: parts whose pseudo-stock value exceeds 0.1% "
     "of the grand total. The threshold compare is 1000·value > total — "
     "exact decimal on both sides, no float epsilon. The grand total is "
@@ -343,7 +338,6 @@ def tpch_q11_important_stock(spark, sf_dir):
 
 @register(
     "tpch_q13_customer_distribution",
-    "analytics",
     doc="TPC-H Q13 shape: distribution of customers by order count "
     "(urgent orders excluded — the fixtures have no comment column), "
     "zero-order customers included via left outer join. Two-level "
@@ -381,7 +375,6 @@ def tpch_q13_customer_distribution(spark, sf_dir):
 
 @register(
     "tpch_q14_promo_revenue",
-    "analytics",
     doc="TPC-H Q14: PROMO-part share of September-1997 revenue. "
     "Date filter prunes the fact scan before the part join (strategy "
     "left to AQE — part scales with SF, no forced broadcast); "
@@ -429,7 +422,6 @@ def tpch_q14_promo_revenue(spark, sf_dir):
 
 @register(
     "tpch_q15_top_supplier",
-    "analytics",
     doc="TPC-H Q15 shape: supplier(s) with the maximum Q1-1998 revenue "
     "— the revenue 'view' is a per-supplier decimal aggregate (≤ "
     "|suppliers| rows); the scalar max broadcasts back onto it, and "
@@ -472,7 +464,6 @@ def tpch_q15_top_supplier(spark, sf_dir):
 
 @register(
     "tpch_q16_part_supplier_cnt",
-    "analytics",
     doc="TPC-H Q16 shape: distinct suppliers able to supply each "
     "(brand, type, size) combo for a size set, excluding one brand — "
     "supplier relationships come from the lineitem pseudo-partsupp. "
@@ -503,7 +494,6 @@ def tpch_q16_part_supplier_cnt(spark, sf_dir):
 
 @register(
     "tpch_q17_small_quantity",
-    "analytics",
     doc="TPC-H Q17 shape: revenue from line items below 20% of their "
     "part's average quantity, for one brand. The avg threshold compare "
     "is cross-multiplied into exact decimals (5·qty·cnt < sum_qty) — "
@@ -560,7 +550,6 @@ def tpch_q17_small_quantity(spark, sf_dir):
 
 @register(
     "tpch_q18_large_volume",
-    "analytics",
     doc="TPC-H Q18 shape: top-100 large-volume orders (total quantity "
     "> 150). The HAVING filter runs on the per-order aggregate before "
     "the customer join, so only qualifying orders (a tiny set) reach "
@@ -609,7 +598,6 @@ def tpch_q18_large_volume(spark, sf_dir):
 
 @register(
     "tpch_q19_disjunctive",
-    "analytics",
     doc="TPC-H Q19 shape: revenue under three OR'd brand/size/quantity "
     "predicate bundles — the disjunction sits above the part equi-join "
     "(strategy left to AQE), exercising non-pushable compound "
@@ -661,7 +649,6 @@ def tpch_q19_disjunctive(spark, sf_dir):
 
 @register(
     "tpch_q21_waiting_suppliers",
-    "analytics",
     doc="TPC-H Q21 shape: suppliers whose line item shipped >90 days "
     "after the order date on a multi-supplier order where some other "
     "supplier shipped on time and no other supplier was late. The "
@@ -737,7 +724,6 @@ def tpch_q21_waiting_suppliers(spark, sf_dir):
 
 @register(
     "tpch_q22_global_sales",
-    "analytics",
     doc="TPC-H Q22 shape: per-nation count and balance of rich "
     "customers (balance above the positive-balance average) who never "
     "ordered. The average compare cross-multiplies into exact decimals "
@@ -783,7 +769,6 @@ def tpch_q22_global_sales(spark, sf_dir):
 
 @register(
     "tpch_q20_potential_promotion",
-    "analytics",
     doc="TPC-H Q20 shape (completes the Q1-Q22 set): suppliers whose "
     "1997 shipped quantity of 'small' parts exceeds half their all-time "
     "shipped quantity of those parts — the nested-aggregate + double "

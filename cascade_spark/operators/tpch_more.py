@@ -21,7 +21,6 @@ from cascade_spark.operators._util import bigint, d2, dec, t
 
 @register(
     "tpch_q4_order_priority",
-    "analytics",
     doc="TPC-H Q4 shape: count Q1-1997 orders per priority having at "
     "least one line item shipped >60 days after the order date "
     "(EXISTS → left-semi join with a non-equi conjunct).",
@@ -60,7 +59,6 @@ def tpch_q4_order_priority(spark, sf_dir):
 
 @register(
     "tpch_q6_forecast_revenue",
-    "analytics",
     doc="TPC-H Q6: single-scan revenue forecast — all three predicates "
     "and the 3-column projection push into the parquet scan; decimal "
     "accumulation keeps the sum order-independent.",
@@ -93,7 +91,6 @@ def tpch_q6_forecast_revenue(spark, sf_dir):
 
 @register(
     "tpch_q10_returned_items",
-    "analytics",
     doc="TPC-H Q10 shape: top-20 customers by revenue lost to returns "
     "in H1-1997 — lineitem⨝orders shuffle join, customer/nation "
     "broadcast; deterministic order by rounded revenue then custkey.",
@@ -136,7 +133,6 @@ def tpch_q10_returned_items(spark, sf_dir):
 
 @register(
     "tpch_q12_priority_class",
-    "analytics",
     doc="TPC-H Q12 shape: per line-status counts of high- vs low-"
     "priority orders shipped in 1997 (conditional partial aggregation "
     "— the CASE folds map-side before the single join shuffle).",

@@ -28,7 +28,6 @@ Q = 10_000  # quantization scale: 4 fractional digits
 
 @register(
     "embedding_centroid_per_label",
-    "similarity",
     doc="Per-label centroid of the 64-dim embedding column: "
     "posexplode → (label, dim) mean of truncation-quantized elements, "
     "plus member count; exact-integer sums make the mean engine-exact.",
@@ -74,7 +73,6 @@ def embedding_centroid_per_label(spark, sf_dir):
 
 @register(
     "embedding_norm_audit",
-    "similarity",
     doc="Vector hygiene audit per label: vector count, dimension "
     "consistency (min/max — a ragged dim is an ingest bug), zero-norm "
     "count (unservable for cosine), and the exact quantized "
@@ -132,7 +130,6 @@ def embedding_norm_audit(spark, sf_dir):
 
 @register(
     "similarity_centroid_cosine_matrix",
-    "similarity",
     doc="Pairwise cosine similarity between label centroids, bit-exact: "
     "cosine is scale-invariant, so the un-normalized centroid (the "
     "quantized SUM vector, exact decimal(38,0) integers) substitutes "
@@ -198,7 +195,6 @@ def similarity_centroid_cosine_matrix(spark, sf_dir):
 
 @register(
     "embedding_quantization_error_audit",
-    "similarity",
     doc="int8 scalar-quantization reconstruction-error audit — the "
     "acceptance gate before switching retrieval to the 4x-smaller "
     "quantized index (similarity_quantized_topk's scale path): per "
@@ -279,7 +275,6 @@ v{k} AS (SELECT z{k}.i, CAST((z{k}.z * {PCA_SCALE}) // m{k}.m AS BIGINT) AS v
 
 @register(
     "embedding_pca_power_iteration",
-    "similarity",
     doc=f"Top principal direction of the quantized embedding matrix by "
     f"{PCA_ITERS} rounds of power iteration on AᵀA — the Spark shape of "
     "distributed PCA (the covariance matvec as two join+aggregate "
@@ -351,7 +346,6 @@ MATRYOSHKA_KS = (8, 16, 32)
 
 @register(
     "embedding_matryoshka_energy",
-    "similarity",
     doc="Matryoshka-representation audit (Kusupati et al. 2022): how "
     "much of each vector's squared energy lives in its first k "
     f"dimensions, for k in {MATRYOSHKA_KS}. Per-vector share_bp = "

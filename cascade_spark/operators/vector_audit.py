@@ -49,7 +49,6 @@ def _quant(col):
 
 @register(
     "embedding_isotropy_audit",
-    "analytics",
     doc="Isotropy audit via the Gram identity: mean off-diagonal "
     "quantized dot = (||sum_i q_i||^2 - sum_i ||q_i||^2) / (N(N-1)), "
     "reported as an exact integer rational in micro units — the "
@@ -130,7 +129,6 @@ DIMVAR_TOP = 8
 
 @register(
     "embedding_dim_variance_topk",
-    "analytics",
     doc=f"Top-{DIMVAR_TOP} embedding dimensions by the exact integer "
     "variance proxy n*sum(q^2) - S^2 over floor-quantized values — the "
     "signal-concentration readout behind matryoshka truncation "
@@ -185,7 +183,6 @@ def embedding_dim_variance_topk(spark, sf_dir):
 
 @register(
     "similarity_ndcg_eval",
-    "similarity",
     doc=f"NDCG@{NDCG_K} of the exact quantized-cosine ranking against "
     "query item 0, with binary label-match relevance — the graded "
     "retrieval-quality companion of similarity_retrieval_metrics. "

@@ -20,8 +20,10 @@ the label-cluster quality readouts):
 Reference scope: declared aggregates over the ``embeddings`` table per
 SURVEY §2B (north-star similarity).
 
-Determinism: vectors quantize to integers first (trunc(x*200) toward zero — cast-to-long/TRUNC, the
-similarity.py Q_SCALE contract); codes, distances, residuals and
+Determinism: vectors quantize to integers first (trunc(x*200) toward
+zero — cast-to-long/TRUNC, the similarity.py Q_SCALE contract; the k-NN
+and centroid-drift audits floor(x*200) instead, as their docs declare);
+codes, distances, residuals and
 argmins are all exact integer arithmetic with declared tie rules
 (smallest label/id); the only divisions are truncating DIV //.
 
@@ -29,13 +31,18 @@ Scale (100 TB): sign codes are map-only folds (no shuffle until the
 TakeOrdered top-k); silhouette/PQ join each vector against a
 BROADCAST 10-label centroid frame (10x fan-out on the dim spine, never
 a pair join), with centroids from one map-side-combinable groupBy.
+The centroid-drift audit collapses to (label × parity × dim) sums
+(10 × 2 × 64 rows) in one map-side-combinable groupBy before the
+per-label fold.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cascade_spark.operators._util import barrier, bigint, t
+from cascade_spark.operators.inference_extra import _csum
 from cascade_spark.plans.registry import register
 
 Q = 200  # |x| < 0.6 in the fixture embeddings -> |q| < 120 fits int8
@@ -68,7 +75,6 @@ codes AS (
 
 @register(
     "similarity_hamming_topk",
-    "similarity",
     doc=f"Binary-code ANN: every embedding collapses to a 64-bit sign "
     "code (two 32-bit halves folded MSB-first over the dim order — 8 "
     "bytes per vector against 256 float bytes), and the top "
@@ -133,7 +139,6 @@ elems AS (
 
 @register(
     "embedding_label_silhouette",
-    "similarity",
     doc="Simplified silhouette per label with FLOORED integer label "
     "centroids (c = sum(xq) DIV n per dim — declared) and SQUARED "
     "distances: per vector a = d2(own centroid), b = min over other "
@@ -232,7 +237,6 @@ PQ_BLOCK_DIMS = 16
 
 @register(
     "embedding_pq_distortion",
-    "similarity",
     doc=f"Product-quantization distortion audit: dims split into "
     f"{PQ_BLOCKS} blocks of {PQ_BLOCK_DIMS}, per-block codebook = the "
     "10 FLOORED label centroids (deterministic — no k-means state), "
@@ -346,7 +350,6 @@ JL_SAMPLE_IDS = 100  # bounded audit sample: vec_id < 100 (declared)
 
 @register(
     "embedding_random_projection_jl",
-    "similarity",
     doc=f"Johnson-Lindenstrauss distortion audit: a deterministic "
     f"64 -> {JL_OUT_DIMS} random-sign projection (s_ij = +-1 from the "
     "md5 parity of 'i:j' — the dedup.py hash idiom, so both engines "
@@ -500,4 +503,225 @@ def embedding_random_projection_jl(spark, sf_dir):
                 F.lit(0),
             )
         ).alias("n_within_20pct"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# k-NN label consistency
+# ---------------------------------------------------------------------------
+
+
+KNN_K = 5
+
+
+@register(
+    "embedding_knn_label_consistency",
+    doc=f"Exact {KNN_K}-NN label-purity audit for the declared anchor "
+    "sample (vec_id % 100 = 0): neighbors ranked by the floor(x*200) "
+    "quantized dot product (similarity.py Q_SCALE contract — exact "
+    "integers, no float tolerance), ties broken by smaller vec_id; "
+    "reports per anchor how many of its 5 nearest share its label and "
+    "whether the single nearest does. The 'would k-NN agree with the "
+    "labels?' pre-flight before trusting embedding-space dedup "
+    "thresholds. Anchors BROADCAST against the corpus (sample-bounded "
+    "exact path; LSH variants are the corpus-scale approximate path).",
+    oracle=f"""
+WITH anc AS (
+    SELECT vec_id AS aid, embedding AS av, label AS alab
+    FROM embeddings WHERE vec_id % 100 = 0
+),
+scored AS (
+    SELECT anc.aid, anc.alab, e.vec_id, e.label,
+           CAST(SUM(FLOOR(CAST(e.embedding[i] AS DOUBLE) * {Q})
+                    * FLOOR(CAST(anc.av[i] AS DOUBLE) * {Q}))
+                AS BIGINT) AS qdot
+    FROM embeddings e, anc,
+         LATERAL (SELECT UNNEST(GENERATE_SERIES(1, LEN(e.embedding))) AS i)
+    WHERE e.vec_id <> anc.aid
+    GROUP BY anc.aid, anc.alab, e.vec_id, e.label
+),
+ranked AS (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY aid
+                 ORDER BY qdot DESC, vec_id) AS rn
+    FROM scored
+)
+SELECT aid AS anchor_id, CAST(alab AS BIGINT) AS anchor_label,
+       CAST(COUNT(*) FILTER (WHERE label = alab) AS BIGINT) AS n_same_label,
+       CAST(MAX(CASE WHEN rn = 1 AND label = alab THEN 1 ELSE 0 END)
+            AS BIGINT) AS top1_same
+FROM ranked WHERE rn <= {KNN_K}
+GROUP BY 1, 2 ORDER BY 1
+""",
+)
+def embedding_knn_label_consistency(spark, sf_dir):
+    e = t(spark, sf_dir, "embeddings")
+
+    def _quant(col):
+        return F.transform(col, lambda x: F.floor(x.cast("double") * Q))
+
+    anc = e.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("aid"),
+        _quant(F.col("embedding")).alias("aq"),
+        F.col("label").alias("alab"),
+    )
+    # quantize the corpus ONCE below the anchor crossJoin:
+    # inlining _quant into the post-join projection re-ran the 64-wide
+    # interpreted transform per (row × anchor) PAIR instead of per row —
+    # N_anchors× redundant lambda work (the similarity_mips_norm_bound
+    # projection-barrier precedent). Warm sf0.1: 2.2-3.2 s → 1.3 s,
+    # output verified identical.
+    eq = e.select("vec_id", "label", _quant(F.col("embedding")).alias("qx"))
+    scored = (
+        eq.crossJoin(F.broadcast(anc))
+        .filter(F.col("vec_id") != F.col("aid"))
+        .select(
+            "aid",
+            "alab",
+            "vec_id",
+            "label",
+            F.aggregate(
+                F.zip_with(F.col("qx"), F.col("aq"), lambda x, y: x * y),
+                F.lit(0).cast("long"),
+                lambda acc, x: acc + x,
+            ).alias("qdot"),
+        )
+    )
+    w = Window.partitionBy("aid").orderBy(F.col("qdot").desc(), "vec_id")
+    ranked = scored.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= KNN_K
+    )
+    return (
+        ranked.groupBy(
+            F.col("aid").alias("anchor_id"),
+            F.col("alab").cast("long").alias("anchor_label"),
+        )
+        .agg(
+            _csum(F.col("label") == F.col("alab")).alias("n_same_label"),
+            bigint(
+                F.max(
+                    F.when(
+                        (F.col("rn") == 1) & (F.col("label") == F.col("alab")),
+                        1,
+                    ).otherwise(0)
+                )
+            ).alias("top1_same"),
+        )
+        .orderBy("anchor_id")
+    )
+
+
+@register(
+    "embedding_centroid_drift_halves",
+    doc="Per-label centroid cosine drift between the even- and "
+    "odd-vec_id halves (parity = deterministic batch stand-in): SUM "
+    "vectors of the floor(x*200) quantized embeddings per (label, "
+    "parity, dim) — cosine is scale-invariant so the sum vector IS "
+    "the centroid direction; dot and squared norms are exact integers "
+    "and only the final cosine evaluates one mirrored IEEE sqrt at 6 "
+    "dp. cos ~ 1 means the two halves agree on the label's direction; "
+    "a low cosine flags label drift or a contaminated batch. Guards: "
+    "a label with an empty half (or a zero sum vector) reports 0.0.",
+    oracle=f"""
+WITH ex AS (
+    SELECT label, vec_id % 2 AS par, i AS pos,
+           CAST(FLOOR(CAST(embedding[i] AS DOUBLE) * {Q}) AS BIGINT) AS q
+    FROM embeddings,
+         LATERAL (SELECT UNNEST(GENERATE_SERIES(1, LEN(embedding))) AS i)
+),
+sums AS (
+    SELECT label, par, pos, CAST(SUM(q) AS BIGINT) AS s
+    FROM ex GROUP BY 1, 2, 3
+),
+se AS (SELECT label, pos, s FROM sums WHERE par = 0),
+so AS (SELECT label, pos, s FROM sums WHERE par = 1),
+g AS (
+    SELECT COALESCE(se.label, so.label) AS label,
+           CAST(SUM(COALESCE(se.s, 0) * COALESCE(so.s, 0)) AS BIGINT) AS dot_q,
+           CAST(SUM(COALESCE(se.s, 0) * COALESCE(se.s, 0)) AS BIGINT) AS n2e,
+           CAST(SUM(COALESCE(so.s, 0) * COALESCE(so.s, 0)) AS BIGINT) AS n2o
+    FROM se FULL JOIN so ON se.label = so.label AND se.pos = so.pos
+    GROUP BY 1
+),
+cnt AS (
+    SELECT label,
+           CAST(COUNT(*) FILTER (WHERE vec_id % 2 = 0) AS BIGINT) AS n_even,
+           CAST(COUNT(*) FILTER (WHERE vec_id % 2 = 1) AS BIGINT) AS n_odd
+    FROM embeddings GROUP BY 1
+)
+SELECT CAST(c.label AS BIGINT) AS label, c.n_even, c.n_odd, g.dot_q,
+       CASE WHEN g.n2e = 0 OR g.n2o = 0 THEN 0.0
+            ELSE ROUND(CAST(g.dot_q AS DOUBLE)
+                 / SQRT(CAST(g.n2e AS DOUBLE) * CAST(g.n2o AS DOUBLE)), 6)
+       END AS cos_drift
+FROM cnt c JOIN g ON g.label = c.label
+ORDER BY 1
+""",
+)
+def embedding_centroid_drift_halves(spark, sf_dir):
+    e = t(spark, sf_dir, "embeddings")
+    ex = e.select(
+        F.col("label").cast("long").alias("label"),
+        (F.col("vec_id") % 2).alias("par"),
+        F.posexplode("embedding").alias("pos0", "x"),
+    ).select(
+        "label",
+        "par",
+        (F.col("pos0") + 1).alias("pos"),
+        F.floor(F.col("x").cast("double") * Q).cast("long").alias("q"),
+    )
+    sums = ex.groupBy("label", "par", "pos").agg(
+        bigint(F.sum("q")).alias("s")
+    )
+    se = sums.filter(F.col("par") == 0).select(
+        "label", "pos", F.col("s").alias("s_e")
+    )
+    so = sums.filter(F.col("par") == 1).select(
+        "label", "pos", F.col("s").alias("s_o")
+    )
+    g = (
+        se.join(so, ["label", "pos"], "full")
+        .groupBy("label")
+        .agg(
+            bigint(
+                F.sum(
+                    F.coalesce("s_e", F.lit(0)) * F.coalesce("s_o", F.lit(0))
+                )
+            ).alias("dot_q"),
+            bigint(
+                F.sum(
+                    F.coalesce("s_e", F.lit(0)) * F.coalesce("s_e", F.lit(0))
+                )
+            ).alias("n2e"),
+            bigint(
+                F.sum(
+                    F.coalesce("s_o", F.lit(0)) * F.coalesce("s_o", F.lit(0))
+                )
+            ).alias("n2o"),
+        )
+    )
+    cnt = e.groupBy(F.col("label").cast("long").alias("label")).agg(
+        bigint(
+            F.coalesce(F.sum(F.when(F.col("vec_id") % 2 == 0, 1).otherwise(0)), F.lit(0))
+        ).alias("n_even"),
+        bigint(
+            F.coalesce(F.sum(F.when(F.col("vec_id") % 2 == 1, 1).otherwise(0)), F.lit(0))
+        ).alias("n_odd"),
+    )
+    cos = F.round(
+        F.col("dot_q").cast("double")
+        / F.sqrt(F.col("n2e").cast("double") * F.col("n2o").cast("double")),
+        6,
+    )
+    return (
+        cnt.join(g, "label")
+        .select(
+            "label",
+            "n_even",
+            "n_odd",
+            "dot_q",
+            F.when((F.col("n2e") == 0) | (F.col("n2o") == 0), F.lit(0.0))
+            .otherwise(cos)
+            .alias("cos_drift"),
+        )
+        .orderBy("label")
     )

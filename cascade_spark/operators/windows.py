@@ -21,7 +21,6 @@ from cascade_spark.operators._util import avg_round, d2, dec, sql_avg_round, t
 
 @register(
     "window_ranking",
-    "windows",
     doc="row_number / rank / dense_rank / ntile per customer over order "
     "price (offset assignment ≡ row_number over arrival order, "
     "src/broker/main.rs:97).",
@@ -55,7 +54,6 @@ def window_ranking(spark, sf_dir):
 
 @register(
     "window_lag_lead",
-    "windows",
     doc="lag/lead per user over event time — the reference's next-index "
     "lookup (src/broker/main.rs:148-156) is lead(offset).",
     oracle="""
@@ -85,7 +83,6 @@ def window_lag_lead(spark, sf_dir):
 
 @register(
     "window_frames",
-    "windows",
     doc="Frame specs: running (unbounded-preceding) decimal sum and a "
     "5-row moving average per user.",
     oracle=f"""
@@ -121,7 +118,6 @@ def window_frames(spark, sf_dir):
 
 @register(
     "window_time_range_frame",
-    "windows",
     doc="Time-interval frame: trailing 1-hour event count + decimal sum "
     "per user (RANGE over event-time, not row count — the frame every "
     "rate-limit / rolling-exposure query needs). Spark expresses the "
@@ -154,7 +150,6 @@ def window_time_range_frame(spark, sf_dir):
 
 @register(
     "window_distribution_functions",
-    "windows",
     doc="Distribution window functions — percent_rank / cume_dist / "
     "ntile over supplier account balances per nation. Both relative "
     "ranks are exact rationals over small integers, so they are "
@@ -217,7 +212,6 @@ def window_distribution_functions(spark, sf_dir):
 
 @register(
     "window_running_distinct",
-    "windows",
     doc="Running COUNT(DISTINCT) rewrite: Spark (like most engines) "
     "rejects DISTINCT aggregates over a running window frame, so the "
     "canonical rewrite marks each (user, event_type)'s FIRST day and "
@@ -280,7 +274,6 @@ RM_FRAME = 7  # rolling frame: current row + 6 preceding
 
 @register(
     "window_rolling_median",
-    "windows",
     doc=f"Per-user rolling EXACT median of the last {RM_FRAME} event "
     "values (cents): collect_list over a bounded ROWS frame + "
     "array_sort + element_at — the discrete lower median, all JVM-side "

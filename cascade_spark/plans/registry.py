@@ -1,9 +1,12 @@
 """Declared-query registry.
 
-Every operator in SURVEY.md §2B lands here as a named query: a Spark
-builder ``(spark, sf_dir) -> DataFrame`` plus (when SQL-expressible) a
-DuckDB oracle SQL string run against the same parquet tables. The driver
-hash-compares the two at sf0.01 (CORRECTNESS_r{N}.json).
+Every declared query lands here by name: a Spark builder
+``(spark, sf_dir) -> DataFrame``, a DuckDB oracle SQL string run against
+the same parquet tables when the query is SQL-expressible, and ``doc``,
+its one-paragraph description. Queries live in the module of their
+family (``operators/``, ``functions/``, ``sources/``, ``streaming/``);
+the name is the only key. The driver hash-compares builder and oracle
+at sf0.01 (CORRECTNESS_r{N}.json).
 
 Determinism contract (SURVEY.md §2B):
 - column names identical on both sides (alias everything);
@@ -28,7 +31,6 @@ Builder = Callable[[SparkSession, str], DataFrame]
 @dataclass
 class Query:
     name: str
-    category: str
     builder: Builder
     oracle: str | None = None
     doc: str = ""
@@ -39,16 +41,20 @@ REGISTRY: dict[str, Query] = {}
 
 def register(
     name: str,
-    category: str,
     oracle: str | None = None,
     doc: str = "",
 ) -> Callable[[Builder], Builder]:
-    """Decorator: register a declared query."""
+    """Decorator: register ``fn`` as the builder of query ``name``.
+
+    ``oracle`` is the DuckDB SQL it is hash-checked against (None for a
+    rows-only query); ``doc`` describes it, defaulting to the builder's
+    docstring.
+    """
 
     def deco(fn: Builder) -> Builder:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(name, category, fn, oracle, doc or (fn.__doc__ or ""))
+        REGISTRY[name] = Query(name, fn, oracle, doc or (fn.__doc__ or ""))
         return fn
 
     return deco

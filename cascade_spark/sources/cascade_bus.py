@@ -580,7 +580,6 @@ from cascade_spark.plans.registry import register  # noqa: E402
 
 @register(
     "bus_source_roundtrip",
-    "sources",
     doc="Custom-connector round trip: events published through the "
     "ring-buffer producer (round-robin across 4 bus partitions, dense "
     "per-partition offsets) and read back with "
@@ -630,7 +629,6 @@ def bus_source_roundtrip(spark, sf_dir):
 
 @register(
     "bus_source_batch_scan",
-    "sources",
     doc="Batch read of the same bus topic via "
     "spark.read.format('cascade_bus') — one InputPartition per bus "
     "partition, read in parallel on executors; full event rows joined "
@@ -661,7 +659,6 @@ def bus_source_batch_scan(spark, sf_dir):
 
 @register(
     "bus_source_offset_seek",
-    "sources",
     doc="Consume-by-offset with real source pushdown (the broker's "
     "index seek, src/broker/main.rs:123-160): partition = 2 AND offset "
     "in [5, 25) is absorbed by BusBatchReader.pushFilters — planning "
@@ -693,7 +690,6 @@ def bus_source_offset_seek(spark, sf_dir):
 
 @register(
     "bus_sink_batch_write",
-    "sources",
     doc="Custom-sink batch write: events hash-assigned to 4 bus "
     "partitions (pmod(event_id, 4)), repartitioned so each task owns "
     "its bus partitions, written via write.format('cascade_bus') — "
@@ -751,7 +747,6 @@ def bus_sink_batch_write(spark, sf_dir):
 
 @register(
     "bus_sink_stream_roundtrip",
-    "sources",
     doc="End-to-end custom connector: file stream → "
     "writeStream.format('cascade_bus') (micro-batch segment commits "
     "with batch-id idempotency = exactly-once) → batch read back. The "
@@ -824,7 +819,6 @@ def bus_sink_stream_roundtrip(spark, sf_dir):
 
 @register(
     "bus_stream_windowed_agg",
-    "sources",
     doc="End-to-end pipeline THROUGH the custom connector: cascade_bus "
     "streaming source → timestamp decode (timestamp_micros) → tumbling "
     "1-day window aggregation → memory sink. The connector composes "
@@ -878,7 +872,6 @@ def bus_stream_windowed_agg(spark, sf_dir):
 
 @register(
     "bus_index_dump",
-    "sources",
     doc="Index dump (reference R16, src/broker/main.rs index.table): the "
     "topic's committed-segment index rendered as a relation — per bus "
     "partition, the segment chain with row counts and the cumulative "
@@ -921,7 +914,6 @@ def bus_index_dump(spark, sf_dir):
 
 @register(
     "bus_topic_compaction",
-    "sources",
     doc="Kafka-style LOG COMPACTION over the bus topic (the maintenance "
     "op the reference's append-only broker log would need at "
     "retention time): read the topic through the connector, keep only "
@@ -980,7 +972,6 @@ def bus_topic_compaction(spark, sf_dir):
 
 @register(
     "bus_consumer_lag",
-    "sources",
     doc="Consumer-lag monitoring (the first Kafka dashboard anyone "
     "builds): end offsets per bus partition vs a consumer group's "
     "committed position (deterministically: committed through half "
@@ -1021,7 +1012,6 @@ def bus_consumer_lag(spark, sf_dir):
 
 @register(
     "bus_orphan_segment_audit",
-    "sources",
     doc="Orphan-segment audit — the log-cleanup companion of "
     "bus_index_dump (R16 family): a topic's DATA directory can hold "
     "segment files the committed index never references (aborted "
@@ -1108,7 +1098,6 @@ def bus_orphan_segment_audit(spark, sf_dir):
 
 @register(
     "bus_seek_by_timestamp",
-    "sources",
     doc="Kafka offsetsForTimes parity: given a cutoff timestamp (the "
     "exact integer midpoint of the topic's ts range), find per "
     "partition the EARLIEST offset whose event ts >= cutoff, then "
@@ -1180,7 +1169,6 @@ def bus_seek_by_timestamp(spark, sf_dir):
 
 @register(
     "bus_delete_records",
-    "sources",
     doc="Kafka deleteRecords/log-start-offset parity (reference R16 "
     "retention family): each bus partition is truncated at 40% of its "
     "high watermark — cut_p = (n_p * 4) DIV 10 — advancing the "

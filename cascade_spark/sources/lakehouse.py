@@ -113,7 +113,6 @@ if lakehouse_probe()["delta"]:
 
     @register(
         "scan_delta_roundtrip",
-        "sources",
         doc="Delta Lake write+read roundtrip over the region table — "
         "registered only where delta-spark is importable (probe-gated "
         "like stream_tws_counter). Oracle = the parquet source itself.",
@@ -134,7 +133,6 @@ if lakehouse_probe()["avro"]:
 
     @register(
         "scan_avro_roundtrip",
-        "sources",
         doc="Avro write+read roundtrip over the nation table — "
         "registered only where the spark-avro datasource jar is on the "
         "classpath (probe-gated like scan_delta_roundtrip; this "
@@ -159,7 +157,6 @@ if lakehouse_probe()["iceberg"]:
 
     @register(
         "scan_iceberg_roundtrip",
-        "sources",
         doc="Iceberg write+read roundtrip over the region table through "
         "a hadoop-type catalog — registered only where the "
         "iceberg-spark-runtime jar is on the classpath (probe-gated "
@@ -187,7 +184,6 @@ if lakehouse_probe()["hudi"]:
 
     @register(
         "scan_hudi_roundtrip",
-        "sources",
         doc="Hudi copy-on-write write+read roundtrip over the region "
         "table — registered only where the hudi-spark bundle jar is on "
         "the classpath (probe-gated; absent in this container, the "
@@ -221,7 +217,6 @@ from cascade_spark.plans.registry import register  # noqa: E402
 
 @register(
     "scan_jdbc_roundtrip",
-    "sources",
     doc="REAL JDBC connector roundtrip: a deterministic orders subset "
     "is written to an embedded Derby database through Spark's JDBC "
     "SINK (JdbcRelationProvider creates the table via DerbyDialect "
@@ -279,7 +274,6 @@ def scan_jdbc_roundtrip(spark, sf_dir):
 
 @register(
     "scan_jdbc_pushdown",
-    "sources",
     doc="JDBC filter + projection pushdown: the price predicate and the "
     "3-column projection are compiled INTO the remote SQL "
     "(PushedFilters on the JDBCRelation scan, pinned by "

@@ -23,7 +23,6 @@ _TS = "yyyy-MM-dd HH:mm:ss"
 
 @register(
     "scan_csv_roundtrip",
-    "sources",
     doc="CSV sink + schema-pinned CSV scan (no inference): nation written "
     "to CSV, read back, joined-free aggregate.",
     oracle="""
@@ -47,7 +46,6 @@ def scan_csv_roundtrip(spark, sf_dir):
 
 @register(
     "scan_json_roundtrip",
-    "sources",
     doc="JSON lines sink + schema-pinned JSON scan: events written to "
     "JSONL, read back, aggregated; timestamps survive via ISO strings.",
     oracle="""
@@ -78,7 +76,6 @@ def scan_json_roundtrip(spark, sf_dir):
 
 @register(
     "sink_partitioned",
-    "sources",
     doc="Partitioned parquet write (partitionBy event_type ≡ topic "
     "routing) + partition-pruned read-back: only one partition directory "
     "is scanned (PartitionFilters in the plan).",
@@ -100,7 +97,6 @@ def sink_partitioned(spark, sf_dir):
 
 @register(
     "scan_orc_roundtrip",
-    "sources",
     doc="ORC sink + scan (Spark's other columnar format; zstd-compressed "
     "— codec choice is a write option, transparent to readers).",
     oracle="""
@@ -128,7 +124,6 @@ def scan_orc_roundtrip(spark, sf_dir):
 
 @register(
     "sink_overwrite",
-    "sources",
     doc="Overwrite sink semantics: two successive overwrites leave only "
     "the second dataset (append would have kept both).",
     oracle="""
@@ -150,7 +145,6 @@ def sink_overwrite(spark, sf_dir):
 
 @register(
     "scan_schema_evolution",
-    "sources",
     doc="Schema evolution across file generations: legacy files (even "
     "doc_id) lack the later-added `source` column; new files carry it. "
     "A mergeSchema read surfaces the union schema with NULLs for legacy "
@@ -204,7 +198,6 @@ def scan_schema_evolution(spark, sf_dir):
 
 @register(
     "sink_dynamic_partition_overwrite",
-    "sources",
     doc="Dynamic partition overwrite (partitionOverwriteMode=dynamic): "
     "rewrite ONLY the 'error' partition of a partitionBy(event_type) "
     "table — the replacement frame touches one partition, so only that "
@@ -247,7 +240,6 @@ def sink_dynamic_partition_overwrite(spark, sf_dir):
 
 @register(
     "scan_text_lines",
-    "sources",
     doc="Raw text-line ingestion (spark.read.text) — the entry format "
     "of most LLM corpus pipelines: documents serialized one-per-line "
     "with a unit-separator-delimited header, read back as a `value` "
@@ -292,7 +284,6 @@ def scan_text_lines(spark, sf_dir):
 
 @register(
     "scan_ignore_corrupt_files",
-    "sources",
     doc="Corrupt-file tolerance (ignoreCorruptFiles): a staging dir "
     "holds the real events parquet plus a garbage file with a .parquet "
     "name; the default reader fails the job, this one skips the bad "
@@ -328,7 +319,6 @@ def scan_ignore_corrupt_files(spark, sf_dir):
 
 @register(
     "scan_nested_struct_roundtrip",
-    "sources",
     doc="Nested parquet IO: orders nested as a struct (header fields + "
     "an amount) written to parquet, read back with a predicate on a "
     "NESTED field — Spark pushes struct-field predicates into the "
@@ -374,7 +364,6 @@ def scan_nested_struct_roundtrip(spark, sf_dir):
 
 @register(
     "scan_recursive_file_lookup",
-    "sources",
     doc="Recursive directory ingestion: customer rows sharded into a "
     "nested region=<k>/batch=<j>/ tree (non-Hive layout — directory "
     "names are NOT partition columns), read back in one scan with "
@@ -429,7 +418,6 @@ def scan_recursive_file_lookup(spark, sf_dir):
 
 @register(
     "scan_csv_multiline_quoted",
-    "sources",
     doc="CSV roundtrip with embedded newlines, commas, and quotes: each "
     "document's text gets a deterministic ',\\n\"the\" ' injection, is "
     "written through the CSV sink (quoted fields), and read back with "
@@ -478,7 +466,6 @@ def scan_csv_multiline_quoted(spark, sf_dir):
 
 @register(
     "scan_xml_roundtrip",
-    "sources",
     doc="Native XML source/sink roundtrip (built into Spark 4): orders "
     "written as <order> row elements, read back with a pinned schema "
     "(no inference pass — at 100 TB schema inference is a full extra "
@@ -524,7 +511,6 @@ def scan_xml_roundtrip(spark, sf_dir):
 
 @register(
     "sink_rebalanced_write",
-    "sources",
     doc="AQE-rebalanced write: the REBALANCE hint on the key column asks "
     "AQE to split oversized and coalesce undersized output partitions "
     "at runtime — the cure for both small-file explosion AND straggler "
@@ -605,7 +591,6 @@ def bloom_filter_output(spark, sf_dir: str) -> str:
 
 @register(
     "scan_parquet_bloom_filter",
-    "sources",
     doc="Parquet bloom-filter write + point-lookup scan: lineitem lands "
     "with a bloom filter on l_orderkey "
     "(parquet.bloom.filter.enabled#col), then an IN-list point lookup "
@@ -650,7 +635,6 @@ MAX_RECORDS_PER_FILE = 512
 
 @register(
     "sink_file_size_targeting",
-    "sources",
     doc="maxRecordsPerFile write rolling: lineitem lands "
     "Hive-partitioned by ship month with files capped at "
     f"{MAX_RECORDS_PER_FILE} records — the writer rolls a new file "
@@ -722,7 +706,6 @@ PARQUET_VARIANTS = (
 
 @register(
     "scan_parquet_codec_matrix",
-    "sources",
     doc="Parquet codec / writer-version matrix: the same lineitem "
     "subset written under snappy+v1, zstd+v1, zstd+v2 (data page v2) "
     "and gzip+v1, each read back and reduced to an identical "
@@ -811,7 +794,6 @@ def gzip_csv_output(spark, sf_dir: str) -> str:
 
 @register(
     "scan_text_gzip_nonsplittable",
-    "sources",
     doc="Gzip CSV scan — the NON-SPLITTABLE codec path every 100 TB "
     "text corpus trips over (a .gz shard is one task no matter how big: "
     "the decompressor has no mid-stream entry points, so shard size = "
@@ -857,7 +839,6 @@ def scan_text_gzip_nonsplittable(spark, sf_dir):
 
 @register(
     "scan_parquet_metadata_columns",
-    "sources",
     doc="The _metadata hidden column family on file scans (Spark's "
     "per-row file provenance: file_path / file_name / file_size / "
     "row_index) — what incremental pipelines use to build record-level "
@@ -906,7 +887,6 @@ WHOLETEXT_MOD = 40  # one file per doc_id % 40 == 0 (doc-per-file regime)
 
 @register(
     "scan_text_wholetext",
-    "sources",
     doc="Doc-per-file ingestion (spark.read.text wholetext=true) — the "
     "other corpus entry format next to scan_text_lines' "
     "line-per-record: each staged file holds ONE document (with "

@@ -50,7 +50,6 @@ def stage_topic_registry(spark, sf_dir: str) -> tuple[str, str]:
 
 @register(
     "catalog_partition_pruned_consume",
-    "sources",
     doc="Consume (topic='events', partitions {1,3}) from the persistent "
     "partitioned topic registry: both predicates become PartitionFilters "
     "(planning-time directory pruning — no other topic's or partition's "
@@ -88,7 +87,6 @@ def catalog_partition_pruned_consume(spark, sf_dir):
 
 @register(
     "catalog_multi_topic_counts",
-    "sources",
     doc="Registry-wide accounting: row counts per (topic, partition) "
     "across BOTH registered topics — one partitioned scan, grouped on "
     "the partition columns only (no data columns read: the scan is "
@@ -123,7 +121,6 @@ CG_CONSUMERS = 3
 
 @register(
     "bus_consumer_group_assignment",
-    "sources",
     doc=f"Consumer-group partition assignment over the persistent topic "
     f"registry, {CG_CONSUMERS} consumers x both Kafka assignors: RANGE "
     "(per topic: n = P div G, r = P mod G, consumer i takes n + (i<r) "

@@ -25,7 +25,6 @@ from cascade_spark.streaming.pipeline import (
 
 @register(
     "stream_stream_join",
-    "streaming",
     doc="Streaming click→purchase attribution: two watermarked streams, "
     "time-bound inner join (click within 1h before the purchase), state "
     "evicted beyond the window. Oracle: the equivalent batch self-join.",
@@ -72,7 +71,6 @@ def stream_stream_join(spark, sf_dir):
 
 @register(
     "stream_stream_left_outer",
-    "streaming",
     doc="Stream-stream LEFT OUTER join: purchases keep flowing even "
     "with no attributable click — the null side is emitted only once "
     "the click-side watermark passes the purchase's attribution "
@@ -146,7 +144,6 @@ def stream_stream_left_outer(spark, sf_dir):
 
 @register(
     "stream_stream_full_outer",
-    "streaming",
     doc="Stream-stream FULL OUTER join — both unmatched sides emit: "
     "purchases with no attributable click AND clicks that never led "
     "to a purchase within the hour (the abandoned-intent stream). "

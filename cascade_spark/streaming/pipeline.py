@@ -107,12 +107,14 @@ def stage_stream_input(
 
 def run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Start the streaming query with AvailableNow, block until done,
-    return the sink table."""
+    return the sink table. The checkpoint lives under the store root, so
+    it is removed at exit even when the query fails."""
     name = "s" + uuid.uuid4().hex[:12]
     q = (
         stream_df.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(name)
+        .option("checkpointLocation", store.tempdir("stream.memory_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -122,7 +124,6 @@ def run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
 
 @register(
     "stream_tumbling_window",
-    "streaming",
     doc="Streaming tumbling-window aggregation (1h) by event_type, "
     "complete mode — verified against the batch date_trunc oracle.",
     oracle=f"""
@@ -157,7 +158,6 @@ def stream_tumbling_window(spark, sf_dir):
 
 @register(
     "stream_sliding_window",
-    "streaming",
     doc="Streaming sliding-window aggregation (2h window, 1h slide) — "
     "each event lands in two windows; oracle expands via a k∈{0,1} "
     "lateral.",
@@ -188,7 +188,6 @@ def stream_sliding_window(spark, sf_dir):
 
 @register(
     "stream_session_window",
-    "streaming",
     doc="Streaming session windows (10 min gap) per user, watermark + "
     "append mode + maxFilesPerTrigger backpressure (R11 analog). Two "
     "sentinel flush files advance the watermark past all real sessions; "
@@ -245,7 +244,6 @@ def stream_session_window(spark, sf_dir):
 
 @register(
     "stream_dedup_watermark",
-    "streaming",
     doc="Streaming deduplication: input is the events fixture appended "
     "twice; withWatermark + dropDuplicates(event_id) emits each event "
     "exactly once (north-star dedup, streaming flavor).",
@@ -267,7 +265,6 @@ def stream_dedup_watermark(spark, sf_dir):
 
 @register(
     "stream_static_join",
-    "streaming",
     doc="Stream-static join: streaming events enriched with the static "
     "customer dimension, aggregated per market segment. Join strategy "
     "left to AQE — customer scales with SF, so no forced broadcast; "
@@ -296,7 +293,6 @@ def stream_static_join(spark, sf_dir):
 
 @register(
     "stream_ingest_exactly_once",
-    "streaming",
     doc="Exactly-once micro-batch ingest (reference R1 publish+ack): "
     "readStream → writeStream parquet with checkpoint, run TWICE against "
     "the same checkpoint — the second run replays nothing, so the "
@@ -329,7 +325,6 @@ def stream_ingest_exactly_once(spark, sf_dir):
 
 @register(
     "stream_chained_windows",
-    "streaming",
     doc="Chained time-window aggregations (two stateful operators in "
     "ONE append-mode query, Spark 3.4+/4): hourly tumbling partials "
     "re-windowed into daily totals by grouping on the window column "
@@ -381,7 +376,6 @@ def stream_chained_windows(spark, sf_dir):
 
 @register(
     "stream_dedup_within_watermark",
-    "streaming",
     doc="dropDuplicatesWithinWatermark (Spark 3.5+): unlike classic "
     "dropDuplicates — whose per-key state lives forever unless the "
     "event-time column is part of the key — this variant evicts dedup "
@@ -433,7 +427,6 @@ def _stage_split_input(spark: SparkSession, sf_dir: str):
 
 @register(
     "stream_union_sources",
-    "streaming",
     doc="Streaming UNION of two independent file sources (even/odd "
     "event_id partitions of the fixture, each tagged with its source) "
     "into one windowed aggregate — the fan-in topology every multi-"
@@ -529,7 +522,6 @@ def stage_late_input(spark, sf_dir):
 
 @register(
     "stream_late_data_audit",
-    "streaming",
     doc=f"Exact late-data accounting for append-mode windowed "
     "aggregation: the staged replay delivers the newer half of events "
     "first (establishing watermark = max event time - "
@@ -619,7 +611,6 @@ def stream_late_data_audit(spark, sf_dir):
 
 @register(
     "stream_update_mode_changelog",
-    "streaming",
     doc="Update-mode changelog accounting — completes the verified "
     "output-mode triad (complete: stream_tumbling_window, append: "
     "stream_late_data_audit, update: here). The same deterministic "
@@ -699,7 +690,6 @@ def stream_update_mode_changelog(spark, sf_dir):
 
 @register(
     "stream_scd2_dim_join",
-    "streaming",
     doc="Temporal dimension join on a stream: events join an "
     "SCD2-versioned customer dim ON key AND event-time within the "
     "version's [valid_from, valid_to) — each event sees the dim AS OF "
@@ -879,7 +869,6 @@ ORDER BY e.doc_id
 
 @register(
     "stream_neardup_gate",
-    "streaming",
     doc="Streaming near-duplicate admission gate — the production "
     "shape of training-data dedup: documents ARRIVE as a stream and "
     "are checked against a STATIC corpus MinHash-LSH band index "

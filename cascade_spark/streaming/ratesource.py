@@ -18,12 +18,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from cascade_spark import store
 from cascade_spark.plans.registry import register
 
 
 @register(
     "stream_rate_source",
-    "streaming",
     doc="Bounded deterministic load generation: rate-micro-batch source "
     "(one AvailableNow batch of 1000 rows across 4 partitions, epoch "
     "start) → producer-loop projection (round-robin event name "
@@ -66,7 +66,6 @@ RMB_ADVANCE_MS = 1_000
 
 @register(
     "stream_rate_micro_batch",
-    "streaming",
     doc="rate-micro-batch source — the DETERMINISTIC load generator "
     "(plain rate emits rows by wall-clock; rate-micro-batch pins an "
     "exact rowsPerBatch and a synthetic timestamp per batch, so the "
@@ -106,6 +105,7 @@ def stream_rate_micro_batch(spark, sf_dir):
     q = (
         df.writeStream.format("memory")
         .queryName(name)
+        .option("checkpointLocation", store.tempdir("stream.rate_ckpt"))
         .trigger(availableNow=True)
         .start()
     )

@@ -21,7 +21,6 @@ from cascade_spark.streaming.pipeline import stage_stream_input
 
 @register(
     "stream_foreachbatch_sink",
-    "streaming",
     doc="foreachBatch drain (intended R12 semantics): micro-batches "
     "appended to a topic dir with epoch ids; total drained rows equals "
     "the source exactly.",
@@ -65,7 +64,6 @@ def stream_foreachbatch_sink(spark, sf_dir):
 
 @register(
     "stream_foreachbatch_upsert",
-    "streaming",
     doc="foreachBatch keyed UPSERT (the CDC merge-to-lake pattern "
     "without a table format): each micro-batch is merged into a "
     "keyed snapshot — read previous generation, union the batch, keep "
@@ -115,7 +113,12 @@ def stream_foreachbatch_upsert(spark, sf_dir):
         cur.write.parquet(f"{base}/gen{gen['n']}")
 
     src = spark.readStream.schema(schema).option("maxFilesPerTrigger", 3).parquet(indir)
-    q = src.writeStream.foreachBatch(upsert).trigger(availableNow=True).start()
+    q = (
+        src.writeStream.foreachBatch(upsert)
+        .option("checkpointLocation", store.tempdir("stream.upsert_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination()
     snap = spark.read.parquet(f"{base}/gen{gen['n']}")
     return snap.select(

@@ -79,7 +79,6 @@ def _run_checkpointed_agg(spark, sf_dir, n_state_parts: int = 8) -> str:
 
 @register(
     "stream_state_store_read",
-    "streaming",
     doc="State store as a relation (Spark 4 'statestore' batch source): "
     "after a complete-mode hour×type streaming aggregation commits, the "
     "checkpoint's operator-0 state is read back as a DataFrame — key "
@@ -120,7 +119,6 @@ def stream_state_store_read(spark, sf_dir):
 
 @register(
     "stream_state_metadata_audit",
-    "streaming",
     doc="Checkpoint metadata as a relation (Spark 4 'state-metadata' "
     "source): operator id/name, store name, state partition count, and "
     "committed batch range of the finished aggregation's checkpoint. "
@@ -153,7 +151,6 @@ def stream_state_metadata_audit(spark, sf_dir):
 
 @register(
     "stream_progress_audit",
-    "streaming",
     doc="Per-batch StreamingQueryProgress accounting, hash-checked: the "
     "deterministic late-replay staging (one file per micro-batch, "
     "pinned mtimes — shared with stream_late_data_audit) makes "
@@ -204,6 +201,7 @@ def stream_progress_audit(spark, sf_dir):
             agg.writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
+            .option("checkpointLocation", store.tempdir("stream.progress_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -221,7 +219,6 @@ def stream_progress_audit(spark, sf_dir):
 
 @register(
     "stream_rocksdb_state_store",
-    "streaming",
     doc="The same hour×type streaming aggregation under the RocksDB "
     "state store provider (spark.sql.streaming.stateStore.providerClass "
     "= RocksDBStateStoreProvider) — the provider that makes 100 TB "
@@ -302,7 +299,6 @@ def _run_changelog_agg(spark, sf_dir) -> str:
 
 @register(
     "stream_state_changelog",
-    "streaming",
     doc="State CHANGE FEED (Spark 4 statestore source with "
     "readChangeFeed): which keys each micro-batch touched, read from "
     "the committed checkpoint as a relation. The deterministic "
@@ -357,7 +353,6 @@ def stream_state_changelog(spark, sf_dir):
 
 @register(
     "stream_state_snapshot_read",
-    "streaming",
     doc="State TIME TRAVEL (Spark 4 statestore source, batchId option): "
     "the changelog checkpoint's operator state is read AS OF batch 1 — "
     "before the older half of events ever arrived — so the snapshot "

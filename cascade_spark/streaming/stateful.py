@@ -37,7 +37,6 @@ def _count_events(key, pdfs, state: GroupState):
 
 @register(
     "stream_stateful_counter",
-    "streaming",
     doc="applyInPandasWithState per-user running counter (ring-buffer "
     "counter analog, src/producer/main.rs:26-106): state persists across "
     "micro-batches; the last emitted total per user must equal the batch "
@@ -127,7 +126,6 @@ if tws_available():
 
     @register(
         "stream_tws_counter",
-        "streaming",
         doc="transformWithStateInPandas per-user running counter "
         "(Spark 4 stateful API; ValueState). Same semantics and oracle "
         "as stream_stateful_counter; registered only where the "
@@ -226,7 +224,6 @@ def _sessionize(key, pdfs, state: GroupState):
 
 @register(
     "stream_stateful_session_timeout",
-    "streaming",
     doc="Custom sessionization with EVENT-TIME TIMEOUT (state TTL), "
     "out-of-order tolerant: applyInPandasWithState buffers each "
     "user's OPEN islands; an island is sealed (emitted, state "
@@ -320,7 +317,6 @@ def _topk_update(key, pdfs, state: GroupState):
 
 @register(
     "stream_stateful_topk",
-    "streaming",
     doc="applyInPandasWithState per-key top-k: GroupState holds each "
     "event type's 3 largest value-cents as a fixed-width tuple, merged "
     "with every micro-batch's contribution (state is O(k) per key — "

@@ -86,11 +86,7 @@ def test_no_retime_queries_have_no_unstaged_memoized_fixture(prepared, spark, sf
     # is exactly why it is _NO_RETIME — prime it once here so the
     # snapshot below sees steady state.
     reg = load_all()
-    no_retime = sorted(
-        n
-        for n in reg
-        if n not in bench._RETIME_OK and n.startswith(bench._NO_RETIME_PREFIXES)
-    )
+    no_retime = sorted(n for n in reg if n.startswith(bench._NO_RETIME_PREFIXES))
     assert no_retime, "expected a non-empty _NO_RETIME class"
     for name in no_retime:
         reg[name].builder(spark, sf_dir).count()
@@ -114,7 +110,7 @@ def test_stream_bus_family_is_retime_eligible():
         n
         for n in load_all()
         if n.startswith(("stream_", "bus_"))
-        and not (n in bench._RETIME_OK or not n.startswith(bench._NO_RETIME_PREFIXES))
+        and n.startswith(bench._NO_RETIME_PREFIXES)
     ]
     assert not ineligible, ineligible
 

@@ -619,11 +619,11 @@ _GLOBAL_WINDOW_ALLOWLIST = {
         "topic-partition spine (|partitions| rows)",
     ("cascade_spark/operators/vector_audit.py", "similarity_ndcg_eval"):
         "NDCG_K-row TakeOrdered candidate frame (position numbering)",
-    ("cascade_spark/operators/surface_round10.py", "stats_ansari_bradley"):
+    ("cascade_spark/operators/ordinal_effects.py", "stats_ansari_bradley"):
         "merged click/view daily-volume value spine (n_days-bounded)",
-    ("cascade_spark/operators/surface_round10.py", "stats_hash_uniformity_ks"):
+    ("cascade_spark/operators/sequential_tests.py", "stats_hash_uniformity_ks"):
         "fixed 16-row hash-bucket spine",
-    ("cascade_spark/operators/surface_round10c.py", "stats_anderson_darling_2s"):
+    ("cascade_spark/operators/ordinal_effects.py", "stats_anderson_darling_2s"):
         "merged click/view daily-volume value spine (n_days-bounded)",
 }
 
