@@ -64,7 +64,10 @@ def load_all() -> dict[str, Query]:
     """Import every operator/function module so their @register calls run."""
     import cascade_spark.operators  # noqa: F401
     import cascade_spark.functions  # noqa: F401
-    import cascade_spark.sources  # noqa: F401
+    import cascade_spark.sources.scans  # noqa: F401
+    import cascade_spark.sources.cascade_bus  # noqa: F401
+    import cascade_spark.sources.topics  # noqa: F401
+    import cascade_spark.sources.lakehouse  # noqa: F401
     import cascade_spark.streaming  # noqa: F401
 
     return REGISTRY

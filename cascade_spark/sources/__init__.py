@@ -1,6 +1,7 @@
-"""Batch sources & sinks (parquet/csv/json scans, partitioned writes)."""
+"""Batch sources & sinks (parquet/csv/json scans, partitioned writes).
 
-from cascade_spark.sources import scans  # noqa: F401
-from cascade_spark.sources import cascade_bus  # noqa: F401
-from cascade_spark.sources import topics  # noqa: F401
-from cascade_spark.sources import lakehouse  # noqa: F401
+Deliberately imports nothing: Python data-source workers unpickle
+``cascade_bus`` classes in fresh interpreters, and an eager import here
+would pull the whole query surface into each of them
+(``plans.registry.load_all`` imports the modules that register queries).
+"""

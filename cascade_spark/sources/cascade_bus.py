@@ -220,11 +220,14 @@ def _save_index(topic_dir: str, idx: dict) -> None:
     os.replace(tmp, os.path.join(topic_dir, "index.json"))
 
 
-def _segment_files(topic_dir: str, p: int) -> list[tuple[str, int, str]]:
+def _segment_files(
+    topic_dir: str, p: int, idx: dict | None
+) -> list[tuple[str, int, str]]:
     """[(absolute path, n_rows, format)] in committed offset order.
     Sink-committed segments are columnar parquet; producer logs are the
-    reference-shaped JSON-lines append logs."""
-    idx = _load_index(topic_dir)
+    reference-shaped JSON-lines append logs. ``idx`` is the caller's
+    ``_load_index`` snapshot, so a walk over every partition parses
+    ``index.json`` once and sees one consistent commit."""
     if idx is not None:
         return [
             (
@@ -255,14 +258,16 @@ def _load_segment(path: str, fmt: str) -> pa.Table:
     return tbl.select(_FIELDS).cast(_PA_PAYLOAD)
 
 
-def _read_log_batches(topic_dir: str, p: int, start: int, end: int | None):
+def _read_log_batches(
+    topic_dir: str, p: int, start: int, end: int | None, idx: dict | None
+):
     """Yield Arrow RecordBatches (full BUS_SCHEMA columns) for offsets
     [start, end) of partition p — the broker's
     index[offset]..index[offset+1] seek, generalized to a committed-
     segment chain: whole segments are skipped by their row counts, the
     overlapping ones are loaded columnar and row-sliced."""
     base = 0
-    for path, n, fmt in _segment_files(topic_dir, p):
+    for path, n, fmt in _segment_files(topic_dir, p, idx):
         seg_end = base + n
         if seg_end <= start or (end is not None and base >= end):
             base = seg_end
@@ -295,8 +300,7 @@ def _batches_to_rows(batches) -> list[tuple]:
     return out
 
 
-def _num_partitions(topic_dir: str) -> int:
-    idx = _load_index(topic_dir)
+def _num_partitions(topic_dir: str, idx: dict | None) -> int:
     if idx is not None:
         return int(idx["num_partitions"])
     return sum(
@@ -305,9 +309,10 @@ def _num_partitions(topic_dir: str) -> int:
 
 
 def _log_lens(topic_dir: str) -> dict[str, int]:
+    idx = _load_index(topic_dir)
     return {
-        str(p): sum(n for _, n, _ in _segment_files(topic_dir, p))
-        for p in range(_num_partitions(topic_dir))
+        str(p): sum(n for _, n, _ in _segment_files(topic_dir, p, idx))
+        for p in range(_num_partitions(topic_dir, idx))
     }
 
 
@@ -344,7 +349,7 @@ class BusBatchReader(DataSourceReader):
                 yield f  # not ours — Spark evaluates it post-scan
 
     def partitions(self):
-        n = _num_partitions(self.topic_dir)
+        n = _num_partitions(self.topic_dir, _load_index(self.topic_dir))
         if self.part_eq is not None:
             # out-of-range partition still yields one (empty) split —
             # Spark requires a non-empty partition list
@@ -353,7 +358,11 @@ class BusBatchReader(DataSourceReader):
 
     def read(self, partition):
         yield from _read_log_batches(
-            self.topic_dir, partition.value, self.off_lo, self.off_hi
+            self.topic_dir,
+            partition.value,
+            self.off_lo,
+            self.off_hi,
+            _load_index(self.topic_dir),
         )
 
 
@@ -367,7 +376,8 @@ class BusStreamReader(SimpleDataSourceStreamReader):
         self.max_per_batch = int(options.get("maxrecordsperbatch", 0)) or None
 
     def initialOffset(self) -> dict:
-        return {str(p): 0 for p in range(_num_partitions(self.topic_dir))}
+        n = _num_partitions(self.topic_dir, _load_index(self.topic_dir))
+        return {str(p): 0 for p in range(n)}
 
     def read(self, start: dict):
         ends = _log_lens(self.topic_dir)
@@ -386,10 +396,13 @@ class BusStreamReader(SimpleDataSourceStreamReader):
         # materialized list of Arrow RecordBatches, not a generator — the
         # simple-reader wrapper prefetches on the driver and pickles the
         # batch to executors; Arrow keeps that transfer columnar
+        idx = _load_index(self.topic_dir)
         return [
             b
             for p in sorted(end, key=int)
-            for b in _read_log_batches(self.topic_dir, int(p), start.get(p, 0), end[p])
+            for b in _read_log_batches(
+                self.topic_dir, int(p), start.get(p, 0), end[p], idx
+            )
         ]
 
 
@@ -902,7 +915,7 @@ def bus_index_dump(spark, sf_dir):
     rows = []
     for p in range(n_parts):
         base = 0
-        for seq, (path, n, fmt) in enumerate(_segment_files(topic, p)):
+        for seq, (path, n, fmt) in enumerate(_segment_files(topic, p, idx)):
             rows.append((p, seq, fmt, n, base, base + n))
             base += n
     return spark.createDataFrame(

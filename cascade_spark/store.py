@@ -8,8 +8,9 @@ per-name counters (hits, builds, build seconds):
   ``(applicationId, sf_dir)``; a miss evicts the name's entries from
   other applications, whose blocks died with their session.
 - ``fixture(name, key, build)`` — a staged input (a directory written
-  once, a small probe answer) memoized under the caller's key for the
-  life of the process. The key carries no applicationId: staged
+  once, a small probe answer) or catalog metadata (a table's inferred
+  schema, ``tables.load``) memoized under the caller's key for the life
+  of the process. Staging keys carry no applicationId: staged
   directories stay valid across a session change, so re-staging them
   would only add work.
 - ``tempdir(name)`` — a fresh scratch directory under one per-process

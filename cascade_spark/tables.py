@@ -3,14 +3,29 @@
 The driver testdata (TESTDATA.md / FIXTURES.md) is one parquet file per
 table per scale-factor directory. At 100 TB each "table" would be a
 partitioned parquet/iceberg dataset; ``load`` stays a plain
-``spark.read.parquet`` either way — Catalyst handles partition pruning,
+parquet read either way — Catalyst handles partition pruning,
 predicate pushdown, and column pruning from the declarative plan.
+
+Schema inference (``spark.read.parquet(path)`` with no schema) launches
+a Spark job per call. ``load`` infers each table's ``StructType`` once
+and memoizes it in the session store under ``"tables.schema"``, keyed
+by ``(applicationId, path)`` plus, for a local path, the file's
+``st_mtime_ns`` and ``st_size`` (a table rewritten in place is inferred
+again). Later loads read with ``spark.read.schema(s).parquet(path)``,
+which runs no job. Only the schema is memoized, never the DataFrame:
+every call returns a fresh relation, and every query still lists and
+scans the files.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from cascade_spark import store
 
 TABLE_NAMES = [
     "region",
@@ -66,7 +81,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     type, and the stored microsecond values match what DuckDB reads.
     """
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(_schema(spark, path)).parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":  # TIMESTAMP(NANOS) read as long: ns → µs floor
@@ -74,6 +90,22 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":  # NTZ → LTZ is identity under UTC
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def _schema(spark: SparkSession, path: str) -> StructType:
+    """The inferred schema of the parquet table at ``path``, inferred
+    once per application and file version. ``load`` calls it after
+    ``ensure_session_confs``, so the confs that shape inference
+    (nanos-as-long, NTZ inference) are the same on every hit."""
+    key: tuple = (spark.sparkContext.applicationId, path)
+    try:
+        st = os.stat(path)
+        key += (st.st_mtime_ns, st.st_size)
+    except OSError:
+        pass  # not a local path (s3a://, hdfs://, file:): keyed by URI alone
+    return store.fixture(
+        "tables.schema", key, lambda: spark.read.parquet(path).schema
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -3,6 +3,7 @@
 Runs EVERY registered query at the driver's correctness tier (sf0.01 by
 default) through the same cell-level compare harness the driver uses
 (`cascade_spark.plans.compare.compare`) and writes `FULLGATE_r{N}.json`
+next to this script, or to the path given as the second argument
 — one row per query: `oracle_pass` for hash-checked queries,
 `rows_only` (row count) for queries whose oracle is omitted by design.
 
@@ -13,6 +14,7 @@ reproducible full-gate record the judge can re-run:
 
     python fullgate.py 12          # writes FULLGATE_r12.json
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python fullgate.py 12
+    python fullgate.py 12 OUT.json # writes OUT.json instead
 """
 
 from __future__ import annotations
@@ -33,6 +35,12 @@ def main() -> None:
     from cascade_spark.session import get_spark
 
     rnd = int(sys.argv[1]) if len(sys.argv) > 1 else 0
+    here = os.path.dirname(os.path.abspath(__file__))
+    path = (
+        sys.argv[2]
+        if len(sys.argv) > 2
+        else os.path.join(here, f"FULLGATE_r{rnd:02d}.json")
+    )
     spark = get_spark("fullgate")
     reg = load_all()
     out: dict[str, dict] = {}
@@ -65,8 +73,6 @@ def main() -> None:
         "wall_clock_sec": round(time.time() - t0, 1),
         "queries": out,
     }
-    here = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(here, f"FULLGATE_r{rnd:02d}.json")
     with open(path, "w") as fh:
         json.dump(artifact, fh, indent=1)
     print(json.dumps({k: v for k, v in artifact.items() if k != "queries"}))

@@ -158,6 +158,64 @@ def test_sink_commit_batch_idempotent(tmp_path):
     assert _log_lens(topic) == {"0": 7, "1": 7}
 
 
+def test_stream_read_parses_index_once_per_call(tmp_path, monkeypatch):
+    """One trigger's offsets and rows come from one ``index.json`` parse
+    each, not one per partition."""
+    from cascade_spark.sources import cascade_bus
+
+    topic = str(tmp_path / "t")
+    w = cascade_bus.BusStreamWriter({"path": topic, "numpartitions": "4"}, overwrite=False)
+    for batch_id, lo in enumerate((0, 12)):
+        rows = [
+            dict(partition=i % 4, event_id=i, ts_us=0, user_id=0, event_type="x", value=0.0)
+            for i in range(lo, lo + 12)
+        ]
+        w.commit([w.write(iter([_input_batch(rows)]))], batchId=batch_id)
+    loads = []
+    real = cascade_bus._load_index
+    monkeypatch.setattr(
+        cascade_bus, "_load_index", lambda d: loads.append(d) or real(d)
+    )
+    assert cascade_bus._log_lens(topic) == {str(p): 6 for p in range(4)}
+    assert len(loads) == 1
+    batches, end = BusStreamReader({"path": topic}).read({"0": 2})
+    assert end == {str(p): 6 for p in range(4)}
+    assert sum(b.num_rows for b in batches) == 24 - 2
+    assert len(loads) == 3  # offsets, then rows
+
+
+def test_bus_source_import_skips_query_surface():
+    """A Python data-source worker unpickling the bus source imports only
+    the bus module, not the registered query surface."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    heavy = [
+        "cascade_spark.operators",
+        "cascade_spark.functions",
+        "cascade_spark.streaming",
+        "pandas",
+        "duckdb",
+    ]
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import sys, cascade_spark.sources.cascade_bus\n"
+            f"print([m for m in {heavy!r} if m in sys.modules])",
+        ],
+        cwd=root,
+        env={**os.environ, "PYTHONPATH": root},
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=60,
+    )
+    assert out.stdout.strip() == "[]"
+
+
 def test_sink_abort_deletes_segments(tmp_path):
     import os
 
